@@ -202,8 +202,8 @@ def main(argv=None) -> int:
         ),
         help="salted = hybrid hot-key-only shuffle on a DataFrame read "
         "(default); salted_full = legacy full shuffle; aligned = "
-        "zero-shuffle in-place; source_direct = one task per parquet "
-        "file, scanned with pyarrow inside the task (fastest ingest of "
+        "zero-shuffle in-place; source_direct = parquet files in LPT "
+        "bins, scanned with pyarrow inside the task (fastest ingest of "
         "an existing table); salted_direct = source-direct INCLUDING "
         "skew handling (hot hosts spill task-side to right-sized salt "
         "buckets — zero JVM bytes; the recommended skew mode for "

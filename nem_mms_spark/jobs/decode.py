@@ -359,7 +359,6 @@ def decode_blocks_direct(
     columns: list[str] | None = None,
     parts: list[int] | None = None,
     parallelism: int | None = None,
-    tasks_per_slot: int = 4,
     block_ids: dict[int, set] | None = None,
 ) -> DataFrame:
     """SOURCE-DIRECT decode: the blocks scan happens INSIDE the Arrow
@@ -377,8 +376,14 @@ def decode_blocks_direct(
     shuffle, zero JVM bytes; on a real cluster each task GETs its
     partition object from the store — the Iceberg-native read shape.
 
-    ``parallelism``/``tasks_per_slot``: same concurrency contract as
-    ``encode_parquet`` (flock gate when the session has more slots).
+    ``parallelism``: the number of tasks (default: the session's
+    ``defaultParallelism``); part dirs are LPT-packed into
+    ``min(n_parts, parallelism)`` bins, one task each.  Coarse on
+    purpose, as in ``encode_parquet``: each task pays a fixed start-up
+    cost (Spark's task launch plus the Python worker hand-off, where
+    pyspark's ``importlib.invalidate_caches()`` alone is ~60 ms on
+    Python 3.11) that was measured at 0.15-0.28 s per task on a 4-vCPU
+    box — as long as a small part's decode.
 
     ``block_ids``: optional {part_id -> set(block_id)} survivor map
     (zone-map skipping): only those block groups decode.  The map is
@@ -392,8 +397,8 @@ def decode_blocks_direct(
     import pyarrow.parquet as pq
 
     from nem_mms_spark.jobs.encode import (
-        _acquire_gate,
-        _release_gate,
+        _bin_file_splits,
+        _bin_items,
         _tune_worker,
     )
 
@@ -461,12 +466,7 @@ def decode_blocks_direct(
         if block_ids is not None
         else None
     )
-    splits.sort(key=lambda s: -os.path.getsize(s[1]))
-    from nem_mms_spark.jobs.encode import _bin_file_splits
-
-    sdf, gate_dir, gate_slots = _bin_file_splits(
-        spark, splits, parallelism, tasks_per_slot, tag="d"
-    )
+    sdf, bins = _bin_file_splits(spark, splits, parallelism)
 
     read_cols = [
         "block_id", "column", "codec", "params", "value_count",
@@ -476,84 +476,73 @@ def decode_blocks_direct(
     def decode_files(batches):
         pa.set_cpu_count(1)
         _tune_worker()
-        gate_fd = _acquire_gate(gate_dir, gate_slots)
         allowed_map = bc_blocks.value if bc_blocks is not None else None
-        try:
-            for batch in batches:
-                bpids = batch.column("part_id").to_pylist()
-                for bpid, path in zip(bpids, batch.column("path").to_pylist()):
-                    allowed = (
-                        allowed_map.get(bpid)
-                        if allowed_map is not None
-                        else None
-                    )
-                    with open(path, "rb", buffering=0) as fh:
-                        raw = fh.read()
-                    tbl = pq.read_table(
-                        pa.BufferReader(raw), columns=read_cols
-                    )
-                    del raw
-                    if columns is not None:
-                        import pyarrow.compute as pc
+        for bpid, path in _bin_items(batches, bins):
+            allowed = (
+                allowed_map.get(bpid) if allowed_map is not None else None
+            )
+            with open(path, "rb", buffering=0) as fh:
+                raw = fh.read()
+            tbl = pq.read_table(pa.BufferReader(raw), columns=read_cols)
+            del raw
+            if columns is not None:
+                import pyarrow.compute as pc
 
-                        tbl = tbl.filter(
-                            pc.is_in(tbl.column("column"), pa.array(ordered))
-                        )
-                    tbl = tbl.combine_chunks()
-                    bids = tbl.column("block_id").to_numpy(zero_copy_only=False)
-                    if len(bids) == 0:
+                tbl = tbl.filter(
+                    pc.is_in(tbl.column("column"), pa.array(ordered))
+                )
+            tbl = tbl.combine_chunks()
+            bids = tbl.column("block_id").to_numpy(zero_copy_only=False)
+            if len(bids) == 0:
+                continue
+            names = tbl.column("column").to_numpy(zero_copy_only=False)
+            codecs = tbl.column("codec").to_numpy(zero_copy_only=False)
+            params = tbl.column("params").to_numpy(zero_copy_only=False)
+            vcs = tbl.column("value_count").to_numpy(zero_copy_only=False)
+            ncs = tbl.column("null_count").to_numpy(zero_copy_only=False)
+            pay = _bin_views(tbl.column("payload").combine_chunks())
+            val = _bin_views(tbl.column("validity").combine_chunks())
+            bounds = np.concatenate(
+                [[0], np.flatnonzero(bids[1:] != bids[:-1]) + 1,
+                 [len(bids)]]
+            )
+            for bi in range(len(bounds) - 1):
+                s, e = int(bounds[bi]), int(bounds[bi + 1])
+                if allowed is not None and int(bids[s]) not in allowed:
+                    continue
+                n = int(vcs[s])
+                out = {}
+                for j in range(s, e):
+                    c = names[j]
+                    if c not in want:
                         continue
-                    names = tbl.column("column").to_numpy(zero_copy_only=False)
-                    codecs = tbl.column("codec").to_numpy(zero_copy_only=False)
-                    params = tbl.column("params").to_numpy(zero_copy_only=False)
-                    vcs = tbl.column("value_count").to_numpy(zero_copy_only=False)
-                    ncs = tbl.column("null_count").to_numpy(zero_copy_only=False)
-                    pay = _bin_views(tbl.column("payload").combine_chunks())
-                    val = _bin_views(tbl.column("validity").combine_chunks())
-                    bounds = np.concatenate(
-                        [[0], np.flatnonzero(bids[1:] != bids[:-1]) + 1,
-                         [len(bids)]]
-                    )
-                    for bi in range(len(bounds) - 1):
-                        s, e = int(bounds[bi]), int(bounds[bi + 1])
-                        if allowed is not None and int(bids[s]) not in allowed:
-                            continue
-                        n = int(vcs[s])
-                        out = {}
-                        for j in range(s, e):
-                            c = names[j]
-                            if c not in want:
-                                continue
-                            if int(vcs[j]) != n:
-                                raise ValueError(
-                                    "corrupt block group: value_count "
-                                    f"mismatch (part file {path}, "
-                                    f"block {bids[s]})"
-                                )
-                            nc = int(ncs[j])
-                            values = decode_block(
-                                pay(j), json.loads(params[j]), n - nc,
-                                kdtypes[c], codecs[j],
-                            )
-                            arr = framing.from_kernel(
-                                values, types[c], val(j), n, nc
-                            )
-                            if len(arr) != n:
-                                raise ValueError(
-                                    f"decode count mismatch on {c}: "
-                                    f"{len(arr)} != {n}"
-                                )
-                            out[c] = arr
-                        if set(out) != want:
-                            raise ValueError(
-                                "block group missing columns: "
-                                f"{sorted(want - set(out))}"
-                            )
-                        yield pa.RecordBatch.from_arrays(
-                            [out[c] for c in ordered], schema=arrow_schema
+                    if int(vcs[j]) != n:
+                        raise ValueError(
+                            "corrupt block group: value_count mismatch "
+                            f"(part file {path}, block {bids[s]})"
                         )
-        finally:
-            _release_gate(gate_fd)
+                    nc = int(ncs[j])
+                    values = decode_block(
+                        pay(j), json.loads(params[j]), n - nc,
+                        kdtypes[c], codecs[j],
+                    )
+                    arr = framing.from_kernel(
+                        values, types[c], val(j), n, nc
+                    )
+                    if len(arr) != n:
+                        raise ValueError(
+                            f"decode count mismatch on {c}: "
+                            f"{len(arr)} != {n}"
+                        )
+                    out[c] = arr
+                if set(out) != want:
+                    raise ValueError(
+                        "block group missing columns: "
+                        f"{sorted(want - set(out))}"
+                    )
+                yield pa.RecordBatch.from_arrays(
+                    [out[c] for c in ordered], schema=arrow_schema
+                )
 
     return sdf.mapInArrow(decode_files, out_schema)
 

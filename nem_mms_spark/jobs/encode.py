@@ -388,7 +388,6 @@ def encode_parquet(
     block_bytes: int = framing.DEFAULT_BLOCK_BYTES,
     resume: bool = True,
     parallelism: int | None = None,
-    tasks_per_slot: int = 4,
     partitioning: str = "source_direct",
     hot_factor: float = 1.0,
     min_hot_rows: int = 4096,
@@ -402,24 +401,19 @@ def encode_parquet(
     and encoded in a second source-direct pass, the cold majority
     encodes in place; see ``_encode_parquet_salted``.
 
-    ``parallelism``: cap on CONCURRENT tasks.  ``tasks_per_slot``: how
-    many tasks (LPT bins) to cut per concurrency slot.  With the default
-    4, the file list is packed into ``4 * parallelism`` bins (biggest
-    file to the least-loaded bin) and concurrency is held at
-    ``parallelism`` — the standard tasks-per-core > 1 cluster sizing, so
-    a straggling task is backfilled by the remaining bins instead of
-    extending the makespan one-for-one.  (r5 ran ONE bin per slot; with
-    zero slack the makespan was the slowest bin, and any hypervisor or
-    JVM-housekeeping preemption of one pinned worker extended the job
-    wall directly — measured as the reproducible ~0.62 in-Spark/probe
-    throughput ratio at 32-way.  Multi-wave backfill is the fix.)
-
-    When the session has more executor slots than ``parallelism`` (the
-    bench pairs parallelism=8 and 32 inside one local[32] session so
-    both levels share every noise window), concurrency is enforced by a
-    flock-based gate: each task holds one of ``parallelism`` slot locks
-    for its working duration.  Kernel-released on process death, so a
-    failed task can never leak a slot.
+    ``parallelism``: the number of Spark tasks (default: the session's
+    ``defaultParallelism``).  The file list is LPT-packed (biggest file
+    to the least-loaded bin) into ``min(n_files, parallelism)`` bins,
+    one task each, so the task count itself caps concurrency.  Bins are
+    deliberately coarse: every task pays a fixed start-up cost that does
+    not shrink with its work — measured on a 4-vCPU box at 0.15-0.28 s
+    between consecutive tasks on one slot, against task bodies of
+    0.11-0.28 s.  Most of it is Spark's task launch plus the hand-off
+    into the Python worker, where pyspark calls
+    ``importlib.invalidate_caches()`` (on Python 3.11 that re-reads
+    ``pyspark.zip``'s directory once per cached zipimporter, ~60 ms per
+    call).  Cutting files into more, smaller tasks than slots was
+    measured to pay that cost more often than it saves in stragglers.
     Output layout and part ids are unchanged (still one blocks/manifest
     dir per source file).
 
@@ -429,15 +423,15 @@ def encode_parquet(
     on this engine's profile (allocation-rate bound: ~same wall at 8 and
     32 threads for a 7.4 GB feed).  When the source is already a parquet
     table — the north-star ingest case — none of that is needed: Spark
-    distributes one task per data FILE (a one-column DataFrame of file
-    splits), and each task reads its file with pyarrow's vectorized C++
-    reader straight into the same Arrow-native encode kernel.  No table
-    byte ever crosses the JVM.  Partition identity = file index in the
-    sorted listing (the aligned-mode contract: stable for a static input
-    listing, guarded by the partitioning meta), so resume/idempotence
-    semantics are unchanged.  On a real cluster the listing comes from
-    the table catalog and tasks read from the object store — the same
-    shape as any Iceberg-native scan.
+    distributes the data FILES (in the bins above), and each task reads
+    its files with pyarrow's vectorized C++ reader straight into the
+    same Arrow-native encode kernel.  No table byte ever crosses the
+    JVM.  Partition identity = file index in the sorted listing (the
+    aligned-mode contract: stable for a static input listing, guarded
+    by the partitioning meta), so resume/idempotence semantics are
+    unchanged.  On a real cluster the listing comes from the table
+    catalog and tasks read from the object store — the same shape as
+    any Iceberg-native scan.
 
     DataFrame (non-file) sources still route through
     ``encode_dataframe`` with partitioning='salted' (key-based routing
@@ -456,8 +450,7 @@ def encode_parquet(
             spark, src_dir, out_dir, files, key_col=key_col,
             sort_cols=sort_cols, block_rows=block_rows,
             block_bytes=block_bytes, resume=resume,
-            parallelism=parallelism, tasks_per_slot=tasks_per_slot,
-            t_entry=_t_entry, hot_factor=hot_factor,
+            parallelism=parallelism, t_entry=_t_entry, hot_factor=hot_factor,
             min_hot_rows=min_hot_rows,
         )
     if partitioning != "source_direct":
@@ -488,11 +481,6 @@ def encode_parquet(
     splits = [
         (i, os.path.join(src_dir, f)) for i, f in enumerate(files)
     ]
-    # LPT scheduling: launch the biggest files first so small tasks fill
-    # the last wave's gaps (cuts the makespan tail when tasks-per-core
-    # is small; task cost tracks file size).  Part ids stay keyed to the
-    # name-sorted listing, so resume identity is unaffected by ordering.
-    splits.sort(key=lambda s: -os.path.getsize(s[1]))
     n_done = 0
     if resume:
         done = ckpt.done_parts(spark, out_dir)
@@ -504,14 +492,12 @@ def encode_parquet(
     blocks_dir = os.path.join(out_dir, M.BLOCKS_DIR)
     manifest_dir = os.path.join(out_dir, M.MANIFEST_DIR)
     summaries = []
-    gate_dir = None
-    gate_slots = 0
     if splits:
-        sdf, gate_dir, gate_slots = _bin_file_splits(
-            spark, splits, parallelism, tasks_per_slot
-        )
+        sdf, bins = _bin_file_splits(spark, splits, parallelism)
 
         def encode_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+            import resource as _res
+
             import pyarrow as _pa
             import pyarrow.parquet as pq
 
@@ -521,78 +507,53 @@ def encode_parquet(
             # 32 reader threads), destroying scaling
             _pa.set_cpu_count(1)
             _tune_worker()
-            gate_fd = _acquire_gate(gate_dir, gate_slots)
-            try:
-                yield from _encode_file_batches(batches)
-            finally:
-                _release_gate(gate_fd)
-
-        def _encode_file_batches(batches) -> Iterator[pa.RecordBatch]:
-            import pyarrow as _pa
-            import pyarrow.parquet as pq
-
-            for batch in batches:
-                pids = batch.column("part_id").to_pylist()
-                paths = batch.column("path").to_pylist()
-                for pid, path in zip(pids, paths):
-                    # memory_map: on a local/POSIX store, uncompressed
-                    # column chunks page straight in without a read copy
-                    import resource as _res
-
-                    rr0 = _res.getrusage(_res.RUSAGE_SELF)
-                    rc0 = time.process_time_ns()
-                    tr = time.monotonic_ns()
-                    # fetch-then-parse: one big os.read pulls the file
-                    # bytes (object-store GET shape), then the parquet
-                    # decode runs from memory on the task's own thread.
-                    # Beats both mmap (per-call mapping faults + munmap
-                    # TLB shootdowns that IPI every busy core) and
-                    # arrow's own buffered reads (chunked syscalls +
-                    # an IO-thread hop per column chunk); with the warm
-                    # system-pool heap the fetch buffer is recycled
-                    # across files.  Sub-stages `rfetch`/`rparse` keep
-                    # scan contention attributable at high concurrency.
-                    with open(path, "rb", buffering=0) as fh:
-                        raw_buf = fh.read()
-                    tf = time.monotonic_ns()
-                    tbl = pq.read_table(
-                        _pa.BufferReader(raw_buf), columns=src_cols
-                    )
-                    del raw_buf
-                    ts = time.monotonic_ns()
-                    if sort_cols:
-                        tbl = _sort_by_unless_sorted(tbl, sort_cols)
-                    read_ns = time.monotonic_ns() - tr
-                    rr1 = _res.getrusage(_res.RUSAGE_SELF)
-                    read_stats = {
-                        "read": read_ns,
-                        "rfetch": tf - tr,
-                        "rparse": ts - tf,
-                        # sort sub-stage (the take/gather half of `read`)
-                        "rsort": read_ns - (ts - tr),
-                        "c_read_cpu": time.process_time_ns() - rc0,
-                        "c_read_minflt": rr1.ru_minflt - rr0.ru_minflt,
-                        "c_read_nivcsw": rr1.ru_nivcsw - rr0.ru_nivcsw,
-                    }
-                    yield _encode_partition_table(
-                        pid, tbl, block_rows, block_bytes, key_col,
-                        blocks_dir, manifest_dir, read_ns=read_stats,
-                        t_start_ns=tr,
-                    )
+            for pid, path in _bin_items(batches, bins):
+                rr0 = _res.getrusage(_res.RUSAGE_SELF)
+                rc0 = time.process_time_ns()
+                tr = time.monotonic_ns()
+                # fetch-then-parse: one big os.read pulls the file
+                # bytes (object-store GET shape), then the parquet
+                # decode runs from memory on the task's own thread.
+                # Beats both mmap (per-call mapping faults + munmap
+                # TLB shootdowns that IPI every busy core) and
+                # arrow's own buffered reads (chunked syscalls +
+                # an IO-thread hop per column chunk); with the warm
+                # system-pool heap the fetch buffer is recycled
+                # across files.  Sub-stages `rfetch`/`rparse` keep
+                # scan contention attributable at high concurrency.
+                with open(path, "rb", buffering=0) as fh:
+                    raw_buf = fh.read()
+                tf = time.monotonic_ns()
+                tbl = pq.read_table(
+                    _pa.BufferReader(raw_buf), columns=src_cols
+                )
+                del raw_buf
+                ts = time.monotonic_ns()
+                if sort_cols:
+                    tbl = _sort_by_unless_sorted(tbl, sort_cols)
+                read_ns = time.monotonic_ns() - tr
+                rr1 = _res.getrusage(_res.RUSAGE_SELF)
+                read_stats = {
+                    "read": read_ns,
+                    "rfetch": tf - tr,
+                    "rparse": ts - tf,
+                    # sort sub-stage (the take/gather half of `read`)
+                    "rsort": read_ns - (ts - tr),
+                    "c_read_cpu": time.process_time_ns() - rc0,
+                    "c_read_minflt": rr1.ru_minflt - rr0.ru_minflt,
+                    "c_read_nivcsw": rr1.ru_nivcsw - rr0.ru_nivcsw,
+                }
+                yield _encode_partition_table(
+                    pid, tbl, block_rows, block_bytes, key_col,
+                    blocks_dir, manifest_dir, read_ns=read_stats,
+                    t_start_ns=tr,
+                )
 
         _t_job = time.monotonic()
         _t_job_ns = time.monotonic_ns()
-        try:
-            summaries = sdf.mapInArrow(encode_files, SUMMARY_SCHEMA).collect()
-            _t_collect = time.monotonic()
-            _t_collect_ns = time.monotonic_ns()
-        finally:
-            # try/finally (r7 ADVICE fix): a failed job must not leak
-            # its /dev/shm gate dir
-            if gate_dir:
-                import shutil as _sh
-
-                _sh.rmtree(gate_dir, ignore_errors=True)
+        summaries = sdf.mapInArrow(encode_files, SUMMARY_SCHEMA).collect()
+        _t_collect = time.monotonic()
+        _t_collect_ns = time.monotonic_ns()
     else:
         _t_job = _t_collect = time.monotonic()
         _t_job_ns = _t_collect_ns = time.monotonic_ns()
@@ -627,7 +588,7 @@ def encode_parquet(
     }
     # per-task timeline relative to job submit (seconds): lets the bench
     # decompose the job wall into work vs schedule tail per parallelism
-    # level (wave structure, stragglers, gate queueing)
+    # level (bin makespan, stragglers)
     timeline = sorted(
         (
             {
@@ -907,7 +868,6 @@ def _encode_parquet_salted(
     block_bytes: int,
     resume: bool,
     parallelism: int | None,
-    tasks_per_slot: int,
     t_entry: float,
     hot_factor: float = 1.0,
     min_hot_rows: int = 4096,
@@ -918,8 +878,8 @@ def _encode_parquet_salted(
 
     Two source-direct passes, zero JVM bytes end to end:
 
-      1. COLD+SPILL — one task per source file (LPT bins + gate, same
-         contract as source_direct): rows of cold keys encode in place
+      1. COLD+SPILL — source files in LPT bins (same contract as
+         source_direct): rows of cold keys encode in place
          (part id = file index); rows of HOT keys — url hosts whose row
          count overflows one partition — are routed to right-sized
          contiguous salt-bucket part ids (NEGATIVE, disjoint from file
@@ -928,7 +888,8 @@ def _encode_parquet_salted(
          written task-side to storage — the object-store shuffle shape
          (push-based shuffle / Iceberg repartition write), not the JVM
          block-manager path.
-      2. HOT ENCODE — one task per hot bucket reads its spill files
+      2. HOT ENCODE — each hot bucket, in LPT bins weighed by spill
+         bytes, reads its spill files
          (pyarrow, deterministic name order), sorts, and encodes —
          identical kernel, negative part ids.
 
@@ -972,37 +933,28 @@ def _encode_parquet_salted(
     key_splits = [
         (i, p) for i, p in enumerate(paths) if i % stride == 0
     ]
-    key_splits.sort(key=lambda s: -os.path.getsize(s[1]))
-    ksdf, kgate_dir, kgate_slots = _bin_file_splits(
-        spark, key_splits, parallelism, tasks_per_slot, tag="k"
-    )
+    ksdf, kbins = _bin_file_splits(spark, key_splits, parallelism)
 
     def count_keys(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow as _pa
-        import pyarrow.compute as _pc
         import pyarrow.parquet as _pq
 
         _pa.set_cpu_count(1)
         _tune_worker()
-        fd = _acquire_gate(kgate_dir, kgate_slots)
-        try:
-            for batch in batches:
-                for path in batch.column("path").to_pylist():
-                    # NOT fetch-then-parse here: only the key column's
-                    # chunks are needed, so let the reader seek straight
-                    # to them instead of pulling the whole file
-                    col = _pq.read_table(
-                        path, columns=[key_col], memory_map=True
-                    ).column(key_col).combine_chunks()
-                    if key_col == "url":
-                        col = _host_of(col)
-                    vc = col.value_counts()
-                    yield _pa.RecordBatch.from_arrays(
-                        [vc.field("values"), vc.field("counts").cast("int64")],
-                        names=["_k", "_c"],
-                    )
-        finally:
-            _release_gate(fd)
+        for _pid, path in _bin_items(batches, kbins):
+            # NOT fetch-then-parse here: only the key column's chunks
+            # are needed, so let the reader seek straight to them
+            # instead of pulling the whole file
+            col = _pq.read_table(
+                path, columns=[key_col], memory_map=True
+            ).column(key_col).combine_chunks()
+            if key_col == "url":
+                col = _host_of(col)
+            vc = col.value_counts()
+            yield _pa.RecordBatch.from_arrays(
+                [vc.field("values"), vc.field("counts").cast("int64")],
+                names=["_k", "_c"],
+            )
 
     key_type = "string" if key_col == "url" else (
         probe.select(key_col).schema[0].dataType.simpleString()
@@ -1030,32 +982,26 @@ def _encode_parquet_salted(
         pq.ParquetFile(p).metadata.num_rows for _i, p in key_splits
     )
     kdf = ksdf.mapInArrow(count_keys, f"_k {key_type}, _c long")
-    try:
-        if est_upper <= collect_cap:
-            agg: Counter = Counter()
-            total = 0
-            for r in kdf.collect():
-                total += r["_c"]
-                if r["_k"] is not None:
-                    agg[r["_k"]] += r["_c"]
-            items = list(agg.items())
-        else:
-            total = est_upper
-            items = [
-                (r["_k"], r["_c"])
-                for r in kdf.groupBy("_k")
-                .agg(F.sum("_c").alias("_c"))
-                .filter(
-                    F.col("_k").isNotNull()
-                    & (F.col("_c") * stride > F.lit(int(min_hot_rows)))
-                )
-                .collect()
-            ]
-    finally:
-        if kgate_dir:
-            import shutil as _sh
-
-            _sh.rmtree(kgate_dir, ignore_errors=True)
+    if est_upper <= collect_cap:
+        agg: Counter = Counter()
+        total = 0
+        for r in kdf.collect():
+            total += r["_c"]
+            if r["_k"] is not None:
+                agg[r["_k"]] += r["_c"]
+        items = list(agg.items())
+    else:
+        total = est_upper
+        items = [
+            (r["_k"], r["_c"])
+            for r in kdf.groupBy("_k")
+            .agg(F.sum("_c").alias("_c"))
+            .filter(
+                F.col("_k").isNotNull()
+                & (F.col("_c") * stride > F.lit(int(min_hot_rows)))
+            )
+            .collect()
+        ]
     total *= stride
     target = max(1, int(total) // max(len(files), 1))
     thresh = max(min_hot_rows, int(hot_factor * target))
@@ -1102,18 +1048,15 @@ def _encode_parquet_salted(
     spill_dir = os.path.join(out_dir, "hot_spill")
     all_hot_ids = [-(1 + b) for b in range(hot_parts)]
 
-    # ---- pass 1: cold encode + hot spill, one task per pending file ----
+    # ---- pass 1: cold encode + hot spill over the pending files ----
     cold_splits = [
         (i, p) for i, p in enumerate(paths) if i not in done_ids
     ]
-    cold_splits.sort(key=lambda s: -os.path.getsize(s[1]))
     cold_summaries: list = []
     _t_job = time.monotonic()
     _t_job_ns = time.monotonic_ns()
     if cold_splits:
-        csdf, cgate_dir, cgate_slots = _bin_file_splits(
-            spark, cold_splits, parallelism, tasks_per_slot, tag="c"
-        )
+        csdf, cbins = _bin_file_splits(spark, cold_splits, parallelism)
         hot_keys = pa.array(list(plan)) if plan else None
         plan_b = plan
         # vectorized dispersal tables, aligned with hot_keys order (r7:
@@ -1130,87 +1073,74 @@ def _encode_parquet_salted(
 
             _pa.set_cpu_count(1)
             _tune_worker()
-            fd = _acquire_gate(cgate_dir, cgate_slots)
-            try:
-                for batch in batches:
-                    pids = batch.column("part_id").to_pylist()
-                    bpaths = batch.column("path").to_pylist()
-                    for pid, path in zip(pids, bpaths):
-                        tr = time.monotonic_ns()
-                        with open(path, "rb", buffering=0) as fh:
-                            raw_buf = fh.read()
-                        tbl = pq.read_table(
-                            _pa.BufferReader(raw_buf), columns=src_cols
+            for pid, path in _bin_items(batches, cbins):
+                tr = time.monotonic_ns()
+                with open(path, "rb", buffering=0) as fh:
+                    raw_buf = fh.read()
+                tbl = pq.read_table(
+                    _pa.BufferReader(raw_buf), columns=src_cols
+                )
+                del raw_buf
+                if plan_b:
+                    kc = tbl.column(key_col).combine_chunks()
+                    if key_col == "url":
+                        kc = _host_of(kc)
+                    mask = pc.is_in(kc, value_set=hot_keys)
+                    mask = pc.fill_null(mask, False)
+                    hot_tbl = tbl.filter(mask)
+                    cold_tbl = tbl.filter(pc.invert(mask))
+                    if hot_tbl.num_rows:
+                        ki = pc.index_in(
+                            kc.filter(mask), value_set=hot_keys
+                        ).to_numpy(zero_copy_only=False).astype(
+                            np.int64
                         )
-                        del raw_buf
-                        if plan_b:
-                            kc = tbl.column(key_col).combine_chunks()
-                            if key_col == "url":
-                                kc = _host_of(kc)
-                            mask = pc.is_in(kc, value_set=hot_keys)
-                            mask = pc.fill_null(mask, False)
-                            hot_tbl = tbl.filter(mask)
-                            cold_tbl = tbl.filter(pc.invert(mask))
-                            if hot_tbl.num_rows:
-                                ki = pc.index_in(
-                                    kc.filter(mask), value_set=hot_keys
-                                ).to_numpy(zero_copy_only=False).astype(
-                                    np.int64
-                                )
-                                b0 = plan_b0[ki]
-                                nb = plan_nb[ki]
-                                kv_arr = tbl.column(key_col).filter(
-                                    mask
-                                ).combine_chunks()
-                                h = _crc32_rows(kv_arr, nb > 1)
-                                hpids = -(1 + b0 + (h % nb))
-                                order = np.argsort(hpids, kind="stable")
-                                hot_tbl = hot_tbl.take(pa.array(order))
-                                hp = hpids[order]
-                                bounds = np.concatenate(
-                                    [[0],
-                                     np.flatnonzero(hp[1:] != hp[:-1]) + 1,
-                                     [len(hp)]]
-                                )
-                                for bi in range(len(bounds) - 1):
-                                    s, e = int(bounds[bi]), int(bounds[bi + 1])
-                                    k_id = int(hp[s])
-                                    dest = os.path.join(
-                                        spill_dir, f"part_id={k_id}",
-                                        f"f{pid:05d}.arrow",
-                                    )
-                                    _atomic_write_ipc(
-                                        hot_tbl.slice(s, e - s), dest
-                                    )
-                        else:
-                            cold_tbl = tbl
-                        if sort_cols:
-                            cold_tbl = _sort_by_unless_sorted(
-                                cold_tbl, sort_cols
+                        b0 = plan_b0[ki]
+                        nb = plan_nb[ki]
+                        kv_arr = tbl.column(key_col).filter(
+                            mask
+                        ).combine_chunks()
+                        h = _crc32_rows(kv_arr, nb > 1)
+                        hpids = -(1 + b0 + (h % nb))
+                        order = np.argsort(hpids, kind="stable")
+                        hot_tbl = hot_tbl.take(pa.array(order))
+                        hp = hpids[order]
+                        bounds = np.concatenate(
+                            [[0],
+                             np.flatnonzero(hp[1:] != hp[:-1]) + 1,
+                             [len(hp)]]
+                        )
+                        for bi in range(len(bounds) - 1):
+                            s, e = int(bounds[bi]), int(bounds[bi + 1])
+                            k_id = int(hp[s])
+                            dest = os.path.join(
+                                spill_dir, f"part_id={k_id}",
+                                f"f{pid:05d}.arrow",
                             )
-                        yield _encode_partition_table(
-                            pid, cold_tbl, block_rows, block_bytes, key_col,
-                            blocks_dir, manifest_dir,
-                            read_ns=time.monotonic_ns() - tr,
-                            t_start_ns=tr,
-                        )
-            finally:
-                _release_gate(fd)
+                            _atomic_write_ipc(
+                                hot_tbl.slice(s, e - s), dest
+                            )
+                else:
+                    cold_tbl = tbl
+                if sort_cols:
+                    cold_tbl = _sort_by_unless_sorted(
+                        cold_tbl, sort_cols
+                    )
+                yield _encode_partition_table(
+                    pid, cold_tbl, block_rows, block_bytes, key_col,
+                    blocks_dir, manifest_dir,
+                    read_ns=time.monotonic_ns() - tr,
+                    t_start_ns=tr,
+                )
 
-        try:
-            cold_summaries = csdf.mapInArrow(
-                cold_and_spill, SUMMARY_SCHEMA
-            ).collect()
-        finally:
-            if cgate_dir:
-                import shutil as _sh
-
-                _sh.rmtree(cgate_dir, ignore_errors=True)
+        cold_summaries = csdf.mapInArrow(
+            cold_and_spill, SUMMARY_SCHEMA
+        ).collect()
         ckpt.commit_checkpoint_rows(
             _summary_ckpt_rows(cold_summaries), out_dir
         )
 
-    # ---- pass 2: hot-bucket encode, one task per pending bucket ----
+    # ---- pass 2: hot-bucket encode over the pending buckets ----
     pending_hot = [h for h in all_hot_ids if h not in done_ids]
     hot_summaries: list = []
     if pending_hot:
@@ -1220,63 +1150,35 @@ def _encode_parquet_salted(
             if os.path.isdir(d):
                 hsplits.append((h, d))
         if hsplits:
-            hsplits.sort(
-                key=lambda s: -sum(
-                    os.path.getsize(os.path.join(s[1], f))
-                    for f in os.listdir(s[1])
-                )
+            hsdf, hbins = _bin_file_splits(
+                spark, hsplits, parallelism, size_of=_dir_bytes
             )
-            # hot buckets are right-sized to ~one partition each, so one
-            # task per bucket; the gate still enforces `parallelism`
-            hgate_dir = None
-            hgate_slots = 0
-            if parallelism and len(hsplits) > parallelism:
-                hgate_slots = parallelism
-                hgate_dir = os.path.join(
-                    "/dev/shm/nem_mms_gate",
-                    f"h{os.getpid()}_{time.monotonic_ns()}",
-                )
-            hr = spark.sparkContext.parallelize(hsplits, len(hsplits))
-            hsdf = spark.createDataFrame(hr, schema="part_id int, path string")
 
             def encode_hot(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
                 import pyarrow as _pa
 
                 _pa.set_cpu_count(1)
                 _tune_worker()
-                fd = _acquire_gate(hgate_dir, hgate_slots)
-                try:
-                    for batch in batches:
-                        pids = batch.column("part_id").to_pylist()
-                        dirs = batch.column("path").to_pylist()
-                        for pid, d in zip(pids, dirs):
-                            tr = time.monotonic_ns()
-                            parts = [
-                                _read_ipc(os.path.join(d, f))
-                                for f in sorted(os.listdir(d))
-                                if f.endswith(".arrow")
-                            ]
-                            tbl = pa.concat_tables(parts).select(src_cols)
-                            if sort_cols:
-                                tbl = _sort_by_unless_sorted(tbl, sort_cols)
-                            yield _encode_partition_table(
-                                pid, tbl, block_rows, block_bytes, key_col,
-                                blocks_dir, manifest_dir,
-                                read_ns=time.monotonic_ns() - tr,
-                                t_start_ns=tr,
-                            )
-                finally:
-                    _release_gate(fd)
+                for pid, d in _bin_items(batches, hbins):
+                    tr = time.monotonic_ns()
+                    parts = [
+                        _read_ipc(os.path.join(d, f))
+                        for f in sorted(os.listdir(d))
+                        if f.endswith(".arrow")
+                    ]
+                    tbl = pa.concat_tables(parts).select(src_cols)
+                    if sort_cols:
+                        tbl = _sort_by_unless_sorted(tbl, sort_cols)
+                    yield _encode_partition_table(
+                        pid, tbl, block_rows, block_bytes, key_col,
+                        blocks_dir, manifest_dir,
+                        read_ns=time.monotonic_ns() - tr,
+                        t_start_ns=tr,
+                    )
 
-            try:
-                hot_summaries = hsdf.mapInArrow(
-                    encode_hot, SUMMARY_SCHEMA
-                ).collect()
-            finally:
-                if hgate_dir:
-                    import shutil as _sh
-
-                    _sh.rmtree(hgate_dir, ignore_errors=True)
+            hot_summaries = hsdf.mapInArrow(
+                encode_hot, SUMMARY_SCHEMA
+            ).collect()
         # zero-row markers for planned buckets the dispersal left empty,
         # so resume never waits on a bucket that will never get data
         got = {r["part_id"] for r in hot_summaries}
@@ -1357,106 +1259,39 @@ def _summary_ckpt_rows(summaries) -> list[dict]:
     )
 
 
-_GATE_ROOT = "/dev/shm/nem_mms_gate"
+def _bin_file_splits(spark, splits, parallelism, size_of=os.path.getsize):
+    """LPT-pack a [(part_id, path)] list into ``min(len(splits),
+    parallelism)`` bins (``parallelism`` None = the session's
+    defaultParallelism): biggest split, by ``size_of(path)``, to the
+    least-loaded bin.  Returns (DataFrame of bin ids, bins): one Spark
+    task per bin id, so the task count itself caps concurrency.  The
+    ids come from ``spark.range`` — a JVM-only source, so the only
+    Python hand-off per task is the caller's kernel, which maps its id
+    batches back to the bins' splits with ``_bin_items``."""
+    n_bins = min(
+        len(splits), parallelism or spark.sparkContext.defaultParallelism
+    )
+    sizes = {path: size_of(path) for _i, path in splits}
+    bins: list[list] = [[] for _ in range(n_bins)]
+    loads = [0] * n_bins
+    for s in sorted(splits, key=lambda s: -sizes[s[1]]):
+        j = loads.index(min(loads))
+        bins[j].append(s)
+        loads[j] += sizes[s[1]]
+    return spark.range(n_bins, numPartitions=n_bins), bins
 
 
-def _prune_stale_gates(root: str = _GATE_ROOT) -> None:
-    """Remove gate dirs whose creating process is dead (r7 ADVICE fix:
-    failed encodes and lazy decode DataFrames — which never reach a
-    cleanup point — leaked lock-file dirs in /dev/shm).  Dir names embed
-    the creator pid (`<tag><pid>_<ns>`), so liveness is one /proc check;
-    live processes' gates are never touched."""
-    import re
-    import shutil as _sh
-
-    try:
-        entries = os.listdir(root)
-    except OSError:
-        return
-    for name in entries:
-        m = re.match(r"[a-z]+(\d+)_\d+$", name)
-        if not m:
-            continue
-        pid = int(m.group(1))
-        if pid != os.getpid() and not os.path.exists(f"/proc/{pid}"):
-            _sh.rmtree(os.path.join(root, name), ignore_errors=True)
+def _bin_items(batches: Iterator[pa.RecordBatch], bins: list[list]):
+    """The (part_id, path) splits of every bin id in ``batches``."""
+    for batch in batches:
+        for b in batch.column(0).to_pylist():
+            yield from bins[b]
 
 
-def _bin_file_splits(spark, splits, parallelism, tasks_per_slot, tag="e"):
-    """LPT-bin a [(part_id, path)] list into Spark tasks: returns
-    (DataFrame[part_id, path], gate_dir, gate_slots).  `splits` must be
-    sorted biggest-file-first.  When a concurrency gate is needed (more
-    bins than `parallelism`), the caller's kernel must wrap its work in
-    _acquire_gate/_release_gate."""
-    n_bins = len(splits)
-    gate_dir = None
-    gate_slots = 0
-    if parallelism:
-        n_bins = min(len(splits), parallelism * max(tasks_per_slot, 1))
-        if n_bins > parallelism:
-            _prune_stale_gates()
-            gate_slots = parallelism
-            gate_dir = os.path.join(
-                _GATE_ROOT,
-                f"{tag}{os.getpid()}_{time.monotonic_ns()}",
-            )
-    if n_bins < len(splits):
-        sizes = {path: os.path.getsize(path) for _i, path in splits}
-        bins: list[list] = [[] for _ in range(n_bins)]
-        loads = [0] * n_bins
-        for s in splits:
-            j = loads.index(min(loads))
-            bins[j].append(s)
-            loads[j] += sizes[s[1]]
-        # biggest bins first: under gated/backfilled scheduling the
-        # heaviest work should enter the machine in the first wave
-        bins.sort(key=lambda b: -sum(sizes[path] for _i, path in b))
-        rdd = spark.sparkContext.parallelize(bins, n_bins).flatMap(
-            lambda b: b
-        )
-    else:
-        rdd = spark.sparkContext.parallelize(splits, len(splits))
-    sdf = spark.createDataFrame(rdd, schema="part_id int, path string")
-    return sdf, gate_dir, gate_slots
-
-
-def _acquire_gate(gate_dir: str | None, n_slots: int) -> int | None:
-    """Block until one of ``n_slots`` flock slot locks is free; return the
-    held fd (kernel-released on process death — a crashed task cannot leak
-    a slot).  The gate turns "N tasks on an M-slot session" into "at most
-    n_slots tasks WORKING at once, the rest queued" — the local stand-in
-    for a cluster manager's executor-slot count, which lets one session
-    run two parallelism levels back-to-back for paired benchmarking."""
-    if gate_dir is None or n_slots <= 0:
-        return None
-    import fcntl
-
-    os.makedirs(gate_dir, exist_ok=True)
-    fds = [
-        os.open(os.path.join(gate_dir, str(i)), os.O_CREAT | os.O_RDWR, 0o644)
-        for i in range(n_slots)
-    ]
-    try:
-        while True:
-            for fd in fds:
-                try:
-                    fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-                except OSError:
-                    continue
-                for other in fds:
-                    if other != fd:
-                        os.close(other)
-                return fd
-            time.sleep(0.002)
-    except BaseException:
-        for fd in fds:
-            os.close(fd)
-        raise
-
-
-def _release_gate(fd: int | None) -> None:
-    if fd is not None:
-        os.close(fd)  # closing drops the flock
+def _dir_bytes(path: str) -> int:
+    return sum(
+        os.path.getsize(os.path.join(path, f)) for f in os.listdir(path)
+    )
 
 
 _PIN_SLOT: list[int] | None = None

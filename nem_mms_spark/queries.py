@@ -146,34 +146,12 @@ def topk_events_per_type(spark, sf_dir):
     whole table in `n_types` tasks — at 5 types, 5 busy cores out of 32;
     shuffled bytes are unchanged, the sort parallelism is now `par`.
 
-    r7 refinement (guide §2.3: aggregate before you shuffle): a
-    vectorized batch-local top-3 pre-filter runs INSIDE the scan tasks
-    before anything is shuffled.  Within one Arrow batch, a row with
-    three or more better rows of the same (type, salt) group — under
-    the identical total order, with Spark's NaN-outranks-everything
-    and nulls-last double semantics replicated exactly — already has
-    three better rows in the group globally, so it cannot reach the
-    sub-window top-3, and the union of batch-local top-3s is a
-    guaranteed superset of every stage-1 survivor.  The two windows
-    below then rank a few hundred rows instead of the full table; the
-    shuffle carries ~3 rows per (group, batch) instead of every event
-    (fresh-plan paired reps: 1.65 -> 1.39 s at 1M rows, and the saving
-    grows with the table — the shuffle shrinks from every row to ~3 per
-    (group, batch)).  Batches with null event_ids pass through
-    unfiltered — the filter is an optional reduction, never a
-    correctness dependency.  SIZE-GATED: below ~8 MB the JVM->Python
-    Arrow round trip costs more than the small shuffle it saves
-    (measured +0.35 s at 100k rows), so small tables keep the pure-JVM
-    plan; the gate is file metadata, no job."""
+    A batch-local top-3 Arrow prefilter ahead of the windows was tried
+    and removed: it regressed 0.577x on sf1.0 (the JVM->Python round
+    trip costs more than the shuffle it saves) and crashed on a null
+    event_type."""
     ev = _t(spark, sf_dir, "events")
     par = spark.sparkContext.defaultParallelism
-    if _outgrew_broadcast(sf_dir, "events", mb=8):
-        return _topk_events_prefiltered(ev, par)
-    return _topk_events_windows(ev, par)
-
-
-def _topk_events_windows(ev: DataFrame, par: int) -> DataFrame:
-    """Pure-JVM two-level salted window top-3 (the small-table plan)."""
     salt = F.pmod(F.col("event_id"), F.lit(par))
     wl = W.partitionBy("event_type", salt).orderBy(
         F.desc("value"), "event_id"
@@ -182,76 +160,6 @@ def _topk_events_windows(ev: DataFrame, par: int) -> DataFrame:
         ev.withColumn("_rn", F.row_number().over(wl))
         .filter(F.col("_rn") <= 3)
         .drop("_rn")
-    )
-    w = W.partitionBy("event_type").orderBy(F.desc("value"), "event_id")
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select(
-            "event_type", "event_id", F.round("value", 4).alias("value"),
-            F.col("rn").cast("long").alias("rn"),
-        )
-    )
-
-
-def _topk_events_prefiltered(ev: DataFrame, par: int) -> DataFrame:
-    """Batch-local top-3 prefilter + the same two windows (the at-scale
-    plan; containment proof in topk_events_per_type's docstring)."""
-    salt = F.pmod(F.col("event_id"), F.lit(par))
-    sel = ev.select("event_type", salt.alias("_s"), "value", "event_id")
-
-    def _batch_top3(batches):
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        for b in batches:
-            ecol = b.column(3)
-            if b.num_rows <= 3 or ecol.null_count:
-                yield b
-                continue
-            et = np.asarray(b.column(0).to_numpy(zero_copy_only=False))
-            s = b.column(1).to_numpy(zero_copy_only=False)
-            vcol = b.column(2)
-            v = vcol.to_numpy(zero_copy_only=False).astype(
-                np.float64, copy=True
-            )
-            eid = ecol.to_numpy(zero_copy_only=False)
-            # ascending sort key replicating F.desc("value"): NaN ranks
-            # FIRST (Spark: NaN > any double) and nulls rank LAST
-            # (desc_nulls_last default); arrow's null->NaN conversion is
-            # disambiguated with the validity bitmap
-            key = -v
-            nan_mask = np.isnan(v)
-            if vcol.null_count:
-                null_mask = np.asarray(
-                    pc.is_null(vcol).to_numpy(zero_copy_only=False)
-                )
-                nan_mask &= ~null_mask
-                key[null_mask] = np.inf
-            key[nan_mask] = -np.inf
-            codes = np.unique(et, return_inverse=True)[1].astype(np.int64)
-            g = codes * np.int64(par) + s
-            order = np.lexsort((eid, key, g))
-            gg = g[order]
-            first = np.concatenate([[True], gg[1:] != gg[:-1]])
-            idx = np.arange(len(gg))
-            run = idx - np.maximum.accumulate(
-                np.where(first, idx, np.int64(-1))
-            )
-            keep = order[run < 3]
-            yield b.take(pa.array(np.sort(keep)))
-
-    pre = sel.mapInArrow(
-        _batch_top3, "event_type string, _s long, value double, event_id long"
-    )
-    wl = W.partitionBy("event_type", "_s").orderBy(
-        F.desc("value"), "event_id"
-    )
-    cand = (
-        pre.withColumn("_rn", F.row_number().over(wl))
-        .filter(F.col("_rn") <= 3)
-        .drop("_rn", "_s")
     )
     w = W.partitionBy("event_type").orderBy(F.desc("value"), "event_id")
     return (
@@ -733,9 +641,9 @@ def banded_matmul_parity(spark, sf_dir):
     (id, band, sig) signature tables — identical sig tables mean
     identical band buckets, identical bucket filters, and therefore
     identical enumerated pair sets.  So the divergence is measured
-    FIRST on the sig tables (n * n_bands rows of three ints, one tiny
-    broadcast join) instead of on the ~O(sum bucket^2) pair sets.  When
-    the tables agree elementwise — the design-expected case — the
+    FIRST on the sig tables (n * n_bands rows of three ints, one
+    signed-count groupBy) instead of on the ~O(sum bucket^2) pair sets.
+    When the tables agree as multisets — the design-expected case — the
     symmetric difference is empty BY THAT MEASUREMENT, and only one
     pair stream pays enumeration + the distinct shuffle for n_pairs
     (half the shuffled rows, half the enumeration of the old plan).
@@ -763,12 +671,18 @@ def _banded_parity_sig_proxy(emb: DataFrame) -> DataFrame:
         n_bands=_PAIR_BANDS, band_bits=_PAIR_BAND_BITS, seed=_PAIR_SEED
     )
     fold_sigs = similarity.band_sigs(emb, method="fold", **sig_kw)
-    mm_sigs = similarity.band_sigs(emb, method="matmul", **sig_kw).select(
-        F.col("vec_id"), F.col("band"), F.col("sig").alias("_msig")
-    )
+    mm_sigs = similarity.band_sigs(emb, method="matmul", **sig_kw)
+    # multiset difference of the two (vec_id, band, sig) tables: +1 per
+    # fold row, -1 per matmul row, so a row that differs, or is missing
+    # from or duplicated in either side, leaves a non-zero net count (an
+    # inner join on (vec_id, band) would drop a one-sided row silently)
+    key = ["vec_id", "band", "sig"]
     n_sig_diff = (
-        fold_sigs.join(F.broadcast(mm_sigs), ["vec_id", "band"])
-        .filter(F.col("sig") != F.col("_msig"))
+        fold_sigs.select(*key, F.lit(1).alias("_d"))
+        .unionByName(mm_sigs.select(*key, F.lit(-1).alias("_d")))
+        .groupBy(*key)
+        .agg(F.sum("_d").alias("_d"))
+        .filter(F.col("_d") != 0)
         .count()
     )
     if n_sig_diff == 0:

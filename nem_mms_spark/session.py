@@ -71,35 +71,6 @@ def get_spark(
     return spark
 
 
-def confine_jvm(spark: SparkSession, cores) -> int:
-    """Affine every local-mode JVM thread to ``cores`` — the sandbox
-    stand-in for the cgroup cpuset a cluster manager gives each executor.
-    During source-direct encode the JVM is near-idle (tiny split feeds in,
-    one summary row out) but its housekeeping wakeups (GC, netty, progress,
-    heartbeats) preempt pinned python workers at full subscription; fencing
-    the JVM onto a small core subset concentrates that noise on cores whose
-    slower workers the LPT+backfill schedule naturally compensates for.
-    Linux affinity is per-THREAD; new threads inherit their creator's mask,
-    so one pass over /proc/<pid>/task covers future threads too.  Returns
-    the number of threads affined (0 = no gateway proc, e.g. spark-connect).
-    Pass the full core set to undo."""
-    proc = getattr(getattr(spark.sparkContext, "_gateway", None), "proc", None)
-    if proc is None:
-        return 0
-    n = 0
-    try:
-        tids = os.listdir(f"/proc/{proc.pid}/task")
-    except OSError:
-        return 0
-    for tid in tids:
-        try:
-            os.sched_setaffinity(int(tid), set(cores))
-            n += 1
-        except (OSError, ValueError):
-            continue
-    return n
-
-
 def _parallelism_of(master: str, default: int) -> int:
     if master.startswith("local["):
         inner = master[len("local[") : -1]

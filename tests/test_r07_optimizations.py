@@ -1,5 +1,5 @@
 """Round-7 optimization contracts: distributed hot-detection branch,
-flock-gate concurrency cap, survivor-map broadcast + weak selectivity,
+task-bin concurrency cap, survivor-map broadcast + weak selectivity,
 _host_of fast/regex parity, fold-kernel bit-exactness, candidate-pair
 plan equivalences."""
 
@@ -65,16 +65,13 @@ def test_hot_detection_distributed_branch_matches_counter(
     assert _ckpt_fingerprints(out_b) == _ckpt_fingerprints(out_a)
 
 
-def test_gate_caps_concurrency(spark, src, tmp_path):
-    """COVERAGE gap (r6 ADVICE): the flock gate must actually bound the
-    number of concurrently WORKING tasks — the property that makes the
-    paired p8/p32 single-session benchmark valid.  Asserted from the
-    returned per-part timeline: part intervals live inside their task's
-    gate-held span, so overlap can never exceed the slot count."""
+def test_parallelism_bins_cap_concurrent_parts(spark, src, tmp_path):
+    """``parallelism`` is the task count, and a task encodes its bin's
+    files one after another, so no more than ``parallelism`` parts are
+    ever being encoded at once — even on a session with more slots.
+    Asserted from the returned per-part timeline."""
     out = str(tmp_path / "enc")
-    m = encode_parquet(
-        spark, src, out, resume=False, parallelism=2, tasks_per_slot=2
-    )
+    m = encode_parquet(spark, src, out, resume=False, parallelism=2)
     tl = m["timeline"]
     assert len(tl) == 5
     events = sorted(
@@ -307,23 +304,25 @@ def test_banded_parity_proxy_matches_pair_level_set_algebra(spark):
     assert res.n_sym_diff == len(fold ^ mm)
 
 
-def test_banded_parity_fallback_on_sig_divergence(spark, monkeypatch):
-    """When the matmul sig table diverges, the sig-proxy branch must
-    take the pair-level fallback and report the TRUE counts for the
-    perturbed engine path (not the proxy shortcut's zero)."""
+@pytest.mark.parametrize("perturbation", ["flip", "drop"])
+def test_banded_parity_fallback_on_sig_divergence(
+    spark, monkeypatch, perturbation
+):
+    """When the matmul sig table diverges — one (vec 0, band 0) sig
+    flipped, or that row missing from the matmul side — the sig-proxy
+    branch must take the pair-level fallback and report the TRUE counts
+    for the perturbed engine path (not the proxy shortcut's zero)."""
     from nem_mms_spark import queries as Q
 
     orig = S._band_sigs_matmul
 
     def perturbed(embeddings, planes, n_bands, band_bits, id_col, vec_col):
         out = orig(embeddings, planes, n_bands, band_bits, id_col, vec_col)
-        # flip the sig of one (id, band) row: vec 0, band 0
+        row00 = (F.col(id_col) == 0) & (F.col("band") == 0)
+        if perturbation == "drop":
+            return out.filter(~row00)
         return out.withColumn(
-            "sig",
-            F.when(
-                (F.col(id_col) == 0) & (F.col("band") == 0),
-                F.col("sig") + 1,
-            ).otherwise(F.col("sig")),
+            "sig", F.when(row00, F.col("sig") + 1).otherwise(F.col("sig"))
         )
 
     monkeypatch.setattr(S, "_band_sigs_matmul", perturbed)
@@ -344,52 +343,6 @@ def test_banded_parity_fallback_on_sig_divergence(spark, monkeypatch):
     }
     assert res.n_pairs == len(fold)
     assert res.n_sym_diff == len(fold ^ mm)
-
-
-def test_topk_prefilter_matches_window_plan(spark):
-    """The batch-local top-3 prefilter plan must return exactly the
-    pure-window plan's rows on adversarial data: NaN values (Spark desc
-    ranks NaN first), null values (nulls last), exact ties broken by
-    event_id, and groups thinner than 3."""
-    import math
-
-    from nem_mms_spark import queries as Q
-
-    rows = []
-    # ties, NaN, nulls across two types; many duplicated values
-    vals = [5.0, 5.0, 5.0, 5.0, float("nan"), None, 3.0, 3.0, 0.0, -0.0,
-            -1.5, float("nan"), None, 7.25, 7.25]
-    for t in ("a", "b"):
-        for i, v in enumerate(vals):
-            rows.append((t, i * 2 + (0 if t == "a" else 1), v))
-    rows.append(("thin", 999, 1.0))  # group with a single row
-    ev = spark.createDataFrame(
-        rows, "event_type string, event_id long, value double"
-    )
-    for par in (1, 4, 32):
-        a = sorted(
-            map(tuple, Q._topk_events_windows(ev, par).collect()),
-            key=lambda r: (r[0], r[3]),
-        )
-        b = sorted(
-            map(tuple, Q._topk_events_prefiltered(ev, par).collect()),
-            key=lambda r: (r[0], r[3]),
-        )
-        assert [
-            (t, e, None if v is None or math.isnan(v) else v, rn)
-            for t, e, v, rn in a
-        ] == [
-            (t, e, None if v is None or math.isnan(v) else v, rn)
-            for t, e, v, rn in b
-        ]
-        # NaN positions must agree too
-        assert [
-            (isinstance(v, float) and math.isnan(v)) for *_x, v, _rn in
-            [(t, e, v, rn) for t, e, v, rn in a]
-        ] == [
-            (isinstance(v, float) and math.isnan(v)) for *_x, v, _rn in
-            [(t, e, v, rn) for t, e, v, rn in b]
-        ]
 
 
 def test_sort_by_unless_sorted_matches_sort_by():

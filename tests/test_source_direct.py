@@ -88,7 +88,7 @@ def test_salted_direct_roundtrip_and_skew_routing(spark, src, tmp_path):
     spill to negative salt-bucket part ids and encode in a second
     source-direct pass; the multiset of decoded rows is identical to the
     plain source-direct encode, every hot bucket is right-sized, and the
-    gate/LPT plumbing carries through both passes."""
+    LPT bin plumbing carries through both passes."""
     out = str(tmp_path / "salt")
     m = encode_parquet(
         spark, src, out, resume=False, parallelism=2,
@@ -151,10 +151,8 @@ def test_decode_blocks_direct_matches_generic(spark, src, tmp_path):
     a = sorted_pdf(decode_blocks(spark, out))
     b = sorted_pdf(decode_blocks_direct(spark, out))
     assert a.equals(b)
-    # column subset + the gate path
-    c = decode_blocks_direct(
-        spark, out, columns=["url", "lang"], parallelism=2, tasks_per_slot=2
-    )
+    # column subset, packed into fewer tasks than parts
+    c = decode_blocks_direct(spark, out, columns=["url", "lang"], parallelism=2)
     assert sorted(c.columns) == ["lang", "url"]
     assert c.count() == N
     # part filter (one negative hot id)
@@ -243,9 +241,7 @@ def test_salted_direct_resume_noop_and_content_determinism(
 def test_parallelism_bins_identical_output(spark, src, tmp_path):
     """LPT task bins cap concurrency without changing the result: the
     checkpoint rows (fingerprints, byte counts, part ids) and block
-    content are bit-identical at parallelism=2 vs one-task-per-file —
-    the property that lets the bench compare N-vs-4N inside one
-    session."""
+    content are bit-identical at parallelism=2 vs one task per file."""
     import pyarrow.dataset as ds
 
     def ckpt_content(root):
@@ -256,7 +252,51 @@ def test_parallelism_bins_identical_output(spark, src, tmp_path):
 
     out_full = str(tmp_path / "full")
     out_p2 = str(tmp_path / "p2")
-    m_full = encode_parquet(spark, src, out_full, resume=False)
+    m_full = encode_parquet(spark, src, out_full, resume=False, parallelism=5)
     m_p2 = encode_parquet(spark, src, out_p2, resume=False, parallelism=2)
     assert m_full["rows"] == m_p2["rows"]
     assert ckpt_content(out_full) == ckpt_content(out_p2)
+
+
+def _stage_tasks(spark, group: str) -> list[tuple[str, int]]:
+    """(name, task count) of every stage the job group ran."""
+    st = spark.sparkContext.statusTracker()
+    stages = {
+        sid
+        for j in st.getJobIdsForGroup(group)
+        for sid in st.getJobInfo(j).stageIds
+    }
+    return [
+        (si.name, si.numTasks)
+        for si in map(st.getStageInfo, sorted(stages))
+        if si is not None
+    ]
+
+
+def test_parallelism_is_the_task_count(spark, src, tmp_path):
+    """``parallelism`` is the number of kernel tasks, not a concurrency
+    cap over finer bins: 5 files at parallelism=2 encode in exactly 2
+    tasks, and a decode left at the default runs at most the session's
+    defaultParallelism tasks."""
+    from nem_mms_spark.jobs.decode import decode_blocks_direct
+
+    sc = spark.sparkContext
+    out = str(tmp_path / "enc")
+    try:
+        sc.setJobGroup("bins-encode", "encode_parquet at parallelism=2")
+        encode_parquet(spark, src, out, resume=False, parallelism=2)
+        kernel = [
+            n for name, n in _stage_tasks(spark, "bins-encode")
+            if "encode.py" in name
+        ]
+        assert kernel == [2]
+
+        sc.setJobGroup("bins-decode", "decode_blocks_direct at default")
+        decode_blocks_direct(spark, out).write.format("noop").mode(
+            "overwrite"
+        ).save()
+        tasks = [n for _name, n in _stage_tasks(spark, "bins-decode")]
+        assert tasks and max(tasks) <= sc.defaultParallelism
+        assert sum(tasks) == min(5, sc.defaultParallelism)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
