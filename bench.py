@@ -493,9 +493,9 @@ def run_encode_scaling(tmp: str) -> dict:
     # decode: SOURCE-DIRECT (decode mirror of encode_parquet — one task
     # per part dir, pyarrow scan in-task, zero shuffle/JVM bytes; round-5
     # verdict item 5), parallelism-PAIRED at lo and hi inside one
-    # session, plus one generic-engine rep for the record
+    # session
     enc_dir = os.path.join("/dev/shm/nem_mms_bench", "enc_decode")
-    from nem_mms_spark.jobs.decode import decode_blocks, decode_blocks_direct
+    from nem_mms_spark.jobs.decode import decode_blocks
     from pyspark.sql import functions as F
 
     spark = _new_spark(hi)
@@ -503,7 +503,7 @@ def run_encode_scaling(tmp: str) -> dict:
 
     def run_decode(p):
         return (
-            decode_blocks_direct(spark, enc_dir, parallelism=p)
+            decode_blocks(spark, enc_dir, parallelism=p)
             .agg(F.count("*"), F.sum(F.length("url")))
             .collect()[0][0]
         )
@@ -515,11 +515,6 @@ def run_encode_scaling(tmp: str) -> dict:
             t0 = time.monotonic()
             n_dec = run_decode(p)
             dec_walls[p].append(round(time.monotonic() - t0, 3))
-    t0 = time.monotonic()
-    decode_blocks(spark, enc_dir).agg(
-        F.count("*"), F.sum(F.length("url"))
-    ).collect()
-    generic_wall = round(time.monotonic() - t0, 3)
     spark.stop()
     decode = {
         "engine": "source_direct",
@@ -539,7 +534,6 @@ def run_encode_scaling(tmp: str) -> dict:
         "scaling_efficiency": round(
             (min(dec_walls[lo]) / min(dec_walls[hi])) / (hi / lo), 4
         ),
-        "generic_engine_wall_s": generic_wall,
     }
     dec_probe = _decode_warm_scaling(enc_dir, (lo, hi))
     decode["pipeline_probe"] = dec_probe
@@ -1264,9 +1258,7 @@ def write_baseline_md(enc: dict) -> None:
         "matched no-Spark decode probe** (same task body, wall estimator "
         "and backfill schedule, probe "
         f"{enc['decode'].get('pipeline_probe', {}).get('efficiency_lo_to_hi')}"
-        "); the generic JVM-scan+shuffle decode engine on the same data "
-        f"took {enc['decode'].get('generic_engine_wall_s')} s (kept as "
-        "the flexible path for column-subset reads).",
+        ").",
         "",
         "Scale-growth regression check: every bench query also runs at "
         "sf0.01 (10x fewer rows); per-query wall ratios live in the "

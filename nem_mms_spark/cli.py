@@ -66,17 +66,13 @@ def cmd_encode(args) -> int:
 
 
 def cmd_decode(args) -> int:
-    from nem_mms_spark.jobs.decode import decode_blocks, decode_blocks_direct
+    from nem_mms_spark.jobs.decode import decode_blocks
 
     spark = _spark(args)
     cols = args.columns.split(",") if args.columns else None
-    engine = getattr(args, "engine", "direct")
-    if engine == "direct":
-        df = decode_blocks_direct(spark, args.encoded, columns=cols)
-    else:
-        df = decode_blocks(spark, args.encoded, columns=cols, engine=engine)
+    df = decode_blocks(spark, args.encoded, columns=cols)
     df.write.mode("overwrite").parquet(args.out)
-    print(json.dumps({"written": args.out, "engine": engine}))
+    print(json.dumps({"written": args.out}))
     return 0
 
 
@@ -215,13 +211,6 @@ def main(argv=None) -> int:
     d.add_argument("--encoded", required=True)
     d.add_argument("--out", required=True)
     d.add_argument("--columns", default=None)
-    d.add_argument(
-        "--engine",
-        default="direct",
-        choices=("direct", "arrow", "pandas"),
-        help="direct = source-direct per-part-dir decode (zero shuffle, "
-        "fastest); arrow/pandas = generic Spark-scan engines",
-    )
     d.set_defaults(fn=cmd_decode)
 
     v = sub.add_parser("verify", help="bit-identical round-trip check")

@@ -38,11 +38,6 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # let the planner pick shuffled-hash over sort-merge when the
-        # per-partition build side fits (guide §3.1): the TPC-H-style
-        # fact/dim joins here hash-build the smaller side instead of
-        # sorting both (measured on q3/q5; results join-order invariant)
-        .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_rows))

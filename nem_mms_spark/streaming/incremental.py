@@ -69,12 +69,12 @@ def decode_stream_output(
     spark: SparkSession, out_dir: str, columns: list[str] | None = None
 ):
     """Decode the WHOLE streaming output — every batch=<epoch> dir — as
-    one DataFrame.  The batch layouts are union-compatible, so ONE glob
-    scan reads them all (plan size and driver work are O(1) in epoch
-    count — the round-3 per-batch union loop re-planned and re-listed
-    per epoch, driver-bound at thousands of epochs); block groups are
-    keyed by (batch, part_id, block_id) so same-numbered partitions from
-    different epochs never merge."""
+    one DataFrame.  ``decode_blocks`` builds one split list from every
+    committed (epoch, part_id) file and reads it with a single Python
+    map, so the plan is the same size whatever the epoch count (a
+    per-batch union would re-plan per epoch, driver-bound at thousands
+    of epochs); splits are keyed by (epoch, part_id) so same-numbered
+    partitions from different epochs never merge."""
     from nem_mms_spark.jobs.decode import decode_blocks
 
     if not any(d.startswith("batch=") for d in os.listdir(out_dir)):

@@ -32,21 +32,6 @@ def test_encode_decode_bit_identical(spark, pages, tmp_path_factory):
     assert result["decoded_rows"] == N_ROWS
 
 
-def test_decode_engines_agree(spark, pages, tmp_path_factory):
-    """The mapInArrow decode (default) and the applyInPandas decode must
-    produce identical multisets."""
-    from nem_mms_spark.jobs.decode import decode_blocks
-
-    out = str(tmp_path_factory.mktemp("enc_eng"))
-    encode_dataframe(spark, pages, out, num_parts=4, block_rows=512)
-    a = decode_blocks(spark, out, engine="arrow")
-    p = decode_blocks(spark, out, engine="pandas")
-    ga = a.groupBy("url").count()
-    gp = p.groupBy("url").count()
-    assert a.count() == N_ROWS and p.count() == N_ROWS
-    assert ga.join(gp, ["url", "count"]).count() == ga.count()
-
-
 def test_manifest_selector_outcomes(spark, pages, tmp_path_factory):
     """FIXTURES.md §A expected selector outcomes per column."""
     out = str(tmp_path_factory.mktemp("enc_sel"))
@@ -212,3 +197,31 @@ def test_decode_without_any_commit_raises(spark, pages, tmp_path_factory):
     shutil.rmtree(os.path.join(out, "checkpoint"))
     with pytest.raises(ValueError, match="no committed checkpoint"):
         decode_blocks(spark, out).count()
+
+
+def test_cli_decode_roundtrip(spark, pages, tmp_path, capsys):
+    """``cli decode --columns`` writes exactly the source's columns, and
+    the decode command has no engine choice."""
+    import json
+
+    from nem_mms_spark.cli import main
+
+    src = str(tmp_path / "src")
+    enc = str(tmp_path / "enc")
+    back = str(tmp_path / "back")
+    pages.write.parquet(src)
+    assert main(["encode", "--input", src, "--out", enc,
+                 "--partitioning", "source_direct"]) == 0
+    assert main(["decode", "--encoded", enc, "--out", back,
+                 "--columns", "url,lang"]) == 0
+    assert json.loads(capsys.readouterr().out.splitlines()[-1]) == {
+        "written": back
+    }
+    got = spark.read.parquet(back)
+    want = spark.read.parquet(src).select("url", "lang")
+    assert got.columns == ["url", "lang"]
+    assert got.count() == N_ROWS
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+    with pytest.raises(SystemExit):
+        main(["decode", "--encoded", enc, "--out", back, "--engine", "arrow"])

@@ -98,9 +98,12 @@ def test_incremental_encode_two_batches(spark, tmp_path):
 
 def test_stream_decode_is_single_scan_over_many_batches(spark, tmp_path):
     """Plan-size contract for the cross-batch decode: however many epochs
-    exist, the decode plan contains exactly ONE parquet scan of block
-    files (the round-3 implementation unioned one sub-plan per batch, so
-    plan size and driver work grew with epoch count)."""
+    exist, the decode plan holds exactly ONE Python map node over one
+    split list, no Union, and as many nodes as a 2-epoch plan (a
+    per-batch union would grow plan size and driver work with epoch
+    count)."""
+    import shutil
+
     from nem_mms_spark.datagen import web_pages_df
     from nem_mms_spark.jobs.encode import encode_dataframe
     from nem_mms_spark.streaming import decode_stream_output
@@ -115,12 +118,27 @@ def test_stream_decode_is_single_scan_over_many_batches(spark, tmp_path):
             spark, df, f"{out}/batch={epoch}", num_parts=2, resume=False,
             partitioning="aligned",
         )
+    two = str(tmp_path / "two_batches")
+    for epoch in range(2):
+        shutil.copytree(f"{out}/batch={epoch}", f"{two}/batch={epoch}")
+
+    def plan_nodes(df):
+        def walk(node):
+            kids = node.children()
+            yield node.nodeName()
+            for i in range(kids.size()):
+                yield from walk(kids.apply(i))
+
+        return list(walk(df._jdf.queryExecution().executedPlan()))
+
     dec = decode_stream_output(spark, out)
     assert dec.count() == n_batches * rows_each
-    plan = dec._jdf.queryExecution().executedPlan().toString()
-    # one batched scan node reads every batch's blocks
-    n_scans = plan.count("Scan parquet")
-    assert n_scans == 1, plan
+    nodes = plan_nodes(dec)
+    assert sum("MapIn" in n for n in nodes) == 1, nodes
+    assert not any("Union" in n for n in nodes), nodes
+    dec_two = decode_stream_output(spark, two)
+    assert dec_two.count() == 2 * rows_each
+    assert len(plan_nodes(dec_two)) == len(nodes)
 
 
 def test_multimodal_feature_extraction(spark):

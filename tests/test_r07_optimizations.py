@@ -115,7 +115,7 @@ def test_scan_blocks_empty_selection_returns_typed_empty(spark, tmp_path):
     """r6 ADVICE: a parts/block_ids filter that leaves nothing must
     yield an empty typed DataFrame, not an ArrowInvalid from
     ds.dataset([])."""
-    from nem_mms_spark.jobs.decode import decode_blocks_direct
+    from nem_mms_spark.jobs.decode import decode_blocks
     from nem_mms_spark.jobs.encode import encode_dataframe
 
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
@@ -123,7 +123,7 @@ def test_scan_blocks_empty_selection_returns_typed_empty(spark, tmp_path):
     encode_dataframe(
         spark, docs, out, key_col="doc_id", num_parts=2, resume=False
     )
-    empty = decode_blocks_direct(spark, out, parts=[99_999])
+    empty = decode_blocks(spark, out, parts=[99_999])
     assert empty.count() == 0
     assert set(empty.columns) == set(docs.columns)
 

@@ -132,42 +132,37 @@ def test_salted_direct_roundtrip_and_skew_routing(spark, src, tmp_path):
             assert n <= target * 1.6, (pid, n, target)
 
 
-def test_decode_blocks_direct_matches_generic(spark, src, tmp_path):
-    """SOURCE-DIRECT decode (round-5 verdict item 5): zero-shuffle
-    per-part-dir decode returns exactly what the generic
-    JVM-scan+repartition engine returns — full table, column subsets,
-    part filters, and hybrid outputs with negative hot part ids."""
-    from nem_mms_spark.jobs.decode import decode_blocks_direct
-
+def test_decode_blocks_matches_source(spark, src, tmp_path):
+    """The per-part-file decode of a hybrid output (negative hot part
+    ids) returns exactly the source rows — full table, a column subset
+    packed into fewer tasks than parts, and a part filter."""
     out = str(tmp_path / "enc")
     encode_parquet(spark, src, out, resume=False, partitioning="salted",
                    min_hot_rows=500, hot_factor=0.5)
+    source = spark.read.parquet(src)
 
     def sorted_pdf(df):
         p = df.toPandas()
         cols = sorted(p.columns)
         return p[cols].sort_values(cols).reset_index(drop=True)
 
-    a = sorted_pdf(decode_blocks(spark, out))
-    b = sorted_pdf(decode_blocks_direct(spark, out))
-    assert a.equals(b)
+    assert sorted_pdf(decode_blocks(spark, out)).equals(sorted_pdf(source))
     # column subset, packed into fewer tasks than parts
-    c = decode_blocks_direct(spark, out, columns=["url", "lang"], parallelism=2)
-    assert sorted(c.columns) == ["lang", "url"]
-    assert c.count() == N
-    # part filter (one negative hot id)
-    import os as _os
-
+    c = decode_blocks(spark, out, columns=["url", "lang"], parallelism=2)
+    assert c.columns == ["url", "lang"]
+    assert sorted_pdf(c).equals(sorted_pdf(source.select("url", "lang")))
+    # part filter (one negative hot id): that part's rows only
     hot = [
         int(d.split("=")[1])
-        for d in _os.listdir(_os.path.join(out, "blocks"))
+        for d in os.listdir(os.path.join(out, "blocks"))
         if d.startswith("part_id=-")
     ]
-    one = decode_blocks_direct(spark, out, parts=[hot[0]])
+    one = decode_blocks(spark, out, parts=[hot[0]])
     assert 0 < one.count() < N
+    assert one.exceptAll(source).count() == 0
     # missing column raises
     with pytest.raises(ValueError, match="not in manifest"):
-        decode_blocks_direct(spark, out, columns=["nope"])
+        decode_blocks(spark, out, columns=["nope"])
 
 
 def test_salted_direct_resume_after_pass1_crash(
@@ -177,7 +172,6 @@ def test_salted_direct_resume_after_pass1_crash(
     and the cold checkpoint rows persist, and a resume completes ONLY
     the hot buckets — the two-commit structure's whole point."""
     import nem_mms_spark.checkpoint as ckpt_mod
-    from nem_mms_spark.jobs.decode import decode_blocks_direct
 
     out = str(tmp_path / "s")
     orig = ckpt_mod.commit_checkpoint_rows
@@ -207,7 +201,7 @@ def test_salted_direct_resume_after_pass1_crash(
     assert m["rows"] == N
     # full commit -> spill cleaned, decode complete
     assert not os.path.exists(os.path.join(out, "hot_spill"))
-    assert decode_blocks_direct(spark, out).count() == N
+    assert decode_blocks(spark, out).count() == N
 
 
 def test_salted_direct_resume_noop_and_content_determinism(
@@ -278,8 +272,6 @@ def test_parallelism_is_the_task_count(spark, src, tmp_path):
     cap over finer bins: 5 files at parallelism=2 encode in exactly 2
     tasks, and a decode left at the default runs at most the session's
     defaultParallelism tasks."""
-    from nem_mms_spark.jobs.decode import decode_blocks_direct
-
     sc = spark.sparkContext
     out = str(tmp_path / "enc")
     try:
@@ -291,8 +283,8 @@ def test_parallelism_is_the_task_count(spark, src, tmp_path):
         ]
         assert kernel == [2]
 
-        sc.setJobGroup("bins-decode", "decode_blocks_direct at default")
-        decode_blocks_direct(spark, out).write.format("noop").mode(
+        sc.setJobGroup("bins-decode", "decode_blocks at default")
+        decode_blocks(spark, out).write.format("noop").mode(
             "overwrite"
         ).save()
         tasks = [n for _name, n in _stage_tasks(spark, "bins-decode")]
