@@ -210,8 +210,8 @@ def run_encode_scaling(tmp: str) -> dict:
     """Same job, same input, two parallelism levels."""
     from nem_mms_spark.datagen import web_pages_df
 
-    # source lives on tmpfs: the aligned mode scans it inside the encode
-    # tasks, and a real cluster's aggregate scan bandwidth scales with
+    # source lives on tmpfs: the source-direct mode scans it inside the
+    # encode tasks, and a real cluster's aggregate scan bandwidth scales with
     # node count while the sandbox's single virtual disk does not
     src = os.path.join("/dev/shm/nem_mms_bench", "web_pages")
     ref = os.path.join(tmp, "ref_parquet")
@@ -245,10 +245,8 @@ def run_encode_scaling(tmp: str) -> dict:
     #     JVM feed) is measured in its own paired sessions for the
     #     skew-cost ratio.  (Until r4 the headline mode was labeled
     #     `aligned`; it has been `source_direct` under the hood since
-    #     the r4 protocol change — the label now says so, and one
-    #     legacy aligned-DataFrame rep is kept for cross-round
-    #     comparability.)
-    from nem_mms_spark.jobs.encode import encode_dataframe, encode_parquet
+    #     the r4 protocol change — the label now says so.)
+    from nem_mms_spark.jobs.encode import encode_parquet
 
     lo, hi = SCALING_MASTERS
     out = os.path.join("/dev/shm/nem_mms_bench", "enc")
@@ -311,7 +309,6 @@ def run_encode_scaling(tmp: str) -> dict:
     # levels run gated inside one local[hi] session, so the skew-cost
     # ratio AND salted scaling come from fully window-paired reps.
     paired_sessions: list[dict] = []
-    aligned_df_wall = None
     for sess in range(3):
         spark = _new_spark(hi)
         _warm_up(spark, src)
@@ -345,18 +342,6 @@ def run_encode_scaling(tmp: str) -> dict:
                     partitioning=mode))
                 sess_rec["walls_lo"][mode].append(wall)
         if sess == 0:
-            # legacy datapoint: the aligned DataFrame mode benchmarked
-            # in rounds 2-3 (JVM row feed, zero shuffle) — kept so
-            # cross-round comparisons stay honest (round-4 ADVICE)
-            df = spark.read.parquet(src).cache()
-            df.count()
-            timed(lambda: encode_dataframe(
-                spark, df, out, num_parts=64, resume=False,
-                partitioning="aligned"))  # untimed feed warm
-            aligned_df_wall, _m = timed(lambda: encode_dataframe(
-                spark, df, out, num_parts=64, resume=False,
-                partitioning="aligned"))
-            df.unpersist()
             # keep one salted-direct output for the decode measurement
             # (covers hybrid layouts: negative hot part ids + file parts)
             dec_dir = os.path.join("/dev/shm/nem_mms_bench", "enc_decode")
@@ -552,7 +537,6 @@ def run_encode_scaling(tmp: str) -> dict:
         "scaling_efficiency": eff,
         "scaling_efficiency_per_session": per_sess_eff,
         "scaling_efficiency_2_to_8": eff_2_8,
-        "aligned_dataframe_wall_s_local32": aligned_df_wall,
         "salted_per_cores": salted,
         "salted_mode": "salted_direct (hot-spill + source-direct, r6)",
         "salted_scaling_efficiency": eff_salted,
@@ -661,7 +645,7 @@ def _membw_probe() -> dict:
     encode kernels do, the single box's shared memory system — not the
     engine — is what caps the 8->32 ratio; per-node throughput on a real
     cluster (each node brings its own DRAM/L3) is constant by
-    construction for the zero-coordination aligned mode."""
+    construction for the zero-coordination source-direct mode."""
     import multiprocessing as mp
 
     def worker(_seed, q):
@@ -1187,9 +1171,7 @@ def write_baseline_md(enc: dict) -> None:
         "table: one task per LPT file bin, each task scans its files "
         "with pyarrow's vectorized reader straight into the Arrow-native "
         "encode kernels — no JVM row materialization, the same shape as "
-        "an Iceberg-native scan on a real cluster.  (Rounds 2-3 labeled "
-        "a JVM-feed DataFrame mode `aligned`; one legacy rep of that "
-        "mode is reported below for cross-round comparability.)  Mode "
+        "an Iceberg-native scan on a real cluster.  Mode "
         "`salted` = SALTED-DIRECT hybrid skew handling (r6): hot url "
         "hosts — rows that overflow a partition — are routed to "
         "right-sized contiguous salt buckets via task-side parquet "
@@ -1215,8 +1197,6 @@ def write_baseline_md(enc: dict) -> None:
                 f"| {s[c]['docs_per_s']} |"
             )
     lines += [
-        f"| aligned_dataframe (legacy r2-r3 mode) | local[{hi}] "
-        f"| {enc['aligned_dataframe_wall_s_local32']} | 1 rep | - | - |",
         "",
         f"**Scaling efficiency (source_direct): 2->{lo} "
         f"{enc['scaling_efficiency_2_to_8']}, {lo}->{hi} "

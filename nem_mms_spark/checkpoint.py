@@ -5,9 +5,9 @@ already-downloaded files, /root/reference/src/packages/fetch.rs:264-282, and
 its filename-encoded state, /root/reference/src/manage/state.rs:46-102):
 
   * a partition is DONE iff its checkpoint row exists with status='done';
-  * the encode job starts with a LEFT ANTI join of source partitions
-    against done rows (broadcast — the checkpoint table is tiny relative
-    to data: one row per partition);
+  * the encode job starts by collecting the done part ids to the driver
+    (the checkpoint table is one row per partition) and skips those
+    parts;
   * blocks/manifest/checkpoint are written partition-dir-scoped with
     dynamic partition overwrite, so a re-run of a partition that crashed
     mid-write replaces its half-written output instead of duplicating it.
@@ -45,13 +45,6 @@ def done_parts(spark: SparkSession, out_dir: str) -> DataFrame | None:
     return ckpt.filter(F.col("status") == "done").select("part_id")
 
 
-def filter_pending(df: DataFrame, done: DataFrame | None) -> DataFrame:
-    """Anti-join source rows against completed partitions (resume)."""
-    if done is None:
-        return df
-    return df.join(F.broadcast(done), "part_id", "left_anti")
-
-
 def commit_checkpoint_rows(rows: list[dict], out_dir: str) -> None:
     """Driver-side metadata commit (catalog style): one parquet file per
     encode run, named by a digest of its content so a retried commit is
@@ -83,10 +76,13 @@ def _partitioning_meta_path(out_dir: str) -> str:
 
 def check_partitioning_meta(out_dir: str, meta: dict, *, resume: bool) -> None:
     """Record the partitioning mode + parameters alongside the checkpoint
-    and refuse to resume under different ones: part-id assignment is a
-    function of (mode, num_parts, key_col, salt_buckets), so resuming
-    with a different assignment would anti-join fresh part ids against
-    stale done ids — silently skipping partitions and dropping data."""
+    and refuse to resume under different ones.  Stored done ids hold only
+    under the same part-id assignment (input split for 'aligned', file
+    index for 'source_direct', plus the hot-bucket count for
+    'salted_direct') and the same ``key_col`` (it feeds every part's
+    fingerprint); resuming under different ones would match fresh part
+    ids against stale done ids — silently skipping partitions and
+    dropping data."""
     import glob
     import json
 

@@ -34,33 +34,20 @@ def cmd_generate(args) -> int:
 
 
 def cmd_encode(args) -> int:
-    from nem_mms_spark.jobs.encode import encode_dataframe, encode_parquet
+    from nem_mms_spark.jobs.encode import encode_parquet
 
     spark = _spark(args)
-    if args.partitioning in ("source_direct", "salted_direct"):
-        metrics = encode_parquet(
-            spark,
-            args.input,
-            args.out,
-            key_col=args.key or "url",
-            resume=not args.no_resume,
-            partitioning=(
-                "salted" if args.partitioning == "salted_direct"
-                else "source_direct"
-            ),
-        )
-    else:
-        df = spark.read.parquet(args.input)
-        metrics = encode_dataframe(
-            spark,
-            df,
-            args.out,
-            num_parts=args.num_parts,
-            key_col=args.key,
-            salt_buckets=args.salt_buckets,
-            resume=not args.no_resume,
-            partitioning=args.partitioning,
-        )
+    metrics = encode_parquet(
+        spark,
+        args.input,
+        args.out,
+        key_col=args.key,
+        resume=not args.no_resume,
+        partitioning=(
+            "salted" if args.partitioning == "salted_direct"
+            else "source_direct"
+        ),
+    )
     print(json.dumps(metrics))
     return 0
 
@@ -103,9 +90,7 @@ def cmd_stream(args) -> int:
     from nem_mms_spark.streaming import incremental_encode
 
     spark = _spark(args)
-    incremental_encode(
-        spark, args.input, args.out, num_parts=args.num_parts
-    )
+    incremental_encode(spark, args.input, args.out)
     print(json.dumps({"drained": args.input, "out": args.out}))
     return 0
 
@@ -185,25 +170,17 @@ def main(argv=None) -> int:
     e = sub.add_parser("encode", help="encode a parquet table")
     e.add_argument("--input", required=True)
     e.add_argument("--out", required=True)
-    e.add_argument("--num-parts", type=int, default=None)
-    e.add_argument("--key", default=None)
-    e.add_argument("--salt-buckets", type=int, default=4)
+    e.add_argument("--key", default="url")
     e.add_argument("--no-resume", action="store_true")
     e.add_argument(
         "--partitioning",
-        default="salted",
-        choices=(
-            "salted", "salted_full", "aligned", "source_direct",
-            "salted_direct",
-        ),
-        help="salted = hybrid hot-key-only shuffle on a DataFrame read "
-        "(default); salted_full = legacy full shuffle; aligned = "
-        "zero-shuffle in-place; source_direct = parquet files in LPT "
-        "bins, scanned with pyarrow inside the task (fastest ingest of "
-        "an existing table); salted_direct = source-direct INCLUDING "
-        "skew handling (hot hosts spill task-side to right-sized salt "
-        "buckets — zero JVM bytes; the recommended skew mode for "
-        "parquet/Iceberg sources)",
+        default="source_direct",
+        choices=("source_direct", "salted_direct"),
+        help="source_direct = parquet files in LPT bins, scanned with "
+        "pyarrow inside the task and encoded in place (default); "
+        "salted_direct = source-direct INCLUDING skew handling (hot "
+        "hosts spill task-side to right-sized salt buckets encoded in a "
+        "second pass — zero JVM bytes)",
     )
     e.set_defaults(fn=cmd_encode)
 
@@ -227,7 +204,6 @@ def main(argv=None) -> int:
     st = sub.add_parser("stream", help="incremental encode of a landing dir")
     st.add_argument("--input", required=True)
     st.add_argument("--out", required=True)
-    st.add_argument("--num-parts", type=int, default=None)
     st.set_defaults(fn=cmd_stream)
 
     i = sub.add_parser("info", help="print codec registry / encoded stats")

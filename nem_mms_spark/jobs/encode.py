@@ -1,34 +1,34 @@
-"""The encode job: DataFrame -> encoded blocks + manifest + checkpoint.
+"""The encode job: source -> encoded blocks + manifest + checkpoint.
 
-Spark-first restatement of the reference's parse pipeline
-(/root/reference/src/main.rs:92-99 -> src/packages/mod.rs:196-237):
+Spark-first restatement of the reference's parse pipeline (its
+src/main.rs:92-99 -> src/packages/mod.rs:196-237), which encodes each
+input unit in place and writes one columnar file per unit, with no
+shuffle.  Every entry point keeps that shape:
 
-  source DataFrame
-    -> salted partition assignment  (skew: hot url-hosts split across
-       `salt_buckets` salts while keeping host locality for symbol tables)
-    -> LEFT ANTI join vs checkpoint (resume)
-    -> repartition(part_id) + sortWithinPartitions(part_id, sort_cols)
+  source (DataFrame splits, or parquet files in LPT bins)
+    -> skip parts already committed in the checkpoint (resume)
+    -> sort each part by `sort_cols` in place
        (sorting lengthens runs -> RLE/delta win; SIGMOD'20 RLE-permutation)
-    -> ONE mapInArrow job: each task encodes its partition (zero-copy
-       Arrow batches; one FSST/dict table per partition-column;
-       row-aligned blocks bound UDF memory) and WRITES its own
-       blocks/part_id=N and manifest/part_id=N parquet (Iceberg style:
-       task-side data files, visibility via the metadata commit); the
-       job's Spark output is one summary row per partition, from which
-       the driver commits the checkpoint.
+    -> ONE mapInArrow job: each task encodes its part (zero-copy Arrow
+       batches; one FSST/dict table per part-column; row-aligned blocks
+       bound UDF memory) and WRITES its own blocks/part_id=N and
+       manifest/part_id=N parquet (Iceberg style: task-side data files,
+       visibility via the metadata commit); the job's Spark output is one
+       summary row per part, from which the driver commits the checkpoint.
 
-For parquet/Iceberg sources, `encode_parquet` pushes the SCAN into the
-task too (pyarrow vectorized reader — no JVM row materialization).
-
-At 100 TB: `num_parts` sizes a partition (target 256 MB-1 GB raw); the
-pipeline is shuffle-once (only hot keys shuffle in the default hybrid
-mode) and job-count-one per branch; nothing re-reads the payload.
+`encode_dataframe` takes a part to be an input split (spark_partition_id;
+zero exchange).  `encode_parquet` pushes the SCAN into the task too
+(pyarrow vectorized reader, no JVM row materialization) with part = source
+file, and its salted-direct mode handles key skew by spilling hot url
+hosts task-side into right-sized salt buckets encoded in a second pass.
+Nothing re-reads the payload.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 from collections.abc import Iterator
 
@@ -42,339 +42,79 @@ from nem_mms_spark import framing
 from nem_mms_spark import manifest as M
 from nem_mms_spark.selector import ColumnContext, select_and_encode
 
-DEFAULT_SALT_BUCKETS = 8
-
-
-def with_part_id(
-    df: DataFrame,
-    num_parts: int,
-    key_col: str | None = None,
-    salt_buckets: int = DEFAULT_SALT_BUCKETS,
-) -> DataFrame:
-    """Stable partition assignment. For url-keyed tables: salted host hash
-    (north_rule skew handling); otherwise hash of the key column."""
-    cols = df.columns
-    if key_col is None:
-        key_col = "url" if "url" in cols else cols[0]
-    if key_col == "url":
-        host = F.expr("parse_url(url, 'HOST')")
-        salt = F.pmod(F.xxhash64(F.col("url")), F.lit(salt_buckets))
-        part = F.pmod(F.xxhash64(host, salt), F.lit(num_parts))
-    else:
-        part = F.pmod(F.xxhash64(F.col(key_col)), F.lit(num_parts))
-    return df.withColumn("part_id", part.cast("int"))
-
-
-def _key_expr(key_col: str):
-    """Partitioning key: url-host prefix for url tables, else the column."""
-    if key_col == "url":
-        return F.expr("parse_url(url, 'HOST')")
-    return F.col(key_col)
-
-
-def _split_hot(
-    spark: SparkSession,
-    df: DataFrame,
-    num_parts: int,
-    key_col: str,
-    hot_factor: float = 1.0,
-    min_hot_rows: int = 4096,
-):
-    """Hybrid skew plan: shuffle ONLY the rows whose key is hot.
-
-    One aggregation job measures key frequencies (map-side combine shrinks
-    it to the distinct-key count); keys holding more than
-    ``hot_factor * total / num_parts`` rows — with the default
-    hot_factor=1.0, exactly the keys that CANNOT fit one partition — go
-    to the shuffled path, everything else encodes in place with zero
-    shuffle (the aligned path).  Salting pays only for the skew it fixes.
-    By pigeonhole the hot set has at most ``num_parts / hot_factor``
-    keys, so the plan table always broadcasts.
-
-    Note on shuffle compression: keep it ON even for tmpfs shuffle dirs —
-    this box is memory-bandwidth-bound and lz4 REDUCES bytes through the
-    memory system (measured: uncompressed shuffle was 5x slower).
-
-    Each hot key gets a right-sized CONTIGUOUS range of part ids
-    (``buckets = ceil(count / target)`` salt buckets starting at a
-    per-key base), so no hot partition is oversized and same-key rows
-    stay grouped per salt bucket for symbol-table locality (north_rule:
-    salted repartitioning on url-host prefix).  Rows are dispersed across
-    their key's buckets by a whole-row content hash — deterministic under
-    retries, unlike rand().
-
-    Returns (cold_with_part_id, hot_with_part_id | None, hot_parts).
-    Cold part ids are the input split ids (>= 0); hot part ids live in
-    ``[-hot_parts, -1]`` — NEGATIVE, so they are disjoint from any cold
-    id by sign, structurally: the cold branch's spark_partition_id() is
-    evaluated inside the write job, and if AQE or input re-listing ever
-    changed the physical partition count between planning and write, an
-    offset-based hot range could collide with a cold id and the post-job
-    hot-dir move would silently replace cold data.  The sign split makes
-    that impossible and, as a bonus, hot ids are a pure function of table
-    content (no dependence on the input split count).
-    """
-    kexpr = _key_expr(key_col)
-    # hot detection runs on a 5% sample when the table is large enough
-    # (a key at the hot threshold still lands thousands of sampled rows,
-    # so detection error is ~2%); small tables fall back to the exact
-    # count.  The seeded sample is deterministic for a fixed input split
-    # list — the same caveat the cold path's part ids already carry.
-    frac = 0.05
-    sampled = df.sample(fraction=frac, seed=7)
-    counts = sampled.groupBy(kexpr.alias("_k")).count().cache()
-    sample_total = counts.agg(F.sum("count")).collect()[0][0] or 0
-    if sample_total < 100_000:
-        counts.unpersist()
-        frac = 1.0
-        counts = df.groupBy(kexpr.alias("_k")).count().cache()
-        sample_total = counts.agg(F.sum("count")).collect()[0][0] or 0
-    total = int(sample_total / frac)
-    target = max(1, total // max(num_parts, 1))
-    # min_hot_rows floor: when partitions are tiny (small tables), "skew"
-    # cannot hurt and per-key bucket math degenerates — stay aligned
-    thresh = max(min_hot_rows, int(hot_factor * target))
-    hot_rows = (
-        counts.filter(
-            (F.col("count") > thresh * frac) & F.col("_k").isNotNull()
-        ).collect()
-    )
-    counts.unpersist()
-    if frac < 1.0:
-        hot_rows = [
-            {"_k": r["_k"], "count": int(r["count"] / frac)}
-            for r in hot_rows
-        ]
-    if not hot_rows:
-        return df.withColumn("part_id", F.spark_partition_id()), None, 0
-
-    # deterministic order: biggest first, key as tiebreak
-    hot_rows.sort(key=lambda r: (-r["count"], str(r["_k"])))
-    base = 0
-    plan = []
-    for r in hot_rows:
-        # right-sized: enough salt buckets that no bucket exceeds the
-        # partition target (a key that fits a partition gets 1 bucket =
-        # pure co-location; a monster key gets as many as it needs); 2%
-        # inflation absorbs sampling error in the count estimate
-        buckets = max(-(-int(r["count"] * 1.02) // target), 1)
-        plan.append((r["_k"], base, buckets))
-        base += buckets
-    hot_parts = base
-    key_type = df.select(kexpr.alias("_k")).schema[0].dataType
-    plan_df = spark.createDataFrame(
-        plan, schema=f"_k {key_type.simpleString()}, _base int, _buckets int"
-    )
-
-    marked = df.join(
-        F.broadcast(plan_df), on=kexpr.eqNullSafe(F.col("_k")), how="left"
-    )
-    cold = (
-        marked.filter(F.col("_base").isNull())
-        .drop("_k", "_base", "_buckets")
-        .withColumn("part_id", F.spark_partition_id())
-    )
-    row_hash = F.xxhash64(*[F.col(c) for c in df.columns])
-    part = (
-        -(
-            F.lit(1)
-            + F.col("_base")
-            + F.pmod(row_hash, F.col("_buckets").cast("long"))
-        )
-    ).cast("int")
-    hot = (
-        marked.filter(F.col("_base").isNotNull())
-        .withColumn("part_id", part)
-        .drop("_k", "_base", "_buckets")
-    )
-    return cold, hot, hot_parts
-
 
 def encode_dataframe(
     spark: SparkSession,
     df: DataFrame,
     out_dir: str,
     *,
-    num_parts: int | None = None,
     key_col: str | None = None,
-    salt_buckets: int = DEFAULT_SALT_BUCKETS,
     sort_cols: list[str] | None = None,
     block_rows: int = framing.DEFAULT_BLOCK_ROWS,
     block_bytes: int = framing.DEFAULT_BLOCK_BYTES,
     resume: bool = True,
-    partitioning: str = "salted",
 ) -> dict:
-    """Run the encode pipeline; returns summary metrics.
+    """Encode each input split of ``df`` in place; returns summary metrics.
 
-    partitioning:
-      * "salted"  (default) — HYBRID skew handling: one frequency
-        aggregation finds the hot keys (url hosts), only rows of hot keys
-        shuffle (into right-sized contiguous salt-bucket part ids); the
-        cold majority encodes in place with zero shuffle.  Pays shuffle
-        cost proportional to the skew it fixes.
-      * "salted_full" — legacy full shuffle: EVERY row repartitions by
-        salted url-host hash.  Maximum host co-location, one full
-        shuffle.
-      * "aligned" — partition identity = input split
-        (spark_partition_id): ZERO shuffle, each split encodes in place.
-        The right mode for append-only ingest where the input layout is
-        already acceptable.
+    Part identity = input split (``spark_partition_id()``): every split is
+    sorted by ``sort_cols`` within itself and encoded by the task that
+    reads it, so the plan holds no exchange.  A caller that wants more or
+    fewer parts repartitions ``df`` first.
 
-    Resume notes: "aligned" and the cold path of "salted" key partitions
-    on input split ids, so resume requires a stable input file list
-    across retries (true for static batches); hot part ids and the
-    hot-key plan are pure functions of table content.  The partitioning
-    mode and its parameters are recorded in the checkpoint dir and
-    resuming with different ones raises (a silent mismatch would skip
-    partitions via stale done-ids and drop data).
+    Resume: part ids are input split ids, so resume requires a stable
+    input split list across retries (true for static batches).  The mode
+    and key column are recorded in the checkpoint dir, and resuming under
+    different ones raises (a silent mismatch would skip partitions via
+    stale done-ids and drop data).
     """
-    num_parts = num_parts or max(spark.sparkContext.defaultParallelism, 4)
     if key_col is None:
         key_col = "url" if "url" in df.columns else df.columns[0]
     if sort_cols is None:
         sort_cols = [c for c in ("warc_ts", "ts") if c in df.columns]
-
-    source_cols = df.columns
-    hot = None
-    hot_parts = 0
-    if partitioning == "aligned":
-        work = df.withColumn("part_id", F.spark_partition_id())
-    elif partitioning == "salted":
-        work, hot, hot_parts = _split_hot(spark, df, num_parts, key_col)
-    elif partitioning == "salted_full":
-        work = with_part_id(df, num_parts, key_col, salt_buckets)
-    else:
-        raise ValueError(f"unknown partitioning mode {partitioning!r}")
-    if not resume:
-        # fresh encode = fresh lineage + fresh data dirs (prevents stale
-        # partition dirs from a previous layout leaking into decode)
-        import shutil as _sh
-
-        ckpt.clear_checkpoint(out_dir)
-        _sh.rmtree(os.path.join(out_dir, M.BLOCKS_DIR), ignore_errors=True)
-        _sh.rmtree(os.path.join(out_dir, M.MANIFEST_DIR), ignore_errors=True)
-    ckpt.check_partitioning_meta(
-        out_dir,
-        {
-            "partitioning": partitioning,
-            "num_parts": num_parts,
-            "key_col": key_col,
-            "salt_buckets": salt_buckets,
-        },
-        resume=resume,
+    done_ids = _start_run(
+        spark, out_dir, {"partitioning": "aligned", "key_col": key_col},
+        resume,
     )
-    done = ckpt.done_parts(spark, out_dir) if resume else None
-    n_done = 0
-    if done is not None:
-        done = done.cache()
-        n_done = done.count()
-        work = ckpt.filter_pending(work, done)
-        if hot is not None:
-            hot = ckpt.filter_pending(hot, done)
+    work = df.withColumn("part_id", F.spark_partition_id())
+    if done_ids:
+        work = work.filter(~F.col("part_id").isin(sorted(done_ids)))
+    if sort_cols:
+        work = work.sortWithinPartitions(*sort_cols)
 
-    # Shuffled branches sort with a whole-row content-hash TIEBREAKER so
-    # the within-partition order is TOTAL (up to bit-identical duplicate
-    # rows, which are interchangeable): shuffle delivery order is not
-    # deterministic across task attempts, and without a total order a
-    # retried/speculative attempt could produce different block bytes and
-    # fingerprints than the attempt whose summary committed (round-4
-    # ADVICE).  Unshuffled branches keep the input order — deterministic
-    # by construction for a static file listing.
-    _tb = F.xxhash64(*[F.col(c) for c in source_cols])
-    if partitioning == "salted_full":
-        work = work.repartition(num_parts, "part_id").sortWithinPartitions(
-            "part_id", *sort_cols, _tb
-        )
-    else:
-        # aligned / hybrid-cold: splits are already disjoint on part_id —
-        # sort in place, no exchange anywhere in the cold plan
-        if sort_cols:
-            work = work.sortWithinPartitions(*sort_cols)
-        if hot is not None:
-            hot = hot.repartition(hot_parts, "part_id").sortWithinPartitions(
-                "part_id", *sort_cols, _tb
-            )
-
-    # ONE JOB per branch (round-4: the old three-pass flow — blocks write,
-    # then a blocks re-scan for the manifest aggregation, then the
-    # checkpoint — carried a ~3 s fixed tail that alone bent the 8->32
-    # scaling curve from ~1.0 to 0.61).  Each task now writes its own
-    # partition's blocks AND manifest parquet directly (Iceberg style:
-    # data files land task-side, VISIBILITY is governed by the metadata
-    # commit — a partition exists iff its checkpoint row is committed),
-    # and the job's Spark output is one tiny summary row per partition
-    # from which the driver commits the checkpoint.  The payload bytes
-    # never round-trip through the JVM parquet writer at all.
-    blocks_dir = os.path.join(out_dir, M.BLOCKS_DIR)
-    manifest_dir = os.path.join(out_dir, M.MANIFEST_DIR)
+    # ONE JOB (round-4: the old three-pass flow — blocks write, then a
+    # blocks re-scan for the manifest aggregation, then the checkpoint —
+    # carried a ~3 s fixed tail).  Each task writes its own partition's
+    # blocks AND manifest parquet directly (Iceberg style: data files
+    # land task-side, VISIBILITY is governed by the metadata commit — a
+    # partition exists iff its checkpoint row is committed), and the
+    # job's Spark output is one tiny summary row per partition from which
+    # the driver commits the checkpoint.  The payload bytes never
+    # round-trip through the JVM parquet writer at all.
     encode_fn = _make_encoder(
-        source_cols, block_rows, block_bytes, key_col, blocks_dir,
-        manifest_dir,
+        block_rows, block_bytes, key_col,
+        os.path.join(out_dir, M.BLOCKS_DIR),
+        os.path.join(out_dir, M.MANIFEST_DIR),
     )
+    summaries = work.mapInArrow(encode_fn, SUMMARY_SCHEMA).collect()
+    ckpt.commit_checkpoint_rows(_summary_ckpt_rows(summaries), out_dir)
+    return {**ckpt.checkpoint_totals(out_dir), "skipped_parts": len(done_ids)}
 
-    def _run_branch(branch: DataFrame) -> list:
-        return branch.mapInArrow(encode_fn, SUMMARY_SCHEMA).collect()
 
-    if hot is None:
-        summaries = _run_branch(work)
-    else:
-        # TWO CONCURRENT JOBS: inside one union job Spark must finish the
-        # hot branch's shuffle-map stage before ANY result-stage task
-        # starts, so the zero-shuffle cold encode would sit hostage to
-        # the hot shuffle (measured ~2x wall).  Submitting the branches
-        # from two driver threads lets the cold encode run while the hot
-        # shuffle maps/reduces.  No staging dir is needed: hot part ids
-        # are negative, cold ids non-negative, so the two jobs write
-        # disjoint part_id directories.
-        import threading
-
-        results: dict[str, list] = {}
-        errors: list[BaseException] = []
-
-        def _run(name, branch):
-            try:
-                results[name] = _run_branch(branch)
-            except BaseException as exc:  # surfaced after join
-                errors.append(exc)
-
-        t_cold = threading.Thread(target=_run, args=("cold", work))
-        t_hot = threading.Thread(target=_run, args=("hot", hot))
-        # hot FIRST: FIFO scheduling favors the earlier job, and the hot
-        # job owns the longer critical path (its reduce stage cannot start
-        # until its shuffle-map stage completes); the cold job's
-        # independent tasks then fill whatever slots the hot stages leave
-        t_hot.start()
-        t_cold.start()
-        t_hot.join()
-        t_cold.join()
-        if errors:
-            raise errors[0]
-        summaries = results.get("cold", []) + results.get("hot", [])
-
-    ckpt_rows = sorted(
-        (
-            {
-                "part_id": r["part_id"],
-                "status": "done",
-                "n_rows": r["n_rows"],
-                "n_blocks": r["n_blocks"],
-                "n_columns": r["n_columns"],
-                "raw_bytes": r["raw_bytes"],
-                "encoded_bytes": r["encoded_bytes"],
-                "fingerprint": r["fingerprint"],
-                "encode_ns": r["encode_ns"],
-                "stage_ns": r["stage_ns"],
-            }
-            for r in summaries
-        ),
-        key=lambda r: r["part_id"],
-    )
-    ckpt.commit_checkpoint_rows(ckpt_rows, out_dir)
-
-    if done is not None:
-        done.unpersist()
-    totals = ckpt.checkpoint_totals(out_dir)
-    return {**totals, "skipped_parts": n_done}
+def _start_run(
+    spark: SparkSession, out_dir: str, meta: dict, resume: bool
+) -> set[int]:
+    """Run preamble of every entry point.  A fresh run (``resume=False``)
+    drops the old checkpoint and data dirs, so stale partition dirs from
+    a previous layout cannot leak into decode.  Then the partitioning
+    meta is checked against the stored one (resume) and recorded.
+    Returns the part ids already committed (empty on a fresh run)."""
+    if not resume:
+        ckpt.clear_checkpoint(out_dir)
+        for sub in (M.BLOCKS_DIR, M.MANIFEST_DIR):
+            shutil.rmtree(os.path.join(out_dir, sub), ignore_errors=True)
+    ckpt.check_partitioning_meta(out_dir, meta, resume=resume)
+    done = ckpt.done_parts(spark, out_dir) if resume else None
+    return set() if done is None else {r["part_id"] for r in done.collect()}
 
 
 def encode_parquet(
@@ -433,9 +173,9 @@ def encode_parquet(
     catalog and tasks read from the object store — the same shape as
     any Iceberg-native scan.
 
-    DataFrame (non-file) sources still route through
-    ``encode_dataframe`` with partitioning='salted' (key-based routing
-    of an arbitrary DataFrame needs the shuffle).
+    DataFrame (non-file) sources go through ``encode_dataframe``,
+    which encodes each input split in place; key-skew handling exists
+    only here, for file sources (``partitioning="salted"``).
     """
     _t_entry = time.monotonic()
     files = sorted(
@@ -462,32 +202,21 @@ def encode_parquet(
     else:
         src_cols = spark.read.parquet(src_dir).columns
 
-    if not resume:
-        import shutil as _sh
-
-        ckpt.clear_checkpoint(out_dir)
-        _sh.rmtree(os.path.join(out_dir, M.BLOCKS_DIR), ignore_errors=True)
-        _sh.rmtree(os.path.join(out_dir, M.MANIFEST_DIR), ignore_errors=True)
-    ckpt.check_partitioning_meta(
-        out_dir,
+    done_ids = _start_run(
+        spark, out_dir,
         {
             "partitioning": "source_direct",
             "num_parts": len(files),
             "key_col": key_col,
             "salt_buckets": 0,
         },
-        resume=resume,
+        resume,
     )
     splits = [
-        (i, os.path.join(src_dir, f)) for i, f in enumerate(files)
+        (i, os.path.join(src_dir, f))
+        for i, f in enumerate(files)
+        if i not in done_ids
     ]
-    n_done = 0
-    if resume:
-        done = ckpt.done_parts(spark, out_dir)
-        if done is not None:
-            done_ids = {r["part_id"] for r in done.collect()}
-            n_done = len(done_ids)
-            splits = [s for s in splits if s[0] not in done_ids]
 
     blocks_dir = os.path.join(out_dir, M.BLOCKS_DIR)
     manifest_dir = os.path.join(out_dir, M.MANIFEST_DIR)
@@ -558,56 +287,13 @@ def encode_parquet(
         _t_job = _t_collect = time.monotonic()
         _t_job_ns = _t_collect_ns = time.monotonic_ns()
 
-    ckpt_rows = sorted(
-        (
-            {
-                "part_id": r["part_id"],
-                "status": "done",
-                "n_rows": r["n_rows"],
-                "n_blocks": r["n_blocks"],
-                "n_columns": r["n_columns"],
-                "raw_bytes": r["raw_bytes"],
-                "encoded_bytes": r["encoded_bytes"],
-                "fingerprint": r["fingerprint"],
-                "encode_ns": r["encode_ns"],
-                "stage_ns": r["stage_ns"],
-            }
-            for r in summaries
-        ),
-        key=lambda r: r["part_id"],
-    )
-    ckpt.commit_checkpoint_rows(ckpt_rows, out_dir)
-    totals = ckpt.checkpoint_totals(out_dir)
-    # driver-side phase walls: how much of the job wall is fixed
-    # overhead (setup = listing/schema probe/meta guard, commit =
-    # checkpoint write + totals) vs the distributed job itself
-    driver_s = {
-        "setup": round(_t_job - _t_entry, 3),
-        "job": round(_t_collect - _t_job, 3),
-        "commit": round(time.monotonic() - _t_collect, 3),
-    }
-    # per-task timeline relative to job submit (seconds): lets the bench
-    # decompose the job wall into work vs schedule tail per parallelism
-    # level (bin makespan, stragglers)
-    timeline = sorted(
-        (
-            {
-                "part_id": r["part_id"],
-                "start_s": round((r["t_start_ns"] - _t_job_ns) / 1e9, 4),
-                "end_s": round((r["t_end_ns"] - _t_job_ns) / 1e9, 4),
-                "pid": r["worker_pid"],
-                "slot": r["cpu_slot"],
-            }
-            for r in summaries
-        ),
-        key=lambda r: r["start_s"],
-    )
+    ckpt.commit_checkpoint_rows(_summary_ckpt_rows(summaries), out_dir)
     return {
-        **totals,
-        "skipped_parts": n_done,
-        "driver_s": driver_s,
-        "job_wall_s": round((_t_collect_ns - _t_job_ns) / 1e9, 4),
-        "timeline": timeline,
+        **ckpt.checkpoint_totals(out_dir),
+        "skipped_parts": len(done_ids),
+        **_driver_report(
+            summaries, _t_entry, _t_job, _t_job_ns, _t_collect, _t_collect_ns
+        ),
     }
 
 
@@ -1021,27 +707,17 @@ def _encode_parquet_salted(
     hot_parts = base
 
     if not resume:
-        import shutil as _sh
-
-        ckpt.clear_checkpoint(out_dir)
-        _sh.rmtree(os.path.join(out_dir, M.BLOCKS_DIR), ignore_errors=True)
-        _sh.rmtree(os.path.join(out_dir, M.MANIFEST_DIR), ignore_errors=True)
-        _sh.rmtree(os.path.join(out_dir, "hot_spill"), ignore_errors=True)
-    ckpt.check_partitioning_meta(
-        out_dir,
+        shutil.rmtree(os.path.join(out_dir, "hot_spill"), ignore_errors=True)
+    done_ids = _start_run(
+        spark, out_dir,
         {
             "partitioning": "salted_direct",
             "num_parts": len(files),
             "key_col": key_col,
             "salt_buckets": hot_parts,
         },
-        resume=resume,
+        resume,
     )
-    done_ids: set[int] = set()
-    if resume:
-        done = ckpt.done_parts(spark, out_dir)
-        if done is not None:
-            done_ids = {r["part_id"] for r in done.collect()}
 
     blocks_dir = os.path.join(out_dir, M.BLOCKS_DIR)
     manifest_dir = os.path.join(out_dir, M.MANIFEST_DIR)
@@ -1203,23 +879,7 @@ def _encode_parquet_salted(
     totals = ckpt.checkpoint_totals(out_dir)
     if totals["parts"] >= len(files) + hot_parts:
         # everything committed: the spill has served its purpose
-        import shutil as _sh
-
-        _sh.rmtree(spill_dir, ignore_errors=True)
-    summaries = cold_summaries + hot_summaries
-    timeline = sorted(
-        (
-            {
-                "part_id": r["part_id"],
-                "start_s": round((r["t_start_ns"] - _t_job_ns) / 1e9, 4),
-                "end_s": round((r["t_end_ns"] - _t_job_ns) / 1e9, 4),
-                "pid": r["worker_pid"],
-                "slot": r["cpu_slot"],
-            }
-            for r in summaries
-        ),
-        key=lambda r: r["start_s"],
-    )
+        shutil.rmtree(spill_dir, ignore_errors=True)
     return {
         **totals,
         "skipped_parts": len(done_ids),
@@ -1228,17 +888,15 @@ def _encode_parquet_salted(
         # skew magnitude actually handled this run: rows that crossed
         # the spill (the mode's cost is proportional to this fraction)
         "hot_rows": sum(r["n_rows"] for r in hot_summaries),
-        "driver_s": {
-            "setup": round(_t_job - t_entry, 3),
-            "job": round(_t_collect - _t_job, 3),
-            "commit": round(time.monotonic() - _t_collect, 3),
-        },
-        "job_wall_s": round((_t_collect_ns - _t_job_ns) / 1e9, 4),
-        "timeline": timeline,
+        **_driver_report(
+            cold_summaries + hot_summaries, t_entry, _t_job, _t_job_ns,
+            _t_collect, _t_collect_ns,
+        ),
     }
 
 
 def _summary_ckpt_rows(summaries) -> list[dict]:
+    """Checkpoint rows (status 'done') from task summary rows, by part."""
     return sorted(
         (
             {
@@ -1257,6 +915,37 @@ def _summary_ckpt_rows(summaries) -> list[dict]:
         ),
         key=lambda r: r["part_id"],
     )
+
+
+def _driver_report(
+    summaries, t_entry, t_job, t_job_ns, t_collect, t_collect_ns
+) -> dict:
+    """Driver-side phase walls (setup = listing/schema probe/meta guard,
+    job = the distributed job, commit = checkpoint write + totals up to
+    now) and the per-task timeline relative to job submit, in seconds:
+    the bench decomposes the job wall into work vs schedule tail (bin
+    makespan, stragglers) from it."""
+    return {
+        "driver_s": {
+            "setup": round(t_job - t_entry, 3),
+            "job": round(t_collect - t_job, 3),
+            "commit": round(time.monotonic() - t_collect, 3),
+        },
+        "job_wall_s": round((t_collect_ns - t_job_ns) / 1e9, 4),
+        "timeline": sorted(
+            (
+                {
+                    "part_id": r["part_id"],
+                    "start_s": round((r["t_start_ns"] - t_job_ns) / 1e9, 4),
+                    "end_s": round((r["t_end_ns"] - t_job_ns) / 1e9, 4),
+                    "pid": r["worker_pid"],
+                    "slot": r["cpu_slot"],
+                }
+                for r in summaries
+            ),
+            key=lambda r: r["start_s"],
+        ),
+    }
 
 
 def _bin_file_splits(spark, splits, parallelism, size_of=os.path.getsize):
@@ -1384,11 +1073,10 @@ def _atomic_write(
     in-memory buffer, then one open/write/close to a dot-prefixed temp
     (invisible to Spark and pyarrow dataset listings) and os.replace —
     a retried or speculative task attempt re-produces identical bytes so
-    last-replace-wins is safe.  Determinism holds on every branch:
-    unshuffled branches encode rows in input order, and shuffled
-    branches sort within partitions with a whole-row-hash tiebreaker
-    (a TOTAL order — ties only between bit-identical rows, whose swap
-    leaves the bytes unchanged).  Buffer-then-single-write is the
+    last-replace-wins is safe.  Determinism holds on every path: no part
+    is fed by a shuffle, so each part's rows arrive in a fixed order
+    (input order, or spill-file name order for salted-direct hot
+    buckets) and the stable sort keeps it.  Buffer-then-single-write is the
     object-store shape (one PUT) and also decomposes the in-task `write`
     stage into `wser` (parquet serialization, pure CPU+allocator) vs
     `wio` (file syscalls) so contention at high concurrency is
@@ -1444,39 +1132,25 @@ def _atomic_write(
         )
 
 
-def _make_encoder(
-    source_cols, block_rows, block_bytes, key_col, blocks_dir, manifest_dir
-):
-    """Build the mapInArrow kernel. Pure function of partition content."""
+def _make_encoder(block_rows, block_bytes, key_col, blocks_dir, manifest_dir):
+    """Build the mapInArrow kernel of ``encode_dataframe``: a task holds
+    exactly one part (its input split), so it concatenates its batches
+    and encodes them once.  Pure function of partition content."""
 
     def encode_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         _tune_worker()
-        cur_pid = None
-        buf: list[pa.RecordBatch] = []
-        for batch in batches:
-            pids = batch.column("part_id").to_numpy(zero_copy_only=False)
-            if len(pids) == 0:
-                continue
-            # rows are sorted by part_id: split batch at part boundaries
-            bounds = np.concatenate(
-                [[0], np.flatnonzero(pids[1:] != pids[:-1]) + 1, [len(pids)]]
+        buf = [b for b in batches if b.num_rows]
+        if not buf:
+            return
+        tbl = pa.Table.from_batches(buf)
+        pids = tbl.column("part_id").to_numpy()
+        if pids.min() != pids.max():
+            raise ValueError(
+                f"one encode task got several part ids: {sorted(set(pids))}"
             )
-            for i in range(len(bounds) - 1):
-                s, e = int(bounds[i]), int(bounds[i + 1])
-                pid = int(pids[s])
-                if pid != cur_pid and buf:
-                    yield from _flush(cur_pid, buf)
-                    buf = []
-                cur_pid = pid
-                buf.append(batch.slice(s, e - s))
-        if buf:
-            yield from _flush(cur_pid, buf)
-
-    def _flush(pid: int, buf: list[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        tbl = pa.Table.from_batches(buf).drop_columns(["part_id"])
         yield _encode_partition_table(
-            pid, tbl, block_rows, block_bytes, key_col, blocks_dir,
-            manifest_dir,
+            int(pids[0]), tbl.drop_columns(["part_id"]), block_rows,
+            block_bytes, key_col, blocks_dir, manifest_dir,
         )
 
     return encode_partition

@@ -813,16 +813,14 @@ def _encoded_documents(spark, sf_dir: str, sort_cols=None) -> str:
     out = _ENCODE_CACHE.get(key)
     if out is None or not os.path.isdir(out):
         out = tempfile.mkdtemp(prefix="nem_mms_encq_")
-        # r7: aligned mode over an explicit 4-way repartition — doc_id is
-        # unique, so the salted mode's hot-detection aggregation (two
-        # jobs) can never find a hot key here, and the single-file scan
-        # gave ONE aligned partition (single-core encode).  Every query
+        # encode_dataframe encodes each input split in place, and the
+        # single-file scan is ONE split (a single-core encode): the
+        # explicit repartition spreads it over 16 parts.  Every query
         # over the encoded output aggregates the full decoded multiset,
         # which is invariant to the partition assignment.
         encode_dataframe(
             spark, _t(spark, sf_dir, "documents").repartition(16), out,
-            key_col="doc_id", num_parts=16, sort_cols=sort_cols,
-            resume=False, partitioning="aligned",
+            key_col="doc_id", sort_cols=sort_cols, resume=False,
         )
         _ENCODE_CACHE[key] = out
         atexit.register(shutil.rmtree, out, ignore_errors=True)

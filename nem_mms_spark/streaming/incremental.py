@@ -24,7 +24,6 @@ def incremental_encode(
     source_dir: str,
     out_dir: str,
     schema: str | None = None,
-    num_parts: int | None = None,
     trigger_once: bool = True,
 ):
     """Start (and with trigger_once=True, drain) a streaming encode.
@@ -49,7 +48,6 @@ def incremental_encode(
             spark,
             batch_df,
             os.path.join(out_dir, f"batch={epoch_id}"),
-            num_parts=num_parts,
             resume=True,
         )
 

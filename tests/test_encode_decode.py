@@ -7,10 +7,8 @@ import os
 
 import pytest
 
-from pyspark.sql import functions as F
-
 from nem_mms_spark.datagen.webpages import web_pages_df
-from nem_mms_spark.jobs.encode import encode_dataframe, with_part_id
+from nem_mms_spark.jobs.encode import encode_dataframe, encode_parquet
 from nem_mms_spark.jobs.decode import decode_blocks, read_manifest
 from nem_mms_spark.jobs.verify import verify_roundtrip
 
@@ -24,7 +22,7 @@ def pages(spark):
 
 def test_encode_decode_bit_identical(spark, pages, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("enc"))
-    metrics = encode_dataframe(spark, pages, out, num_parts=6, block_rows=512)
+    metrics = encode_dataframe(spark, pages, out, block_rows=512)
     assert metrics["rows"] == N_ROWS
     assert metrics["ratio"] < 0.6, f"expected real compression, got {metrics}"
     result = verify_roundtrip(spark, pages, out, key="url")
@@ -35,7 +33,7 @@ def test_encode_decode_bit_identical(spark, pages, tmp_path_factory):
 def test_manifest_selector_outcomes(spark, pages, tmp_path_factory):
     """FIXTURES.md §A expected selector outcomes per column."""
     out = str(tmp_path_factory.mktemp("enc_sel"))
-    encode_dataframe(spark, pages, out, num_parts=4)
+    encode_dataframe(spark, pages, out)
     man = read_manifest(spark, out).collect()
     by_col = {}
     for r in man:
@@ -50,7 +48,7 @@ def test_manifest_selector_outcomes(spark, pages, tmp_path_factory):
 
 def test_column_subset_decode(spark, pages, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("enc_sub"))
-    encode_dataframe(spark, pages, out, num_parts=4)
+    encode_dataframe(spark, pages, out)
     d = decode_blocks(spark, out, columns=["url", "lang"])
     assert d.columns == ["url", "lang"]
     assert d.count() == N_ROWS
@@ -58,41 +56,77 @@ def test_column_subset_decode(spark, pages, tmp_path_factory):
         decode_blocks(spark, out, columns=["nope"])
 
 
-def test_resume_skips_done_and_completes_partial(spark, pages, tmp_path_factory):
-    # salted_full: part ids are CONTENT hashes, so resume can stitch a
-    # grown input onto a partial encode (aligned/hybrid key on input
-    # splits and support same-input retry only — enforced by the
-    # checkpoint partitioning metadata guard)
+def _ckpt_parts(spark, out):
+    """{part_id: (fingerprint, encoded_bytes, n_rows)} of the committed
+    checkpoint."""
+    return {
+        r["part_id"]: (r["fingerprint"], r["encoded_bytes"], r["n_rows"])
+        for r in spark.read.parquet(f"{out}/checkpoint").collect()
+    }
+
+
+def test_resume_skips_done_and_completes_partial(
+    spark, pages, tmp_path_factory, drop_committed_parts
+):
+    """A run killed after committing all but two parts resumes by
+    encoding exactly those two, and ends byte-equal to an uninterrupted
+    run part by part."""
     out = str(tmp_path_factory.mktemp("enc_resume"))
-    # first: encode only a subset of partitions (simulates a mid-run kill
-    # after some partitions committed their checkpoint rows)
-    part_ids = with_part_id(pages, 6).select("part_id").distinct().collect()
-    all_parts = sorted(r["part_id"] for r in part_ids)
-    half = all_parts[: len(all_parts) // 2]
-    subset = with_part_id(pages, 6).filter(F.col("part_id").isin(half)).drop("part_id")
-    m1 = encode_dataframe(spark, subset, out, num_parts=6, partitioning="salted_full")
-    assert m1["rows"] < N_ROWS
+    m1 = encode_dataframe(spark, pages, out, resume=False)
+    full = _ckpt_parts(spark, out)
+    assert m1["parts"] == len(full) > 2
+    drop_committed_parts(out, sorted(full)[:2])
 
-    # resume over the FULL input — stitched from the done subset plus the
-    # remainder with a real set-op (unionByName, order-insensitive): must
-    # skip done partitions, encode the rest
-    rest = (
-        with_part_id(pages, 6)
-        .filter(~F.col("part_id").isin(half))
-        .drop("part_id")
-    )
-    full = subset.unionByName(rest.select(*subset.columns))
-    m2 = encode_dataframe(spark, full, out, num_parts=6, partitioning="salted_full")
-    assert m2["skipped_parts"] == len(half)
+    m2 = encode_dataframe(spark, pages, out, resume=True)
+    assert m2["skipped_parts"] == m1["parts"] - 2
     assert m2["rows"] == N_ROWS
-
+    assert _ckpt_parts(spark, out) == full
     verify_roundtrip(spark, pages, out, key="url")
 
-    # third run: everything already done -> no work, output unchanged
-    m3 = encode_dataframe(spark, pages, out, num_parts=6, partitioning="salted_full")
-    assert m3["skipped_parts"] == len(all_parts)
-    assert m3["rows"] == N_ROWS
-    assert m3["encoded_bytes"] == m2["encoded_bytes"]
+
+def test_resume_partitioning_mismatch_raises(spark, pages, tmp_path):
+    """Resuming under another key column or another mode raises instead
+    of matching fresh part ids against stale done ids."""
+    out = str(tmp_path / "enc")
+    small = pages.limit(2000)
+    encode_dataframe(spark, small, out, resume=False)
+    with pytest.raises(ValueError, match="partitioning parameters changed"):
+        encode_dataframe(spark, small, out, key_col="lang", resume=True)
+    src = str(tmp_path / "src")
+    small.write.parquet(src)
+    with pytest.raises(ValueError, match="partitioning parameters changed"):
+        encode_parquet(spark, src, out, resume=True)
+
+
+def test_resume_without_partitioning_meta_raises(spark, pages, tmp_path):
+    """A checkpoint with committed runs but no _partitioning.json (older
+    engine version / lost meta) must refuse to resume: its done-ids were
+    produced by an unknown part-id assignment, and silently adopting the
+    current meta is exactly the stale-done-ids data drop the guard
+    prevents."""
+    out = str(tmp_path / "enc")
+    small = pages.limit(2000)
+    encode_dataframe(spark, small, out, resume=False)
+    os.remove(os.path.join(out, "checkpoint", "_partitioning.json"))
+    with pytest.raises(ValueError, match="no\\s+_partitioning.json"):
+        encode_dataframe(spark, small, out, resume=True)
+    # an EMPTY checkpoint dir without meta is fine (first run writes it)
+    out2 = str(tmp_path / "enc2")
+    encode_dataframe(spark, small, out2, resume=True)
+
+
+def test_same_input_resume_is_noop(spark, pages, tmp_path):
+    """Re-running the same input over a completed encode skips every
+    partition and leaves the output byte-identical."""
+    from nem_mms_spark.checkpoint import checkpoint_totals
+
+    out = str(tmp_path / "enc")
+    m1 = encode_dataframe(spark, pages, out, resume=False)
+    before = checkpoint_totals(out)
+    m2 = encode_dataframe(spark, pages, out, resume=True)
+    assert m2["skipped_parts"] == before["parts"]
+    assert m2["rows"] == m1["rows"] == N_ROWS
+    assert m2["encoded_bytes"] == m1["encoded_bytes"]
 
 
 def test_fresh_reencode_truncates_stale_partitions(spark, pages, tmp_path_factory):
@@ -100,9 +134,9 @@ def test_fresh_reencode_truncates_stale_partitions(spark, pages, tmp_path_factor
     partitions: a smaller re-encode fully replaces blocks/manifest/
     checkpoint (static partition overwrite)."""
     out = str(tmp_path_factory.mktemp("enc_fresh"))
-    encode_dataframe(spark, pages.limit(400), out, num_parts=6)
+    encode_dataframe(spark, pages.limit(400), out)
     small = pages.limit(100)
-    m = encode_dataframe(spark, small, out, num_parts=2, resume=False)
+    m = encode_dataframe(spark, small, out, resume=False)
     assert m["rows"] == 100 and m["parts"] <= 2, m
     decoded = decode_blocks(spark, out)
     assert decoded.count() == 100
@@ -115,29 +149,46 @@ def test_verify_roundtrip_with_duplicate_keys(spark, pages, tmp_path_factory):
     dupes = pages.limit(200)
     doubled = dupes.unionByName(dupes)
     out = str(tmp_path_factory.mktemp("enc_dup"))
-    m = encode_dataframe(spark, doubled, out, num_parts=3)
+    m = encode_dataframe(spark, doubled, out)
     assert m["rows"] == 400
     result = verify_roundtrip(spark, doubled, out, key="url")
     assert result["source_rows"] == result["decoded_rows"] == 400
 
 
-def test_aligned_mode_zero_shuffle_roundtrip(spark, pages, tmp_path_factory):
-    """partitioning='aligned' encodes each input split in place: no
-    exchange anywhere in the plan, still bit-identical round-trip."""
-    from pyspark.sql import functions as F
-
+def test_aligned_mode_zero_shuffle_roundtrip(
+    spark, pages, tmp_path_factory, drop_committed_parts
+):
+    """encode_dataframe encodes each input split in place: every Spark
+    job it runs, fresh or as a partial resume, is ONE stage (an exchange
+    would add a shuffle-map stage), and the round-trip is bit-identical."""
+    sc = spark.sparkContext
+    st = sc.statusTracker()
     out = str(tmp_path_factory.mktemp("enc_aligned"))
-    m = encode_dataframe(
-        spark, pages, out, partitioning="aligned", resume=False
-    )
+
+    def stages_per_job(group, **kw):
+        try:
+            sc.setJobGroup(group, "encode_dataframe")
+            m = encode_dataframe(spark, pages, out, **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+        jobs = [st.getJobInfo(j) for j in st.getJobIdsForGroup(group)]
+        stage_names = [
+            i.name for j in jobs for s in j.stageIds
+            if (i := st.getStageInfo(s)) is not None
+        ]
+        # the encode job itself was seen, so the check is not vacuous
+        assert any("encode.py" in n for n in stage_names), stage_names
+        return m, [len(j.stageIds) for j in jobs]
+
+    m, stages = stages_per_job("aligned-fresh", resume=False)
     assert m["rows"] == N_ROWS
+    assert stages and max(stages) == 1, stages
+    drop_committed_parts(out, [0])
+    m, stages = stages_per_job("aligned-resume", resume=True)
+    assert m["skipped_parts"] == m["parts"] - 1
+    assert stages and max(stages) == 1, stages
     verify_roundtrip(spark, pages, out, key="url")
-    # the aligned pre-encode plan shape contains no shuffle
-    work = pages.withColumn(
-        "part_id", F.spark_partition_id()
-    ).sortWithinPartitions("warc_ts")
-    plan = work._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
-    assert "Exchange" not in plan, plan
 
 
 def test_determinism_across_runs(spark, pages, tmp_path_factory):
@@ -145,13 +196,9 @@ def test_determinism_across_runs(spark, pages, tmp_path_factory):
     (codec choice is a pure function of partition content)."""
     out1 = str(tmp_path_factory.mktemp("enc_d1"))
     out2 = str(tmp_path_factory.mktemp("enc_d2"))
-    encode_dataframe(spark, pages, out1, num_parts=5)
-    encode_dataframe(spark, pages, out2, num_parts=5)
-    c1 = {r["part_id"]: (r["fingerprint"], r["encoded_bytes"], r["n_rows"])
-          for r in spark.read.parquet(os.path.join(out1, "checkpoint")).collect()}
-    c2 = {r["part_id"]: (r["fingerprint"], r["encoded_bytes"], r["n_rows"])
-          for r in spark.read.parquet(os.path.join(out2, "checkpoint")).collect()}
-    assert c1 == c2
+    encode_dataframe(spark, pages, out1)
+    encode_dataframe(spark, pages, out2)
+    assert _ckpt_parts(spark, out1) == _ckpt_parts(spark, out2)
 
 
 def test_uncommitted_partition_is_invisible(spark, pages, tmp_path_factory):
@@ -165,7 +212,7 @@ def test_uncommitted_partition_is_invisible(spark, pages, tmp_path_factory):
     from nem_mms_spark.jobs.decode import scan_blocks
 
     out = str(tmp_path_factory.mktemp("enc_vis"))
-    encode_dataframe(spark, pages, out, num_parts=4, resume=False)
+    encode_dataframe(spark, pages, out, resume=False)
     n_committed = decode_blocks(spark, out).count()
     n_scan = scan_blocks(
         spark, out, "warc_ts", lo=0, columns=["url", "warc_ts"]
@@ -193,7 +240,7 @@ def test_decode_without_any_commit_raises(spark, pages, tmp_path_factory):
     import shutil
 
     out = str(tmp_path_factory.mktemp("enc_nockpt"))
-    encode_dataframe(spark, pages, out, num_parts=4, resume=False)
+    encode_dataframe(spark, pages, out, resume=False)
     shutil.rmtree(os.path.join(out, "checkpoint"))
     with pytest.raises(ValueError, match="no committed checkpoint"):
         decode_blocks(spark, out).count()

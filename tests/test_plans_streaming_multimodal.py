@@ -70,12 +70,12 @@ def test_incremental_encode_two_batches(spark, tmp_path):
     src = str(tmp_path / "landing")
     out = str(tmp_path / "enc")
     web_pages_df(spark, 500).write.mode("append").parquet(src)
-    incremental_encode(spark, src, out, num_parts=2)
+    incremental_encode(spark, src, out)
     # a second file arrives; only the new data is processed
     web_pages_df(spark, 300).filter(F.col("url").isNotNull()).write.mode(
         "append"
     ).parquet(src)
-    incremental_encode(spark, src, out, num_parts=2)
+    incremental_encode(spark, src, out)
 
     import glob
 
@@ -115,8 +115,7 @@ def test_stream_decode_is_single_scan_over_many_batches(spark, tmp_path):
             F.col("url").isNotNull()
         ).limit(rows_each)
         encode_dataframe(
-            spark, df, f"{out}/batch={epoch}", num_parts=2, resume=False,
-            partitioning="aligned",
+            spark, df, f"{out}/batch={epoch}", resume=False
         )
     two = str(tmp_path / "two_batches")
     for epoch in range(2):

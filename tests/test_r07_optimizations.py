@@ -94,8 +94,8 @@ def test_scan_blocks_weak_selectivity_broadcast_map(spark, tmp_path):
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
     out = str(tmp_path / "enc")
     encode_dataframe(
-        spark, docs, out, key_col="doc_id", num_parts=4,
-        sort_cols=["n_chars"], resume=False,
+        spark, docs, out, key_col="doc_id", sort_cols=["n_chars"],
+        resume=False,
     )
     lo, hi = 10, 10_000  # survives nearly every block
     got = (
@@ -121,7 +121,7 @@ def test_scan_blocks_empty_selection_returns_typed_empty(spark, tmp_path):
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
     out = str(tmp_path / "enc")
     encode_dataframe(
-        spark, docs, out, key_col="doc_id", num_parts=2, resume=False
+        spark, docs, out, key_col="doc_id", resume=False
     )
     empty = decode_blocks(spark, out, parts=[99_999])
     assert empty.count() == 0
@@ -387,3 +387,59 @@ def test_sort_by_unless_sorted_matches_sort_by():
     ts = pa.array(np.arange(10, dtype="int64"), type=pa.timestamp("us"))
     tbl = pa.table({"warc_ts": ts, "v": [str(i) for i in range(10)]})
     assert _sort_by_unless_sorted(tbl, ["warc_ts"]) is tbl
+
+
+def _exotic_keys():
+    import datetime
+    import decimal
+
+    import pyarrow as pa
+
+    d = decimal.Decimal
+    day = datetime.date
+    return {
+        "list": pa.array([[1], [0], [2]]),
+        "dictionary": pa.array(["b", "a", "c"]).dictionary_encode(),
+        "month_day_nano_interval": pa.array(
+            [pa.MonthDayNano([0, 1, 2]), pa.MonthDayNano([0, 0, 1])],
+            type=pa.month_day_nano_interval(),
+        ),
+        "struct": pa.array([{"a": 2}, {"a": 1}, {"a": 3}]),
+        "decimal": pa.array([d("1.5"), d("0.5"), d("2.5")]),
+        "decimal_sorted": pa.array([d("0.5"), d("1.5"), d("2.5")]),
+        "time": pa.array([datetime.time(1), datetime.time(0)]),
+        "duration": pa.array([2, 1, 3], type=pa.duration("s")),
+        "duration_sorted": pa.array([1, 2, 3], type=pa.duration("s")),
+        "bool": pa.array([True, False, True]),
+        "bool_sorted": pa.array([False, True]),
+        "binary": pa.array([b"b", b"a", b"c"]),
+        "tz_timestamp": pa.array([2, 1, 3], type=pa.timestamp("us", "UTC")),
+        "tz_timestamp_sorted": pa.array(
+            [1, 2, 3], type=pa.timestamp("us", "UTC")
+        ),
+        "date": pa.array([day(2020, 1, 2), day(2020, 1, 1)]),
+        "date_sorted": pa.array([day(2020, 1, 1), day(2020, 1, 2)]),
+        "all_null": pa.array([None, None, None], type=pa.int64()),
+    }
+
+
+@pytest.mark.parametrize("kind", sorted(_exotic_keys()))
+def test_sort_by_unless_sorted_exotic_key_types(kind):
+    """The monotonicity probe never raises on its own: for every key type
+    the skip either returns ``sort_by``'s rows or fails exactly where
+    ``sort_by`` itself fails (list, dictionary and interval keys cannot
+    be sorted by pyarrow at all)."""
+    import pyarrow as pa
+
+    from nem_mms_spark.jobs.encode import _sort_by_unless_sorted
+
+    key = _exotic_keys()[kind]
+    tbl = pa.table({"k": key, "row": pa.array(range(len(key)))})
+    try:
+        want = tbl.sort_by([("k", "ascending")])
+    except pa.ArrowException as exc:
+        with pytest.raises(type(exc)):
+            _sort_by_unless_sorted(tbl, ["k"])
+        return
+    got = _sort_by_unless_sorted(tbl, ["k"])
+    assert got.column("row").to_pylist() == want.column("row").to_pylist()

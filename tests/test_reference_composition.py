@@ -60,7 +60,7 @@ def test_flatfile_through_codec_engine(spark, tmp_path):
     )
     out = str(tmp_path / "enc")
     metrics = encode_dataframe(
-        spark, keyed, out, key_col="row_key", num_parts=3, resume=False
+        spark, keyed, out, key_col="row_key", resume=False
     )
     assert metrics["rows"] == 600
     assert metrics["ratio"] < 0.7

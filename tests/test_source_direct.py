@@ -41,15 +41,26 @@ def test_roundtrip_multiset_equal(spark, src, tmp_path):
     assert a.join(b, ["h", "count"]).count() == a.count()
 
 
-def test_resume_skips_done_and_completes_partial(spark, src, tmp_path):
+def test_resume_skips_done_and_completes_partial(
+    spark, src, tmp_path, drop_committed_parts
+):
+    """A run killed after committing all but two parts resumes by
+    encoding exactly those two, and ends byte-equal to an uninterrupted
+    run part by part."""
+    def parts(out):
+        return {
+            r["part_id"]: (r["fingerprint"], r["encoded_bytes"])
+            for r in spark.read.parquet(f"{out}/checkpoint").collect()
+        }
+
     out = str(tmp_path / "enc")
     m1 = encode_parquet(spark, src, out, resume=False)
-    # simulate a mid-run failure: drop the checkpoint rows for 2 parts by
-    # re-committing only a subset (delete checkpoint, re-run from scratch
-    # is simpler: re-encode with resume=True must be a no-op)
+    full = parts(out)
+    drop_committed_parts(out, [1, 3])
     m2 = encode_parquet(spark, src, out, resume=True)
-    assert m2["skipped_parts"] == m1["parts"]
+    assert m2["skipped_parts"] == m1["parts"] - 2
     assert m2["rows"] == N
+    assert parts(out) == full
 
 
 def test_mode_mismatch_with_dataframe_path_raises(spark, src, tmp_path):
@@ -58,9 +69,7 @@ def test_mode_mismatch_with_dataframe_path_raises(spark, src, tmp_path):
     out = str(tmp_path / "enc")
     encode_parquet(spark, src, out, resume=False)
     with pytest.raises(ValueError, match="partitioning parameters changed"):
-        encode_dataframe(
-            spark, spark.read.parquet(src), out, num_parts=5, resume=True
-        )
+        encode_dataframe(spark, spark.read.parquet(src), out, resume=True)
 
 
 def test_deterministic_blocks_across_runs(spark, src, tmp_path):

@@ -18,7 +18,7 @@ from nem_mms_spark.jobs.encode import encode_dataframe
 def enc_dir(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("enc_zm"))
     pages = web_pages_df(spark, 4000)
-    encode_dataframe(spark, pages, out, num_parts=6, block_rows=256)
+    encode_dataframe(spark, pages, out, block_rows=256)
     return out, pages
 
 
@@ -104,6 +104,6 @@ def test_scan_int64_full_range_exact(spark, tmp_path_factory):
     big = 2**62 + 12345
     rows = [Row(k=i, v=(big + i if i >= 900 else -big - i)) for i in range(1000)]
     df = spark.createDataFrame(rows)
-    encode_dataframe(spark, df, out, key_col="k", num_parts=3, block_rows=128)
+    encode_dataframe(spark, df, out, key_col="k", block_rows=128)
     got = scan_blocks(spark, out, "v", lo=big)
     assert got.count() == 100
