@@ -1,7 +1,8 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-entry(spark)   — flagship: run the full columnar-encode engine (salted
-                 partitioning -> per-partition vectorized codec selection ->
+entry(spark)   — flagship: run the full columnar-encode engine (aligned
+                 encode_dataframe: one part per input partition, no
+                 shuffle -> per-partition vectorized codec selection ->
                  encoded blocks + manifest + checkpoint) over the sf0.001
                  documents table and return per-column compression metrics.
 queries()      — operator surface per SURVEY.md §2 + training-data ops.

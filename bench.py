@@ -1,20 +1,24 @@
 #!/usr/bin/env python
-"""Benchmark harness. Prints ONE JSON line:
+"""Benchmark harness sized to the box it runs on. Prints ONE JSON line:
 
-  {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": ...,
-   "encode": {...throughput/ratio/scaling evidence...}}
+  {"metric": "...", "value": <total sec>, "unit": "sec", "sf": ...,
+   "queries": {name: sec, ...},
+   "encode": {"gb_per_s": {"1": ..., "<P>": ...}, "scaling_efficiency": ...,
+              "decode_gb_per_s": ..., "size_vs_reference_parquet": ...}}
 
-Two parts:
-  1. North-rule evidence — the encode job on a deterministic synthetic
-     web_pages table, identical input at two parallelism levels
-     (local[8] vs local[32], the sandbox stand-in for N vs 4N executors):
-     GB/s, docs/s at each, scaling efficiency (T8/T32)/4, and compressed
-     size vs `df.write.parquet` defaults (must be <= 1.0).
-  2. Headline queries at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     per-query wall seconds.
+Two parts, both in one local session (P = defaultParallelism, the box's
+cores):
+  1. Encode: source-direct ``encode_parquet`` of a deterministic
+     synthetic web_pages table at parallelism 1 and P, reps interleaved
+     level by level, min wall per level; scaling efficiency (T1/TP)/P,
+     one decode timing, and the encoded size over ``df.write.parquet``
+     defaults.
+  2. Queries at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
+     per-query wall seconds, plus a scale-growth check at sf0.01.
 
-Also rewrites BENCH/BASELINE.md with the measured table.
+``value`` is the sum of the query walls plus the min encode wall at
+each level.  The full record goes to BENCH/results.json.  Usage:
+``python bench.py``.
 """
 
 from __future__ import annotations
@@ -26,26 +30,10 @@ import sys
 import tempfile
 import time
 
-# glibc malloc tuning for every python worker (inherited through the JVM,
-# so it must be set before the first SparkSession): large numpy
-# temporaries stay on the reused heap instead of mmap/munmap churn —
-# fresh-page faults under this hypervisor stall erratically (measured:
-# identical alloc-heavy runs vary 100x; warmed-buffer streaming is stable)
-os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", str(1 << 31))
-os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", str(1 << 31))
-
-
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-BENCH_ROWS = int(os.environ.get("BENCH_ROWS", "4000000"))
-# N vs 4N parallelism on the 32-core box (the sandbox stand-in for N vs
-# 4N executors), per the BASELINE.md protocol.  The input is sized so
-# per-task kernel work dominates fixed job overhead (scheduling, python
-# worker spawn, manifest commit) — with too little work per task the
-# ratio measures overhead, not the engine.
-SCALING_MASTERS = tuple(
-    int(x) for x in os.environ.get("BENCH_SCALING", "8,32").split(",")
-)
+# one rep at parallelism 4 takes a few seconds on a 4-vCPU box
+ENCODE_ROWS = 500_000
+ENCODE_REPS = 3
 
 # queries that exercise distinct operator families; keep the bench list
 # shorter than the full correctness surface so the run stays bounded
@@ -82,877 +70,96 @@ BENCH_QUERIES = [
 ]
 
 
-def _new_spark(cores: int):
+def _new_spark(tmp: str):
+    """The session perfbench runs: local[cores], a quarter of RAM (1-8
+    GiB) for the driver heap, scratch under ``tmp``."""
     from nem_mms_spark.session import get_spark
 
-    # shuffle through tmpfs: local-mode shuffles go via spark.local.dir,
-    # and routing them through memory removes disk-latency noise from the
-    # scaling measurement (a real cluster shuffles over NVMe/network that
-    # scales with the node count; the sandbox's single virtual disk does
-    # not)
-    shm = "/dev/shm/nem_mms_bench"
-    os.makedirs(shm, exist_ok=True)
+    with open("/proc/meminfo") as fh:
+        mem_kb = next(
+            int(line.split()[1]) for line in fh if line.startswith("MemTotal:")
+        )
+    os.environ.setdefault(
+        "SPARK_DRIVER_MEMORY", f"{max(1, min(8, mem_kb // (4 << 20)))}g"
+    )
     return get_spark(
-        master=f"local[{cores}]",
-        shuffle_partitions=max(cores, 8),
-        app_name=f"bench_{cores}",
+        app_name="bench",
         extra_conf={
-            "spark.local.dir": shm,
-            # uncompressed in-memory cache: per-rep cache reads cost no
-            # lz4 decompression (7.4 GB fits easily in the 48g heap)
-            "spark.sql.inMemoryColumnarStorage.compressed": "false",
-            # throughput GC: the salted path's JVM feed (row -> Arrow)
-            # is allocation-rate bound; ParallelGC measured ~1.6x faster
-            # than G1 at 32 concurrent feed threads.  Local mode keeps
-            # ONE JVM across sessions, so this applies from the first
-            # session for the whole bench run.  GC threads are capped:
-            # the default (= cores) spawns 32 GC threads that preempt
-            # the 32 busy python workers during source-direct encode
-            # (measured: involuntary context switches jump 25-48x at
-            # local[32]; the JVM is near-idle on that path, so wide GC
-            # buys nothing).
-            "spark.driver.extraJavaOptions": (
-                "-XX:+UseParallelGC -XX:ParallelGCThreads=4"
-            ),
-            # NOTE: spark.speculation was tried for hypervisor-stall
-            # straggler mitigation and REJECTED: on one box the
-            # speculative copies compete with originals for the same
-            # cores (measured: t32 reps 7-22s with quantile 0.5 vs
-            # 4.3-5.1s without).  On a real multi-node cluster it would
-            # help; here it just doubles load.
+            "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp}",
+            "spark.local.dir": tmp,
+            "spark.ui.showConsoleProgress": "false",
         },
     )
 
 
-def _median(xs: list[float]) -> float | None:
-    if not xs:
-        return None
-    s = sorted(xs)
-    n = len(s)
-    return s[n // 2] if n % 2 else (s[n // 2 - 1] + s[n // 2]) / 2
-
-
-def _cpu_probe(levels=(8, 32)) -> dict:
-    """Engine-INDEPENDENT compute control: a pure-ALU LCG loop (registers
-    only, zero memory traffic) per pinned process at K=lo vs K=hi
-    concurrency.  On this VM the guest-visible CPU delivered per busy
-    vCPU DROPS when all 32 are busy (measured ~1.15-1.22x per-worker
-    wall inflation for the identical register loop — host SMT sharing /
-    frequency / hypervisor, invisible to the guest as steal).  Nothing
-    an engine does can scale through that: a real N-vs-4N cluster adds
-    real cores, this box adds shared cycles, so per-worker inflation
-    here is the box's own and normalizes the in-job kernel ratio."""
-    import multiprocessing as mp
-
-    def worker(seed, q):
-        try:
-            os.sched_setaffinity(0, {seed % (os.cpu_count() or 1)})
-        except OSError:
-            pass
-
-        def spin(n):
-            x = 1234567
-            t0 = time.perf_counter()
-            for _ in range(n):
-                x = (x * 1103515245 + 12345) & 0x7FFFFFFF
-            return time.perf_counter() - t0
-
-        spin(2_000_000)  # warm/JIT-free python loop, stabilizes freq
-        q.put(min(spin(10_000_000) for _ in range(3)))
-
-    out = {}
-    for k in levels:
-        q = mp.Queue()
-        ps = [mp.Process(target=worker, args=(i, q)) for i in range(k)]
-        [p.start() for p in ps]
-        res = [q.get() for _ in ps]
-        [p.join() for p in ps]
-        out[k] = round(sum(res) / len(res), 4)
-    lo, hi = levels
-    out["per_worker_inflation"] = round(out[hi] / out[lo], 4)
-    out["efficiency"] = round(out[lo] / out[hi], 4)
-    return out
-
-
-def _timeline_stats(m: dict, p: int) -> dict:
-    """Decompose one encode rep's wall using its per-task timeline:
-    busy work vs schedule structure (launch lag, straggler tail,
-    utilization).  CLOCK_MONOTONIC is shared across processes, so the
-    per-partition [start, end] intervals line up on the driver's axis."""
-    tl = m.get("timeline") or []
-    if not tl:
-        return {}
-    busy = sum(t["end_s"] - t["start_s"] for t in tl)
-    makespan = max(t["end_s"] for t in tl) - min(t["start_s"] for t in tl)
-    evs = sorted(
-        [(t["start_s"], 1) for t in tl] + [(t["end_s"], -1) for t in tl]
-    )
-    cur = 0
-    underhalf = 0.0
-    prev = evs[0][0]
-    for t, d in evs:
-        if cur < p / 2:
-            underhalf += t - prev
-        cur += d
-        prev = t
-    return {
-        "wall": m.get("job_wall_s"),
-        "busy_s": round(busy, 2),
-        "ideal_s": round(busy / p, 3),
-        "makespan": round(makespan, 3),
-        "launch_lag": round(min(t["start_s"] for t in tl), 3),
-        "tail_underhalf_s": round(underhalf, 3),
-        "util": round(busy / (p * makespan), 3) if makespan else None,
-    }
-
-
-def run_encode_scaling(tmp: str) -> dict:
-    """Same job, same input, two parallelism levels."""
-    from nem_mms_spark.datagen import web_pages_df
-
-    # source lives on tmpfs: the source-direct mode scans it inside the
-    # encode tasks, and a real cluster's aggregate scan bandwidth scales with
-    # node count while the sandbox's single virtual disk does not
-    src = os.path.join("/dev/shm/nem_mms_bench", "web_pages")
-    ref = os.path.join(tmp, "ref_parquet")
-    os.makedirs("/dev/shm/nem_mms_bench", exist_ok=True)
-
-    spark = _new_spark(SCALING_MASTERS[1])
-    pages = web_pages_df(spark, BENCH_ROWS, num_partitions=64)
-    pages.write.mode("overwrite").parquet(src)
-    # reference baseline: parquet with default writer properties
-    spark.read.parquet(src).write.mode("overwrite").parquet(ref)
-    spark.stop()
-
-    # Measurement model (evolved rounds 2-5):
-    #   * warm workers only — first-touch faults are cluster startup, not
-    #     encode throughput; each session runs one untimed full encode
-    #     before timing (glibc+jemalloc tuned to keep heaps resident).
-    #   * PAIRED PARALLELISM, ONE SESSION — the headline N-vs-4N
-    #     comparison runs BOTH levels inside a single local[hi] session
-    #     via encode_parquet(parallelism=lo|hi) (LPT task bins): same
-    #     JVM, same warm pinned workers, reps alternating level by
-    #     level, so the two levels share every hypervisor noise window
-    #     by construction.  Separate-master sessions (rounds 2-4) made
-    #     the ratio a cross-window lottery (reps spanned 8.9-97 s).
-    #   * per-session hardware controls — a memcpy probe (memory
-    #     bandwidth) and a pure-ALU probe (per-vCPU compute delivery,
-    #     measured ~1.15-1.22x per-worker inflation at K=32 on this VM:
-    #     host-level sharing no guest workload can scale through).
-    #   * mode `source_direct` is the scaling headline (zero-shuffle
-    #     append-only ingest; kernels only — what scales with executors
-    #     on a real cluster); mode `salted` (url-host-salted shuffle,
-    #     JVM feed) is measured in its own paired sessions for the
-    #     skew-cost ratio.  (Until r4 the headline mode was labeled
-    #     `aligned`; it has been `source_direct` under the hood since
-    #     the r4 protocol change — the label now says so.)
-    from nem_mms_spark.jobs.encode import encode_parquet
-
-    lo, hi = SCALING_MASTERS
-    out = os.path.join("/dev/shm/nem_mms_bench", "enc")
-    raw_bytes = rows = None
-    ratios: dict[str, float] = {}
-
-    def timed(fn):
-        shutil.rmtree(out, ignore_errors=True)
-        t0 = time.monotonic()
-        m = fn()
-        return round(time.monotonic() - t0, 3), m
-
-    # ---- headline: source-direct, parallelism-paired, 3 sessions ----
-    # `parallelism` is the task count (one LPT bin of files per task),
-    # and every rep records its per-task timeline so the wall
-    # decomposes into work vs schedule tail (round-5 verdict item 1)
-    sd_sessions: list[dict] = []
-    for sess in range(3):
-        rec: dict = {
-            "membw_gb_s": {lo: _membw_quick(lo), hi: _membw_quick(hi)},
-            "cpu_probe": _cpu_probe((lo, hi)),
-            "walls": {2: [], lo: [], hi: []},
-            "task_s": {lo: [], hi: []},
-            "stage": {lo: [], hi: []},
-            "driver": {lo: [], hi: []},
-            "timeline_stats": {lo: [], hi: []},
-            "best_timeline": {},
-        }
-        spark = _new_spark(hi)
-        _warm_up(spark, src)
-        timed(lambda: encode_parquet(
-            spark, src, out, resume=False, parallelism=hi))  # untimed warm
-        for _rep in range(3):
-            for p in (lo, hi):
-                wall, m = timed(lambda p=p: encode_parquet(
-                    spark, src, out, resume=False, parallelism=p))
-                rec["walls"][p].append(wall)
-                rec["task_s"][p].append(m["task_encode_s_sum"])
-                rec["stage"][p].append(m["task_stage_s"])
-                rec["driver"][p].append(m["driver_s"])
-                rec["timeline_stats"][p].append(_timeline_stats(m, p))
-                if wall <= min(rec["walls"][p]):
-                    rec["best_timeline"][p] = m["timeline"]
-                raw_bytes, rows = m["raw_bytes"], m["rows"]
-                ratios["source_direct"] = m["ratio"]
-        if sess == 0:
-            # secondary curve point: N=2 (2->8 pair), same session
-            for _rep in range(2):
-                wall, _m = timed(lambda: encode_parquet(
-                    spark, src, out, resume=False, parallelism=2))
-                rec["walls"][2].append(wall)
-        spark.stop()
-        sd_sessions.append(rec)
-
-    # ---- salted skew-cost: paired salted/source_direct sessions ----
-    # r6: salted is now SALTED-DIRECT (encode_parquet(partitioning=
-    # 'salted') — hot rows spill to right-sized salt buckets task-side
-    # and encode in a second source-direct pass; cold majority encodes
-    # in place; zero JVM bytes — round-5 verdict item 2 closed).  Both
-    # levels run gated inside one local[hi] session, so the skew-cost
-    # ratio AND salted scaling come from fully window-paired reps.
-    paired_sessions: list[dict] = []
-    for sess in range(3):
-        spark = _new_spark(hi)
-        _warm_up(spark, src)
-        sess_rec: dict = {
-            "cores": hi,
-            "walls": {"source_direct": [], "salted": []},
-            "walls_lo": {"source_direct": [], "salted": []},
-        }
-        timed(lambda: encode_parquet(
-            spark, src, out, resume=False, parallelism=hi,
-            partitioning="salted"))  # untimed warm
-        for _rep in range(2):
-            for mode in ("source_direct", "salted"):
-                wall, m = timed(lambda mode=mode: encode_parquet(
-                    spark, src, out, resume=False, parallelism=hi,
-                    partitioning=mode))
-                if mode == "salted":
-                    ratios["salted"] = m["ratio"]
-                    sess_rec["salted_info"] = {
-                        "hot_keys": m["hot_keys"],
-                        "hot_parts": m["hot_parts"],
-                        "hot_rows": m["hot_rows"],
-                        "hot_row_fraction": round(
-                            m["hot_rows"] / max(m["rows"], 1), 4
-                        ),
-                    }
-                sess_rec["walls"][mode].append(wall)
-            for mode in ("source_direct", "salted"):
-                wall, m = timed(lambda mode=mode: encode_parquet(
-                    spark, src, out, resume=False, parallelism=lo,
-                    partitioning=mode))
-                sess_rec["walls_lo"][mode].append(wall)
-        if sess == 0:
-            # keep one salted-direct output for the decode measurement
-            # (covers hybrid layouts: negative hot part ids + file parts)
-            dec_dir = os.path.join("/dev/shm/nem_mms_bench", "enc_decode")
-            shutil.rmtree(dec_dir, ignore_errors=True)
-            encode_parquet(spark, src, dec_dir, resume=False,
-                           parallelism=hi, partitioning="salted")
-        spark.stop()
-        paired_sessions.append(sess_rec)
-
-    # ---- summaries ----
-    def _lvl(walls: list[float]) -> dict:
-        wall = min(walls)
-        return {
-            "wall_s": wall,
-            "all_reps_s": walls,
-            "gb_per_s": round(raw_bytes / wall / 1e9, 4),
-            "docs_per_s": round(rows / wall, 1),
-        }
-
-    sd = {}
-    for p in (2, lo, hi):
-        allw = [w for s in sd_sessions for w in s["walls"].get(p, [])]
-        if allw:
-            sd[p] = _lvl(allw)
-    per_sess_eff = [
-        round((min(s["walls"][lo]) / min(s["walls"][hi])) / (hi / lo), 4)
-        for s in sd_sessions
-    ]
-    eff = _median(per_sess_eff)
-    # 2->8 from session 0 (the only one with p=2 reps) — still paired
-    s0 = sd_sessions[0]
-    eff_2_8 = round(
-        (min(s0["walls"][2]) / min(s0["walls"][lo])) / (lo / 2), 4
-    )
-
-    # in-job kernel-time ratio, per session (noise-free: summed in-task
-    # encode seconds are constant work; paired levels share the window)
-    per_sess_injob = [
-        round(min(s["task_s"][hi]) / min(s["task_s"][lo]), 4)
-        for s in sd_sessions
-    ]
-    cpu_inflations = [
-        s["cpu_probe"]["per_worker_inflation"] for s in sd_sessions
-    ]
-    in_job_ratio = _median(per_sess_injob)
-    # normalized by the session's measured per-vCPU compute inflation —
-    # the register-loop floor no guest workload can beat on this box
-    per_sess_injob_norm = [
-        round(per_sess_injob[i] / cpu_inflations[i], 4)
-        for i in range(len(sd_sessions))
-    ]
-    in_job_ratio_norm = _median(per_sess_injob_norm)
-
-    # per-stage ratio table (median across sessions of per-session
-    # min-over-reps ratios): localizes any remaining contention
-    stage_keys = sorted(
-        {k for s in sd_sessions for st in s["stage"][hi] for k in st}
-    )
-    stage_ratio = {}
-    for k in stage_keys:
-        rs = []
-        for s in sd_sessions:
-            lo_v = min(st.get(k, 0) for st in s["stage"][lo])
-            hi_v = min(st.get(k, 0) for st in s["stage"][hi])
-            if lo_v:
-                rs.append(hi_v / lo_v)
-        if rs:
-            stage_ratio[k] = round(_median(rs), 3)
-
-    # hardware-normalized wall efficiencies, per session then median
-    membw_sess_eff = [
-        round((s["membw_gb_s"][hi] / s["membw_gb_s"][lo]) / (hi / lo), 4)
-        for s in sd_sessions
-    ]
-    eff_vs_cpu = _median(
-        [per_sess_eff[i] * cpu_inflations[i] for i in range(3)]
-    )
-    eff_vs_membw = _median(
-        [per_sess_eff[i] / membw_sess_eff[i] for i in range(3)]
-    )
-    ceilings = [
-        min(membw_sess_eff[i], 1 / cpu_inflations[i]) for i in range(3)
-    ]
-    eff_vs_ceiling = _median(
-        [per_sess_eff[i] / ceilings[i] for i in range(3)]
-    )
-
-    # salted summaries (hi walls in s["walls"], lo walls in s["walls_lo"])
-    salted = {
-        lo: _lvl([w for s in paired_sessions for w in s["walls_lo"]["salted"]]),
-        hi: _lvl([w for s in paired_sessions for w in s["walls"]["salted"]]),
-    }
-    # per-session paired salted scaling, then median (same estimator as
-    # the source_direct headline)
-    eff_salted_sess = [
-        round(
-            (min(s["walls_lo"]["salted"]) / min(s["walls"]["salted"]))
-            / (hi / lo),
-            4,
-        )
-        for s in paired_sessions
-    ]
-    eff_salted = _median(eff_salted_sess)
-    paired = sorted(
-        round(min(s["walls"]["salted"]) / min(s["walls"]["source_direct"]), 3)
-        for s in paired_sessions
-    )
-    paired_ratio = {
-        "per_session": paired,
-        "median": round(_median(paired), 3),
-        # the skew magnitude the mode actually handled: its cost is
-        # proportional to this (every hot row is spilled + re-read +
-        # re-encoded) — the Zipf-1.07 fixture is EXTREME skew
-        "salted_info": next(
-            (s["salted_info"] for s in paired_sessions
-             if "salted_info" in s), None
-        ),
-    }
-
-    kernel_ceiling = _kernel_warm_scaling()
-    pipeline_ceiling = _pipeline_warm_scaling(src, (lo, hi))
-    # box-wide bandwidth control, probed twice and averaged
-    membw_a = _membw_probe()
-    membw_b = _membw_probe()
-    membw = {
-        "runs": [membw_a, membw_b],
-        lo: {"aggregate_gb_s": round((membw_a[lo]["aggregate_gb_s"] + membw_b[lo]["aggregate_gb_s"]) / 2, 2)},
-        hi: {"aggregate_gb_s": round((membw_a[hi]["aggregate_gb_s"] + membw_b[hi]["aggregate_gb_s"]) / 2, 2)},
-        "efficiency_lo_to_hi": round(
-            (membw_a["efficiency_lo_to_hi"] + membw_b["efficiency_lo_to_hi"]) / 2, 4
-        ),
-    }
-
-    # decode: SOURCE-DIRECT (decode mirror of encode_parquet — one task
-    # per part dir, pyarrow scan in-task, zero shuffle/JVM bytes; round-5
-    # verdict item 5), parallelism-PAIRED at lo and hi inside one
-    # session
-    enc_dir = os.path.join("/dev/shm/nem_mms_bench", "enc_decode")
-    from nem_mms_spark.jobs.decode import decode_blocks
+def run_encode(spark, tmp: str) -> dict:
+    """Same job, same input, parallelism 1 and P in one session."""
     from pyspark.sql import functions as F
 
-    spark = _new_spark(hi)
+    from nem_mms_spark.datagen import web_pages_df
+    from nem_mms_spark.jobs.decode import decode_blocks
+    from nem_mms_spark.jobs.encode import encode_parquet
+
+    src = os.path.join(tmp, "web_pages")
+    ref = os.path.join(tmp, "ref_parquet")
+    out = os.path.join(tmp, "enc")
+    hi = spark.sparkContext.defaultParallelism
+    web_pages_df(spark, ENCODE_ROWS, num_partitions=4 * hi).write.parquet(src)
+    # reference baseline: parquet with default writer properties
+    spark.read.parquet(src).write.parquet(ref)
+
+    def timed(p: int) -> tuple[float, dict]:
+        shutil.rmtree(out, ignore_errors=True)
+        t0 = time.monotonic()
+        m = encode_parquet(spark, src, out, resume=False, parallelism=p)
+        return round(time.monotonic() - t0, 3), m
+
+    # warm workers only: the first encode pays Python worker spawn and
+    # imports, which is session start-up, not encode throughput
     _warm_up(spark, src)
+    timed(hi)
+    walls: dict[int, list[float]] = {1: [], hi: []}
+    for _rep in range(ENCODE_REPS):
+        for p in (1, hi):
+            wall, m = timed(p)
+            walls[p].append(wall)
+    raw_bytes = m["raw_bytes"]
 
-    def run_decode(p):
-        return (
-            decode_blocks(spark, enc_dir, parallelism=p)
-            .agg(F.count("*"), F.sum(F.length("url")))
-            .collect()[0][0]
-        )
-
-    n_dec = run_decode(hi)  # untimed warm pass
-    dec_walls: dict = {lo: [], hi: []}
-    for _ in range(2):
-        for p in (lo, hi):
-            t0 = time.monotonic()
-            n_dec = run_decode(p)
-            dec_walls[p].append(round(time.monotonic() - t0, 3))
-    spark.stop()
-    decode = {
-        "engine": "source_direct",
-        "wall_s": round(min(dec_walls[hi]), 3),
-        "all_reps_s": dec_walls[hi],
-        "rows": n_dec,
-        "gb_per_s": round(raw_bytes / min(dec_walls[hi]) / 1e9, 4),
-        "cores": hi,
-        "per_parallelism": {
-            p: {
-                "wall_s": min(dec_walls[p]),
-                "all_reps_s": dec_walls[p],
-                "gb_per_s": round(raw_bytes / min(dec_walls[p]) / 1e9, 4),
-            }
-            for p in (lo, hi)
-        },
-        "scaling_efficiency": round(
-            (min(dec_walls[lo]) / min(dec_walls[hi])) / (hi / lo), 4
-        ),
-    }
-    dec_probe = _decode_warm_scaling(enc_dir, (lo, hi))
-    decode["pipeline_probe"] = dec_probe
-    decode["efficiency_vs_pipeline_probe"] = round(
-        decode["scaling_efficiency"] / dec_probe["efficiency_lo_to_hi"], 4
+    t0 = time.monotonic()
+    n_dec = (
+        decode_blocks(spark, out)
+        .agg(F.count("*"), F.sum(F.length("url")))
+        .collect()[0][0]
     )
-    enc_bytes = _du(os.path.join(enc_dir, "blocks")) + _du(
-        os.path.join(enc_dir, "manifest")
+    dec_wall = round(time.monotonic() - t0, 3)
+
+    enc_bytes = _du(os.path.join(out, "blocks")) + _du(
+        os.path.join(out, "manifest")
     )
     ref_bytes = _du(ref)
     return {
-        "rows": rows,
+        "rows": m["rows"],
         "raw_bytes": raw_bytes,
-        "protocol": "parallelism-paired single-session (r5)",
-        "source_direct_per_parallelism": sd,
-        "scaling_efficiency": eff,
-        "scaling_efficiency_per_session": per_sess_eff,
-        "scaling_efficiency_2_to_8": eff_2_8,
-        "salted_per_cores": salted,
-        "salted_mode": "salted_direct (hot-spill + source-direct, r6)",
-        "salted_scaling_efficiency": eff_salted,
-        "salted_scaling_efficiency_per_session": eff_salted_sess,
-        "salted_vs_source_direct_paired": paired_ratio,
-        # per-task timeline decomposition of every headline rep, plus the
-        # full timeline of each session's best rep per level (round-5
-        # verdict item 1: publish the wave/tail structure)
-        "timeline_stats_per_session": [
-            s["timeline_stats"] for s in sd_sessions
-        ],
-        "best_rep_timelines": [s["best_timeline"] for s in sd_sessions],
-        "in_job_task_kernel_s": {
-            lo: min(min(s["task_s"][lo]) for s in sd_sessions),
-            hi: min(min(s["task_s"][hi]) for s in sd_sessions),
+        "per_parallelism": {
+            p: {
+                "wall_s": min(w),
+                "all_reps_s": w,
+                "gb_per_s": round(raw_bytes / min(w) / 1e9, 4),
+                "docs_per_s": round(m["rows"] / min(w), 1),
+            }
+            for p, w in walls.items()
         },
-        "in_job_kernel_time_ratio_hi_over_lo": in_job_ratio,
-        "in_job_kernel_time_ratio_per_session": per_sess_injob,
-        "in_job_kernel_time_ratio_cpu_normalized": in_job_ratio_norm,
-        "in_job_stage_ratio_hi_over_lo": stage_ratio,
-        "cpu_probe_per_session": [s["cpu_probe"] for s in sd_sessions],
-        "session_membw_gb_s": [s["membw_gb_s"] for s in sd_sessions],
-        "membw_sess_efficiency": membw_sess_eff,
-        "efficiency_vs_cpu_probe": eff_vs_cpu,
-        "efficiency_vs_matched_probe": eff_vs_membw,
-        "efficiency_vs_box_ceiling": eff_vs_ceiling,
-        "kernel_warm_scaling": kernel_ceiling,
-        "pipeline_warm_scaling": pipeline_ceiling,
-        # per-level: in-Spark throughput over the no-Spark probe's, same
-        # parallelism (>= 1.0 means Spark's machinery costs nothing at
-        # that level; valid across windows because each compares a level
-        # to itself)
-        "spark_vs_probe_throughput": {
-            p: round(
-                sd[p]["gb_per_s"] * 1000
-                / pipeline_ceiling[p]["aggregate_mb_s"],
-                4,
-            )
-            for p in (lo, hi)
-            if p in sd and p in pipeline_ceiling
+        "scaling_efficiency": round(min(walls[1]) / min(walls[hi]) / hi, 4),
+        "decode": {
+            "wall_s": dec_wall,
+            "rows": n_dec,
+            "gb_per_s": round(raw_bytes / dec_wall / 1e9, 4),
         },
-        "scaling_efficiency_best_session": max(per_sess_eff),
-        # the honest Spark-cost number: in-Spark wall efficiency over the
-        # SAME pipeline's no-Spark efficiency on the same files/box —
-        # probe now uses the same wall-clock estimator and backfill
-        # schedule as the in-Spark job (round-5 ADVICE)
-        "efficiency_vs_pipeline_probe": round(
-            eff / pipeline_ceiling["efficiency_lo_to_hi"], 4
-        ),
-        "efficiency_vs_pipeline_probe_best_session": round(
-            max(per_sess_eff) / pipeline_ceiling["efficiency_lo_to_hi"], 4
-        ),
-        "membw_probe": membw,
-        "efficiency_vs_membw_probe": round(
-            eff / membw["efficiency_lo_to_hi"], 4
-        ),
-        "decode": decode,
+        "ratio_vs_raw": m["ratio"],
         "encoded_bytes_on_disk": enc_bytes,
         "reference_parquet_bytes": ref_bytes,
         "size_vs_reference_parquet": round(enc_bytes / max(ref_bytes, 1), 4),
-        "ratio_vs_raw": ratios,
-        "driver_phase_s_best_hi": min(
-            (d for s in sd_sessions for d in s["driver"][hi]),
-            key=lambda d: d["setup"] + d["commit"],
-        ),
     }
-
-
-def _membw_quick(k: int) -> float:
-    """One-shot aggregate memcpy GB/s at K concurrent pinned processes
-    (the per-session weather sample; see _membw_probe for the full
-    two-rep averaged control)."""
-    import multiprocessing as mp
-
-    def worker(seed, q):
-        import numpy as np
-
-        try:
-            os.sched_setaffinity(0, {seed % os.cpu_count()})
-        except OSError:
-            pass
-        n = (64 << 20) // 8
-        src = np.arange(n, dtype=np.int64)
-        dst = np.empty(n, dtype=np.int64)
-        np.copyto(dst, src)
-        best = None
-        for _ in range(3):
-            t0 = time.perf_counter()
-            np.copyto(dst, src)
-            dt = time.perf_counter() - t0
-            best = dt if best is None or dt < best else best
-        q.put(n * 8 / best)
-
-    q = mp.Queue()
-    ps = [mp.Process(target=worker, args=(i, q)) for i in range(k)]
-    [p.start() for p in ps]
-    res = [q.get() for _ in ps]
-    [p.join() for p in ps]
-    return round(sum(res) / 1e9, 2)
-
-
-def _membw_probe() -> dict:
-    """Engine-INDEPENDENT hardware control: pure memcpy (np.copyto of a
-    warm 64 MB buffer per process, 2x traffic counted once) at K=8 vs
-    K=32 concurrent processes.  If this probe bends the same way the
-    encode kernels do, the single box's shared memory system — not the
-    engine — is what caps the 8->32 ratio; per-node throughput on a real
-    cluster (each node brings its own DRAM/L3) is constant by
-    construction for the zero-coordination source-direct mode."""
-    import multiprocessing as mp
-
-    def worker(_seed, q):
-        import numpy as np
-
-        try:
-            os.sched_setaffinity(0, {_seed % os.cpu_count()})
-        except OSError:
-            pass
-        n = (64 << 20) // 8
-        src = np.arange(n, dtype=np.int64)
-        dst = np.empty(n, dtype=np.int64)
-        np.copyto(dst, src)  # warm both buffers (first-touch faults)
-        best = None
-        for _ in range(3):
-            t0 = time.perf_counter()
-            np.copyto(dst, src)
-            dt = time.perf_counter() - t0
-            best = dt if best is None or dt < best else best
-        q.put((n * 8, best))
-
-    out = {}
-    lo, hi = SCALING_MASTERS
-    for k in (lo, hi):
-        q = mp.Queue()
-        ps = [mp.Process(target=worker, args=(i, q)) for i in range(k)]
-        [p.start() for p in ps]
-        res = [q.get() for _ in ps]
-        [p.join() for p in ps]
-        agg = sum(nb / t for nb, t in res)
-        out[k] = {"aggregate_gb_s": round(agg / 1e9, 2)}
-    out["efficiency_lo_to_hi"] = round(
-        (out[hi]["aggregate_gb_s"] / out[lo]["aggregate_gb_s"]) / (hi / lo), 4
-    )
-    return out
-
-
-_PIPE_FILES: list | None = None
-
-
-def _pipe_init(counter, files):
-    """Pool initializer: claim a unique core slot, single-threaded arrow,
-    warm system pool — the no-Spark twin of the encode task's
-    _tune_worker."""
-    import pyarrow as pa
-
-    global _PIPE_FILES
-    with counter.get_lock():
-        slot = counter.value
-        counter.value += 1
-    try:
-        os.sched_setaffinity(0, {slot % (os.cpu_count() or 1)})
-    except OSError:
-        pass
-    pa.set_cpu_count(1)
-    pa.set_io_thread_count(1)
-    pa.set_memory_pool(pa.system_memory_pool())
-    _PIPE_FILES = files
-
-
-def _pipe_encode_one(pid: int) -> int:
-    """Encode ONE source file through the exact task body; returns its
-    raw byte count."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from nem_mms_spark.jobs.encode import _encode_partition_table
-
-    path, outroot = _PIPE_FILES[pid]
-    with open(path, "rb", buffering=0) as fh:
-        raw = fh.read()
-    tbl = pq.read_table(pa.BufferReader(raw))
-    del raw
-    tbl = tbl.sort_by([("warc_ts", "ascending")])
-    summ = _encode_partition_table(
-        pid, tbl, 65536, 16 << 20, "url",
-        os.path.join(outroot, "blocks"), os.path.join(outroot, "manifest"),
-    )
-    return summ.column("raw_bytes")[0].as_py()
-
-
-def _dec_pipe_one(args) -> int:
-    """Decode ONE encoded part dir through the exact source-direct
-    decode task body (no Spark); returns decoded value count."""
-    import json as _json
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from nem_mms_spark import framing
-    from nem_mms_spark.codecs import decode_block
-    from nem_mms_spark.jobs.decode import _bin_views, _kernel_dtype_of
-
-    path, types = args
-    with open(path, "rb", buffering=0) as fh:
-        raw = fh.read()
-    tbl = pq.read_table(
-        pa.BufferReader(raw),
-        columns=["block_id", "column", "codec", "params", "value_count",
-                 "null_count", "payload", "validity"],
-    ).combine_chunks()
-    del raw
-    import numpy as np
-
-    bids = tbl.column("block_id").to_numpy(zero_copy_only=False)
-    if len(bids) == 0:
-        return 0
-    names = tbl.column("column").to_numpy(zero_copy_only=False)
-    codecs = tbl.column("codec").to_numpy(zero_copy_only=False)
-    params = tbl.column("params").to_numpy(zero_copy_only=False)
-    vcs = tbl.column("value_count").to_numpy(zero_copy_only=False)
-    ncs = tbl.column("null_count").to_numpy(zero_copy_only=False)
-    pay = _bin_views(tbl.column("payload").combine_chunks())
-    val = _bin_views(tbl.column("validity").combine_chunks())
-    total = 0
-    bounds = np.concatenate(
-        [[0], np.flatnonzero(bids[1:] != bids[:-1]) + 1, [len(bids)]]
-    )
-    for bi in range(len(bounds) - 1):
-        s, e = int(bounds[bi]), int(bounds[bi + 1])
-        n = int(vcs[s])
-        for j in range(s, e):
-            c = names[j]
-            nc = int(ncs[j])
-            values = decode_block(
-                pay(j), _json.loads(params[j]), n - nc,
-                _kernel_dtype_of(types[c]), codecs[j],
-            )
-            arr = framing.from_kernel(values, types[c], val(j), n, nc)
-            total += len(arr)
-    return total
-
-
-def _decode_warm_scaling(enc_dir: str, levels=None) -> dict:
-    """Matched no-Spark control for DECODE: the source-direct decode task
-    body (fetch blocks parquet + codec decode + Arrow rebuild) over the
-    same part dirs, K=lo vs K=hi pinned processes, same wall-clock
-    estimator and dynamic-backfill schedule as the in-Spark decode —
-    the decode twin of _pipeline_warm_scaling."""
-    import multiprocessing as mp
-
-    import pyarrow.dataset as ds
-
-    lo, hi = levels or SCALING_MASTERS
-    blocks_root = os.path.join(enc_dir, "blocks")
-    parts = sorted(
-        os.path.join(blocks_root, d, "data.parquet")
-        for d in os.listdir(blocks_root)
-        if d.startswith("part_id=")
-    )
-    parts = [p for p in parts if os.path.exists(p)]
-    man = ds.dataset(
-        os.path.join(enc_dir, "manifest"), format="parquet",
-        partitioning="hive",
-    ).to_table(columns=["column", "logical_type"])
-    types = dict(
-        zip(
-            man.column("column").to_pylist(),
-            man.column("logical_type").to_pylist(),
-        )
-    )
-    order = sorted(
-        range(len(parts)), key=lambda i: -os.path.getsize(parts[i])
-    )
-    work = [(parts[i], types) for i in order]
-    out: dict = {}
-    for k in (lo, hi, lo, hi):
-        counter = mp.Value("i", 0)
-        with mp.Pool(k, initializer=_pipe_init,
-                     initargs=(counter, None)) as pool:
-            pool.map(_dec_pipe_one, work, chunksize=1)  # untimed warm
-            for _rep in range(2):
-                t0 = time.perf_counter()
-                nvals = sum(pool.map(_dec_pipe_one, work, chunksize=1))
-                wall = time.perf_counter() - t0
-                rec = {"wall_s": round(wall, 3), "values": nvals}
-                if k not in out or rec["wall_s"] < out[k]["wall_s"]:
-                    out[k] = rec
-    out["levels"] = [lo, hi]
-    out["efficiency_lo_to_hi"] = round(
-        (out[lo]["wall_s"] / out[hi]["wall_s"]) / (hi / lo), 4
-    )
-    return out
-
-
-def _pipeline_warm_scaling(src: str, levels=None) -> dict:
-    """THE matched hardware control: the encode task body itself —
-    fetch + parquet parse + sort + frame + codec select/encode + block
-    build + parquet write — run WITHOUT Spark over the same source
-    files, K=lo vs K=hi pinned processes, warm heap (pass 0 untimed).
-
-    Matched ESTIMATOR and SCHEDULE (round-5 ADVICE): each timed pass is
-    one dynamic-backfill sweep over ALL files (mp.Pool, chunksize=1,
-    biggest files first — the same shape as the in-Spark LPT+backfill
-    schedule), and the level's throughput is total bytes / PASS WALL —
-    the same wall-clock estimator the in-Spark gb_per_s uses, so
-    straggler tails hit both sides of the comparison equally.  (The old
-    sum-of-per-worker-rates estimator structurally excluded straggler
-    idle time, overstating the probe ceiling.)  The in-Spark wall
-    efficiency divided by this probe's efficiency is the honest 'what
-    did Spark cost' number."""
-    import multiprocessing as mp
-
-    lo, hi = levels or SCALING_MASTERS
-    files = sorted(
-        os.path.join(src, f)
-        for f in os.listdir(src)
-        if f.endswith(".parquet")
-    )
-    outroot = "/dev/shm/nem_mms_bench/pipe_probe"
-    # biggest first: dynamic backfill then packs the tail with small files
-    order = sorted(range(len(files)), key=lambda i: -os.path.getsize(files[i]))
-    shared = [(f, outroot) for f in files]
-    out: dict = {}
-    # window-paired like the in-Spark headline: alternate the levels
-    # twice (lo,hi,lo,hi) and keep each level's best pass, so a
-    # hypervisor weather window can't land on only one level
-    for k in (lo, hi, lo, hi):
-        counter = mp.Value("i", 0)
-        with mp.Pool(k, initializer=_pipe_init,
-                     initargs=(counter, shared)) as pool:
-            pool.map(_pipe_encode_one, order, chunksize=1)  # untimed warm
-            for _rep in range(2):
-                t0 = time.perf_counter()
-                nbytes = sum(pool.map(_pipe_encode_one, order, chunksize=1))
-                wall = time.perf_counter() - t0
-                rec = {
-                    "wall_s": round(wall, 3),
-                    "aggregate_mb_s": round(nbytes / wall / 1e6, 1),
-                }
-                if (
-                    k not in out
-                    or rec["aggregate_mb_s"] > out[k]["aggregate_mb_s"]
-                ):
-                    out[k] = rec
-    shutil.rmtree(outroot, ignore_errors=True)
-    out["levels"] = [lo, hi]
-    out["efficiency_lo_to_hi"] = round(
-        (out[hi]["aggregate_mb_s"] / out[lo]["aggregate_mb_s"]) / (hi / lo), 4
-    )
-    return out
-
-
-def _kernel_warm_scaling() -> dict:
-    """Engine-kernel scaling ceiling on THIS box, without Spark: K
-    concurrent processes each run the full per-column encode kernel over
-    a ~30 MB slice twice; pass 2 (warm heap, no first-touch faults — the
-    long-lived-executor steady state) is timed.  Reported as evidence of
-    what the hardware allows: the kernels share nothing, so on a real
-    N-vs-4N cluster (where every node adds its own DRAM and L3) they
-    scale with node count; on one box the shared memory system caps the
-    8->32 ratio."""
-    import multiprocessing as mp
-
-    def worker(seed, q):
-        import numpy as np
-        import pyarrow as pa
-
-        try:  # pin one worker per core: migration noise out of the metric
-            os.sched_setaffinity(0, {seed % os.cpu_count()})
-        except OSError:
-            pass
-        from nem_mms_spark import framing
-        from nem_mms_spark.datagen.webpages import generate_pages
-        from nem_mms_spark.selector import ColumnContext, select_and_encode
-
-        pdf = generate_pages(np.arange(seed * 16384, (seed + 1) * 16384))
-        tbl = pa.Table.from_pandas(pdf, preserve_index=False)
-        cols = []
-        nbytes = 0
-        for name in tbl.column_names:
-            arr = tbl.column(name).combine_chunks()
-            values, dtype, *_r = framing.to_kernel(arr)
-            cols.append((values, dtype))
-            nbytes += _r[-1]
-        best = None
-        for p in range(4):  # pass 0 warms the heap; min over 3 timed
-            t0 = time.perf_counter()
-            for values, dtype in cols:
-                select_and_encode(values, dtype, ColumnContext())
-            dt = time.perf_counter() - t0
-            if p and (best is None or dt < best):
-                best = dt
-        q.put((nbytes, best))
-
-    out = {}
-    lo, hi = SCALING_MASTERS
-    for k in (lo, hi):
-        q = mp.Queue()
-        ps = [mp.Process(target=worker, args=(i, q)) for i in range(k)]
-        [p.start() for p in ps]
-        res = [q.get() for _ in ps]
-        [p.join() for p in ps]
-        # sum of per-worker best rates (the membw probe's estimator): a
-        # single straggler worker hitting a hypervisor stall no longer
-        # drags the whole level (the old mean-of-one-pass did exactly
-        # that, and stragglers are likelier at K=32 — a systematic bias
-        # AGAINST the wide level)
-        agg = sum(nb / t for nb, t in res)
-        out[k] = {
-            "warm_pass_mean_s": round(sum(t for _, t in res) / k, 3),
-            "aggregate_mb_s": round(agg / 1e6, 1),
-        }
-    out["efficiency_lo_to_hi"] = round(
-        (out[hi]["aggregate_mb_s"] / out[lo]["aggregate_mb_s"]) / (hi / lo), 4
-    )
-    return out
 
 
 def _warm_up(spark, src: str) -> None:
@@ -986,7 +193,7 @@ def _du(path: str) -> int:
     return total
 
 
-def run_queries() -> tuple[dict, dict]:
+def run_queries(spark) -> tuple[dict, dict]:
     """Headline queries at SF_DIR, plus a SCALE-GROWTH regression check:
     every query also runs at sf0.01 (10x fewer rows) and the wall ratio
     is recorded.  A query whose wall grows much faster than the data —
@@ -996,7 +203,6 @@ def run_queries() -> tuple[dict, dict]:
     from nem_mms_spark.queries import QUERIES
 
     lo_dir = SF_DIR.replace("sf0.1", "sf0.01")
-    spark = _new_spark(CPUS)
     timings = {}
     lo_timings = {}
     for name in BENCH_QUERIES:
@@ -1007,7 +213,6 @@ def run_queries() -> tuple[dict, dict]:
         t0 = time.monotonic()
         QUERIES[name](spark, SF_DIR).collect()
         timings[name] = round(time.monotonic() - t0, 3)
-    spark.stop()
     growth = {}
     flags = []
     for name, t_hi in timings.items():
@@ -1027,321 +232,43 @@ def run_queries() -> tuple[dict, dict]:
     }
 
 
-def _hw_narrative(enc: dict) -> str:
-    """Hardware-control paragraph, DERIVED from the measured probes — the
-    conclusion is a function of the numbers it quotes, so the artifact
-    can never assert a ceiling its own probes refute."""
-    lo, hi = SCALING_MASTERS
-    probe_eff = enc["membw_probe"]["efficiency_lo_to_hi"]
-    kern_eff = enc["kernel_warm_scaling"]["efficiency_lo_to_hi"]
-    pipe = enc["pipeline_warm_scaling"]
-    cpu = enc["cpu_probe_per_session"]
-    cpu_infl = [c["per_worker_inflation"] for c in cpu]
-    svp = enc.get("spark_vs_probe_throughput") or {}
-    # the per-level claim is CONDITIONAL on the measured ratios (round-5
-    # ADVICE + verdict: an unconditional 'weather' sentence was baked in
-    # regardless of the values; and a reproducible deficit is systematic)
-    svp_vals = [v for v in svp.values() if v is not None]
-    if svp_vals and min(svp_vals) >= 0.95:
-        svp_claim = (
-            "both levels at or above ~0.95, consistent with Spark's "
-            "machinery costing ~nothing at either parallelism in this "
-            "window. "
-        )
-    elif svp_vals:
-        worst = min(svp_vals)
-        svp_claim = (
-            f"the lowest level sits at {worst} — a real in-Spark cost at "
-            "that subscription (scheduling/JVM co-residency), not "
-            "measurement weather. "
-        )
-    else:
-        svp_claim = ""
-    pipe_facts = (
-        "THE MATCHED CONTROL — the exact encode task body (fetch + "
-        "parquet parse + sort + frame + codec encode + block write) run "
-        f"WITHOUT Spark over the same files, {lo} vs {hi} pinned warm "
-        "processes, SAME wall-clock estimator and dynamic-backfill "
-        f"schedule as the in-Spark job: {pipe[lo]['aggregate_mb_s']} -> "
-        f"{pipe[hi]['aggregate_mb_s']} MB/s, {lo}->{hi} efficiency "
-        f"**{pipe['efficiency_lo_to_hi']}**.  Everything below that "
-        "ceiling is the box (parquet parse is latency-bound and its CPU "
-        f"cost inflates ~2-3x when all {hi} cores run the mixed workload "
-        "— with zero Spark involved); the in-Spark wall efficiency over "
-        f"this probe is **{enc['efficiency_vs_pipeline_probe']}** "
-        f"(best session {enc['efficiency_vs_pipeline_probe_best_session']}"
-        "), and PER LEVEL the in-Spark job's throughput over the probe's "
-        f"is {svp} — " + svp_claim +
-        "On a real N-vs-4N cluster every added node "
-        "brings its own DRAM/LLC, so the mix interference this probe "
-        "isolates does not occur: per-node throughput is constant by "
-        "construction for a zero-coordination ingest. "
-    )
-    facts = pipe_facts + (
-        "Hardware controls, engine-INDEPENDENT, probed inside the same "
-        "sessions as the reps they normalize: (1) pure-ALU register loop "
-        "— per-worker wall inflates "
-        f"{min(cpu_infl)}-{max(cpu_infl)}x going from 8 to 32 busy "
-        "vCPUs (guest-visible compute delivery drops when the box is "
-        "full: host SMT/frequency/steal — no guest workload can scale "
-        "through it, and a real 4N-node cluster adds real cores instead "
-        "of shared cycles); (2) memcpy memory bandwidth — box-wide "
-        f"{enc['membw_probe'][lo]['aggregate_gb_s']} GB/s aggregate at "
-        f"K={lo} vs {enc['membw_probe'][hi]['aggregate_gb_s']} GB/s at "
-        f"K={hi}, {lo}->{hi} efficiency {probe_eff}; per-session probes "
-        "in the bench JSON. The engine kernels WITHOUT Spark scale at "
-        f"{kern_eff} "
-        f"({enc['kernel_warm_scaling'][lo]['aggregate_mb_s']} -> "
-        f"{enc['kernel_warm_scaling'][hi]['aggregate_mb_s']} MB/s). "
-        f"Wall efficiency {enc['scaling_efficiency']} normalizes to "
-        f"**{round(enc['efficiency_vs_cpu_probe'], 4)} vs the ALU "
-        f"probe**, {round(enc['efficiency_vs_matched_probe'], 4)} vs "
-        "the session-matched memcpy probe, and "
-        f"**{round(enc['efficiency_vs_box_ceiling'], 4)} vs the box "
-        "ceiling** (min of the two probes per session). "
-    )
-    worst = max(cpu_infl)
-    if worst > 1.1:
-        conclusion = (
-            "This run's ALU probe shows the box itself delivers "
-            f"~{round((worst - 1) * 100)}% less compute per busy vCPU at "
-            f"{hi}-way: that floor, not the engine, bounds the raw "
-            f"{lo}->{hi} ratio, and the probe-normalized figures are the "
-            "honest scaling evidence. "
-        )
-    else:
-        conclusion = (
-            "This run's probes scale cleanly, so the box is not the "
-            "limiter in this window: any gap above the normalized "
-            "figures is the engine's own. "
-        )
-    closing = (
-        "The encode kernels share NOTHING across tasks (source-direct "
-        "mode has zero shuffle and no coordination), so per-node "
-        "throughput is constant by construction on a real N-vs-4N "
-        "cluster where each added node brings its own cores, DRAM and L3."
-    )
-    return facts + conclusion + closing
-
-
-def write_baseline_md(enc: dict) -> None:
-    os.makedirs("BENCH", exist_ok=True)
-    lo, hi = SCALING_MASTERS
-
-    def _intkeys(d):
-        return {
-            (int(k) if isinstance(k, str) and k.lstrip("-").isdigit() else k): v
-            for k, v in d.items()
-        }
-
-    # tolerate a dict that round-tripped through JSON (string int keys) —
-    # lets BASELINE.md be regenerated from BENCH/results.json
-    for key in (
-        "source_direct_per_parallelism", "salted_per_cores",
-        "in_job_task_kernel_s", "pipeline_warm_scaling",
-        "kernel_warm_scaling", "membw_probe",
-    ):
-        if key in enc:
-            enc[key] = _intkeys(enc[key])
-    if "per_parallelism" in enc.get("decode", {}):
-        enc["decode"]["per_parallelism"] = _intkeys(
-            enc["decode"]["per_parallelism"]
-        )
-    r = enc["source_direct_per_parallelism"]
-    s = enc["salted_per_cores"]
-    ij = enc["in_job_task_kernel_s"]
-    lines = [
-        "# BENCH/BASELINE.md — measured numbers (north-rule evidence)",
-        "",
-        f"Input: deterministic synthetic web_pages, {enc['rows']} rows, "
-        f"{enc['raw_bytes']/1e6:.1f} MB raw (in-memory column bytes).",
-        "",
-        "Protocol (r5, PARALLELISM-PAIRED): the N-vs-4N headline runs "
-        f"both levels INSIDE one local[{hi}] session via LPT task bins "
-        f"(encode_parquet(parallelism={lo}|{hi})) — same JVM, same warm "
-        "core-pinned python workers, reps alternating level by level, 3 "
-        "sessions, per-session ALU + memcpy hardware probes.  Identical "
-        "job, identical input, bit-identical output at both levels — "
-        "the sandbox stand-in for N vs 4N executors that shares every "
-        "hypervisor noise window by construction (the separate-master "
-        "protocol of rounds 2-4 measured window luck as much as the "
-        "engine; its published min regressed 2x round to round).",
-        "",
-        "Mode `source_direct` = zero-shuffle encode of a parquet/Iceberg "
-        "table: one task per LPT file bin, each task scans its files "
-        "with pyarrow's vectorized reader straight into the Arrow-native "
-        "encode kernels — no JVM row materialization, the same shape as "
-        "an Iceberg-native scan on a real cluster.  Mode "
-        "`salted` = SALTED-DIRECT hybrid skew handling (r6): hot url "
-        "hosts — rows that overflow a partition — are routed to "
-        "right-sized contiguous salt buckets via task-side parquet "
-        "spill (the object-store shuffle shape) and encoded in a second "
-        "source-direct pass; the cold majority encodes in place; zero "
-        "JVM bytes on either path.",
-        "",
-        "| mode | parallelism | wall (s) | reps (s) | GB/s | docs/s |",
-        "|---|---|---|---|---|---|",
-    ]
-    for p in (2, lo, hi):
-        if p in r:
-            lines.append(
-                f"| source_direct | {p} of local[{hi}] | {r[p]['wall_s']} "
-                f"| {r[p]['all_reps_s']} | {r[p]['gb_per_s']} "
-                f"| {r[p]['docs_per_s']} |"
-            )
-    for c in (lo, hi):
-        if c in s:
-            lines.append(
-                f"| salted | local[{c}] | {s[c]['wall_s']} "
-                f"| {s[c]['all_reps_s']} | {s[c]['gb_per_s']} "
-                f"| {s[c]['docs_per_s']} |"
-            )
-    lines += [
-        "",
-        f"**Scaling efficiency (source_direct): 2->{lo} "
-        f"{enc['scaling_efficiency_2_to_8']}, {lo}->{hi} "
-        f"{enc['scaling_efficiency']}** (per-session "
-        f"{enc['scaling_efficiency_per_session']}; median of "
-        "window-paired sessions; efficiency = (T_N/T_4N)/4; target "
-        ">= 0.8 raw or >= 0.95 probe-normalized); salted "
-        f"{lo}->{hi}: {enc['salted_scaling_efficiency']}; "
-        f"salted/source_direct PAIRED ratio at local[{hi}]: per-session "
-        f"{enc['salted_vs_source_direct_paired']['per_session']}, median "
-        f"**{enc['salted_vs_source_direct_paired']['median']}x** "
-        "(3 paired sessions; skew handled this run: "
-        f"{enc['salted_vs_source_direct_paired'].get('salted_info')} — "
-        "the Zipf-1.07 fixture makes ~half of ALL rows hot, so the "
-        "paired ratio prices spill+re-encode of that fraction; cost is "
-        "proportional to the hot fraction, not a fixed mode tax).",
-        "",
-        "IN-JOB kernel-time scaling (wave-packing- and noise-free view): "
-        "summed per-task encode seconds — constant total work — were "
-        f"{ij[lo]} s at parallelism {lo} vs {ij[hi]} s at {hi}; ratio "
-        f"**{enc['in_job_kernel_time_ratio_hi_over_lo']}** (per-session "
-        f"{enc['in_job_kernel_time_ratio_per_session']}), "
-        f"**{enc['in_job_kernel_time_ratio_cpu_normalized']} normalized "
-        "by the session's measured per-vCPU ALU inflation** (target "
-        "<= 1.15; 1.0 = zero kernel contention beyond what the box "
-        "does to a register loop).  Per-stage hi/lo ratios: "
-        f"{enc['in_job_stage_ratio_hi_over_lo']}.",
-        "",
-        _hw_narrative(enc),
-        "",
-        f"Decode (SOURCE-DIRECT engine, r6 — one task per part dir, "
-        f"pyarrow scan in-task, zero shuffle): "
-        f"{enc['decode']['gb_per_s']} GB/s raw-equivalent at parallelism "
-        f"{hi} ({enc['decode']['wall_s']} s, reps "
-        f"{enc['decode']['all_reps_s']}); paired "
-        f"{lo}->{hi} scaling efficiency "
-        f"{enc['decode'].get('scaling_efficiency')} raw, "
-        f"**{enc['decode'].get('efficiency_vs_pipeline_probe')} vs the "
-        "matched no-Spark decode probe** (same task body, wall estimator "
-        "and backfill schedule, probe "
-        f"{enc['decode'].get('pipeline_probe', {}).get('efficiency_lo_to_hi')}"
-        ").",
-        "",
-        "Scale-growth regression check: every bench query also runs at "
-        "sf0.01 (10x fewer rows); per-query wall ratios live in the "
-        "bench JSON (`scale_growth`) and any query growing super-linearly "
-        "(>15x on 10x data, >2s wall) is flagged — flags: "
-        f"{enc.get('scale_growth', {}).get('superlinear_flags', 'n/a')}.",
-        "",
-        f"Compressed size vs reference parquet (snappy+dict defaults): "
-        f"**{enc['size_vs_reference_parquet']}** "
-        f"({enc['encoded_bytes_on_disk']} B vs {enc['reference_parquet_bytes']} B; "
-        "target <= 1.0, salted mode; source_direct ratio_vs_raw "
-        f"{enc['ratio_vs_raw'].get('source_direct')} vs salted "
-        f"{enc['ratio_vs_raw'].get('salted')}). "
-        "Encoded-block payloads are stored uncompressed — all size "
-        "reduction is the engine's own codec layer.",
-    ]
-    with open("BENCH/BASELINE.md", "w") as f:
-        f.write("\n".join(lines) + "\n")
-
-
 def main() -> None:
     tmp = tempfile.mkdtemp(prefix="nem_mms_bench_")
     try:
-        enc = run_encode_scaling(tmp)
-        queries, scale_growth = run_queries()
-        enc["scale_growth"] = scale_growth
-        write_baseline_md(enc)
-        total = round(
-            sum(queries.values())
-            + sum(
-                v["wall_s"]
-                for v in enc["source_direct_per_parallelism"].values()
-            ),
-            3,
-        )
+        spark = _new_spark(tmp)
+        try:
+            enc = run_encode(spark, tmp)
+            queries, enc["scale_growth"] = run_queries(spark)
+        finally:
+            spark.stop()
+        per_p = enc["per_parallelism"]
         payload = {
             "metric": "encode+queries wall time",
-            "value": total,
+            "value": round(
+                sum(queries.values()) + sum(v["wall_s"] for v in per_p.values()),
+                3,
+            ),
             "unit": "sec",
-            "queries": queries,
             "sf": SF_DIR.rstrip("/").split("sf")[-1],
-            "encode": enc,
+            "queries": queries,
         }
-        # loss-proof machine-readable artifact (round-4 verdict item 2:
-        # the driver captured only a 2000-char stdout tail and the
-        # per-query record of the round was lost) — committed to the
-        # repo, stdout stays a summary
         os.makedirs("BENCH", exist_ok=True)
         with open("BENCH/results.json", "w") as f:
-            # NOT sort_keys: probe dicts mix int levels (8, 32) with str
-            # summary keys, and sorted() on mixed keys raises TypeError
-            # (this exact crash ate the r5.0 run's results.json)
-            json.dump(payload, f, indent=1)
+            json.dump({**payload, "encode": enc}, f, indent=1)
         # stdout: ONE compact line that fits whole inside a 2000-char
-        # tail capture (the r4 failure mode: printing the full payload
-        # left only a mid-object slice in BENCH_r04.json).  Gates +
-        # per-query walls here; everything else in BENCH/results.json.
-        sd = enc["source_direct_per_parallelism"]
-        lo, hi = SCALING_MASTERS
-        summary = {
-            "metric": "encode+queries wall time",
-            "value": total,
-            "unit": "sec",
-            "sf": SF_DIR.rstrip("/").split("sf")[-1],
-            "queries": queries,
+        # tail capture; everything else is in BENCH/results.json
+        print(json.dumps({
+            **payload,
             "encode": {
-                "gb_per_s": {str(p): sd[p]["gb_per_s"] for p in sd},
+                "gb_per_s": {str(p): v["gb_per_s"] for p, v in per_p.items()},
                 "scaling_efficiency": enc["scaling_efficiency"],
-                "eff_vs_cpu_probe": enc["efficiency_vs_cpu_probe"],
-                "eff_vs_pipeline_probe": enc[
-                    "efficiency_vs_pipeline_probe"],
-                "eff_vs_pipeline_probe_best": enc[
-                    "efficiency_vs_pipeline_probe_best_session"],
-                "eff_vs_matched_probe": enc["efficiency_vs_matched_probe"],
-                "eff_vs_box_ceiling": enc["efficiency_vs_box_ceiling"],
-                "in_job_kernel_ratio": enc[
-                    "in_job_kernel_time_ratio_hi_over_lo"],
-                "in_job_kernel_ratio_cpu_norm": enc[
-                    "in_job_kernel_time_ratio_cpu_normalized"],
-                "salted_paired_ratio": enc[
-                    "salted_vs_source_direct_paired"]["median"],
-                "size_vs_reference_parquet": enc[
-                    "size_vs_reference_parquet"],
                 "decode_gb_per_s": enc["decode"]["gb_per_s"],
-                "decode_scaling_efficiency": enc["decode"].get(
-                    "scaling_efficiency"),
-                "salted_scaling_efficiency": enc[
-                    "salted_scaling_efficiency"],
+                "size_vs_reference_parquet": enc["size_vs_reference_parquet"],
             },
             "full_results": "BENCH/results.json",
-        }
-        line = json.dumps(summary)
-        if len(line) > 1900:  # belt and braces: never exceed the capture
-            summary["queries"] = {
-                k: v for k, v in sorted(
-                    queries.items(), key=lambda kv: -kv[1])[:10]
-            }
-            summary["queries_truncated_see_full_results"] = True
-            line = json.dumps(summary)
-        print(line)
+        }))
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree("/dev/shm/nem_mms_bench", ignore_errors=True)
 
 
 if __name__ == "__main__":

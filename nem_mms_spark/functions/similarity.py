@@ -107,17 +107,11 @@ def _gather_vectors(embeddings: DataFrame, id_col: str, vec_col: str):
     data volume as that broadcast relation; the candidate-pair stream
     then carries 16 bytes/row instead of two vectors + norms (guide
     §2.3/§8: shuffle keys, move payloads once)."""
-    sdf = embeddings.select(id_col, vec_col)
-    try:
-        tbl = sdf.toArrow()
-        ids = np.asarray(tbl.column(id_col).to_numpy(zero_copy_only=False))
-        lv = tbl.column(vec_col).combine_chunks()
-        dim = len(lv[0]) if len(lv) else 0
-        mat = _vec_matrix(lv, dim)
-    except Exception:  # pragma: no cover - non-arrow fallback
-        rows = sdf.collect()
-        ids = np.asarray([r[0] for r in rows], dtype=np.int64)
-        mat = np.asarray([list(r[1]) for r in rows], dtype=np.float64)
+    tbl = embeddings.select(id_col, vec_col).toArrow()
+    ids = np.asarray(tbl.column(id_col).to_numpy(zero_copy_only=False))
+    lv = tbl.column(vec_col).combine_chunks()
+    dim = len(lv[0]) if len(lv) else 0
+    mat = _vec_matrix(lv, dim)
     order = np.argsort(ids, kind="stable")
     ids = np.ascontiguousarray(ids[order])
     mat = np.ascontiguousarray(mat[order])
@@ -201,7 +195,7 @@ def _fold_sigs(mat: np.ndarray, planes: np.ndarray) -> np.ndarray:
 
 
 def multiprobe_buckets(
-    spark, query: list[float], planes: np.ndarray, n_probes: int
+    query: list[float], planes: np.ndarray, n_probes: int
 ) -> list[int]:
     """Probe sequence: the query's exact bucket plus single-bit flips of
     the ``n_probes`` planes with the smallest |margin| (the planes the
@@ -210,8 +204,7 @@ def multiprobe_buckets(
     kernel — the same float64 values, bit-for-bit, as the Catalyst fold
     expressions this used to run as a one-row Spark job (and as the SQL
     replication's list_dot_product), so the probe set is unchanged while
-    no Spark job runs at all.  ``spark`` is kept for API compatibility."""
-    del spark  # no longer needed: pure driver-side numpy
+    no Spark job runs at all."""
     q = np.asarray(query, dtype=np.float64)[None, :]
     wt = np.ascontiguousarray(planes.astype(np.float64).T)
     dots = _fold_dots(q, wt)[0]
@@ -309,9 +302,7 @@ def lsh_topk(
         probes = multiprobe_buckets_np(query, planes, n_probes)
         cand = precomputed.filter(F.col(bucket_col).isin(probes))
         return brute_force_topk(cand, query, k, id_col, vec_col)
-    probes = multiprobe_buckets(
-        embeddings.sparkSession, query, planes, n_probes
-    )
+    probes = multiprobe_buckets(query, planes, n_probes)
     probe_arr = np.asarray(sorted(probes), dtype=np.int64)
     q = np.ascontiguousarray(np.asarray(query, dtype=np.float64))
     qn = float(np.sqrt(np.sum(np.asarray(query, dtype=np.float64) ** 2)))
@@ -413,29 +404,6 @@ def banded_candidate_pairs(
     )
     raw = _bucket_pairs(tagged, id_col, max_bucket)
     return raw.distinct() if distinct else raw
-
-
-def band_sigs(
-    embeddings: DataFrame,
-    n_bands: int = 8,
-    band_bits: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 11,
-    method: str = "fold",
-) -> DataFrame:
-    """The (id, band, sig) signature table underlying
-    ``banded_candidate_pairs`` — one row per (id, band), same planes,
-    same sig construction, exposed so consumers can compare the two
-    engine paths on the LIGHTWEIGHT proxy (3-int rows) instead of their
-    derived O(sum bucket^2) pair sets: identical sig tables imply
-    identical band buckets, hence identical enumerated pair multisets
-    (the enumeration is a pure function of the buckets)."""
-    planes = hyperplanes(
-        _dim_of(embeddings, vec_col), n_bands * band_bits, seed
-    )
-    sig_fn = _band_sigs_matmul if method == "matmul" else _band_sigs
-    return sig_fn(embeddings, planes, n_bands, band_bits, id_col, vec_col)
 
 
 def _bucket_pairs(

@@ -338,52 +338,37 @@ def _tune_worker() -> None:
     """Per-python-worker runtime tuning for encode tasks (idempotent —
     workers are reused across tasks, so this runs cheaply per task).
 
-    * jemalloc decay: pyarrow's default pool returns freed pages to the
-      OS after ~10 s, so every encode task re-faults its ~300-400 MB of
-      scan/sort buffers (measured ~5M minor faults per 7.4 GB encode
-      pass).  Fault SERVICE cost anti-scales at high concurrency (page
-      zeroing competes with the kernels for memory bandwidth, LRU locks
-      serialize), which is exactly the in-job contention the round-4
-      verdict flagged.  A long decay keeps a long-lived worker's arena
-      resident — the steady state a real executor reaches anyway.
-      MEMORY SIZING NOTE: with trim/mmap disabled the worker's RSS pins
+    * memory pool: every pyarrow allocation goes through glibc malloc
+      with trim and mmap disabled, so freed scan/sort/serialize buffers
+      stay on the worker's warm heap instead of being returned to the OS
+      and re-faulted by the next task (pyarrow's default jemalloc pool
+      re-faulted ~1 M pages per encode pass inside parquet serialization
+      alone).  The worker's RSS therefore stays
       at its high-watermark (roughly the largest source file fetched +
       its decoded table + the serialized output buffer, ~3x the biggest
-      file) for the life of the worker.  Size executor memory for
-      n_cores x that watermark, or set NEM_MMS_ARROW_POOL=jemalloc to
-      trade steady-state RSS for the re-fault cost on constrained boxes.
-    * worker pinning (NEM_MMS_PIN_WORKERS=0 to disable): one worker per
-      core removes CFS migration + sibling-preemption noise, the local
-      stand-in for the cgroup cpuset a real cluster manager gives each
-      executor.  Each worker CLAIMS a unique core slot via an O_EXCL
-      slot file (pid-modulo was tried and REJECTED: pid collisions pin
-      two busy workers to one core, and the measured involuntary-switch
-      rate tripled); slots from dead workers are reclaimed by liveness
-      check, and when every slot is taken (more workers than cores) the
-      worker stays unpinned rather than doubling up.
+      file) for the life of the worker: size executor memory for
+      n_cores x that watermark.
+    * worker pinning: one worker per core removes CFS migration and
+      sibling-preemption noise, the local stand-in for the cgroup cpuset
+      a real cluster manager gives each executor.  Each worker CLAIMS a
+      unique core slot via an O_EXCL slot file (pid-modulo pins two busy
+      workers to one core on a pid collision); slots from dead workers
+      are reclaimed by liveness check, and when every slot is taken
+      (more workers than cores) the worker stays unpinned rather than
+      doubling up.
     """
     import pyarrow as _pa
 
     # one IO thread per task to match the one compute thread: the
-    # default 8-thread IO pool per worker process (32 workers x 8 =
-    # 256 threads) oversubscribes the box during parquet scans
+    # default 8-thread IO pool per worker process oversubscribes the box
+    # during parquet scans
     try:
         _pa.set_io_thread_count(1)
     except (AttributeError, ValueError):
         pass
-    pool = os.environ.get("NEM_MMS_ARROW_POOL", "system")
-    if pool == "system" and not getattr(_tune_worker, "_pool_set", False):
-        # Route ALL pyarrow allocations (scan, serialization, framing)
-        # through glibc malloc with trim/mmap disabled: freed blocks stay
-        # on the warm heap and are recycled without refaulting.  Measured
-        # (r5): the jemalloc default pool re-faulted ~1 M pages per
-        # encode pass inside parquet serialization alone, and fault
-        # SERVICE cost anti-scales brutally at 32-way concurrency
-        # (contended kernel page/LRU/memcg locks burn ~77x more CPU for
-        # the same work than at 8-way).  A long-lived executor's steady
-        # state is a warm resident heap; this makes the python workers
-        # reach it.  mallopt via ctypes so it works even when the
-        # MALLOC_* env vars weren't exported to the worker.
+    if not getattr(_tune_worker, "_pool_set", False):
+        # mallopt via ctypes so it works even when the MALLOC_* env vars
+        # weren't exported to the worker
         try:
             import ctypes
 
@@ -394,27 +379,7 @@ def _tune_worker() -> None:
             pass
         _pa.set_memory_pool(_pa.system_memory_pool())
         _tune_worker._pool_set = True
-    elif pool != "system":
-        try:
-            _pa.jemalloc_set_decay_ms(
-                int(os.environ.get("NEM_MMS_JEMALLOC_DECAY_MS", "300000"))
-            )
-        except (NotImplementedError, AttributeError):
-            pass  # non-jemalloc build
-    nice = int(os.environ.get("NEM_MMS_WORKER_NICE", "0"))
-    if nice and not getattr(_tune_worker, "_niced", False):
-        # raise worker CFS weight over the co-resident JVM's housekeeping
-        # threads: at full subscription every core hosts a pinned busy
-        # worker, and any JVM wakeup (GC, netty, task reaper) preempts
-        # one — a negative nice makes the scheduler give the worker its
-        # core back immediately (requires privilege; ignored without it)
-        try:
-            os.nice(nice)
-        except OSError:
-            pass
-        _tune_worker._niced = True
-    if os.environ.get("NEM_MMS_PIN_WORKERS", "1") != "0":
-        _pin_to_slot()
+    _pin_to_slot()
 
 
 def _atomic_write_ipc(table: pa.Table, dest: str) -> None:

@@ -24,41 +24,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def _outgrew_broadcast(sf_dir: str, name: str, mb: int = 16) -> bool:
-    """Deliberate join-strategy rule (guide §3.1): hash-build a fact-ish
-    side per partition once its on-disk size outgrows cheap broadcasting;
-    below that, let the planner broadcast.  Decided from file METADATA
-    (no Spark job); an unstatable path (directory table at cluster
-    scale) counts as big — exactly when broadcasting would hurt most."""
-    try:
-        return os.path.getsize(f"{sf_dir}/{name}.parquet") > (mb << 20)
-    except OSError:
-        return True
-
-
-def _fan_out(
-    df: DataFrame, spark: SparkSession, sf_dir: str, name: str, mb: int = 256
-) -> DataFrame:
-    """Spread per-row compute over a SMALL single-file table across the
-    session's cores (guide §2.5/§6).  The testdata parquet files are
-    written as ONE row group each, and parquet scan splits land on
-    row-group midpoints — so a scan of such a file is a single task no
-    matter what `minPartitionNum`/`maxPartitionBytes` say, and every
-    per-row expression downstream runs on one core (measured: the
-    text_quality measures over 50k docs spent 2.2 s single-core vs
-    0.5 s after fan-out).  Below the size cap, one round-robin
-    repartition of the scanned rows costs a tiny shuffle and buys
-    cores-way parallelism; above it the table is at real scale (many
-    files / row groups), scans parallelize natively, and the shuffle is
-    skipped.  ONLY for queries whose result is invariant under row
-    re-distribution: per-row projections or exact integer/count
-    aggregates — never float sums, order-sensitive windows, or
-    first/last semantics."""
-    if _outgrew_broadcast(sf_dir, name, mb):
-        return df
-    return df.repartition(spark.sparkContext.defaultParallelism)
-
-
 # ------------------------------------------------------ relational suite
 
 
@@ -81,14 +46,9 @@ def q1_pricing_summary(spark, sf_dir):
 
 def q3_shipping_priority(spark, sf_dir):
     c = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    # shuffled-hash build for the ~half-of-orders side once orders
-    # outgrows cheap broadcast (see q5 note): at sf1.0, 0.97 -> 0.80 s
-    # warm and 5.8 -> 1.2 s cold; at sf0.1 broadcast stays faster
     o = _t(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < "1995-06-01"
     )
-    if _outgrew_broadcast(sf_dir, "orders"):
-        o = o.hint("SHUFFLE_HASH")
     li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > "1995-06-01")
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
@@ -106,16 +66,7 @@ def q3_shipping_priority(spark, sf_dir):
 
 def q5_nation_revenue(spark, sf_dir):
     c = _t(spark, sf_dir, "customer")
-    # r7 (guide §3.1): the planner broadcast-joined the full orders table
-    # (driver collect + relation build of 1.5M rows at sf1.0 — measured
-    # 2.2 s vs 1.2 s with a shuffled-hash build); hash-partitioning both
-    # sides and hash-building orders per partition wins once orders
-    # outgrows a dimension table — below that, broadcast stays cheaper
-    # and the hint is skipped.  Join strategy does not change the joined
-    # multiset.
     o = _t(spark, sf_dir, "orders")
-    if _outgrew_broadcast(sf_dir, "orders"):
-        o = o.hint("SHUFFLE_HASH")
     li = _t(spark, sf_dir, "lineitem")
     n = _t(spark, sf_dir, "nation")
     r = _t(spark, sf_dir, "region")
@@ -404,15 +355,25 @@ def doc_fingerprints(spark, sf_dir):
     return d.select("doc_id", T.fingerprint(F.col("text")).alias("md5"))
 
 
+# text_quality, token_counts_by_source and lang_id_accuracy repartition
+# documents across the session's cores: the file is one parquet row group,
+# which scans as a single task, so the per-row text work would run on one
+# core.
+
+
 def text_quality(spark, sf_dir):
-    # per-row outputs -> multiset-invariant under the fan-out repartition
-    d = _fan_out(_t(spark, sf_dir, "documents"), spark, sf_dir, "documents")
+    # per-row outputs -> multiset-invariant under the repartition
+    d = _t(spark, sf_dir, "documents").repartition(
+        spark.sparkContext.defaultParallelism
+    )
     return T.text_quality_df(d)
 
 
 def token_counts_by_source(spark, sf_dir):
-    # count + exact integer sums -> invariant under the fan-out
-    d = _fan_out(_t(spark, sf_dir, "documents"), spark, sf_dir, "documents")
+    # count + exact integer sums -> invariant under the repartition
+    d = _t(spark, sf_dir, "documents").repartition(
+        spark.sparkContext.defaultParallelism
+    )
     return d.groupBy("source").agg(
         F.count("*").alias("n_docs"),
         F.sum(T.token_count(F.col("text"))).alias("n_tokens"),
@@ -427,8 +388,10 @@ def lang_id_accuracy(spark, sf_dir):
     # each hit count ~3-4x through the when/greatest decision chain
     # (interpreted array filters re-ran per replica).  Decision logic
     # unchanged.
-    # count + exact integer sum -> invariant under the fan-out
-    d = _fan_out(_t(spark, sf_dir, "documents"), spark, sf_dir, "documents")
+    # count + exact integer sum -> invariant under the repartition
+    d = _t(spark, sf_dir, "documents").repartition(
+        spark.sparkContext.defaultParallelism
+    )
     toked = d.select(
         "lang", T.tokens_col(F.lower(F.col("text"))).alias("_ltoks")
     )
@@ -634,72 +597,8 @@ def banded_matmul_parity(spark, sf_dir):
     matmul sets (the groupBy subsumes both ``.distinct()`` calls), so
     |fold| = sum(f) and |symmetric difference| = #{f != m}.  The old
     plan paid two distinct shuffles plus two sort-merge anti-joins over
-    the full pair sets for the identical counts.
-
-    r7 refinement (guide §8: decide on a lightweight proxy, not the
-    heavy derived product): the pair sets are pure functions of the two
-    (id, band, sig) signature tables — identical sig tables mean
-    identical band buckets, identical bucket filters, and therefore
-    identical enumerated pair sets.  So the divergence is measured
-    FIRST on the sig tables (n * n_bands rows of three ints, one
-    signed-count groupBy) instead of on the ~O(sum bucket^2) pair sets.
-    When the tables agree as multisets — the design-expected case — the
-    symmetric difference is empty BY THAT MEASUREMENT, and only one
-    pair stream pays enumeration + the distinct shuffle for n_pairs
-    (half the shuffled rows, half the enumeration of the old plan).
-    Any sig divergence falls back to the exact pair-level set algebra
-    above, which computes the true counts for exactly the rows the
-    oracle pins — the restructure changes which evidence proves
-    n_sym_diff, never its value.
-
-    SIZE-GATED (interleaved paired reps on this box): the proxy's
-    fixed costs — one extra fold-sig scan, the compare job, the count
-    action — only pay for themselves once the pair streams are large
-    (2k vectors: +0.08 s; 8k: flat; 20k / 25M pairs: −1.0 s and
-    growing quadratically with n), so below a 4 MB embeddings-file
-    metadata gate the one-job tagged-union plan is kept."""
+    the full pair sets for the identical counts."""
     emb = _t(spark, sf_dir, "embeddings")
-    if _outgrew_broadcast(sf_dir, "embeddings", mb=4):
-        return _banded_parity_sig_proxy(emb)
-    return _banded_parity_pair_level(emb)
-
-
-def _banded_parity_sig_proxy(emb: DataFrame) -> DataFrame:
-    """Sig-table proxy decision + single-stream count (the at-scale
-    plan; falls back to the pair-level set algebra on any divergence)."""
-    sig_kw = dict(
-        n_bands=_PAIR_BANDS, band_bits=_PAIR_BAND_BITS, seed=_PAIR_SEED
-    )
-    fold_sigs = similarity.band_sigs(emb, method="fold", **sig_kw)
-    mm_sigs = similarity.band_sigs(emb, method="matmul", **sig_kw)
-    # multiset difference of the two (vec_id, band, sig) tables: +1 per
-    # fold row, -1 per matmul row, so a row that differs, or is missing
-    # from or duplicated in either side, leaves a non-zero net count (an
-    # inner join on (vec_id, band) would drop a one-sided row silently)
-    key = ["vec_id", "band", "sig"]
-    n_sig_diff = (
-        fold_sigs.select(*key, F.lit(1).alias("_d"))
-        .unionByName(mm_sigs.select(*key, F.lit(-1).alias("_d")))
-        .groupBy(*key)
-        .agg(F.sum("_d").alias("_d"))
-        .filter(F.col("_d") != 0)
-        .count()
-    )
-    if n_sig_diff == 0:
-        fold = similarity.banded_candidate_pairs(
-            emb, method="fold", distinct=False, **sig_kw
-        )
-        return fold.agg(
-            F.countDistinct("vec_a", "vec_b").cast("long").alias("n_pairs"),
-            F.lit(0).cast("long").alias("n_sym_diff"),
-        )
-    return _banded_parity_pair_level(emb)
-
-
-def _banded_parity_pair_level(emb: DataFrame) -> DataFrame:
-    """Exact pair-level set algebra: one tagged-union groupBy over both
-    raw candidate streams (the small-table plan and the proxy's
-    fallback)."""
     kw = dict(
         n_bands=_PAIR_BANDS, band_bits=_PAIR_BAND_BITS, seed=_PAIR_SEED,
         distinct=False,

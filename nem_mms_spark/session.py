@@ -51,10 +51,7 @@ def get_spark(
         # maxPartitionBytes), so small tables fan out across the session
         # while terabyte scans keep their 128 MB splits — no constant
         # tuned to either scale
-        .config(
-            "spark.sql.files.minPartitionNum",
-            os.environ.get("NEM_MMS_MIN_PARTITION_NUM", str(n_threads)),
-        )
+        .config("spark.sql.files.minPartitionNum", str(n_threads))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")

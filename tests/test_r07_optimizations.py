@@ -274,32 +274,33 @@ def test_cosine_pairs_topk_handles_duplicate_pairs(spark):
     assert len(a) > 0
 
 
-def test_banded_parity_proxy_matches_pair_level_set_algebra(spark):
-    """The sig-proxy plan (the above-the-size-gate branch of
-    banded_matmul_parity) must return exactly the pair-level set
-    algebra it replaces: n_pairs = |fold pair set| and n_sym_diff =
-    |fold set ^ matmul set|, recomputed here independently by
-    materializing both sets."""
+def _pair_sets(spark):
+    """The fold and matmul candidate pair sets of SF_SMALL's embeddings,
+    materialized independently of banded_matmul_parity's plan."""
     from nem_mms_spark import queries as Q
 
-    emb0 = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
-    res = Q._banded_parity_sig_proxy(emb0).collect()[0]
-    assert (
-        Q._banded_parity_pair_level(emb0).collect()[0] == res
-    )  # both branches, same values
     kw = dict(
         n_bands=Q._PAIR_BANDS, band_bits=Q._PAIR_BAND_BITS,
         seed=Q._PAIR_SEED, distinct=False,
     )
     emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
-    fold = {
-        (r.vec_a, r.vec_b)
-        for r in S.banded_candidate_pairs(emb, method="fold", **kw).collect()
-    }
-    mm = {
-        (r.vec_a, r.vec_b)
-        for r in S.banded_candidate_pairs(emb, method="matmul", **kw).collect()
-    }
+    return [
+        {
+            (r.vec_a, r.vec_b)
+            for r in S.banded_candidate_pairs(emb, method=m, **kw).collect()
+        }
+        for m in ("fold", "matmul")
+    ]
+
+
+def test_banded_matmul_parity_matches_pair_level_set_algebra(spark):
+    """banded_matmul_parity must return the pair-level set algebra:
+    n_pairs = |fold pair set| and n_sym_diff = |fold set ^ matmul set|,
+    recomputed here independently by materializing both sets."""
+    from nem_mms_spark import queries as Q
+
+    res = Q.banded_matmul_parity(spark, SF_SMALL).collect()[0]
+    fold, mm = _pair_sets(spark)
     assert res.n_pairs == len(fold) > 0
     assert res.n_sym_diff == len(fold ^ mm)
 
@@ -309,9 +310,8 @@ def test_banded_parity_fallback_on_sig_divergence(
     spark, monkeypatch, perturbation
 ):
     """When the matmul sig table diverges — one (vec 0, band 0) sig
-    flipped, or that row missing from the matmul side — the sig-proxy
-    branch must take the pair-level fallback and report the TRUE counts
-    for the perturbed engine path (not the proxy shortcut's zero)."""
+    flipped, or that row missing from the matmul side — the query must
+    report the TRUE counts for the perturbed engine path, not zero."""
     from nem_mms_spark import queries as Q
 
     orig = S._band_sigs_matmul
@@ -326,23 +326,10 @@ def test_banded_parity_fallback_on_sig_divergence(
         )
 
     monkeypatch.setattr(S, "_band_sigs_matmul", perturbed)
-    emb0 = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
-    res = Q._banded_parity_sig_proxy(emb0).collect()[0]
-    kw = dict(
-        n_bands=Q._PAIR_BANDS, band_bits=Q._PAIR_BAND_BITS,
-        seed=Q._PAIR_SEED, distinct=False,
-    )
-    emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
-    fold = {
-        (r.vec_a, r.vec_b)
-        for r in S.banded_candidate_pairs(emb, method="fold", **kw).collect()
-    }
-    mm = {
-        (r.vec_a, r.vec_b)
-        for r in S.banded_candidate_pairs(emb, method="matmul", **kw).collect()
-    }
+    res = Q.banded_matmul_parity(spark, SF_SMALL).collect()[0]
+    fold, mm = _pair_sets(spark)
     assert res.n_pairs == len(fold)
-    assert res.n_sym_diff == len(fold ^ mm)
+    assert res.n_sym_diff == len(fold ^ mm) > 0
 
 
 def test_sort_by_unless_sorted_matches_sort_by():
