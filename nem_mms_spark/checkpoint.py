@@ -144,8 +144,8 @@ def checkpoint_totals(out_dir: str) -> dict:
                 continue
             for k, v in _json.loads(s).items():
                 stage_s[k] = stage_s.get(k, 0.0) + v
-        # `c_*` keys are raw counters (c_cpu/c_read_cpu are ns but kept
-        # whole for stall arithmetic); everything else converts to sec
+        # `c_cpu` is kept whole in ns for stall arithmetic; everything
+        # else converts to sec
         stage_s = {
             k: (int(v) if k.startswith("c_") else round(v / 1e9, 3))
             for k, v in stage_s.items()

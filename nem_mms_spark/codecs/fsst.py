@@ -1,4 +1,4 @@
-"""FSST-style static-symbol-table string compression, pure numpy.
+"""FSST-style static-symbol-table string compression.
 
 Follows the publicly described FSST design (Boncz/Neumann/Leis, VLDB 2020):
 a table of at most 255 symbols of 1..8 bytes, 1-byte output codes, code 0 as
@@ -7,7 +7,9 @@ sample via iterative most-frequent-adjacent-pair merging (re-pair style,
 which keeps both training and encoding fully vectorizable in numpy — no
 per-row Python, per the engine mandate), rather than FSST's suffix-oriented
 construction; the on-disk format and decode side match the FSST contract:
-decode needs only the code->symbol table.
+decode needs only the code->symbol table.  The trainer is numpy; the
+greedy matcher is a C kernel with a numpy twin (the no-compiler fallback);
+decode is one Arrow ``take`` from a 512-entry symbol dictionary.
 
 Reference ancestor: the reference delegates all string encoding to parquet
 defaults (/root/reference/src/packages/mod.rs:121-127); this module is part
@@ -22,7 +24,13 @@ from __future__ import annotations
 import numpy as np
 
 from nem_mms_spark.codecs import native
-from nem_mms_spark.codecs.primitives import pack_uints, unpack_uints, bit_width
+from nem_mms_spark.codecs.primitives import (
+    binary_array,
+    binary_buffers,
+    bit_width,
+    pack_uints,
+    unpack_uints,
+)
 
 _SENTINEL = np.int32(-1)
 MAX_SYMBOL_LEN = 8
@@ -135,29 +143,6 @@ def _tokenize(data: np.ndarray, offsets: np.ndarray) -> np.ndarray:
         dest = np.arange(nbytes, dtype=np.int64) + row_of_byte
         tokens[dest] = data[offsets[0] : offsets[-1]].astype(np.int32)
     return tokens
-
-
-def _apply_merge(tokens: np.ndarray, a: int, b: int, new_id: int) -> np.ndarray:
-    """One greedy left-to-right merge pass of adjacent pair (a, b)."""
-    if len(tokens) < 2:
-        return tokens
-    m = (tokens[:-1] == a) & (tokens[1:] == b)
-    idx = np.flatnonzero(m)
-    if len(idx) == 0:
-        return tokens
-    if a == b:
-        # overlapping matches (runs of `a`): greedy keeps every other match
-        # within each run of consecutive match positions
-        run_key = idx - np.arange(len(idx))
-        starts = np.empty(len(idx), dtype=np.int64)
-        first = np.concatenate([[True], run_key[1:] != run_key[:-1]])
-        starts[first] = idx[first]
-        np.maximum.accumulate(np.where(first, idx, np.int64(-1)), out=starts)
-        idx = idx[((idx - starts) % 2) == 0]
-    keep = np.ones(len(tokens), dtype=bool)
-    keep[idx + 1] = False
-    tokens[idx] = new_id
-    return tokens[keep]
 
 
 def train(
@@ -388,64 +373,52 @@ def _parse_symbols(header: bytes):
 
 
 def decode(payload: bytes, params: dict, count: int):
+    """Inverse of encode.  Each token maps to an id into a 512-entry
+    symbol dictionary (ids 1..255: the code's symbol; 256 + b: the raw
+    byte b after an escape), and one Arrow ``take`` of those ids writes
+    the decoded bytes and, at the string bounds, the offsets.  Raises
+    ValueError on a stream that disagrees with its lengths or table."""
     hlen, lw, ln = params["hlen"], params["lw"], params["ln"]
-    syms = _parse_symbols(payload[:hlen])
     enc_lengths = unpack_uints(payload[hlen : hlen + ln], lw, count).astype(np.int64)
+    syms = _parse_symbols(payload[:hlen])
     stream = np.frombuffer(payload, dtype=np.uint8, offset=hlen + ln)
-
-    # classify positions: escape markers / escaped data / codes.
-    # markers occur only at token starts; inside a maximal run of zero
-    # bytes that begins at a token start, markers sit at even offsets.
-    z = stream == 0
-    if z.any():
-        zi = np.flatnonzero(z)
-        run_key = zi - np.arange(len(zi))
-        first = np.concatenate([[True], run_key[1:] != run_key[:-1]])
-        starts = np.where(first, zi, np.int64(-1))
-        np.maximum.accumulate(starts, out=starts)
-        markers = zi[((zi - starts) % 2) == 0]
-    else:
-        markers = np.zeros(0, dtype=np.int64)
-    is_marker = np.zeros(len(stream), dtype=bool)
-    is_marker[markers] = True
-    is_data = np.zeros(len(stream), dtype=bool)
-    if len(markers):
-        is_data[markers + 1] = True
-    is_code = ~(is_marker | is_data)
-
-    # token table: decoded bytes per token
-    nsym = len(syms)
-    maxw = max((len(s) for s in syms), default=1) or 1
-    # rows 0..255: code ids (0 unused); rows 256..511: escaped raw bytes
-    mat = np.zeros((512, maxw), dtype=np.uint8)
-    lens = np.zeros(512, dtype=np.int64)
-    for i, s in enumerate(syms):
-        mat[i + 1, : len(s)] = np.frombuffer(s, dtype=np.uint8)
-        lens[i + 1] = len(s)
-    mat[256:512, 0] = np.arange(256)
-    lens[256:512] = 1
-
-    tok_pos = np.flatnonzero(is_marker | is_code)
-    tok_ids = np.where(
-        is_marker[tok_pos],
-        stream[np.minimum(tok_pos + 1, len(stream) - 1)].astype(np.int64) + 256,
-        stream[tok_pos].astype(np.int64),
-    )
-    if nsym < 255 and (is_code[tok_pos] & (stream[tok_pos] > nsym)).any():
-        raise ValueError("corrupt FSST stream: code beyond symbol table")
-    out_lens = lens[tok_ids]
-    total = int(out_lens.sum())
-    if total:
-        grid = mat[tok_ids]
-        mask = np.arange(maxw)[None, :] < out_lens[:, None]
-        data = grid[mask]
-    else:
-        data = np.zeros(0, dtype=np.uint8)
-
-    # map encoded-byte string boundaries -> decoded offsets
     enc_bounds = np.zeros(count + 1, dtype=np.int64)
     np.cumsum(enc_lengths, out=enc_bounds[1:])
-    cum_dec = np.concatenate([[0], np.cumsum(out_lens)])
-    tok_idx = np.searchsorted(tok_pos, enc_bounds, side="left")
-    offsets = cum_dec[tok_idx]
-    return data, offsets
+    if enc_bounds[-1] != len(stream):
+        raise ValueError(
+            f"corrupt FSST stream: {len(stream)} bytes, lengths sum to "
+            f"{int(enc_bounds[-1])}"
+        )
+
+    # escape markers occur only at token starts; inside a maximal run of
+    # zero bytes that begins at a token start, markers sit at even offsets
+    zi = np.flatnonzero(stream == 0)
+    run_key = zi - np.arange(len(zi))
+    first = np.ones(len(zi), dtype=bool)
+    np.not_equal(run_key[1:], run_key[:-1], out=first[1:])
+    starts = np.where(first, zi, np.int64(-1))
+    np.maximum.accumulate(starts, out=starts)
+    markers = zi[((zi - starts) % 2) == 0]
+    if len(markers) and markers[-1] == len(stream) - 1:
+        raise ValueError("corrupt FSST stream: ends inside an escape")
+
+    ids = stream.astype(np.int32)
+    is_tok = np.ones(len(stream), dtype=bool)
+    ids[markers] = stream[markers + 1].astype(np.int32) + 256
+    is_tok[markers + 1] = False
+    tok_pos = np.flatnonzero(is_tok)
+    tok_ids = ids[tok_pos]
+    nsym = len(syms)
+    if nsym < 255 and ((tok_ids > nsym) & (tok_ids < 256)).any():
+        raise ValueError("corrupt FSST stream: code beyond symbol table")
+
+    lens = np.zeros(512, dtype=np.int64)
+    lens[1 : nsym + 1] = [len(s) for s in syms]
+    lens[256:] = 1
+    sym_offsets = np.zeros(513, dtype=np.int64)
+    np.cumsum(lens, out=sym_offsets[1:])
+    sym_data = np.frombuffer(b"".join(syms) + bytes(range(256)), dtype=np.uint8)
+    data, tok_offsets = binary_buffers(
+        binary_array(sym_data, sym_offsets).take(tok_ids)
+    )
+    return data, tok_offsets[np.searchsorted(tok_pos, enc_bounds)]

@@ -8,6 +8,7 @@ int64 powers which are exact only below 2**63).
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 
 from nem_mms_spark.codecs import native as _native
 
@@ -77,27 +78,33 @@ def pack_uints(values: np.ndarray, width: int) -> bytes:
     return words.tobytes()[: (n * width + 7) // 8]
 
 
+def packed_size(count: int, width: int) -> int:
+    """Bytes pack_uints writes for `count` values of `width` bits."""
+    return count * 8 if width > 56 else (count * width + 7) // 8
+
+
 def unpack_uints(payload: bytes, width: int, count: int) -> np.ndarray:
-    """Inverse of pack_uints -> uint64 array of length count."""
+    """Inverse of pack_uints -> uint64 array of length count.
+
+    Raises ValueError unless the payload is exactly the size pack_uints
+    writes for (count, width): a cut or padded payload never decodes."""
+    need = packed_size(count, width)
+    if len(payload) != need:
+        raise ValueError(
+            f"bit-packed payload is {len(payload)} bytes, expected {need}"
+        )
     if count == 0 or width == 0:
         return np.zeros(count, dtype=np.uint64)
     if width > 56:
         return np.frombuffer(payload, dtype="<u8", count=count).astype(np.uint64)
     if _native.lib is not None:
-        need = (count * width + 7) // 8
         buf = np.frombuffer(payload, dtype=np.uint8)
-        if len(buf) < need:
-            pad = np.zeros(need, dtype=np.uint8)
-            pad[: len(buf)] = buf
-            buf = pad
         out = np.empty(count, dtype=np.uint64)
         _native.lib.nem_unpack_uints(np.ascontiguousarray(buf), count, width, out)
         return out
     m = (count + 63) // 64
-    need = m * width * 8
-    buf = bytes(payload)
-    if len(buf) < need:
-        buf = buf.ljust(need, b"\0")
+    # the word-lane kernel reads whole 64-value groups
+    buf = bytes(payload).ljust(m * width * 8, b"\0")
     words = np.frombuffer(buf, dtype="<u8", count=m * width).reshape(m, width)
     # inverse of the pack-side lane halving: extract the WIDE lanes
     # (few strided passes), then split pairwise back down to `width`
@@ -163,15 +170,20 @@ def encode_offsets_data(
 def decode_offsets_data(
     payload: bytes, params: dict, count: int
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Inverse of encode_offsets_data -> (uint8 data, int64 offsets)."""
+    """Inverse of encode_offsets_data -> (uint8 data, int64 offsets).
+    Raises ValueError when the data bytes disagree with the lengths."""
     ln = params["ln"]
     lengths = unpack_uints(payload[:ln], params["lw"], count).astype(np.int64)
     offsets = np.zeros(count + 1, dtype=np.int64)
     np.cumsum(lengths, out=offsets[1:])
     # zero-copy view into the payload (callers only read; the view keeps
-    # the payload buffer alive) — the old defensive .copy() re-streamed
-    # every PLAIN/dict-value byte
+    # the payload buffer alive)
     data = np.frombuffer(payload, dtype=np.uint8, offset=ln)
+    if len(data) != offsets[-1]:
+        raise ValueError(
+            f"string payload has {len(data)} data bytes, lengths sum to "
+            f"{int(offsets[-1])}"
+        )
     return data, offsets
 
 
@@ -183,42 +195,57 @@ def run_ends(values: np.ndarray) -> np.ndarray:
     return np.concatenate([change, [len(values)]]).astype(np.int64)
 
 
+def binary_array(data: np.ndarray, offsets: np.ndarray) -> pa.LargeBinaryArray:
+    """Zero-copy Arrow view of a (uint8 data, int64 offsets) chunk.  The
+    array keeps both numpy buffers alive."""
+    return pa.Array.from_buffers(
+        pa.large_binary(),
+        len(offsets) - 1,
+        [
+            None,
+            pa.py_buffer(np.ascontiguousarray(offsets, dtype=np.int64)),
+            pa.py_buffer(np.ascontiguousarray(data)),
+        ],
+    )
+
+
+def binary_buffers(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """Inverse of binary_array for a null-free large_binary array: a
+    zero-copy uint8 view of its bytes and offsets rebased to start at 0
+    (the array's slice offset is honoured)."""
+    n = len(arr)
+    if n == 0:
+        return np.zeros(0, dtype=np.uint8), np.zeros(1, dtype=np.int64)
+    bufs = arr.buffers()
+    offsets = np.frombuffer(bufs[1], dtype=np.int64, count=arr.offset + n + 1)
+    offsets = offsets[arr.offset :]
+    base = int(offsets[0])
+    offsets = offsets - base
+    if bufs[2] is None:
+        return np.zeros(0, dtype=np.uint8), offsets
+    data = np.frombuffer(bufs[2], dtype=np.uint8)[base : base + int(offsets[-1])]
+    return data, offsets
+
+
+def factorize_bytes(
+    data: np.ndarray, offsets: np.ndarray
+) -> tuple[np.ndarray, tuple[np.ndarray, np.ndarray]]:
+    """Dictionary-encode a (data, offsets) chunk with Arrow's hash kernel.
+
+    Returns (int64 codes, (udata, uoffsets)): the distinct values in
+    first-occurrence order, so the result is a pure function of chunk
+    content.  DICT and RLE factorize whole strings, WORD_DICT the word
+    tokens (token offsets over the same data); the selector's size
+    estimates reuse the result for the winning encode."""
+    d = binary_array(data, offsets).dictionary_encode()
+    codes = d.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+    return codes, binary_buffers(d.dictionary)
+
+
 def gather_bytes(
     data: np.ndarray, offsets: np.ndarray, indices: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Take rows `indices` from a (data, offsets) chunk, vectorized.
-
-    Returns a new (data, offsets) pair.  Used to materialize dictionary
-    values / run values without per-row Python.  Large gathers route
-    through pyarrow's C++ take kernel (one memcpy per row instead of the
-    numpy per-byte repeat/arange scatter, ~5 passes less memory traffic);
-    small ones stay in numpy (lower fixed overhead).
-    """
-    n = len(indices)
-    starts = offsets[indices]
-    lengths = offsets[indices + 1] - starts
-    out_offsets = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(lengths, out=out_offsets[1:])
-    total = int(out_offsets[-1])
-    if total == 0:
-        return np.zeros(0, dtype=np.uint8), out_offsets
-    if total >= (1 << 16):
-        import pyarrow as pa
-
-        src_offs = np.ascontiguousarray(offsets, dtype=np.int64)
-        src_data = np.ascontiguousarray(data)
-        arr = pa.Array.from_buffers(
-            pa.large_binary(),
-            len(src_offs) - 1,
-            [None, pa.py_buffer(src_offs), pa.py_buffer(src_data)],
-        )
-        taken = arr.take(pa.array(indices, type=pa.int64()))
-        bufs = taken.buffers()
-        # take output is dense from 0, so its offsets == out_offsets
-        out_data = np.frombuffer(bufs[2], dtype=np.uint8)[:total].copy()
-        return out_data, out_offsets
-    # source byte positions: for each row, starts[i] + arange(lengths[i])
-    row_of_byte = np.repeat(np.arange(n), lengths)
-    pos_in_row = np.arange(total) - np.repeat(out_offsets[:-1], lengths)
-    src = starts[row_of_byte] + pos_in_row
-    return data[src], out_offsets
+    """Take rows `indices` from a (data, offsets) chunk -> a new
+    (data, offsets) pair, through Arrow's take kernel (one memcpy per
+    row).  Materializes dictionary values, run values and word tokens."""
+    return binary_buffers(binary_array(data, offsets).take(pa.array(indices)))

@@ -21,6 +21,7 @@ from nem_mms_spark.codecs.primitives import (
     bit_width,
     decode_offsets_data,
     encode_offsets_data,
+    factorize_bytes,
     gather_bytes,
     pack_uints,
     unpack_uints,
@@ -59,34 +60,6 @@ def tokenize(data: np.ndarray, offsets: np.ndarray) -> np.ndarray:
     return merged[keep]
 
 
-def factorize_tokens(data: np.ndarray, token_offsets: np.ndarray):
-    """pyarrow dictionary_encode over the token array (C++ hash table)."""
-    import pyarrow as pa
-
-    n = len(token_offsets) - 1
-    arr = pa.Array.from_buffers(
-        pa.large_binary(),
-        n,
-        [
-            None,
-            pa.py_buffer(np.ascontiguousarray(token_offsets)),
-            pa.py_buffer(np.ascontiguousarray(data[: token_offsets[-1]])),
-        ],
-    )
-    d = arr.dictionary_encode()
-    codes = d.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-    bufs = d.dictionary.buffers()
-    uoffsets = np.frombuffer(bufs[1], dtype=np.int64, count=len(d.dictionary) + 1)
-    base = int(uoffsets[0])
-    uoffsets = (uoffsets - base).astype(np.int64)
-    udata = (
-        np.frombuffer(bufs[2], dtype=np.uint8)[base : base + int(uoffsets[-1])].copy()
-        if bufs[2] is not None
-        else np.zeros(0, dtype=np.uint8)
-    )
-    return codes, (udata, uoffsets)
-
-
 def encode(
     data: np.ndarray,
     offsets: np.ndarray,
@@ -98,7 +71,7 @@ def encode(
     if token_offsets is None:
         token_offsets = tokenize(data, offsets)
     if codes is None or uniq is None:
-        codes, uniq = factorize_tokens(data, token_offsets)
+        codes, uniq = factorize_bytes(data, token_offsets)
     udata, uoffsets = uniq
     card = len(uoffsets) - 1
 
@@ -132,10 +105,7 @@ def decode(payload: bytes, params: dict, count: int):
         payload[slen + dlen :], params["cw"], params["tn"]
     ).astype(np.int64)
     tdata, toffsets = gather_bytes(udata, uoffsets, codes)
-    # per-string byte lengths: sum of token lengths per string
-    token_lens = np.diff(toffsets)
+    # string i is tokens bounds[i]..bounds[i+1]
     bounds = np.zeros(count + 1, dtype=np.int64)
     np.cumsum(counts, out=bounds[1:])
-    cum = np.concatenate([[0], np.cumsum(token_lens)])
-    offsets = cum[bounds]
-    return tdata, offsets.astype(np.int64)
+    return tdata, toffsets[bounds]

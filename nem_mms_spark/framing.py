@@ -20,6 +20,8 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
+from nem_mms_spark.codecs.primitives import binary_array, binary_buffers
+
 DEFAULT_BLOCK_ROWS = 65536
 DEFAULT_BLOCK_BYTES = 16 << 20
 
@@ -73,16 +75,7 @@ def to_kernel(arr: pa.Array):
         dense = pc.cast(dense, pa.large_binary())
         if isinstance(dense, pa.ChunkedArray):
             dense = dense.combine_chunks()
-        bufs = dense.buffers()
-        off0 = dense.offset
-        offsets = np.frombuffer(bufs[1], dtype=np.int64, count=len(dense) + 1 + off0)[off0:]
-        base = int(offsets[0])
-        offsets = (offsets - base).astype(np.int64)
-        data = (
-            np.frombuffer(bufs[2], dtype=np.uint8)[base : base + int(offsets[-1])]
-            if bufs[2] is not None
-            else np.zeros(0, dtype=np.uint8)
-        )
+        data, offsets = binary_buffers(dense)
         raw = int(offsets[-1]) + 8 * len(dense)
         return (data, offsets), dtype, validity, null_count, raw
 
@@ -115,19 +108,7 @@ def from_kernel(
         valid = None
 
     if dtype == "bytes":
-        data, offsets = values
-        # py_buffer wraps the numpy arrays ZERO-COPY (it keeps them alive
-        # via the buffer protocol) — the old .tobytes() re-streamed every
-        # decoded byte through an extra copy
-        dense = pa.Array.from_buffers(
-            pa.large_binary(),
-            count - null_count,
-            [
-                None,
-                pa.py_buffer(np.ascontiguousarray(offsets, dtype=np.int64)),
-                pa.py_buffer(np.ascontiguousarray(data)),
-            ],
-        )
+        dense = binary_array(*values)
         if valid is not None:
             dense = _scatter_bytes(dense, valid, count)
         return pc.cast(dense, typ)

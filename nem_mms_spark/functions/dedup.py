@@ -32,18 +32,6 @@ def exact_dedup_stats(documents: DataFrame) -> DataFrame:
     )
 
 
-def exact_duplicates(documents: DataFrame) -> DataFrame:
-    """Groups of byte-identical texts (keep-first policy ready)."""
-    return (
-        documents.groupBy(F.md5("text").alias("text_md5"))
-        .agg(
-            F.count("*").alias("n_copies"),
-            F.min("doc_id").alias("keep_doc_id"),
-        )
-        .filter(F.col("n_copies") > 1)
-    )
-
-
 def shingles_df(
     documents: DataFrame, k: int = 3, id_col: str = "doc_id"
 ) -> DataFrame:

@@ -53,12 +53,6 @@ def l2_norm(col) -> "F.Column":
     )
 
 
-def cosine_to_query(col, query: list[float]):
-    q = F.array(*[F.lit(float(x)) for x in query])
-    qn = float(np.sqrt(np.sum(np.asarray(query, dtype=np.float64) ** 2)))
-    return _dot(col, q) / (l2_norm(col) * F.lit(qn))
-
-
 # ------------------------------------------------- numpy fold kernel
 
 
@@ -599,107 +593,6 @@ def _dim_of(embeddings: DataFrame, vec_col: str) -> int:
     return int(row[0]["d"]) if row else 0
 
 
-def cosine_pairs_topk(
-    embeddings: DataFrame,
-    pairs: DataFrame,
-    k: int = 20,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact fold-cosine on a (vec_a, vec_b) candidate set -> top-k.
-    The numpy fold kernel matches DuckDB's list_dot_product bit-exactly
-    (same rounded-op sequence), so the oracle replicates ordering and
-    rounding.
-
-    Plan shape (r7): the vector table is gathered ONCE driver-side and
-    broadcast as a packed numpy matrix + fold-norms (the same relation
-    the old plan broadcast twice as a JVM hash-join build side); the
-    candidate stream carries only the two ids.  Each task deduplicates
-    its pairs, scores them against the broadcast matrix, and keeps its
-    local top-k under the total order (cosine desc, vec_a, vec_b);
-    cross-task duplicates score identically (deterministic function of
-    content), so distinct-of-local-top-ks followed by the global top-k
-    returns exactly the full-set top-k — pairs may therefore arrive
-    WITH multiplicity (e.g. once per colliding band) and no global
-    pair-set shuffle is needed."""
-    import pyarrow as pa
-
-    ids, mat, norms = _gather_vectors(embeddings, id_col, vec_col)
-    bc = embeddings.sparkSession.sparkContext.broadcast((ids, mat, norms))
-
-    def topk_stream(batches):
-        g_ids, g_mat, g_norms = bc.value
-        acc_a: list[np.ndarray] = []
-        acc_b: list[np.ndarray] = []
-        acc_c: list[np.ndarray] = []
-
-        def dedup(a, b, c):
-            # first occurrence per (a, b); duplicates carry identical c
-            order = np.lexsort((b, a))
-            a, b, c = a[order], b[order], c[order]
-            first = np.empty(len(a), dtype=bool)
-            first[0] = True
-            np.logical_or(
-                a[1:] != a[:-1], b[1:] != b[:-1], out=first[1:]
-            )
-            return a[first], b[first], c[first]
-
-        def topk(a, b, c):
-            order = np.lexsort((b, a, -c))[:k]
-            return a[order], b[order], c[order]
-
-        for batch in batches:
-            a = batch.column("vec_a").to_numpy(zero_copy_only=False)
-            b = batch.column("vec_b").to_numpy(zero_copy_only=False)
-            if len(a) == 0:
-                continue
-            # in-batch dedup (keeps the local-top-k containment argument
-            # exact when pairs arrive once per colliding band)
-            order = np.lexsort((b, a))
-            a, b = a[order], b[order]
-            first = np.empty(len(a), dtype=bool)
-            first[0] = True
-            np.logical_or(a[1:] != a[:-1], b[1:] != b[:-1], out=first[1:])
-            a, b = a[first], b[first]
-            ia = np.searchsorted(g_ids, a)
-            ib = np.searchsorted(g_ids, b)
-            ma = np.ascontiguousarray(g_mat[ia])
-            mb = np.ascontiguousarray(g_mat[ib])
-            dot = _fold_pair_dots(ma, mb)
-            cos = dot / (g_norms[ia] * g_norms[ib])
-            ta, tb, tc = topk(a, b, cos)
-            acc_a.append(ta)
-            acc_b.append(tb)
-            acc_c.append(tc)
-        if acc_a:
-            a = np.concatenate(acc_a)
-            b = np.concatenate(acc_b)
-            c = np.concatenate(acc_c)
-            # the same pair can reach this task in TWO batches (one per
-            # colliding band): dedup before the merged top-k, or
-            # duplicate rows crowd distinct pairs out of the k slots
-            a, b, c = dedup(a, b, c)
-            a, b, c = topk(a, b, c)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(a, type=pa.int64()),
-                    pa.array(b, type=pa.int64()),
-                    pa.array(c, type=pa.float64()),
-                ],
-                names=["vec_a", "vec_b", "_cos"],
-            )
-
-    local = pairs.select("vec_a", "vec_b").mapInArrow(
-        topk_stream, "vec_a long, vec_b long, _cos double"
-    )
-    return (
-        local.distinct()
-        .orderBy(F.desc("_cos"), "vec_a", "vec_b")
-        .limit(k)
-        .select("vec_a", "vec_b", F.round("_cos", 4).alias("cosine"))
-    )
-
-
 def banded_cosine_topk(
     embeddings: DataFrame,
     k: int = 20,
@@ -713,8 +606,8 @@ def banded_cosine_topk(
 ) -> DataFrame:
     """FUSED banded-LSH near-dup top-k: candidates = pairs colliding in
     any band (identical to ``banded_candidate_pairs``), score = the exact
-    fold cosine (identical to ``cosine_pairs_topk``), result = the same
-    top-k — computed without ever materializing the candidate pair set.
+    fold cosine on each candidate pair, result = the top-k of the whole
+    candidate set — computed without ever materializing that set.
 
     Per (band, sig) bucket, ONE task: a BLAS Gram matrix over the
     bucket's vectors prescreens the upper triangle, the exact fold
@@ -728,7 +621,8 @@ def banded_cosine_topk(
     bucket always survives the prescreen.  Cross-bucket duplicates score
     identically (deterministic function of content), so
     distinct-of-local-top-ks -> global top-k equals the full-set answer
-    (the ``cosine_pairs_topk`` containment argument).
+    (the containment argument: no pair of the global top-k can be
+    missing from the local top-k of a bucket that holds it).
 
     Work drops from O(pairs) gather+fold (27M pairs at sf1.0) to one
     small GEMM per bucket plus ~k fold cosines per bucket."""

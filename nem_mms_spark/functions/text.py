@@ -100,11 +100,6 @@ def lang_id_from_tokens(toks: Column) -> Column:
     return lang_id_from_hits(lang_marker_hits(toks))
 
 
-def lang_id(text: Column) -> Column:
-    """N-gram/stopword-marker language guess over LANG_MARKERS."""
-    return lang_id_from_tokens(tokens_col(F.lower(text)))
-
-
 def fingerprint(text: Column) -> Column:
     """Stable content fingerprint (md5 hex — portable across engines)."""
     return F.md5(text.cast("string"))

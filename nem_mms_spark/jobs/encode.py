@@ -225,8 +225,6 @@ def encode_parquet(
         sdf, bins = _bin_file_splits(spark, splits, parallelism)
 
         def encode_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            import resource as _res
-
             import pyarrow as _pa
             import pyarrow.parquet as pq
 
@@ -237,8 +235,6 @@ def encode_parquet(
             _pa.set_cpu_count(1)
             _tune_worker()
             for pid, path in _bin_items(batches, bins):
-                rr0 = _res.getrusage(_res.RUSAGE_SELF)
-                rc0 = time.process_time_ns()
                 tr = time.monotonic_ns()
                 # fetch-then-parse: one big os.read pulls the file
                 # bytes (object-store GET shape), then the parquet
@@ -261,16 +257,12 @@ def encode_parquet(
                 if sort_cols:
                     tbl = _sort_by_unless_sorted(tbl, sort_cols)
                 read_ns = time.monotonic_ns() - tr
-                rr1 = _res.getrusage(_res.RUSAGE_SELF)
                 read_stats = {
                     "read": read_ns,
                     "rfetch": tf - tr,
                     "rparse": ts - tf,
                     # sort sub-stage (the take/gather half of `read`)
                     "rsort": read_ns - (ts - tr),
-                    "c_read_cpu": time.process_time_ns() - rc0,
-                    "c_read_minflt": rr1.ru_minflt - rr0.ru_minflt,
-                    "c_read_nivcsw": rr1.ru_nivcsw - rr0.ru_nivcsw,
                 }
                 yield _encode_partition_table(
                     pid, tbl, block_rows, block_bytes, key_col,
@@ -999,27 +991,18 @@ SUMMARY_SCHEMA = (
     "cpu_slot int"
 )
 
-# per-stage in-task timing keys (stage_ns JSON map): `read` = source
-# scan + sort (source-direct path only), `kernel` = Arrow->numpy framing,
-# `encode` = codec selection + encode proper, `zstats` = zone-map min/max,
-# `build` = blocks/manifest Arrow table construction, `write` = task-side
-# parquet commits, `fprint` = content fingerprint.  Summed per partition
-# and aggregated by checkpoint_totals: the per-stage 8-vs-32 ratio
-# localizes in-job contention to a stage (the round-4 verdict's ask) —
-# wall clocks on this box are weather; summed task-stage seconds are not.
-# Keys prefixed `c_` are raw COUNTERS, not nanoseconds: `c_cpu` =
-# process CPU-ns over the encode body (wall minus cpu = time the task
-# was stalled — faults, involuntary preemption), `c_minflt` /
-# `c_nivcsw` = minor-fault / involuntary-context-switch deltas, and the
-# `c_read_*` twins cover the read phase.  They cost two getrusage calls
-# per partition and turn "which stage contends at 4x concurrency" from
-# a guess into a recorded number.
+# per-stage in-task timing keys (stage_ns JSON map), in nanoseconds:
+# `read` = source scan + sort (source-direct path only; sub-stages
+# `rfetch` file read, `rparse` parquet decode, `rsort` sort), `fprint` =
+# content fingerprint, `kernel` = Arrow->numpy framing, `encode` = codec
+# selection + encode proper, `zstats` = zone-map min/max, `build` =
+# blocks/manifest Arrow table construction, `write` = task-side parquet
+# commits (sub-stages `wser` serialization, `wio` file syscalls).
+# `c_cpu` = process CPU-ns over the encode body (wall minus cpu = time
+# the task was stalled).  Summed per partition by checkpoint_totals.
 STAGE_KEYS = (
     "read", "rfetch", "rparse", "rsort", "fprint", "kernel", "encode",
-    "zstats", "build", "write", "wser", "wio",
-    "c_cpu", "c_minflt", "c_nivcsw",
-    "c_wser_cpu", "c_wser_minflt", "c_wser_nivcsw",
-    "c_read_cpu", "c_read_minflt", "c_read_nivcsw",
+    "zstats", "build", "write", "wser", "wio", "c_cpu",
 )
 
 # parquet column statistics are written for metadata columns only: payload
@@ -1047,13 +1030,9 @@ def _atomic_write(
     `wio` (file syscalls) so contention at high concurrency is
     attributable.  When ``stage`` is given those two keys are summed
     into it."""
-    import resource as _res
-
     import pyarrow.parquet as pq
 
     t0 = time.monotonic_ns()
-    r0 = _res.getrusage(_res.RUSAGE_SELF)
-    c0 = time.process_time_ns()
     sink = pa.BufferOutputStream()
     pq.write_table(
         table, sink, compression="NONE",
@@ -1065,8 +1044,6 @@ def _atomic_write(
         data_page_size=4 << 20,
     )
     buf = sink.getvalue()
-    c1 = time.process_time_ns()
-    r1 = _res.getrusage(_res.RUSAGE_SELF)
     t1 = time.monotonic_ns()
     os.makedirs(os.path.dirname(dest), exist_ok=True)
     tmp = os.path.join(
@@ -1088,13 +1065,6 @@ def _atomic_write(
         t2 = time.monotonic_ns()
         stage["wser"] = stage.get("wser", 0) + (t1 - t0)
         stage["wio"] = stage.get("wio", 0) + (t2 - t1)
-        stage["c_wser_cpu"] = stage.get("c_wser_cpu", 0) + (c1 - c0)
-        stage["c_wser_minflt"] = (
-            stage.get("c_wser_minflt", 0) + r1.ru_minflt - r0.ru_minflt
-        )
-        stage["c_wser_nivcsw"] = (
-            stage.get("c_wser_nivcsw", 0) + r1.ru_nivcsw - r0.ru_nivcsw
-        )
 
 
 def _make_encoder(block_rows, block_bytes, key_col, blocks_dir, manifest_dir):
@@ -1137,15 +1107,12 @@ def _encode_partition_table(
     parquet task-side, and return the one-row summary batch.  Shared by
     the DataFrame encode path (JVM feed) and the source-direct parquet
     path (pyarrow scan inside the task)."""
-    import resource
-
     t0 = time.monotonic_ns()
     stage = dict.fromkeys(STAGE_KEYS, 0)
     if isinstance(read_ns, dict):
         stage.update(read_ns)
     else:
         stage["read"] = read_ns
-    ru0 = resource.getrusage(resource.RUSAGE_SELF)
     cpu0 = time.process_time_ns()
     clk = time.monotonic_ns
     fp = _fingerprint(tbl, key_col)
@@ -1281,10 +1248,7 @@ def _encode_partition_table(
         stage=stage,
     )
     stage["write"] += clk() - tw
-    ru1 = resource.getrusage(resource.RUSAGE_SELF)
     stage["c_cpu"] = time.process_time_ns() - cpu0
-    stage["c_minflt"] = ru1.ru_minflt - ru0.ru_minflt
-    stage["c_nivcsw"] = ru1.ru_nivcsw - ru0.ru_nivcsw
 
     # per-task timeline: CLOCK_MONOTONIC is system-wide on Linux, so the
     # driver can line every partition's [start, end] up on one axis and

@@ -19,8 +19,7 @@ import numpy as np
 
 from nem_mms_spark.codecs import fsst as fsst_mod
 from nem_mms_spark.codecs import registry, worddict
-from nem_mms_spark.codecs.basic import _factorize_bytes
-from nem_mms_spark.codecs.primitives import bit_width, run_ends
+from nem_mms_spark.codecs.primitives import bit_width, factorize_bytes, run_ends
 
 _CARD_SAMPLE = 2048
 _SKIP_EXACT_RATIO = 0.95
@@ -106,11 +105,11 @@ def _sticky_encode(values, dtype: str, ctx: ColumnContext):
         len_bits = bit_width(int(lengths.max())) if n else 0
         plain_est = data_len + (n * len_bits + 7) // 8
         if codec in (registry.DICT, registry.RLE):
-            codes, uniq = _factorize_bytes(data, offsets)
+            codes, uniq = factorize_bytes(data, offsets)
             kw = {"codes": codes, "uniq": uniq} if codec == registry.DICT else {"codes": codes}
         elif codec == registry.WORD_DICT:
             tok = worddict.tokenize(data, offsets)
-            wcodes, wuniq = worddict.factorize_tokens(data, tok)
+            wcodes, wuniq = factorize_bytes(data, tok)
             kw = {"token_offsets": tok, "codes": wcodes, "uniq": wuniq}
         elif codec == registry.FSST:
             if ctx.fsst_table is None or ctx.fsst_failed:
@@ -231,7 +230,7 @@ def _select_bytes(values, ctx: ColumnContext):
     else:
         near_unique = False
     if not near_unique:
-        codes, uniq = _factorize_bytes(data, offsets)
+        codes, uniq = factorize_bytes(data, offsets)
         udata, uoffsets = uniq
         card = len(uoffsets) - 1
         code_bits = bit_width(max(card - 1, 0))
@@ -257,7 +256,7 @@ def _select_bytes(values, ctx: ColumnContext):
     wd_kw = {}
     if data_len // max(n, 1) >= 16:
         tok = worddict.tokenize(data, offsets)
-        wcodes, wuniq = worddict.factorize_tokens(data, tok)
+        wcodes, wuniq = factorize_bytes(data, tok)
         card_w = len(wuniq[1]) - 1
         ulen_w = int(wuniq[1][-1])
         cw = bit_width(max(card_w - 1, 0))

@@ -9,7 +9,7 @@ import numpy as np
 import pytest
 from hypothesis import given, settings, strategies as st
 
-from nem_mms_spark.codecs import registry
+from nem_mms_spark.codecs import native, registry
 from nem_mms_spark.codecs import fsst as fsst_mod
 from nem_mms_spark.codecs.primitives import pack_uints, unpack_uints
 
@@ -170,3 +170,66 @@ def test_delta_beats_for_on_sorted_timestamps():
     p_for, _ = registry.encode_block(ts, "<i8", "FOR_BITPACK")
     p_delta, _ = registry.encode_block(ts, "<i8", "DELTA_FOR_BITPACK")
     assert len(p_delta) < len(p_for) / 4
+
+
+# ------------------------------------------------------ truncated payloads
+
+
+def _truncation_values():
+    rng = np.random.default_rng(7)
+    ints = np.repeat(rng.integers(0, 1 << 40, 300), 4)
+    ints[::97] = rng.integers(1 << 50, 1 << 52, len(ints[::97]))
+    floats = np.round(rng.uniform(0, 1000, 1200), 2)
+    floats[::101] = np.pi
+    words = [b"alpha ", b"beta ", b"gamma delta ", b"", b"\x00zeta"]
+    strings = [
+        b"https://host%d.example/" % (i % 13) + words[i % 5] * (i % 4)
+        for i in range(1200)
+    ]
+    return {"<i8": ints, "<f8": floats, "bytes": to_chunk(strings)}
+
+
+_TRUNCATION_VALUES = _truncation_values()
+# plain FOR bit-packs still zero-pad a short payload (basic._unpack_zero_padded)
+_ZERO_PADDED = ("FOR_BITPACK", "DELTA_FOR_BITPACK")
+
+
+@pytest.mark.parametrize("kernels", ["native", "numpy"])
+@pytest.mark.parametrize(
+    "dtype,codec",
+    [
+        (d, c)
+        for d in ("<i8", "<f8", "bytes")
+        for c in registry.candidate_codecs(d)
+        if c not in _ZERO_PADDED
+    ],
+)
+def test_truncated_payload_raises(dtype, codec, kernels, monkeypatch):
+    """Decoders are length-strict: half a payload is a ValueError on both
+    kernel paths, never a silently wrong column."""
+    if kernels == "numpy":
+        monkeypatch.setattr(native, "lib", None)
+    values = _TRUNCATION_VALUES[dtype]
+    count = len(values[1]) - 1 if dtype == "bytes" else len(values)
+    payload, params = registry.encode_block(values, dtype, codec)
+    assert len(payload) >= 2
+    with pytest.raises(ValueError):
+        registry.decode_block(
+            payload[: len(payload) // 2], params, count, dtype, codec
+        )
+
+
+@pytest.mark.parametrize("damage", ["escape_at_end", "code_beyond_table"])
+def test_fsst_corrupt_stream_raises(damage):
+    """A same-length FSST payload whose last byte is an escape marker, or a
+    code the symbol table does not have, is a ValueError."""
+    strings = _TRUNCATION_VALUES["bytes"]
+    count = len(strings[1]) - 1
+    payload, params = registry.encode_block(strings, "bytes", "FSST")
+    nsym = len(fsst_mod._parse_symbols(payload[: params["hlen"]]))
+    # a non-zero second-to-last byte means the last byte starts a token
+    assert payload[-2] != 0 and nsym < 255
+    bad = bytearray(payload)
+    bad[-1] = 0 if damage == "escape_at_end" else nsym + 1
+    with pytest.raises(ValueError):
+        registry.decode_block(bytes(bad), params, count, "bytes", "FSST")

@@ -196,12 +196,102 @@ def test_banded_pairs_distinct_false_same_set(spark):
     assert len(raw) >= len(dist)
 
 
+def cosine_pairs_topk(
+    embeddings, pairs, k: int = 20, id_col: str = "vec_id",
+    vec_col: str = "embedding",
+):
+    """Unfused oracle for ``banded_cosine_topk``: exact fold-cosine on a
+    (vec_a, vec_b) candidate set -> top-k.  The vector table is gathered
+    once driver-side and broadcast as a packed matrix + fold-norms; each
+    task deduplicates its pairs, scores them and keeps its local top-k
+    under the total order (cosine desc, vec_a, vec_b).  Cross-task
+    duplicates score identically, so distinct-of-local-top-ks followed by
+    the global top-k returns exactly the full-set top-k, and pairs may
+    arrive with multiplicity (once per colliding band)."""
+    import pyarrow as pa
+
+    ids, mat, norms = S._gather_vectors(embeddings, id_col, vec_col)
+    bc = embeddings.sparkSession.sparkContext.broadcast((ids, mat, norms))
+
+    def topk_stream(batches):
+        g_ids, g_mat, g_norms = bc.value
+        acc_a: list[np.ndarray] = []
+        acc_b: list[np.ndarray] = []
+        acc_c: list[np.ndarray] = []
+
+        def dedup(a, b, c):
+            # first occurrence per (a, b); duplicates carry identical c
+            order = np.lexsort((b, a))
+            a, b, c = a[order], b[order], c[order]
+            first = np.empty(len(a), dtype=bool)
+            first[0] = True
+            np.logical_or(
+                a[1:] != a[:-1], b[1:] != b[:-1], out=first[1:]
+            )
+            return a[first], b[first], c[first]
+
+        def topk(a, b, c):
+            order = np.lexsort((b, a, -c))[:k]
+            return a[order], b[order], c[order]
+
+        for batch in batches:
+            a = batch.column("vec_a").to_numpy(zero_copy_only=False)
+            b = batch.column("vec_b").to_numpy(zero_copy_only=False)
+            if len(a) == 0:
+                continue
+            # in-batch dedup (keeps the local-top-k containment argument
+            # exact when pairs arrive once per colliding band)
+            order = np.lexsort((b, a))
+            a, b = a[order], b[order]
+            first = np.empty(len(a), dtype=bool)
+            first[0] = True
+            np.logical_or(a[1:] != a[:-1], b[1:] != b[:-1], out=first[1:])
+            a, b = a[first], b[first]
+            ia = np.searchsorted(g_ids, a)
+            ib = np.searchsorted(g_ids, b)
+            ma = np.ascontiguousarray(g_mat[ia])
+            mb = np.ascontiguousarray(g_mat[ib])
+            dot = S._fold_pair_dots(ma, mb)
+            cos = dot / (g_norms[ia] * g_norms[ib])
+            ta, tb, tc = topk(a, b, cos)
+            acc_a.append(ta)
+            acc_b.append(tb)
+            acc_c.append(tc)
+        if acc_a:
+            a = np.concatenate(acc_a)
+            b = np.concatenate(acc_b)
+            c = np.concatenate(acc_c)
+            # the same pair can reach this task in TWO batches (one per
+            # colliding band): dedup before the merged top-k, or
+            # duplicate rows crowd distinct pairs out of the k slots
+            a, b, c = dedup(a, b, c)
+            a, b, c = topk(a, b, c)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(a, type=pa.int64()),
+                    pa.array(b, type=pa.int64()),
+                    pa.array(c, type=pa.float64()),
+                ],
+                names=["vec_a", "vec_b", "_cos"],
+            )
+
+    local = pairs.select("vec_a", "vec_b").mapInArrow(
+        topk_stream, "vec_a long, vec_b long, _cos double"
+    )
+    return (
+        local.distinct()
+        .orderBy(F.desc("_cos"), "vec_a", "vec_b")
+        .limit(k)
+        .select("vec_a", "vec_b", F.round("_cos", 4).alias("cosine"))
+    )
+
+
 def test_banded_cosine_topk_matches_unfused_path(spark):
     """The fused bucket-Gram top-k (BLAS prescreen + fold-exact rescore)
     must return exactly what candidate-set + cosine_pairs_topk does."""
     emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
     cand = S.banded_candidate_pairs(emb, seed=11)
-    want = [tuple(r) for r in S.cosine_pairs_topk(emb, cand, k=20).collect()]
+    want = [tuple(r) for r in cosine_pairs_topk(emb, cand, k=20).collect()]
     got = [
         tuple(r)
         for r in S.banded_cosine_topk(emb, k=20, seed=11).collect()
@@ -218,7 +308,7 @@ def test_banded_cosine_topk_respects_bucket_cap(spark, clustered_embeddings):
     )
     want = [
         tuple(r)
-        for r in S.cosine_pairs_topk(
+        for r in cosine_pairs_topk(
             clustered_embeddings, cand, k=10
         ).collect()
     ]
@@ -268,8 +358,8 @@ def test_cosine_pairs_topk_handles_duplicate_pairs(spark):
     emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
     dist = S.banded_candidate_pairs(emb, seed=11)
     raw = S.banded_candidate_pairs(emb, seed=11, distinct=False)
-    a = [tuple(r) for r in S.cosine_pairs_topk(emb, dist, k=20).collect()]
-    b = [tuple(r) for r in S.cosine_pairs_topk(emb, raw, k=20).collect()]
+    a = [tuple(r) for r in cosine_pairs_topk(emb, dist, k=20).collect()]
+    b = [tuple(r) for r in cosine_pairs_topk(emb, raw, k=20).collect()]
     assert a == b
     assert len(a) > 0
 
