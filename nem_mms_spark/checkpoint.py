@@ -145,9 +145,10 @@ def checkpoint_totals(out_dir: str) -> dict:
             for k, v in _json.loads(s).items():
                 stage_s[k] = stage_s.get(k, 0.0) + v
         # `c_cpu` is kept whole in ns for stall arithmetic; everything
-        # else converts to sec
+        # else converts to sec, at µs resolution so a sub-ms stage such
+        # as a small file's fetch does not read as zero
         stage_s = {
-            k: (int(v) if k.startswith("c_") else round(v / 1e9, 3))
+            k: (int(v) if k.startswith("c_") else round(v / 1e9, 6))
             for k, v in stage_s.items()
         }
     return {

@@ -227,6 +227,38 @@ def binary_buffers(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
     return data, offsets
 
 
+def binary_views(arr: pa.Array):
+    """Zero-copy element accessor for a [large_]binary/string array: j ->
+    memoryview over the shared data buffer (None for null elements)."""
+    bufs = arr.buffers()
+    wide = pa.types.is_large_binary(arr.type) or pa.types.is_large_string(
+        arr.type
+    )
+    offs = np.frombuffer(bufs[1], dtype=np.int64 if wide else np.int32)[
+        arr.offset : arr.offset + len(arr) + 1
+    ]
+    # cast to unsigned bytes: pa.Buffer exports format 'b' (signed), under
+    # which mv[i] yields NEGATIVE ints for bytes >= 0x80 — silently
+    # corrupting any decoder that indexes header bytes (FSST's symbol
+    # lengths).  'B' restores bytes-like indexing semantics.
+    data = (
+        memoryview(bufs[2]).cast("B")
+        if bufs[2] is not None
+        else memoryview(b"")
+    )
+    if arr.null_count:
+        valid = arr.is_valid().to_numpy(zero_copy_only=False)
+    else:
+        valid = None
+
+    def get(j: int):
+        if valid is not None and not valid[j]:
+            return None
+        return data[offs[j] : offs[j + 1]]
+
+    return get
+
+
 def factorize_bytes(
     data: np.ndarray, offsets: np.ndarray
 ) -> tuple[np.ndarray, tuple[np.ndarray, np.ndarray]]:

@@ -91,15 +91,6 @@ def lang_id_from_hits(hits: dict[str, Column]) -> Column:
     return expr
 
 
-def lang_id_from_tokens(toks: Column) -> Column:
-    """N-gram/stopword-marker language guess over LANG_MARKERS, taking an
-    already-tokenized (lowercased) array.  Callers that materialize the
-    token array once per row (a named projection column) pay the regex
-    split a single time instead of once per language's marker filter —
-    the r7 CSE restructure; the decision expression is unchanged."""
-    return lang_id_from_hits(lang_marker_hits(toks))
-
-
 def fingerprint(text: Column) -> Column:
     """Stable content fingerprint (md5 hex — portable across engines)."""
     return F.md5(text.cast("string"))

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from nem_mms_spark import framing
 from nem_mms_spark import manifest as M
 from nem_mms_spark.codecs import decode_block
+from nem_mms_spark.codecs.primitives import binary_views
 
 
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -64,41 +65,6 @@ def _committed_parts(out_dir: str) -> list[int]:
             if st == "done"
         }
     )
-
-
-def _bin_views(arr):
-    """Zero-copy element accessor for a pa.[large_]binary array: j ->
-    memoryview over the shared data buffer (None for null elements)."""
-    import numpy as np
-    import pyarrow as pa
-
-    bufs = arr.buffers()
-    wide = pa.types.is_large_binary(arr.type) or pa.types.is_large_string(
-        arr.type
-    )
-    offs = np.frombuffer(bufs[1], dtype=np.int64 if wide else np.int32)[
-        arr.offset : arr.offset + len(arr) + 1
-    ]
-    # cast to unsigned bytes: pa.Buffer exports format 'b' (signed), under
-    # which mv[i] yields NEGATIVE ints for bytes >= 0x80 — silently
-    # corrupting any decoder that indexes header bytes (FSST's symbol
-    # lengths).  'B' restores bytes-like indexing semantics.
-    data = (
-        memoryview(bufs[2]).cast("B")
-        if bufs[2] is not None
-        else memoryview(b"")
-    )
-    if arr.null_count:
-        valid = arr.is_valid().to_numpy(zero_copy_only=False)
-    else:
-        valid = None
-
-    def get(j: int):
-        if valid is not None and not valid[j]:
-            return None
-        return data[offs[j] : offs[j + 1]]
-
-    return get
 
 
 def decode_blocks(
@@ -152,11 +118,11 @@ def decode_blocks(
     """
     import numpy as np
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     from nem_mms_spark.jobs.encode import (
         _bin_file_splits,
         _bin_items,
+        _read_split,
         _tune_worker,
     )
 
@@ -255,10 +221,7 @@ def decode_blocks(
             allowed = (
                 allowed_map.get(key) if allowed_map is not None else None
             )
-            with open(path, "rb", buffering=0) as fh:
-                raw = fh.read()
-            tbl = pq.read_table(pa.BufferReader(raw), columns=read_cols)
-            del raw
+            tbl = _read_split(path, read_cols)
             if columns is not None:
                 import pyarrow.compute as pc
 
@@ -274,8 +237,8 @@ def decode_blocks(
             params = tbl.column("params").to_numpy(zero_copy_only=False)
             vcs = tbl.column("value_count").to_numpy(zero_copy_only=False)
             ncs = tbl.column("null_count").to_numpy(zero_copy_only=False)
-            pay = _bin_views(tbl.column("payload").combine_chunks())
-            val = _bin_views(tbl.column("validity").combine_chunks())
+            pay = binary_views(tbl.column("payload").combine_chunks())
+            val = binary_views(tbl.column("validity").combine_chunks())
             bounds = np.concatenate(
                 [[0], np.flatnonzero(bids[1:] != bids[:-1]) + 1,
                  [len(bids)]]

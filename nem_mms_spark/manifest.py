@@ -1,4 +1,4 @@
-"""Encoded-block / manifest / checkpoint table schemas + type mapping.
+"""Encode output layout (dir names) + logical type mapping.
 
 Layout under an encode output directory (plain parquet standing in for the
 Iceberg tables `encoded_blocks` / `manifest` / `checkpoint` — catalog I/O is
@@ -6,7 +6,10 @@ isolated here so an Iceberg catalog can be swapped in; SURVEY.md §7 design
 stance):
 
   blocks/     one row per (partition, column, block): codec id, payload,
-              validity bitmap, counts, byte sizes  (SURVEY.md §1.4)
+              validity bitmap, counts, byte sizes  (SURVEY.md §1.4), and
+              the block's zone map: exact int64 bounds for integer-kind
+              columns in zmin_i/zmax_i, exact double bounds for floats in
+              zmin_d/zmax_d, all NULL (cannot skip) when stats don't apply
   manifest/   one row per (partition, column): codec histogram + params
               summary — the decode-side registry (reference ancestor:
               Package::schema() lookup, /root/reference/src/packages/mod.rs:102-112)
@@ -21,30 +24,6 @@ from __future__ import annotations
 BLOCKS_DIR = "blocks"
 MANIFEST_DIR = "manifest"
 CHECKPOINT_DIR = "checkpoint"
-
-# zmin/zmax are the block's zone map (data-skipping stats): exact int64
-# bounds for integer-kind columns (incl. timestamps as epoch micros) in
-# zmin_i/zmax_i, exact double bounds for float columns in zmin_d/zmax_d;
-# all four NULL when stats don't apply (bytes columns, all-null or
-# NaN-containing blocks) — a NULL zone map means "cannot skip".
-BLOCK_SCHEMA = (
-    "part_id int, block_id int, col_idx int, column string, "
-    "logical_type string, codec string, params string, payload binary, "
-    "validity binary, value_count long, null_count long, raw_bytes long, "
-    "encoded_bytes long, encode_ns long, fingerprint long, "
-    "zmin_i long, zmax_i long, zmin_d double, zmax_d double"
-)
-
-MANIFEST_SCHEMA = (
-    "part_id int, col_idx int, column string, logical_type string, "
-    "n_blocks long, n_values long, null_count long, raw_bytes long, "
-    "encoded_bytes long, codecs string"
-)
-
-CHECKPOINT_SCHEMA = (
-    "part_id int, status string, n_rows long, n_blocks long, n_columns int, "
-    "raw_bytes long, encoded_bytes long, fingerprint long, encode_ns long"
-)
 
 # arrow logical type string -> Spark DDL type (decode output schema)
 _ARROW_TO_SPARK = {

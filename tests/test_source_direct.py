@@ -74,7 +74,9 @@ def test_mode_mismatch_with_dataframe_path_raises(spark, src, tmp_path):
 
 def test_deterministic_blocks_across_runs(spark, src, tmp_path):
     """Payloads/params/codecs are a pure function of input content —
-    only the encode_ns timing lineage may differ between runs."""
+    only the encode_ns timing lineage may differ between runs.  A salted
+    run whose hot plan is empty is the same kernel over the same splits,
+    so it writes the same blocks as source-direct."""
     import pyarrow.dataset as ds
 
     def content(root):
@@ -85,11 +87,16 @@ def test_deterministic_blocks_across_runs(spark, src, tmp_path):
 
     out1 = str(tmp_path / "e1")
     out2 = str(tmp_path / "e2")
+    out3 = str(tmp_path / "e3")
     encode_parquet(spark, src, out1, resume=False)
     encode_parquet(spark, src, out2, resume=False)
-    assert content(os.path.join(out1, "blocks")).equals(
-        content(os.path.join(out2, "blocks"))
-    )
+    m3 = encode_parquet(spark, src, out3, resume=False,
+                        partitioning="salted", min_hot_rows=10**9)
+    assert m3["hot_parts"] == 0
+    for other in (out2, out3):
+        assert content(os.path.join(out1, "blocks")).equals(
+            content(os.path.join(other, "blocks"))
+        )
 
 
 def test_salted_direct_roundtrip_and_skew_routing(spark, src, tmp_path):
@@ -106,6 +113,9 @@ def test_salted_direct_roundtrip_and_skew_routing(spark, src, tmp_path):
     assert m["rows"] == N
     # the Zipfian fixture has hot hosts above N/5 rows -> a real hot set
     assert m["hot_keys"] >= 1 and m["hot_parts"] >= m["hot_keys"]
+    # both passes time their split reads like source-direct does
+    assert m["task_stage_s"]["rfetch"] > 0
+    assert m["task_stage_s"]["rparse"] > 0
     # negative (hot) part dirs exist on disk
     hot_dirs = [
         d for d in os.listdir(os.path.join(out, "blocks"))
