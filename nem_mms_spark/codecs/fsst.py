@@ -7,8 +7,9 @@ sample via iterative most-frequent-adjacent-pair merging (re-pair style,
 which keeps both training and encoding fully vectorizable in numpy — no
 per-row Python, per the engine mandate), rather than FSST's suffix-oriented
 construction; the on-disk format and decode side match the FSST contract:
-decode needs only the code->symbol table.  The trainer is numpy; the
-greedy matcher is a C kernel with a numpy twin (the no-compiler fallback);
+decode needs only the code->symbol table.  The trainer's merge loop and
+the greedy matcher are C kernels (``nem_fsst_repair``, ``nem_fsst_encode``)
+with numpy twins (the no-compiler fallback and the source of truth);
 decode is one Arrow ``take`` from a 512-entry symbol dictionary.
 
 Reference ancestor: the reference delegates all string encoding to parquet
@@ -37,51 +38,27 @@ MAX_SYMBOL_LEN = 8
 MAX_CODES = 255  # code 0 is the escape marker
 DEFAULT_MAX_MERGES = 255
 _MAX_TRAIN_BYTES = 64 << 10
+_MERGE_BATCH = 8  # token-disjoint merges per re-pair counting pass
 
 
 class FsstTable:
     """Trained encoder state: the code table (code 1..255 -> symbol bytes)
-    plus a 2-byte-prefix-indexed candidate-slot table for O(K) vectorized
-    longest-match (K = max symbols sharing a 2-byte prefix, typically 2-4;
-    binary search over packed windows is random-access-bound, the slot
-    gather is linear)."""
+    plus the 1-byte direct lookup ``code1``.  The matchers' 2-byte-prefix
+    indexes are built on first use: ``_table_csr`` for the native matcher,
+    ``_table_slots`` for the numpy one."""
 
-    __slots__ = ("symbol_bytes", "code1", "slot_val", "slot_msk",
-                 "slot_len", "slot_code", "slot_cnt", "n_slots", "csr")
+    __slots__ = ("symbol_bytes", "code1", "csr", "slots")
 
     def __init__(self, symbol_bytes: list[bytes]):
         # symbol_bytes[i] is the symbol for code i+1
         self.symbol_bytes = symbol_bytes
-        self.csr = None  # lazy 2-byte-prefix CSR for the native matcher
+        self.csr = None
+        self.slots = None
         # direct lookup for 1-byte symbols: byte -> code (0 = none)
         self.code1 = np.zeros(256, dtype=np.int32)
-        groups: dict[int, list[int]] = {}
         for i, s in enumerate(symbol_bytes):
             if len(s) == 1:
                 self.code1[s[0]] = i + 1
-            elif len(s) >= 2:
-                groups.setdefault(s[0] | (s[1] << 8), []).append(i)
-        k = max((len(v) for v in groups.values()), default=0)
-        self.n_slots = k
-        # sentinel: mask 0 with val 1 never matches (w & 0 == 1 is false)
-        self.slot_val = np.full((k, 65536), 1, dtype=np.uint64)
-        self.slot_msk = np.zeros((k, 65536), dtype=np.uint64)
-        self.slot_len = np.zeros((k, 65536), dtype=np.int32)
-        self.slot_code = np.zeros((k, 65536), dtype=np.int32)
-        self.slot_cnt = np.zeros(65536, dtype=np.int32)
-        for pfx, idxs in groups.items():
-            self.slot_cnt[pfx] = len(idxs)
-            for s_i, i in enumerate(idxs):
-                sym = symbol_bytes[i]
-                ln = len(sym)
-                self.slot_val[s_i, pfx] = np.uint64(
-                    int.from_bytes(sym, "little")
-                )
-                self.slot_msk[s_i, pfx] = np.uint64(
-                    (1 << (8 * ln)) - 1 if ln < 8 else 0xFFFFFFFFFFFFFFFF
-                )
-                self.slot_len[s_i, pfx] = ln
-                self.slot_code[s_i, pfx] = i + 1
 
     def serialized_symbols(self) -> bytes:
         """Decode-side table: for codes 1..n in order, len byte + bytes."""
@@ -92,15 +69,58 @@ class FsstTable:
         return bytes(out)
 
 
+def _prefix_groups(table: FsstTable) -> dict[int, list[int]]:
+    """2-byte little-endian prefix -> indexes of the multi-byte symbols
+    that start with it, in symbol-index order."""
+    groups: dict[int, list[int]] = {}
+    for i, s in enumerate(table.symbol_bytes):
+        if len(s) >= 2:
+            groups.setdefault(s[0] | (s[1] << 8), []).append(i)
+    return groups
+
+
+def _window(sym: bytes) -> tuple[np.uint64, np.uint64]:
+    """A symbol as a little-endian uint64 window value and its byte mask."""
+    ln = len(sym)
+    return (
+        np.uint64(int.from_bytes(sym, "little")),
+        np.uint64((1 << (8 * ln)) - 1 if ln < 8 else 0xFFFFFFFFFFFFFFFF),
+    )
+
+
+def _table_slots(table: FsstTable):
+    """Prefix-indexed slot tables for the numpy matcher: slot s of prefix
+    p holds the s-th symbol starting with p, so a longest match is O(K)
+    gathers (K = max symbols sharing a prefix, typically 2-4; binary
+    search over packed windows is random-access-bound, the slot gather is
+    linear).  Returns (n_slots, slot_cnt, slot_val, slot_msk, slot_len,
+    slot_code)."""
+    if table.slots is None:
+        groups = _prefix_groups(table)
+        k = max((len(v) for v in groups.values()), default=0)
+        # sentinel: mask 0 with val 1 never matches (w & 0 == 1 is false)
+        slot_val = np.full((k, 65536), 1, dtype=np.uint64)
+        slot_msk = np.zeros((k, 65536), dtype=np.uint64)
+        slot_len = np.zeros((k, 65536), dtype=np.int32)
+        slot_code = np.zeros((k, 65536), dtype=np.int32)
+        slot_cnt = np.zeros(65536, dtype=np.int32)
+        for pfx, idxs in groups.items():
+            slot_cnt[pfx] = len(idxs)
+            for s_i, i in enumerate(idxs):
+                sym = table.symbol_bytes[i]
+                slot_val[s_i, pfx], slot_msk[s_i, pfx] = _window(sym)
+                slot_len[s_i, pfx] = len(sym)
+                slot_code[s_i, pfx] = i + 1
+        table.slots = (k, slot_cnt, slot_val, slot_msk, slot_len, slot_code)
+    return table.slots
+
+
 def _table_csr(table: FsstTable):
     """2-byte-prefix CSR over the multi-byte symbols for the native
     matcher: entries in symbol-index order per prefix (== the numpy slot
     order), so the strictly-longer tie-break picks the same code."""
     if table.csr is None:
-        groups: dict[int, list[int]] = {}
-        for i, s in enumerate(table.symbol_bytes):
-            if len(s) >= 2:
-                groups.setdefault(s[0] | (s[1] << 8), []).append(i)
+        groups = _prefix_groups(table)
         n_ent = sum(len(v) for v in groups.values())
         bstart = np.zeros(65537, dtype=np.int32)
         bval = np.empty(n_ent, dtype=np.uint64)
@@ -115,12 +135,8 @@ def _table_csr(table: FsstTable):
             p = pos[pfx]
             for i in idxs:
                 sym = table.symbol_bytes[i]
-                ln = len(sym)
-                bval[p] = np.uint64(int.from_bytes(sym, "little"))
-                bmsk[p] = np.uint64(
-                    (1 << (8 * ln)) - 1 if ln < 8 else 0xFFFFFFFFFFFFFFFF
-                )
-                blen[p] = ln
+                bval[p], bmsk[p] = _window(sym)
+                blen[p] = len(sym)
                 bcode[p] = i + 1
                 p += 1
         table.csr = (
@@ -145,31 +161,22 @@ def _tokenize(data: np.ndarray, offsets: np.ndarray) -> np.ndarray:
     return tokens
 
 
-def train(
-    data: np.ndarray,
-    offsets: np.ndarray,
-    max_merges: int = DEFAULT_MAX_MERGES,
-    max_train_bytes: int = _MAX_TRAIN_BYTES,
-) -> FsstTable:
-    """Build a symbol table from (a prefix sample of) the chunk."""
-    n = len(offsets) - 1
-    if n and offsets[-1] - offsets[0] > max_train_bytes:
-        cut = int(np.searchsorted(offsets, offsets[0] + max_train_bytes))
-        cut = max(cut, 1)
-        offsets = offsets[: cut + 1]
-    tokens = _tokenize(data, offsets)
+def _repair_numpy(
+    tokens: np.ndarray, sym_len: np.ndarray, max_merges: int, min_count: int
+) -> tuple[np.ndarray, list[tuple[int, int, int]]]:
+    """Batched re-pair over a ``_tokenize``d sample: each counting pass
+    merges up to ``_MERGE_BATCH`` token-disjoint pairs from the top
+    ``4 * _MERGE_BATCH`` by (count desc, a asc, b asc).  Disjointness makes
+    the batch exact — a match of one pair can never overlap or invalidate
+    a match of another (an overlap would require a shared token) — so one
+    pass does the work of up to B sequential merge rounds at 1/B the
+    count+scan memory traffic.  Fills ``sym_len`` for the new ids and
+    returns the rewritten tokens and the rules (a, b, new_id) in merge
+    order.  The numpy twin of ``nem_fsst_repair`` and its source of
+    truth."""
+    batch = _MERGE_BATCH
     rules: list[tuple[int, int, int]] = []
-    symbols: dict[int, bytes] = {}
-    sym_len = np.ones(256 + max_merges, dtype=np.int64)
     next_id = 256
-    min_count = max(4, len(tokens) // 8192)
-    # batched re-pair: each counting pass applies the top-B pairs whose
-    # token alphabets are pairwise disjoint.  Disjointness makes the batch
-    # exact — a match of one pair can never overlap or invalidate a match
-    # of another (an overlap would require a shared token) — so one pass
-    # does the work of up to B sequential merge rounds at 1/B the
-    # count+scan memory traffic.
-    batch = 8
     while next_id < 256 + max_merges:
         if len(tokens) < 2:
             break
@@ -185,10 +192,10 @@ def train(
         nz = np.flatnonzero(counts >= min_count)
         if len(nz) == 0:
             break
-        if len(nz) > 4 * batch:
-            nz = nz[np.argpartition(-counts[nz], 4 * batch)[: 4 * batch]]
-        # deterministic order: count desc, key asc
-        nz = nz[np.lexsort((nz, -counts[nz]))]
+        # a total order (count desc, key asc; key order is (a, b) order),
+        # so the tied keys kept at the cut do not depend on a selection
+        # algorithm
+        nz = nz[np.lexsort((nz, -counts[nz]))][: 4 * batch]
         used: set[int] = set()
         picked: list[tuple[int, int]] = []
         for key in nz:
@@ -214,10 +221,7 @@ def train(
                 idx = idx[((idx - starts) % 2) == 0]
             if len(idx) == 0:
                 continue
-            sa = symbols.get(a, bytes([a]) if a < 256 else b"")
-            sb = symbols.get(b, bytes([b]) if b < 256 else b"")
-            symbols[next_id] = sa + sb
-            sym_len[next_id] = len(sa) + len(sb)
+            sym_len[next_id] = sym_len[a] + sym_len[b]
             rules.append((a, b, next_id))
             matches.append((idx, next_id))
             next_id += 1
@@ -228,16 +232,51 @@ def train(
             tokens[idx] = nid
             keep[idx + 1] = False
         tokens = tokens[keep]
+    return tokens, rules
+
+
+def _repair_native(
+    tokens: np.ndarray, sym_len: np.ndarray, max_merges: int, min_count: int
+) -> tuple[np.ndarray, list[tuple[int, int, int]]]:
+    """``_repair_numpy`` as one C call; rewrites ``tokens`` in place."""
+    k = 256 + max_merges
+    counts = np.zeros(k * k, dtype=np.int32)
+    touched = np.empty(max(len(tokens), 1), dtype=np.int32)
+    rules = np.empty((max_merges, 3), dtype=np.int32)
+    n_rules = np.zeros(1, dtype=np.int64)
+    n = native.lib.nem_fsst_repair(
+        tokens, len(tokens), sym_len, max_merges, min_count, _MERGE_BATCH,
+        counts, touched, rules, n_rules,
+    )
+    return tokens[:n], [tuple(r) for r in rules[: n_rules[0]].tolist()]
+
+
+def train(
+    data: np.ndarray,
+    offsets: np.ndarray,
+    max_merges: int = DEFAULT_MAX_MERGES,
+    max_train_bytes: int = _MAX_TRAIN_BYTES,
+) -> FsstTable:
+    """Build a symbol table from (a prefix sample of) the chunk."""
+    n = len(offsets) - 1
+    if n and offsets[-1] - offsets[0] > max_train_bytes:
+        cut = int(np.searchsorted(offsets, offsets[0] + max_train_bytes))
+        cut = max(cut, 1)
+        offsets = offsets[: cut + 1]
+    tokens = _tokenize(data, offsets)
+    sym_len = np.ones(256 + max_merges, dtype=np.int64)
+    min_count = max(4, len(tokens) // 8192)
+    repair = _repair_native if native.lib is not None else _repair_numpy
+    tokens, rules = repair(tokens, sym_len, max_merges, min_count)
+    symbols = {t: bytes([t]) for t in range(256)}
+    for a, b, nid in rules:
+        symbols[nid] = symbols[a] + symbols[b]
 
     # assign the 255 output codes by estimated gain on the trained sample
     ids, counts = np.unique(tokens[tokens >= 0], return_counts=True)
     gains = counts * (2 * sym_len[ids] - 1)
     order = np.argsort(-gains, kind="stable")
-    chosen = ids[order][:MAX_CODES]
-    symbol_bytes = [
-        symbols[int(t)] if t >= 256 else bytes([int(t)]) for t in chosen
-    ]
-    return FsstTable(symbol_bytes)
+    return FsstTable([symbols[int(t)] for t in ids[order][:MAX_CODES]])
 
 
 def encode(
@@ -285,11 +324,14 @@ def encode(
         visited = np.zeros(nb, dtype=bool)
         frontier = offsets[:-1][lengths > 0].astype(np.int64)
         ends = offsets[1:][lengths > 0].astype(np.int64)
+        n_slots, slot_cnt, slot_val, slot_msk, slot_len, slot_code = (
+            _table_slots(table)
+        )
         while len(frontier):
             visited[frontier] = True
             ml = np.ones(len(frontier), dtype=np.int32)
             mc = table.code1[dpad[frontier]].astype(np.int32)
-            if table.n_slots:
+            if n_slots:
                 # windows/prefixes gathered lazily at the ~n frontier
                 # positions only: a dense precompute would stream 8x the
                 # chunk bytes through uint64 temporaries — O(bytes)
@@ -303,23 +345,23 @@ def encode(
                     w |= dpad[frontier + k].astype(np.uint64) << np.uint64(8 * k)
                 room = (ends - frontier).astype(np.int32)
                 sel = None  # positions still worth checking in deeper slots
-                for s in range(table.n_slots):
+                for s in range(n_slots):
                     if s and sel is None:
-                        more = table.slot_cnt[pfx] > s
+                        more = slot_cnt[pfx] > s
                         if not more.any():
                             break
                         sel = np.flatnonzero(more)
                         pfx, w, room = pfx[sel], w[sel], room[sel]
                     elif s and sel is not None:
-                        more = table.slot_cnt[pfx] > s
+                        more = slot_cnt[pfx] > s
                         if not more.any():
                             break
                         sel, pfx, w, room = (
                             sel[more], pfx[more], w[more], room[more],
                         )
-                    v = table.slot_val[s][pfx]
-                    m = table.slot_msk[s][pfx]
-                    ln = table.slot_len[s][pfx]
+                    v = slot_val[s][pfx]
+                    m = slot_msk[s][pfx]
+                    ln = slot_len[s][pfx]
                     cur_ml = ml if sel is None else ml[sel]
                     better = ((w & m) == v) & (ln > cur_ml) & (ln <= room)
                     tgt = (
@@ -328,7 +370,7 @@ def encode(
                         else sel[better]
                     )
                     ml[tgt] = ln[better]
-                    mc[tgt] = table.slot_code[s][pfx[better]]
+                    mc[tgt] = slot_code[s][pfx[better]]
             match_len[frontier] = ml
             match_code[frontier] = mc
             frontier = frontier + ml

@@ -4,9 +4,11 @@ The C twins of the numpy hot loops are compiled ONCE per boot into a
 content-hashed shared object under /dev/shm (tmpfs; falls back to the
 system temp dir) and loaded with ctypes.  Every caller treats ``lib``
 being None as "use the numpy path" — a missing compiler, a failed
-compile, or an unreadable cache directory silently degrades to the
-pure-numpy implementation, which remains the source of truth for
-correctness (tests pin byte-identical outputs between the two).
+compile, or an unreadable cache directory degrades to the pure-numpy
+implementation, which remains the source of truth for correctness (tests
+pin byte-identical outputs between the two).  ``error`` then holds the
+last reason the build or load failed (the gcc stderr tail or the
+exception text); it is None when ``lib`` loaded.
 
 Concurrent first-use by many Spark worker processes is safe: each
 process compiles to a private temp name and atomically renames into
@@ -24,6 +26,7 @@ import tempfile
 import numpy as np
 
 _SRC = os.path.join(os.path.dirname(__file__), "_kernels.c")
+_CACHE_ROOTS = ("/dev/shm", tempfile.gettempdir())
 
 _i64 = ctypes.c_int64
 _i32 = ctypes.c_int32
@@ -49,13 +52,25 @@ def _source() -> bytes:
             return fh.read()
 
 
+def _reason(exc: Exception) -> str:
+    """Why a build step failed: the exception type, then gcc's stderr
+    tail when there is one, else the exception text."""
+    stderr = getattr(exc, "stderr", None)
+    if stderr:
+        tail = stderr.decode(errors="replace").strip()[-400:]
+        return f"{type(exc).__name__}: {tail}"
+    return f"{type(exc).__name__}: {exc}"
+
+
 def _build() -> ctypes.CDLL | None:
+    global error
     try:
         src = _source()
-    except Exception:
+    except Exception as exc:
+        error = _reason(exc)
         return None
     tag = hashlib.sha256(src).hexdigest()[:16]
-    for root in ("/dev/shm", tempfile.gettempdir()):
+    for root in _CACHE_ROOTS:
         cache = os.path.join(root, "nem_mms_native")
         so = os.path.join(cache, f"kernels_{tag}.so")
         try:
@@ -74,13 +89,15 @@ def _build() -> ctypes.CDLL | None:
                 )
                 os.rename(tmp, so)
             lib = ctypes.CDLL(so)
-        except Exception:
-            continue
-        try:
             lib.nem_fsst_encode.restype = _i64
             lib.nem_fsst_encode.argtypes = [
                 _p_u8, _p_i64, _i64, _p_i32, _p_i32,
                 _p_u64, _p_u64, _p_i32, _p_i32, _p_u8, _p_i64,
+            ]
+            lib.nem_fsst_repair.restype = _i64
+            lib.nem_fsst_repair.argtypes = [
+                _p_i32, _i64, _p_i64, _i32, _i64, _i32,
+                _p_i32, _p_i32, _p_i32, _p_i64,
             ]
             lib.nem_pack_uints.restype = None
             lib.nem_pack_uints.argtypes = [_p_u64, _i64, _i32, _p_u8]
@@ -88,10 +105,13 @@ def _build() -> ctypes.CDLL | None:
             lib.nem_unpack_uints.argtypes = [_p_u8, _i64, _i32, _p_u64]
             lib.nem_wd_tokenize.restype = _i64
             lib.nem_wd_tokenize.argtypes = [_p_u8, _p_i64, _i64, _p_i64]
-        except Exception:
+        except Exception as exc:
+            error = _reason(exc)
             continue
+        error = None
         return lib
     return None
 
 
+error: str | None = None
 lib = None if os.environ.get("NEM_MMS_NO_NATIVE") else _build()

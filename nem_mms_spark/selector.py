@@ -23,7 +23,6 @@ from nem_mms_spark.codecs.primitives import bit_width, factorize_bytes, run_ends
 
 _CARD_SAMPLE = 2048
 _SKIP_EXACT_RATIO = 0.95
-_FSST_SAMPLE_BYTES = 64 << 10
 # below this, DICT/RLE/PLAIN cover the chunk and the table-train cost
 # cannot amortize — skip the FSST candidate entirely
 _FSST_MIN_BYTES = 32 << 10

@@ -155,6 +155,26 @@ def test_fsst_table_reuse_across_blocks():
     assert r1 + r2 == strings
 
 
+
+@pytest.mark.parametrize("kernels", ["native", "numpy"])
+def test_fsst_train_breaks_count_ties_by_pair(kernels, monkeypatch):
+    """44 token-disjoint byte pairs: 4 occur 6 times, 40 tie at 5.  The
+    first merge batch (8 pairs) takes the 4 frequent ones, then the 4
+    smallest (a, b) of the tied ones, on both kernel paths, whatever order
+    the pairs arrive in.  A partial selection of the top 32 may keep other
+    tied pairs."""
+    if kernels == "numpy":
+        monkeypatch.setattr(native, "lib", None)
+    rng = np.random.default_rng(3)
+    pairs = [bytes(p) for p in rng.permutation(256)[:88].reshape(44, 2).tolist()]
+    frequent, tied = pairs[:4], pairs[4:]
+    strings = [p for p in frequent for _ in range(6)]
+    strings += [p for p in tied for _ in range(5)]
+    strings = [strings[i] for i in rng.permutation(len(strings))]
+    table = fsst_mod.train(*to_chunk(strings), max_merges=8)
+    merged = sorted(s for s in table.symbol_bytes if len(s) == 2)
+    assert merged == sorted(frequent + sorted(tied)[:4])
+
 def test_dict_beats_plain_on_low_cardinality():
     strings = [b"en"] * 900 + [b"de"] * 80 + [b"fr"] * 20
     data, offsets = to_chunk(strings)

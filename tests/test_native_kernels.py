@@ -10,10 +10,12 @@ full payloads, so any semantic drift in the C port fails loudly.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 import pytest
 
 from nem_mms_spark.codecs import fsst, native, worddict
-from nem_mms_spark.codecs.primitives import pack_uints, unpack_uints
+from nem_mms_spark.codecs.primitives import binary_buffers, pack_uints, unpack_uints
+from nem_mms_spark.datagen.webpages import generate_pages
 
 pytestmark = pytest.mark.skipif(
     native.lib is None, reason="native kernels unavailable (no compiler)"
@@ -138,3 +140,55 @@ def test_worddict_encode_matches_numpy(strs):
     assert p_c == p_np
     d, o = worddict.decode(p_c[0], p_c[1], len(strs))
     assert bytes(d[: o[-1]]) == b"".join(strs)
+
+
+
+def _pages_chunk(col: str, n_rows: int = 3000):
+    vals = generate_pages(np.arange(n_rows))[col]
+    return binary_buffers(pa.array(
+        [v if isinstance(v, bytes) else v.encode() for v in vals],
+        type=pa.large_binary(),
+    ))
+
+
+def _fuzz_chunks(seed: int = 7, n: int = 100):
+    rng = np.random.default_rng(seed)
+    for _ in range(n):
+        alphabet = int(rng.integers(2, 257))
+        yield _chunk([
+            bytes(rng.integers(0, alphabet, size=int(rng.integers(0, 80)))
+                  .astype(np.uint8))
+            for _ in range(int(rng.integers(0, 200)))
+        ])
+
+
+_TRAIN_INPUTS = {
+    "text": lambda: [_chunk(_text_fixture())],
+    "urls": lambda: [_chunk(_url_fixture())],
+    **{f"edge{i}": (lambda c=c: [_chunk(c)]) for i, c in enumerate(_EDGE_CASES)},
+    "fuzz": lambda: list(_fuzz_chunks()),
+    # columns past the 64 KB training cut, so the sample cut runs
+    **{f"pages_{c}": (lambda c=c: [_pages_chunk(c)])
+       for c in ("url", "html", "text")},
+}
+
+
+@pytest.mark.parametrize("name", list(_TRAIN_INPUTS))
+def test_fsst_train_matches_numpy(name):
+    for data, offs in _TRAIN_INPUTS[name]():
+        if name.startswith("pages_"):
+            assert offs[-1] > fsst._MAX_TRAIN_BYTES
+        native_table = fsst.train(data, offs)
+        with _numpy_only():
+            numpy_table = fsst.train(data, offs)
+        assert native_table.symbol_bytes == numpy_table.symbol_bytes
+
+
+def test_broken_source_names_the_load_failure(tmp_path, monkeypatch):
+    """A kernel source that does not compile leaves ``lib`` None and says
+    why in ``native.error`` (the gcc stderr tail)."""
+    monkeypatch.setattr(native, "_source", lambda: b"int broken(void) { return }\n")
+    monkeypatch.setattr(native, "_CACHE_ROOTS", (str(tmp_path),))
+    monkeypatch.setattr(native, "error", None)
+    assert native._build() is None
+    assert native.error and "error" in native.error

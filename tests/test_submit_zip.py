@@ -1,6 +1,7 @@
 """The --py-files artifact: deterministic, complete, importable from zip."""
 
 import os
+import shutil
 import subprocess
 import sys
 
@@ -34,11 +35,25 @@ def test_kernels_import_from_zip_only(tmp_path):
         "import numpy as np\n"
         "from nem_mms_spark.selector import ColumnContext, select_and_encode\n"
         "from nem_mms_spark.codecs import decode_block\n"
+        "from nem_mms_spark.codecs import native\n"
         "v = np.arange(1000, dtype=np.int64)\n"
         "codec, payload, params, _ = select_and_encode(v, '<i8', ColumnContext())\n"
         "out = decode_block(payload, params, 1000, '<i8', codec)\n"
         "assert (out == v).all(), (codec, out[:5])\n"
-        "print('ok', codec)\n"
+        # a 40 KB bytes column is past the selector's FSST floor, so it
+        # trains a table (the native trainer when the kernels load)
+        "strs = [f'https://www.site{i % 37}.example.org/a/{i}'.encode()\n"
+        "        for i in range(1200)]\n"
+        "offs = np.zeros(len(strs) + 1, dtype=np.int64)\n"
+        "np.cumsum([len(s) for s in strs], out=offs[1:])\n"
+        "data = np.frombuffer(b''.join(strs), dtype=np.uint8)\n"
+        "assert offs[-1] >= 40000, offs[-1]\n"
+        "ctx = ColumnContext()\n"
+        "bcodec, bpay, bprm, _ = select_and_encode((data, offs), 'bytes', ctx)\n"
+        "assert ctx.fsst_table is not None and ctx.fsst_table.symbol_bytes\n"
+        "d, o = decode_block(bpay, bprm, len(strs), 'bytes', bcodec)\n"
+        "assert bytes(d[o[0]:o[-1]]) == b''.join(strs), bcodec\n"
+        "print('ok', codec, bcodec, native.lib is not None, native.error)\n"
     )
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     env["PYTHONPATH"] = str(z)
@@ -48,3 +63,5 @@ def test_kernels_import_from_zip_only(tmp_path):
     )
     assert r.returncode == 0, r.stderr
     assert r.stdout.startswith("ok")
+    if shutil.which("gcc"):
+        assert r.stdout.split()[3] == "True", r.stdout
