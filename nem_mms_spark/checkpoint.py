@@ -5,9 +5,9 @@ already-downloaded files, /root/reference/src/packages/fetch.rs:264-282, and
 its filename-encoded state, /root/reference/src/manage/state.rs:46-102):
 
   * a partition is DONE iff its checkpoint row exists with status='done';
-  * the encode job starts by collecting the done part ids to the driver
-    (the checkpoint table is one row per partition) and skips those
-    parts;
+  * the encode job starts by reading the done part ids on the driver
+    (``committed_parts``; the checkpoint table is one row per partition)
+    and skips those parts;
   * blocks/manifest/checkpoint are written partition-dir-scoped with
     dynamic partition overwrite, so a re-run of a partition that crashed
     mid-write replaces its half-written output instead of duplicating it.
@@ -17,8 +17,6 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-
 from nem_mms_spark import manifest as M
 
 
@@ -26,23 +24,34 @@ def checkpoint_path(out_dir: str) -> str:
     return os.path.join(out_dir, M.CHECKPOINT_DIR)
 
 
-def read_checkpoint(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    path = checkpoint_path(out_dir)
-    # fast-path existence check avoids a noisy AnalysisException stack
-    # trace on first run (local/posix paths; object stores hit the except)
-    if "://" not in path and not os.path.isdir(path):
-        return None
-    try:
-        return spark.read.parquet(path)
-    except Exception:
-        return None
+def committed_parts(out_dir: str) -> list[int] | None:
+    """Part ids whose checkpoint row is committed with status='done' —
+    the VISIBILITY set, and the done ids a resume skips.  Data files land
+    task-side (Iceberg style), so a failed or still-running encode job
+    leaves blocks/manifest dirs on disk with no checkpoint row; readers
+    must not see them.  Driver-side pyarrow read of the run files, with
+    no Spark job — the checkpoint is one row per partition.  None when no
+    run was ever committed."""
+    import glob
 
+    import pyarrow.dataset as ds
 
-def done_parts(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    ckpt = read_checkpoint(spark, out_dir)
-    if ckpt is None:
+    runs = glob.glob(os.path.join(checkpoint_path(out_dir), "run-*.parquet"))
+    if not runs:
         return None
-    return ckpt.filter(F.col("status") == "done").select("part_id")
+    tbl = ds.dataset(runs, format="parquet").to_table(
+        columns=["part_id", "status"]
+    )
+    return sorted(
+        {
+            pid
+            for pid, st in zip(
+                tbl.column("part_id").to_pylist(),
+                tbl.column("status").to_pylist(),
+            )
+            if st == "done"
+        }
+    )
 
 
 def commit_checkpoint_rows(rows: list[dict], out_dir: str) -> None:

@@ -24,6 +24,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
+from nem_mms_spark.worker import drop_archive_importers
+
 N_HOSTS = 512
 N_LANGS = 20
 _CORPUS_WORDS = 1 << 16
@@ -169,6 +171,7 @@ def web_pages_df(spark, n_rows: int, num_partitions: int | None = None):
     num_partitions = num_partitions or spark.sparkContext.defaultParallelism
 
     def gen(batches):
+        drop_archive_importers()
         for pdf in batches:
             yield generate_pages(pdf["id"].to_numpy())
 

@@ -24,6 +24,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 
+from nem_mms_spark.worker import drop_archive_importers
+
 FAKE_MAGIC = b"FAKEIMG1"
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 # PNG color type -> sample channels (spec 11.2.2)
@@ -412,6 +414,7 @@ def decode_image_meta(df: DataFrame, binary_col: str = "image") -> DataFrame:
     rather than failing the batch (bad blobs are data, not errors)."""
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_archive_importers()
         for pdf in batches:
             blobs = pdf[binary_col]
             n = len(pdf)
@@ -443,6 +446,7 @@ def extract_features(df: DataFrame, binary_col: str = "image", n_features: int =
     schema = "doc_id long, features array<float>"
 
     def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_archive_importers()
         for pdf in batches:
             ids, rows = [], []
             for doc_id, b in zip(pdf["doc_id"], pdf[binary_col]):

@@ -34,6 +34,8 @@ import numpy as np
 
 from pyspark.sql import DataFrame, functions as F
 
+from nem_mms_spark.worker import drop_archive_importers
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -134,6 +136,7 @@ def brute_force_topk(
     import pyarrow as pa
 
     def score(batches):
+        drop_archive_importers()
         wt = np.ascontiguousarray(q[:, None])
         for batch in batches:
             lv = batch.column(vec_col)
@@ -247,6 +250,7 @@ def materialize_buckets(
     )
 
     def tag(batches):
+        drop_archive_importers()
         weights = np.ascontiguousarray(planes.astype(np.float64).T)
         pows = 1 << np.arange(n_planes, dtype=np.int64)
         for batch in batches:
@@ -305,6 +309,7 @@ def lsh_topk(
     import pyarrow as pa
 
     def scan(batches):
+        drop_archive_importers()
         wt = np.ascontiguousarray(q[:, None])
         for batch in batches:
             lv = batch.column(vec_col)
@@ -434,6 +439,7 @@ def _bucket_pairs(
     )
 
     def enum(batches):
+        drop_archive_importers()
         for batch in batches:
             lv = batch.column("_ids")
             for j in range(len(lv)):
@@ -508,6 +514,7 @@ def _band_sigs(
     spark_schema = f"{id_col} long, band int, sig long"
 
     def sigs(batches):
+        drop_archive_importers()
         wt = np.ascontiguousarray(planes.astype(np.float64).T)
         pows = 1 << np.arange(band_bits, dtype=np.int64)
         bands = np.arange(n_bands, dtype=np.int32)
@@ -561,6 +568,7 @@ def _band_sigs_matmul(
     spark_schema = f"{id_col} long, band int, sig long"
 
     def sigs(batches):
+        drop_archive_importers()
         weights = np.ascontiguousarray(planes.astype(np.float64).T)
         pows = 1 << np.arange(band_bits, dtype=np.int64)
         bands = np.arange(n_bands, dtype=np.int32)
@@ -653,6 +661,7 @@ def banded_cosine_topk(
     )
 
     def bucket_topk(batches):
+        drop_archive_importers()
         g_ids, g_mat, g_norms = bc.value
         acc_a: list[np.ndarray] = []
         acc_b: list[np.ndarray] = []
@@ -816,6 +825,7 @@ def exact_pairs_topk(
         return ids, m
 
     def gram_topk(batches):
+        drop_archive_importers()
         for batch in batches:
             ra = batch.column("rows_a")
             rb = batch.column("rows_b")

@@ -21,6 +21,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from nem_mms_spark import checkpoint as ckpt
 from nem_mms_spark import framing
 from nem_mms_spark import manifest as M
 from nem_mms_spark.codecs import decode_block
@@ -29,42 +30,6 @@ from nem_mms_spark.codecs.primitives import binary_views
 
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
     return spark.read.parquet(os.path.join(out_dir, M.MANIFEST_DIR))
-
-
-def _committed_parts(out_dir: str) -> list[int]:
-    """Part ids whose checkpoint row is committed with status='done' —
-    the VISIBILITY set.  Data files land task-side (Iceberg style), so a
-    failed or still-running encode job leaves blocks/manifest dirs on
-    disk with no checkpoint row; readers must not see them (round-4
-    ADVICE: the documented visibility contract had no enforcing reader).
-    Driver-side pyarrow read — the checkpoint is one row per partition.
-    Raises when no commit exists at all: the table has no committed
-    state to read."""
-    import glob as _glob
-
-    import pyarrow.dataset as ds
-
-    path = os.path.join(out_dir, M.CHECKPOINT_DIR)
-    runs = _glob.glob(os.path.join(path, "run-*.parquet"))
-    if not runs:
-        raise ValueError(
-            f"no committed checkpoint under {out_dir}: the encode job "
-            "never committed (data files without a checkpoint row are "
-            "invisible by the visibility contract)"
-        )
-    tbl = ds.dataset(runs, format="parquet").to_table(
-        columns=["part_id", "status"]
-    )
-    return sorted(
-        {
-            pid
-            for pid, st in zip(
-                tbl.column("part_id").to_pylist(),
-                tbl.column("status").to_pylist(),
-            )
-            if st == "done"
-        }
-    )
 
 
 def decode_blocks(
@@ -93,10 +58,12 @@ def decode_blocks(
     ``defaultParallelism``); part files are LPT-packed into
     ``min(n_files, parallelism)`` bins, one task each.  Coarse on
     purpose, as in ``encode_parquet``: each task pays a fixed start-up
-    cost (Spark's task launch plus the Python worker hand-off, where
-    pyspark's ``importlib.invalidate_caches()`` alone is ~60 ms on
-    Python 3.11) that was measured at 0.15-0.28 s per task on a 4-vCPU
-    box — as long as a small part's decode.
+    cost, Spark's task launch plus the Python worker hand-off.  In the
+    hand-off pyspark's ``importlib.invalidate_caches()`` re-reads the
+    archive of every cached zipimporter, 16 of them in a warmed worker
+    (170-400 ms per call on Python 3.11, 4-vCPU box); the kernel drops
+    them on every task (``_tune_worker``), which leaves about 0.1 s per
+    task, as long as a small part's decode.
 
     ``block_ids``: optional {split key -> set(block_id)} survivor map
     (zone-map skipping; see ``scan_blocks``): only those block groups
@@ -131,16 +98,22 @@ def decode_blocks(
         committed_all = []
         for b in sorted(d for d in os.listdir(out_dir) if d.startswith("batch=")):
             root = os.path.join(out_dir, b)
-            try:
-                pids = _committed_parts(root)
-            except ValueError:
+            pids = ckpt.committed_parts(root)
+            if pids is None:
                 continue
             epoch = int(b.split("=", 1)[1])
             committed_all += [((epoch, p), root, p) for p in pids]
         if not committed_all:
             raise ValueError(f"no committed batch outputs under {out_dir}")
     else:
-        committed_all = [(p, out_dir, p) for p in _committed_parts(out_dir)]
+        pids = ckpt.committed_parts(out_dir)
+        if pids is None:
+            raise ValueError(
+                f"no committed checkpoint under {out_dir}: the encode job "
+                "never committed (data files without a checkpoint row are "
+                "invisible by the visibility contract)"
+            )
+        committed_all = [(p, out_dir, p) for p in pids]
     committed = committed_all
     if parts is not None:
         keep_parts = set(parts)
@@ -329,7 +302,7 @@ def scan_blocks(
         # visibility: zone maps of uncommitted partitions must not drive
         # the scan (decode_blocks filters them anyway; this keeps the
         # metadata pass honest and prunes their dirs)
-        .filter(F.col("part_id").isin(_committed_parts(out_dir)))
+        .filter(F.col("part_id").isin(ckpt.committed_parts(out_dir) or []))
         .filter(F.col("column") == pred_column)
         .select("part_id", "block_id", "zmin_i", "zmax_i", "zmin_d", "zmax_d")
     )

@@ -44,6 +44,7 @@ from nem_mms_spark import framing
 from nem_mms_spark import manifest as M
 from nem_mms_spark.codecs.primitives import binary_views
 from nem_mms_spark.selector import ColumnContext, select_and_encode
+from nem_mms_spark.worker import drop_archive_importers
 
 
 def encode_dataframe(
@@ -75,8 +76,7 @@ def encode_dataframe(
     if sort_cols is None:
         sort_cols = [c for c in ("warc_ts", "ts") if c in df.columns]
     done_ids = _start_run(
-        spark, out_dir, {"partitioning": "aligned", "key_col": key_col},
-        resume,
+        out_dir, {"partitioning": "aligned", "key_col": key_col}, resume
     )
     work = df.withColumn("part_id", F.spark_partition_id())
     if done_ids:
@@ -103,21 +103,20 @@ def encode_dataframe(
     return {**ckpt.checkpoint_totals(out_dir), "skipped_parts": len(done_ids)}
 
 
-def _start_run(
-    spark: SparkSession, out_dir: str, meta: dict, resume: bool
-) -> set[int]:
+def _start_run(out_dir: str, meta: dict, resume: bool) -> set[int]:
     """Run preamble of every entry point.  A fresh run (``resume=False``)
     drops the old checkpoint and data dirs, so stale partition dirs from
     a previous layout cannot leak into decode.  Then the partitioning
     meta is checked against the stored one (resume) and recorded.
-    Returns the part ids already committed (empty on a fresh run)."""
+    Returns the part ids already committed (empty on a fresh run), read
+    driver-side from the checkpoint's run files, with no Spark job."""
     if not resume:
         ckpt.clear_checkpoint(out_dir)
         for sub in (M.BLOCKS_DIR, M.MANIFEST_DIR):
             shutil.rmtree(os.path.join(out_dir, sub), ignore_errors=True)
     ckpt.check_partitioning_meta(out_dir, meta, resume=resume)
-    done = ckpt.done_parts(spark, out_dir) if resume else None
-    return set() if done is None else {r["part_id"] for r in done.collect()}
+    done = ckpt.committed_parts(out_dir) if resume else None
+    return set(done or ())
 
 
 def encode_parquet(
@@ -164,14 +163,19 @@ def encode_parquet(
     to the least-loaded bin) into ``min(n_files, parallelism)`` bins,
     one task each, so the task count itself caps concurrency.  Bins are
     deliberately coarse: every task pays a fixed start-up cost that does
-    not shrink with its work — measured on a 4-vCPU box at 0.15-0.28 s
-    between consecutive tasks on one slot, against task bodies of
-    0.11-0.28 s.  Most of it is Spark's task launch plus the hand-off
-    into the Python worker, where pyspark calls
-    ``importlib.invalidate_caches()`` (on Python 3.11 that re-reads
-    ``pyspark.zip``'s directory once per cached zipimporter, ~60 ms per
-    call).  Cutting files into more, smaller tasks than slots was
-    measured to pay that cost more often than it saves in stragglers.
+    not shrink with its work.  Most of it is Spark's task launch plus the
+    hand-off into the Python worker, where pyspark calls
+    ``importlib.invalidate_caches()``: on Python 3.11 that re-reads the
+    central directory of every archive behind a cached zipimporter, and
+    a warmed worker held 16 of them (``pyspark.zip``, the py4j zip and
+    the spark-core jar), measured at 170-400 ms per call on a 4-vCPU
+    box.  The kernels drop those importers on every task
+    (``_tune_worker``), which leaves about 0.1 s per task: the gap
+    between consecutive tasks on one worker has median 0.11 s and
+    quartiles 0.09-0.14 s, against 0.35 s with the importers kept.
+    Cutting files into more, smaller tasks than slots was measured to
+    pay the 0.35 s cost more often than it saved in stragglers; at
+    0.1 s that is not re-measured.
     Output layout and part ids are unchanged (still one blocks/manifest
     dir per source file).
 
@@ -195,6 +199,8 @@ def encode_parquet(
     which encodes each input split in place; key-skew handling exists
     only here, for file sources (``partitioning="salted"``).
     """
+    import pyarrow.parquet as pq
+
     t_entry = time.monotonic_ns()
     files = sorted(
         f
@@ -205,15 +211,18 @@ def encode_parquet(
         raise ValueError(f"no parquet data files under {src_dir}")
     if partitioning not in ("source_direct", "salted"):
         raise ValueError(f"unknown partitioning mode {partitioning!r}")
-    probe = spark.read.parquet(src_dir)
-    src_cols = probe.columns
+    paths = [os.path.join(src_dir, f) for f in files]
+    # the schema from the first file's footer, which the tasks read too:
+    # a driver-side metadata read, where Spark's schema inference would
+    # run a job
+    schema = pq.read_schema(paths[0])
+    src_cols = schema.names
     if sort_cols is None:
         sort_cols = [c for c in ("warc_ts", "ts") if c in src_cols]
-    paths = [os.path.join(src_dir, f) for f in files]
     salted = partitioning == "salted"
     plan = (
         _hot_plan(
-            spark, probe, paths, key_col, parallelism, hot_factor,
+            spark, schema, paths, key_col, parallelism, hot_factor,
             min_hot_rows,
         )
         if salted
@@ -224,7 +233,7 @@ def encode_parquet(
     if not resume:
         shutil.rmtree(spill_dir, ignore_errors=True)
     done_ids = _start_run(
-        spark, out_dir,
+        out_dir,
         {
             "partitioning": "salted_direct" if salted else "source_direct",
             "num_parts": len(files),
@@ -304,7 +313,7 @@ def encode_parquet(
 
 def _hot_plan(
     spark: SparkSession,
-    probe: DataFrame,
+    schema: pa.Schema,
     paths: list[str],
     key_col: str,
     parallelism: int | None,
@@ -319,6 +328,7 @@ def _hot_plan(
     hot keys get ``ceil(count / target)`` contiguous salt buckets so no
     partition is oversized, numbered from 0 in (count desc, key) order."""
     import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_type
 
     # FILE-STRIDE sampling: a key at the hot threshold holds >= one
     # partition's worth of rows, so scanning every stride-th file (at
@@ -361,9 +371,9 @@ def _hot_plan(
                 names=["_k", "_c"],
             )
 
-    key_type = "string" if key_col == "url" else (
-        probe.select(key_col).schema[0].dataType.simpleString()
-    )
+    key_type = "string" if key_col == "url" else from_arrow_type(
+        schema.field(key_col).type, prefer_timestamp_ntz=True
+    ).simpleString()
     # ONE job, ONE action on the default path: per-file (key, count)
     # rows are tiny when key cardinality is modest, so the final
     # aggregation runs driver-side — no groupBy shuffle, no cache, no
@@ -606,6 +616,9 @@ def _tune_worker() -> None:
     """Per-python-worker runtime tuning for encode tasks (idempotent —
     workers are reused across tasks, so this runs cheaply per task).
 
+    * archive importers: ``drop_archive_importers`` on every task, so
+      the next task's ``importlib.invalidate_caches()`` re-reads no zip
+      directory.
     * memory pool: every pyarrow allocation goes through glibc malloc
       with trim and mmap disabled, so freed scan/sort/serialize buffers
       stay on the worker's warm heap instead of being returned to the OS
@@ -627,6 +640,7 @@ def _tune_worker() -> None:
     """
     import pyarrow as _pa
 
+    drop_archive_importers()
     # one IO thread per task to match the one compute thread: the
     # default 8-thread IO pool per worker process oversubscribes the box
     # during parquet scans
@@ -760,7 +774,7 @@ def _summary_ckpt_rows(summaries) -> list[dict]:
 
 
 def _driver_report(summaries, t_entry, t_job, t_collect) -> dict:
-    """Driver-side phase walls (setup = listing/schema probe/meta guard,
+    """Driver-side phase walls (setup = listing/schema read/meta guard,
     job = the distributed jobs, commit = checkpoint write + totals up to
     now) and the per-task timeline relative to job submit, in seconds:
     the bench decomposes the job wall into work vs schedule tail (bin

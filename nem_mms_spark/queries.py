@@ -18,6 +18,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from nem_mms_spark.functions import dedup, similarity, text as T
+from nem_mms_spark.worker import drop_archive_importers
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -638,6 +639,7 @@ def multimodal_image_meta(spark, sf_dir):
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
 
     def attach(batches):
+        drop_archive_importers()
         builders = (MM.make_fake_image, MM.make_png, MM.make_bmp)
         for pdf in batches:
             pdf = pdf[["doc_id", "n_chars"]].copy()
@@ -669,6 +671,7 @@ def multimodal_gif_pixels(spark, sf_dir):
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
 
     def build_and_decode(batches):
+        drop_archive_importers()
         import numpy as np
         import pandas as pd
 

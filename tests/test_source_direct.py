@@ -311,3 +311,32 @@ def test_parallelism_is_the_task_count(spark, src, tmp_path):
         assert sum(tasks) == min(5, sc.defaultParallelism)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_driver_metadata_reads_submit_no_job(spark, src, tmp_path):
+    """The source schema and the checkpoint's done ids are read on the
+    driver with pyarrow, so a fresh source-direct encode submits only its
+    kernel job, resuming a fully committed output submits none, and
+    salted submits its hot-key count plus its two encode passes."""
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+
+    def jobs(group, out, **kw):
+        try:
+            sc.setJobGroup(group, "encode_parquet")
+            m = encode_parquet(spark, src, out, **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+        return m, len(st.getJobIdsForGroup(group))
+
+    out = str(tmp_path / "enc")
+    m, n_jobs = jobs("jobs-fresh", out)
+    assert m["rows"] == N and n_jobs == 1
+    m, n_jobs = jobs("jobs-resume", out)
+    assert m["skipped_parts"] == 5 and n_jobs == 0
+    m, n_jobs = jobs(
+        "jobs-salted", str(tmp_path / "salt"), resume=False,
+        partitioning="salted", min_hot_rows=500, hot_factor=0.5,
+    )
+    assert m["hot_parts"] > 0 and n_jobs == 3

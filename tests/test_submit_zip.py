@@ -28,7 +28,10 @@ def test_zip_is_deterministic_and_complete(tmp_path):
 
 def test_kernels_import_from_zip_only(tmp_path):
     """Codec kernels must work with ONLY the zip on sys.path (the
-    cluster-executor situation under spark-submit --py-files)."""
+    cluster-executor situation under spark-submit --py-files), also
+    after ``drop_archive_importers`` has emptied the importer cache of
+    zipimporters: a module first imported after the drop still loads
+    from the zip."""
     z = tmp_path / "pkg.zip"
     build_zip(REPO, str(z))
     code = (
@@ -53,6 +56,21 @@ def test_kernels_import_from_zip_only(tmp_path):
         "assert ctx.fsst_table is not None and ctx.fsst_table.symbol_bytes\n"
         "d, o = decode_block(bpay, bprm, len(strs), 'bytes', bcodec)\n"
         "assert bytes(d[o[0]:o[-1]]) == b''.join(strs), bcodec\n"
+        "import sys, zipimport\n"
+        "from nem_mms_spark.worker import drop_archive_importers\n"
+        "def zips():\n"
+        "    return [p for p, f in sys.path_importer_cache.items()\n"
+        "            if isinstance(f, zipimport.zipimporter)]\n"
+        "assert zips(), 'the engine was not imported from the zip'\n"
+        "drop_archive_importers()\n"
+        "assert not zips(), zips()\n"
+        "assert 'nem_mms_spark.framing' not in sys.modules\n"
+        "import pyarrow as pa\n"
+        "from nem_mms_spark import framing\n"
+        "assert isinstance(framing.__loader__, zipimport.zipimporter)\n"
+        "fv, fdt, _vb, _nc, _raw = framing.to_kernel(pa.array(v))\n"
+        "fcodec, fpay, fprm, _ = select_and_encode(fv, fdt, ColumnContext())\n"
+        "assert (decode_block(fpay, fprm, 1000, fdt, fcodec) == v).all()\n"
         "print('ok', codec, bcodec, native.lib is not None, native.error)\n"
     )
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
