@@ -8,17 +8,26 @@
  * (~90 small numpy dispatches per step), the FSST trainer makes up to 32
  * re-pair passes of ~12 dispatches each over a 64 KB token array, and
  * bit-packing makes log2(w) strided passes over the chunk.  Here each
- * step is one linear C pass.
+ * step is one linear C pass.  WORD_DICT's numpy path makes three passes
+ * (space scan, Arrow's hash dictionary over the token offsets, a
+ * searchsorted for the per-string counts); here it is one.
  *
  * Kernels: nem_fsst_encode (greedy matcher), nem_fsst_repair (trainer
- * merge loop), nem_pack_uints / nem_unpack_uints, nem_wd_tokenize.
+ * merge loop), nem_pack_uints / nem_unpack_uints, nem_wd_factorize
+ * (WORD_DICT tokenize + dictionary + counts), nem_free.
  *
  * Everything is plain C99 on public knowledge (FSST per Boncz/Neumann/
- * Leis VLDB'20; LSB-first bit-packing).  No heap allocation: callers pass
- * output and scratch buffers sized to the documented worst case.
+ * Leis VLDB'20; LSB-first bit-packing).  Callers pass output and scratch
+ * buffers sized to the documented worst case, except where the size is
+ * the dictionary a kernel is building, unknown until the pass ends:
+ * nem_wd_factorize grows its hash table and its dictionary buffers on
+ * the heap by doubling, frees the table before it returns, and hands
+ * the dictionary to the caller, who copies it out and releases it with
+ * nem_free.
  */
 
 #include <stdint.h>
+#include <stdlib.h>
 #include <string.h>
 
 /* Greedy longest-match FSST encode.
@@ -232,44 +241,179 @@ void nem_unpack_uints(const uint8_t *in, int64_t n, int32_t width,
     }
 }
 
-/* Word-token boundaries: sorted unique union of {offsets[0..n]} and
- * {space_pos + 1}.  out must hold offsets[n] - offsets[0] + n + 2
- * entries (worst case: all spaces).  Returns count written. */
-int64_t nem_wd_tokenize(const uint8_t *data, const int64_t *offsets,
-                        int64_t n, int64_t *out)
+/* Hash of one word token (length-seeded, 8 bytes per multiply).  `base`
+ * is the start of the buffer holding the token: a tail shorter than 8
+ * bytes is read as the 8-byte word ending at the token's end, shifted
+ * down, whenever that word lies inside the buffer. */
+static inline uint64_t wd_hash(const uint8_t *base, const uint8_t *p,
+                               int64_t len)
 {
-    int64_t m = 0;
-    out[m++] = offsets[0];
-    for (int64_t i = 0; i < n; i++) {
-        int64_t end = offsets[i + 1];
-        int64_t pos = offsets[i];
-        /* SWAR: 8 bytes per step, branch only on words containing a
-         * space (~1 space per 6 bytes in text, so most steps that do
-         * branch extract 1-2 hits via ctz) */
-        while (pos + 8 <= end) {
-            uint64_t w;
-            memcpy(&w, data + pos, 8);
-            uint64_t x = w ^ 0x2020202020202020ULL;
-            /* exact zero-byte finder (no cross-byte borrow artifacts):
-             * bit7 of each lane set iff that byte of x is zero */
-            uint64_t hit = ~(((x & 0x7F7F7F7F7F7F7F7FULL)
-                              + 0x7F7F7F7F7F7F7F7FULL)
-                             | x | 0x7F7F7F7F7F7F7F7FULL);
-            while (hit) {
-                int k = __builtin_ctzll(hit) >> 3;
-                int64_t p = pos + k + 1;
-                if (p != end)
-                    out[m++] = p;
-                hit &= hit - 1;
-            }
-            pos += 8;
-        }
-        for (; pos < end; pos++) {
-            if (data[pos] == 0x20 && pos + 1 != end)
-                out[m++] = pos + 1;
-        }
-        if (out[m - 1] != end) /* dedup: empty strings repeat a boundary */
-            out[m++] = end;
+    uint64_t h = 0x9E3779B97F4A7C15ULL ^ (uint64_t)len;
+    const uint8_t *end = p + len;
+    while (end - p >= 8) {
+        uint64_t w;
+        memcpy(&w, p, 8);
+        h = (h ^ w) * 0xBF58476D1CE4E5B9ULL;
+        h ^= h >> 31;
+        p += 8;
     }
-    return m;
+    int64_t r = end - p;
+    if (r) {
+        uint64_t w = 0;
+        if (end - base >= 8) {
+            memcpy(&w, end - 8, 8);
+            w >>= 64 - 8 * r;
+        } else {
+            memcpy(&w, p, (size_t)r);
+        }
+        h = (h ^ w) * 0x94D049BB133111EBULL;
+    }
+    h ^= h >> 29;
+    h *= 0xBF58476D1CE4E5B9ULL;
+    return h ^ (h >> 32);
+}
+
+/* Word-dictionary factorize in one pass (twin of worddict's numpy path:
+ * tokenize, Arrow dictionary_encode of the tokens, tokens per string).
+ *
+ * A token ends after every 0x20 byte and at the end of its string, so
+ * the tokens of a string concatenate to the string and an empty string
+ * has none.  Each token is looked up in an open-addressing table (linear
+ * probing, load <= 1/2) whose slot holds (hash high 32 bits, id + 1); a
+ * new token is copied into the dictionary buffer, so every comparison
+ * reads the compact dictionary, and takes the next id: codes come out in
+ * first-occurrence order, Arrow's order.
+ *
+ * data/offsets: n strings, offsets[0] == 0
+ * codes:    offsets[n] int64 out (worst case: one byte per token)
+ * counts:   n int64 out, tokens per string
+ * udata/uoffsets: out, heap buffers the kernel allocates and the caller
+ *           releases with nem_free: the distinct tokens concatenated, and
+ *           n_uniq + 1 offsets into them
+ * n_uniq:   1 int64 out, number of distinct tokens
+ * returns the number of tokens, or -1 when an allocation failed (then
+ * nothing is left allocated)
+ */
+int64_t nem_wd_factorize(const uint8_t *data, const int64_t *offsets,
+                         int64_t n, int64_t *codes, int64_t *counts,
+                         uint8_t **udata_out, int64_t **uoffsets_out,
+                         int64_t *n_uniq)
+{
+    int64_t cap = 1024, nu = 0, t = 0;
+    int64_t ucap = 1 << 16, ocap = 1024; /* dictionary bytes, offsets */
+    uint64_t *slot = calloc((size_t)cap, sizeof *slot);
+    uint8_t *udata = malloc((size_t)ucap);
+    int64_t *uoffsets = malloc((size_t)ocap * sizeof *uoffsets);
+    if (!slot || !udata || !uoffsets)
+        goto fail;
+    uoffsets[0] = 0;
+    for (int64_t i = 0; i < n; i++) {
+        int64_t pos = offsets[i], end = offsets[i + 1];
+        int64_t t0 = t;
+        while (pos < end) {
+            /* token end: one past the next space, else the string end;
+             * SWAR 8 bytes per step, exact zero-byte finder on w ^ 0x20s */
+            int64_t q = pos, tend = end;
+            while (q + 8 <= end) {
+                uint64_t w;
+                memcpy(&w, data + q, 8);
+                uint64_t x = w ^ 0x2020202020202020ULL;
+                uint64_t hit = ~(((x & 0x7F7F7F7F7F7F7F7FULL)
+                                  + 0x7F7F7F7F7F7F7F7FULL)
+                                 | x | 0x7F7F7F7F7F7F7F7FULL);
+                if (hit) {
+                    tend = q + (__builtin_ctzll(hit) >> 3) + 1;
+                    break;
+                }
+                q += 8;
+            }
+            if (tend == end) {
+                for (; q < end; q++) {
+                    if (data[q] == 0x20) {
+                        tend = q + 1;
+                        break;
+                    }
+                }
+            }
+            const uint8_t *tok = data + pos;
+            int64_t len = tend - pos;
+            uint64_t h = wd_hash(data, tok, len);
+            uint64_t tag = h & 0xFFFFFFFF00000000ULL;
+            int64_t mask = cap - 1, s = (int64_t)(h & (uint64_t)mask);
+            for (;;) {
+                uint64_t e = slot[s];
+                if (e == 0) {
+                    int64_t u0 = uoffsets[nu];
+                    if (u0 + len > ucap) {
+                        while (u0 + len > ucap)
+                            ucap *= 2;
+                        uint8_t *g = realloc(udata, (size_t)ucap);
+                        if (!g)
+                            goto fail;
+                        udata = g;
+                    }
+                    if (nu + 2 > ocap) {
+                        ocap *= 2;
+                        int64_t *g = realloc(uoffsets,
+                                             (size_t)ocap * sizeof *g);
+                        if (!g)
+                            goto fail;
+                        uoffsets = g;
+                    }
+                    memcpy(udata + u0, tok, (size_t)len);
+                    uoffsets[nu + 1] = u0 + len;
+                    slot[s] = tag | (uint64_t)(nu + 1);
+                    codes[t++] = nu++;
+                    break;
+                }
+                if ((e & 0xFFFFFFFF00000000ULL) == tag) {
+                    int64_t id = (int64_t)(e & 0xFFFFFFFFULL) - 1;
+                    int64_t u0 = uoffsets[id];
+                    if (uoffsets[id + 1] - u0 == len
+                        && memcmp(udata + u0, tok, (size_t)len) == 0) {
+                        codes[t++] = id;
+                        break;
+                    }
+                }
+                s = (s + 1) & mask;
+            }
+            if (2 * nu > cap) {
+                /* grow: re-insert every distinct token by its hash */
+                int64_t ncap = 2 * cap, nmask = ncap - 1;
+                uint64_t *ns = calloc((size_t)ncap, sizeof *ns);
+                if (!ns)
+                    goto fail;
+                for (int64_t id = 0; id < nu; id++) {
+                    int64_t u0 = uoffsets[id];
+                    uint64_t hh = wd_hash(udata, udata + u0,
+                                          uoffsets[id + 1] - u0);
+                    int64_t k = (int64_t)(hh & (uint64_t)nmask);
+                    while (ns[k])
+                        k = (k + 1) & nmask;
+                    ns[k] = (hh & 0xFFFFFFFF00000000ULL) | (uint64_t)(id + 1);
+                }
+                free(slot);
+                slot = ns;
+                cap = ncap;
+            }
+            pos = tend;
+        }
+        counts[i] = t - t0;
+    }
+    free(slot);
+    *udata_out = udata;
+    *uoffsets_out = uoffsets;
+    *n_uniq = nu;
+    return t;
+fail:
+    free(slot);
+    free(udata);
+    free(uoffsets);
+    return -1;
+}
+
+/* Releases a buffer a kernel allocated (nem_wd_factorize's dictionary). */
+void nem_free(void *p)
+{
+    free(p);
 }

@@ -34,6 +34,7 @@ _p_u8 = np.ctypeslib.ndpointer(dtype=np.uint8, flags="C_CONTIGUOUS")
 _p_u64 = np.ctypeslib.ndpointer(dtype=np.uint64, flags="C_CONTIGUOUS")
 _p_i64 = np.ctypeslib.ndpointer(dtype=np.int64, flags="C_CONTIGUOUS")
 _p_i32 = np.ctypeslib.ndpointer(dtype=np.int32, flags="C_CONTIGUOUS")
+_pp_void = ctypes.POINTER(ctypes.c_void_p)
 
 
 def _source() -> bytes:
@@ -103,8 +104,13 @@ def _build() -> ctypes.CDLL | None:
             lib.nem_pack_uints.argtypes = [_p_u64, _i64, _i32, _p_u8]
             lib.nem_unpack_uints.restype = None
             lib.nem_unpack_uints.argtypes = [_p_u8, _i64, _i32, _p_u64]
-            lib.nem_wd_tokenize.restype = _i64
-            lib.nem_wd_tokenize.argtypes = [_p_u8, _p_i64, _i64, _p_i64]
+            lib.nem_wd_factorize.restype = _i64
+            lib.nem_wd_factorize.argtypes = [
+                _p_u8, _p_i64, _i64, _p_i64, _p_i64, _pp_void, _pp_void,
+                _p_i64,
+            ]
+            lib.nem_free.restype = None
+            lib.nem_free.argtypes = [ctypes.c_void_p]
         except Exception as exc:
             error = _reason(exc)
             continue

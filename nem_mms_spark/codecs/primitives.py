@@ -266,9 +266,9 @@ def factorize_bytes(
 
     Returns (int64 codes, (udata, uoffsets)): the distinct values in
     first-occurrence order, so the result is a pure function of chunk
-    content.  DICT and RLE factorize whole strings, WORD_DICT the word
-    tokens (token offsets over the same data); the selector's size
-    estimates reuse the result for the winning encode."""
+    content.  DICT and RLE factorize whole strings, WORD_DICT's numpy
+    twin the word tokens (token offsets over the same data); the
+    selector's size estimates reuse the result for the winning encode."""
     d = binary_array(data, offsets).dictionary_encode()
     codes = d.indices.to_numpy(zero_copy_only=False).astype(np.int64)
     return codes, binary_buffers(d.dictionary)

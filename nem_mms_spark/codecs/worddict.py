@@ -14,6 +14,8 @@ Layout: [packed tokens-per-string][dict values][packed codes].
 
 from __future__ import annotations
 
+import ctypes
+
 import numpy as np
 
 from nem_mms_spark.codecs import native
@@ -30,26 +32,57 @@ from nem_mms_spark.codecs.primitives import (
 _SPACE = 32
 
 
-def tokenize(data: np.ndarray, offsets: np.ndarray) -> np.ndarray:
-    """Token offsets: every string start/end plus the position after each
-    space byte.  Tokens partition the chunk's bytes exactly.
+def factorize_words(
+    data: np.ndarray, offsets: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, tuple[np.ndarray, np.ndarray]]:
+    """Tokenize the chunk on spaces and dictionary-code the tokens.
 
-    Both boundary sources are already sorted, so merge them directly
-    (searchsorted on the small side + one linear np.insert) instead of
-    scattering into an O(total-bytes) boolean mask — the scatter was the
-    kernel's memory-bound hot spot."""
-    nb = int(offsets[-1]) if len(offsets) > 1 else 0
-    if nb == 0:
-        return offsets.astype(np.int64, copy=True)
-    if native.lib is not None:
-        offs = np.ascontiguousarray(offsets, dtype=np.int64)
-        n = len(offs) - 1
-        # worst-case sizing (all spaces); the empty alloc is virtual-only
-        # so the untouched tail costs nothing — cheaper than a counting
-        # pre-pass over the chunk
-        out = np.empty(nb - int(offs[0]) + n + 2, dtype=np.int64)
-        m = native.lib.nem_wd_tokenize(np.ascontiguousarray(data), offs, n, out)
-        return out[:m]
+    Returns (int64 codes, int64 tokens per string, (udata, uoffsets)):
+    one code per token in chunk order, the distinct tokens in
+    first-occurrence order.  A token ends after every space byte and at
+    the end of its string; an empty string has no tokens.  The native
+    kernel does it in one pass; ``_factorize_words_numpy`` is its twin
+    and source of truth."""
+    offs = np.ascontiguousarray(offsets, dtype=np.int64)
+    n = len(offs) - 1
+    nb = int(offs[-1])
+    if offs[0] != 0 or nb > len(data) or np.any(offs[1:] < offs[:-1]):
+        raise ValueError("offsets must start at 0, not decrease, fit data")
+    if native.lib is None:
+        return _factorize_words_numpy(data, offs)
+    # codes at worst case (one byte per token): np.empty is virtual-only,
+    # so the untouched tail costs nothing.  The dictionary's size is
+    # known only at the end, so the kernel grows it on the heap and it
+    # is copied out here: worst-case dictionary buffers, touched a little
+    # at the front, raised the encode workers' peak RSS (they keep every
+    # freed page) by ~38 MB each on encode_pages
+    codes = np.empty(nb, dtype=np.int64)
+    counts = np.empty(n, dtype=np.int64)
+    n_uniq = np.zeros(1, dtype=np.int64)
+    up, op = ctypes.c_void_p(), ctypes.c_void_p()
+    t = native.lib.nem_wd_factorize(
+        np.ascontiguousarray(data), offs, n, codes, counts,
+        ctypes.byref(up), ctypes.byref(op), n_uniq,
+    )
+    if t < 0:
+        raise MemoryError("word dictionary buffers could not grow")
+    try:
+        uoffsets = np.empty(int(n_uniq[0]) + 1, dtype=np.int64)
+        ctypes.memmove(uoffsets.ctypes.data, op, uoffsets.nbytes)
+        udata = np.empty(int(uoffsets[-1]), dtype=np.uint8)
+        ctypes.memmove(udata.ctypes.data, up, udata.nbytes)
+    finally:
+        native.lib.nem_free(up)
+        native.lib.nem_free(op)
+    return codes[:t], counts, (udata, uoffsets)
+
+
+def _factorize_words_numpy(data: np.ndarray, offsets: np.ndarray):
+    """Token boundaries are every string start/end plus the position
+    after each space byte, merged sorted (searchsorted on the small side
+    + one linear np.insert) and deduplicated; Arrow's hash kernel codes
+    the tokens, and a searchsorted of the string offsets counts them."""
+    nb = int(offsets[-1])
     spaces = np.flatnonzero(data[:nb] == _SPACE).astype(np.int64)
     spaces += 1
     offs = offsets.astype(np.int64, copy=False)
@@ -57,26 +90,27 @@ def tokenize(data: np.ndarray, offsets: np.ndarray) -> np.ndarray:
     keep = np.empty(len(merged), dtype=bool)
     keep[0] = True
     np.not_equal(merged[1:], merged[:-1], out=keep[1:])
-    return merged[keep]
+    tok = merged[keep]
+    codes, uniq = factorize_bytes(data, tok)
+    return codes, np.diff(np.searchsorted(tok, offs)), uniq
 
 
 def encode(
     data: np.ndarray,
     offsets: np.ndarray,
-    token_offsets: np.ndarray | None = None,
     codes: np.ndarray | None = None,
+    counts: np.ndarray | None = None,
     uniq=None,
 ) -> tuple[bytes, dict]:
+    """``codes``, ``counts`` and ``uniq`` are ``factorize_words``'
+    result, when the caller already has it."""
     n = len(offsets) - 1
-    if token_offsets is None:
-        token_offsets = tokenize(data, offsets)
-    if codes is None or uniq is None:
-        codes, uniq = factorize_bytes(data, token_offsets)
+    if codes is None or counts is None or uniq is None:
+        codes, counts, uniq = factorize_words(data, offsets)
     udata, uoffsets = uniq
     card = len(uoffsets) - 1
 
-    # tokens per string
-    counts = np.diff(np.searchsorted(token_offsets, offsets)).astype(np.uint64)
+    counts = counts.astype(np.uint64)
     sw = bit_width(int(counts.max())) if n else 0
     counts_p = pack_uints(counts, sw)
 

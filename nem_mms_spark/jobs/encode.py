@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from nem_mms_spark import checkpoint as ckpt
 from nem_mms_spark import framing
 from nem_mms_spark import manifest as M
+from nem_mms_spark.codecs import native
 from nem_mms_spark.codecs.primitives import binary_views
 from nem_mms_spark.selector import ColumnContext, select_and_encode
 from nem_mms_spark.worker import drop_archive_importers
@@ -58,7 +59,9 @@ def encode_dataframe(
     block_bytes: int = framing.DEFAULT_BLOCK_BYTES,
     resume: bool = True,
 ) -> dict:
-    """Encode each input split of ``df`` in place; returns summary metrics.
+    """Encode each input split of ``df`` in place; returns summary metrics
+    (checkpoint totals, and ``native_kernels``: how many of this call's
+    parts ran on the native codec kernels, and why the others did not).
 
     Part identity = input split (``spark_partition_id()``): every split is
     sorted by ``sort_cols`` within itself and encoded by the task that
@@ -100,7 +103,11 @@ def encode_dataframe(
     )
     summaries = work.mapInArrow(encode_fn, SUMMARY_SCHEMA).collect()
     ckpt.commit_checkpoint_rows(_summary_ckpt_rows(summaries), out_dir)
-    return {**ckpt.checkpoint_totals(out_dir), "skipped_parts": len(done_ids)}
+    return {
+        **ckpt.checkpoint_totals(out_dir),
+        "skipped_parts": len(done_ids),
+        "native_kernels": _native_report(summaries),
+    }
 
 
 def _start_run(out_dir: str, meta: dict, resume: bool) -> set[int]:
@@ -194,6 +201,10 @@ def encode_parquet(
     unchanged.  On a real cluster the listing comes from the table
     catalog and tasks read from the object store — the same shape as
     any Iceberg-native scan.
+
+    Returns the checkpoint totals plus this call's hot-key figures,
+    ``native_kernels`` (as in ``encode_dataframe``) and the driver
+    report (phase walls, per-task timeline).
 
     DataFrame (non-file) sources go through ``encode_dataframe``,
     which encodes each input split in place; key-skew handling exists
@@ -305,6 +316,7 @@ def encode_parquet(
         # skew magnitude actually handled this run: rows that crossed
         # the spill (the mode's cost is proportional to this fraction)
         "hot_rows": sum(r["n_rows"] for r in hot_summaries),
+        "native_kernels": _native_report(summaries + hot_summaries),
         **_driver_report(
             summaries + hot_summaries, t_entry, t_job, t_collect
         ),
@@ -773,6 +785,23 @@ def _summary_ckpt_rows(summaries) -> list[dict]:
     )
 
 
+def _native_report(summaries) -> dict:
+    """Native-kernel status over this call's task summary rows (one per
+    part encoded): how many ran with ``codecs.native`` loaded, and the
+    load failure of the first part, by id, that ran on the numpy
+    kernels (None when every part had them loaded)."""
+    failed = sorted(
+        (r["part_id"], r["native_error"])
+        for r in summaries
+        if r["native_error"] is not None
+    )
+    return {
+        "loaded_tasks": len(summaries) - len(failed),
+        "tasks": len(summaries),
+        "error": failed[0][1] if failed else None,
+    }
+
+
 def _driver_report(summaries, t_entry, t_job, t_collect) -> dict:
     """Driver-side phase walls (setup = listing/schema read/meta guard,
     job = the distributed jobs, commit = checkpoint write + totals up to
@@ -883,7 +912,7 @@ SUMMARY_SCHEMA = (
     "part_id int, n_rows long, n_blocks long, n_columns int, "
     "raw_bytes long, encoded_bytes long, fingerprint long, encode_ns long, "
     "stage_ns string, t_start_ns long, t_end_ns long, worker_pid int, "
-    "cpu_slot int"
+    "cpu_slot int, native_error string"
 )
 
 # per-stage in-task timing keys (stage_ns JSON map), in nanoseconds:
@@ -894,8 +923,10 @@ SUMMARY_SCHEMA = (
 # selection + encode proper, `zstats` = zone-map min/max, `build` =
 # blocks/manifest Arrow table construction, `write` = task-side parquet
 # commits (sub-stages `wser` serialization, `wio` file syscalls).
-# `c_cpu` = process CPU-ns over the encode body (wall minus cpu = time
-# the task was stalled).  Summed per partition by checkpoint_totals.
+# `c_cpu` = CPU-ns of the task's thread over the same span as the part's
+# `encode_ns` (fingerprint, framing, selection, zone stats; `encode_ns`
+# minus `c_cpu` = time the task was stalled).  Summed per partition by
+# checkpoint_totals.
 STAGE_KEYS = (
     "read", "rfetch", "rparse", "rsort", "fprint", "kernel", "encode",
     "zstats", "build", "write", "wser", "wio", "c_cpu",
@@ -1013,7 +1044,7 @@ def _encode_partition_table(
     t0 = time.monotonic_ns()
     stage = dict.fromkeys(STAGE_KEYS, 0)
     stage.update(read_stage or {})
-    cpu0 = time.process_time_ns()
+    cpu0 = time.thread_time_ns()
     clk = time.monotonic_ns
     fp = _fingerprint(tbl, key_col)
     stage["fprint"] = clk() - t0
@@ -1055,6 +1086,8 @@ def _encode_partition_table(
             rows["zmin_d"].append(zd_lo)
             rows["zmax_d"].append(zd_hi)
     n = len(rows["block_id"])
+    # CPU span nested inside the wall span, so c_cpu <= encode_ns
+    stage["c_cpu"] = time.thread_time_ns() - cpu0
     encode_ns = time.monotonic_ns() - t0
     tb = clk()
     part_dir = f"part_id={pid}"
@@ -1148,7 +1181,6 @@ def _encode_partition_table(
         stage=stage,
     )
     stage["write"] += clk() - tw
-    stage["c_cpu"] = time.process_time_ns() - cpu0
 
     # per-task timeline: CLOCK_MONOTONIC is system-wide on Linux, so the
     # driver can line every partition's [start, end] up on one axis and
@@ -1175,11 +1207,17 @@ def _encode_partition_table(
             pa.array([t_end], type=pa.int64()),
             pa.array([os.getpid()], type=pa.int32()),
             pa.array([slot], type=pa.int32()),
+            pa.array(
+                [None if native.lib is not None
+                 else native.error or "native kernels not loaded"],
+                type=pa.string(),
+            ),
         ],
         names=[
             "part_id", "n_rows", "n_blocks", "n_columns", "raw_bytes",
             "encoded_bytes", "fingerprint", "encode_ns", "stage_ns",
             "t_start_ns", "t_end_ns", "worker_pid", "cpu_slot",
+            "native_error",
         ],
     )
 

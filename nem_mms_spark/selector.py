@@ -4,9 +4,13 @@ Per column chunk, estimate encoded bits/value for every candidate codec
 (exact closed-form for the integer/dictionary/RLE family, sampled trial
 encode for FSST), pick the argmin, encode with the winner, and fall back to
 PLAIN if the winner's actual payload came out larger (estimates are
-estimates).  Ties break toward the cheaper-to-decode codec (candidate order
-in the registry).  The choice is a pure function of chunk content — no RNG —
-so retries re-produce identical blocks (determinism requirement from
+estimates).  FSST is priced in two steps: a probe table trained on 4 KB
+first, and the full 64 KB training only when the probe's estimate comes
+within ``_FSST_PROBE_MARGIN`` of the best estimate already computed, so a
+long-text column that WORD_DICT wins never pays for a table it discards.
+Ties break toward the cheaper-to-decode codec (candidate order in the
+registry).  The choice is a pure function of chunk content — no RNG — so
+retries re-produce identical blocks (determinism requirement from
 SURVEY.md §7).
 
 Run-length / cardinality estimation per the cost models discussed in
@@ -26,6 +30,15 @@ _SKIP_EXACT_RATIO = 0.95
 # below this, DICT/RLE/PLAIN cover the chunk and the table-train cost
 # cannot amortize — skip the FSST candidate entirely
 _FSST_MIN_BYTES = 32 << 10
+# the FSST probe: a table trained on this many bytes prices FSST first,
+# and the full training is skipped while the probe's estimate is at least
+# this multiple of the best other estimate.  Measured on one block per
+# file of generated web_pages (3 seeds) and on the sf0.1 documents table
+# in 16 parts: the probe estimate was 0.99-1.73x the full table's, on
+# url (FSST wins) 0.35-0.43x the best other estimate, and on html/text
+# (WORD_DICT wins) 1.54-2.92x it.
+_FSST_PROBE_BYTES = 4 << 10
+_FSST_PROBE_MARGIN = 1.25
 
 
 _REPROBE_EVERY = 8
@@ -34,7 +47,9 @@ _REPROBE_EVERY = 8
 class ColumnContext:
     """Per-(partition, column) shared state: one FSST table per partition
     column (north_star: symbol table per partition-column, not per block),
-    trained lazily on the first qualifying chunk.  The sampled compression
+    trained lazily on the first qualifying chunk whose probe estimate
+    (``fsst_probe_ratio``, from a 4 KB table measured on the first
+    qualifying chunk) does not rule FSST out.  Each sampled compression
     ratio is measured once and reused by later chunks' cost models —
     re-sampling every block would spend more than it saves.
 
@@ -48,9 +63,9 @@ class ColumnContext:
       * sticky winner — after two consecutive full cost-model passes
         agree, later blocks skip the losers' estimation work entirely
         (the dominant saving: the WORD_DICT estimate tokenizes and
-        factorizes the WHOLE chunk even when FSST always wins on
-        url/html) and encode straight with the winner; a full re-probe
-        runs every ``_REPROBE_EVERY`` blocks, and any sticky encode
+        factorizes the WHOLE chunk even on url, where FSST always wins)
+        and encode straight with the winner; a full re-probe runs
+        every ``_REPROBE_EVERY`` blocks, and any sticky encode
         whose payload exceeds the PLAIN estimate falls back to the full
         pass — content drift degrades gracefully, never corrupts.
 
@@ -58,7 +73,7 @@ class ColumnContext:
     scan order, so retries reproduce identical blocks."""
 
     __slots__ = (
-        "fsst_table", "fsst_failed", "fsst_ratio",
+        "fsst_table", "fsst_failed", "fsst_ratio", "fsst_probe_ratio",
         "num_dict", "block_idx", "last_winner", "sticky",
     )
 
@@ -66,6 +81,7 @@ class ColumnContext:
         self.fsst_table = None
         self.fsst_failed = False
         self.fsst_ratio = None
+        self.fsst_probe_ratio = None
         self.num_dict = None
         self.block_idx = 0
         self.last_winner = None
@@ -107,9 +123,8 @@ def _sticky_encode(values, dtype: str, ctx: ColumnContext):
             codes, uniq = factorize_bytes(data, offsets)
             kw = {"codes": codes, "uniq": uniq} if codec == registry.DICT else {"codes": codes}
         elif codec == registry.WORD_DICT:
-            tok = worddict.tokenize(data, offsets)
-            wcodes, wuniq = factorize_bytes(data, tok)
-            kw = {"token_offsets": tok, "codes": wcodes, "uniq": wuniq}
+            wcodes, wcounts, wuniq = worddict.factorize_words(data, offsets)
+            kw = {"codes": wcodes, "counts": wcounts, "uniq": wuniq}
         elif codec == registry.FSST:
             if ctx.fsst_table is None or ctx.fsst_failed:
                 return None
@@ -174,6 +189,17 @@ def _fsst_ratio_sample(
     row = np.repeat(np.arange(len(sel)), lens)
     pos = np.arange(total) - np.repeat(out_offs[:-1], lens)
     return data[starts[row] + pos], out_offs
+
+
+def _fsst_ratio(table, data: np.ndarray, offsets: np.ndarray) -> float:
+    """Encoded/raw bytes of ``table`` on the chunk's ratio sample:
+    strided rows capped at 256 bytes each.  A plain 64 KB prefix of a
+    long-string column is ~30 rows, and the frontier encoder degenerates
+    to hundreds of near-scalar steps; capped strided rows give the same
+    byte budget with a wide frontier (and better coverage)."""
+    sdata, soffs = _fsst_ratio_sample(data, offsets)
+    sp, _ = fsst_mod.encode(sdata, soffs, table=table)
+    return len(sp) / max(int(soffs[-1]), 1)
 
 
 def _sample_distinct(data: np.ndarray, offsets: np.ndarray, sel: np.ndarray) -> int:
@@ -254,8 +280,7 @@ def _select_bytes(values, ctx: ColumnContext):
     # class as the DICT estimate); only sensible for longer strings
     wd_kw = {}
     if data_len // max(n, 1) >= 16:
-        tok = worddict.tokenize(data, offsets)
-        wcodes, wuniq = factorize_bytes(data, tok)
+        wcodes, wcounts, wuniq = worddict.factorize_words(data, offsets)
         card_w = len(wuniq[1]) - 1
         ulen_w = int(wuniq[1][-1])
         cw = bit_width(max(card_w - 1, 0))
@@ -266,27 +291,31 @@ def _select_bytes(values, ctx: ColumnContext):
             + (len(wcodes) * cw + 7) // 8
             + (n * 8 + 7) // 8  # token-count prefix
         )
-        wd_kw = {"token_offsets": tok, "codes": wcodes, "uniq": wuniq}
+        wd_kw = {"codes": wcodes, "counts": wcounts, "uniq": wuniq}
 
     fsst_kw = {}
     if data_len >= _FSST_MIN_BYTES and not ctx.fsst_failed:
+        lens_est = (n * len_bits + 7) // 8
         if ctx.fsst_table is None:
-            ctx.fsst_table = fsst_mod.train(data, offsets)
-            if not ctx.fsst_table.symbol_bytes:
-                ctx.fsst_failed = True
-        if not ctx.fsst_failed:
+            # the probe: a table trained on 4 KB prices FSST before the
+            # 64 KB training is paid; when even a margin below its
+            # estimate loses to a cheaper codec, the block skips training
+            if ctx.fsst_probe_ratio is None:
+                probe = fsst_mod.train(
+                    data, offsets, max_train_bytes=_FSST_PROBE_BYTES
+                )
+                ctx.fsst_probe_ratio = _fsst_ratio(probe, data, offsets)
+            probe_est = int(ctx.fsst_probe_ratio * data_len) + lens_est
+            if probe_est >= _FSST_PROBE_MARGIN * min(est.values()):
+                est[registry.FSST] = probe_est
+            else:
+                ctx.fsst_table = fsst_mod.train(data, offsets)
+                if not ctx.fsst_table.symbol_bytes:
+                    ctx.fsst_failed = True
+        if ctx.fsst_table is not None and not ctx.fsst_failed:
             if ctx.fsst_ratio is None:
-                # ratio sample: strided rows capped at 256 bytes each.  A
-                # plain 64 KB prefix of a long-string column is ~30 rows,
-                # and the frontier encoder degenerates to hundreds of
-                # near-scalar steps; capped strided rows give the same
-                # byte budget with a wide frontier (and better coverage)
-                sdata, soffs = _fsst_ratio_sample(data, offsets)
-                sp, _ = fsst_mod.encode(sdata, soffs, table=ctx.fsst_table)
-                ctx.fsst_ratio = len(sp) / max(int(soffs[-1]), 1)
-            est[registry.FSST] = (
-                int(ctx.fsst_ratio * data_len) + (n * len_bits + 7) // 8
-            )
+                ctx.fsst_ratio = _fsst_ratio(ctx.fsst_table, data, offsets)
+            est[registry.FSST] = int(ctx.fsst_ratio * data_len) + lens_est
             fsst_kw = {"table": ctx.fsst_table}
 
     winner = _argmin(est, registry.candidate_codecs("bytes"))

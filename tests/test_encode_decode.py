@@ -4,6 +4,7 @@ checkpoint resume idempotence (SURVEY.md §7 M1/M5)."""
 from __future__ import annotations
 
 import os
+import shutil
 
 import pytest
 
@@ -25,6 +26,10 @@ def test_encode_decode_bit_identical(spark, pages, tmp_path_factory):
     metrics = encode_dataframe(spark, pages, out, block_rows=512)
     assert metrics["rows"] == N_ROWS
     assert metrics["ratio"] < 0.6, f"expected real compression, got {metrics}"
+    if shutil.which("gcc"):
+        nk = metrics["native_kernels"]
+        assert nk["loaded_tasks"] == nk["tasks"] == metrics["parts"], nk
+        assert nk["error"] is None
     result = verify_roundtrip(spark, pages, out, key="url")
     assert result["mismatched_groups"] == 0
     assert result["decoded_rows"] == N_ROWS

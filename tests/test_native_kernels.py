@@ -9,6 +9,9 @@ full payloads, so any semantic drift in the C port fails loudly.
 
 from __future__ import annotations
 
+import os
+import re
+
 import numpy as np
 import pyarrow as pa
 import pytest
@@ -17,7 +20,7 @@ from nem_mms_spark.codecs import fsst, native, worddict
 from nem_mms_spark.codecs.primitives import binary_buffers, pack_uints, unpack_uints
 from nem_mms_spark.datagen.webpages import generate_pages
 
-pytestmark = pytest.mark.skipif(
+needs_native = pytest.mark.skipif(
     native.lib is None, reason="native kernels unavailable (no compiler)"
 )
 
@@ -66,7 +69,30 @@ _EDGE_CASES = [
     [],
 ]
 
+# word-dictionary edge cases: empty strings only, spaces only, trailing
+# spaces, NUL bytes (also inside repeated tokens), and tokens longer than
+# 8 bytes that differ only in their last byte
+_WD_EDGE_CASES = {
+    "empty_strings": [b"", b"", b""],
+    "all_spaces": [b" ", b"    ", b"", b"  "],
+    "trailing": [b"a ", b"a  ", b"b c ", b"a", b"a "],
+    "nul": [b"\x00", b"\x00 \x00", b"\x00\x00 ", b"a\x00 b", b"\x00 \x00"],
+    "long_tokens": [b"abcdefghij1 abcdefghij2 ", b"abcdefghij1", b"abcdefghij2"],
+}
 
+
+def _wd_factorize_both(data, offs):
+    codes, counts, (udata, uoffs) = worddict.factorize_words(data, offs)
+    with _numpy_only():
+        ncodes, ncounts, (nudata, nuoffs) = worddict.factorize_words(data, offs)
+    assert np.array_equal(codes, ncodes)
+    assert np.array_equal(counts, ncounts)
+    assert bytes(udata) == bytes(nudata)
+    assert np.array_equal(uoffs, nuoffs)
+    return codes, counts, (udata, uoffs)
+
+
+@needs_native
 @pytest.mark.parametrize("width", [1, 3, 7, 8, 13, 14, 24, 31, 33, 48, 56])
 def test_pack_unpack_uints_match_numpy(width):
     rng = np.random.default_rng(width)
@@ -81,34 +107,42 @@ def test_pack_unpack_uints_match_numpy(width):
         assert np.array_equal(u_c, u_np)
 
 
+@needs_native
 @pytest.mark.parametrize(
     "strs",
-    [_text_fixture(), _url_fixture(), *_EDGE_CASES],
-    ids=["text", "urls", "edge0", "edge1", "edge2", "edge3", "empty"],
+    [_text_fixture(), _url_fixture(), *_EDGE_CASES, *_WD_EDGE_CASES.values()],
+    ids=["text", "urls", "edge0", "edge1", "edge2", "edge3", "empty",
+         *_WD_EDGE_CASES],
 )
 def test_wd_tokenize_matches_numpy(strs):
+    """nem_wd_factorize: codes, tokens per string and dictionary equal
+    the numpy twin's, and the tokens spell the strings back."""
     data, offs = _chunk(strs)
-    a = worddict.tokenize(data, offs)
-    with _numpy_only():
-        b = worddict.tokenize(data, offs)
-    assert np.array_equal(a, b)
+    codes, counts, (udata, uoffs) = _wd_factorize_both(data, offs)
+    tokens = [bytes(udata[uoffs[c] : uoffs[c + 1]]) for c in codes]
+    bounds = np.concatenate([[0], np.cumsum(counts)])
+    assert [
+        b"".join(tokens[bounds[i] : bounds[i + 1]]) for i in range(len(strs))
+    ] == strs
 
 
+@needs_native
 def test_wd_tokenize_fuzz_binary():
+    """Random bytes over small alphabets (many spaces and repeats) and
+    chunks past the kernel's first hash-table growth."""
     rng = np.random.default_rng(42)
-    for _ in range(100):
+    for i in range(100):
+        alphabet = [2, 3, 40, 256][i % 4]
+        lo = 0 if alphabet == 256 else 31  # small alphabets hold 0x20
         strs = [
-            bytes(rng.integers(0, 256, size=int(rng.integers(0, 60)))
-                  .astype(np.uint8))
-            for _ in range(int(rng.integers(0, 30)))
+            bytes((rng.integers(0, alphabet, size=int(rng.integers(0, 60)))
+                   + lo).astype(np.uint8))
+            for _ in range(int(rng.integers(0, 30 if i < 90 else 3000)))
         ]
-        data, offs = _chunk(strs)
-        a = worddict.tokenize(data, offs)
-        with _numpy_only():
-            b = worddict.tokenize(data, offs)
-        assert np.array_equal(a, b)
+        _wd_factorize_both(*_chunk(strs))
 
 
+@needs_native
 @pytest.mark.parametrize(
     "strs",
     [_text_fixture(), _url_fixture(), *_EDGE_CASES[:4]],
@@ -127,6 +161,7 @@ def test_fsst_encode_matches_numpy(strs):
     assert bytes(d[: o[-1]]) == b"".join(strs)
 
 
+@needs_native
 @pytest.mark.parametrize(
     "strs",
     [_text_fixture(), _url_fixture(), *_EDGE_CASES[:4]],
@@ -173,6 +208,7 @@ _TRAIN_INPUTS = {
 }
 
 
+@needs_native
 @pytest.mark.parametrize("name", list(_TRAIN_INPUTS))
 def test_fsst_train_matches_numpy(name):
     for data, offs in _TRAIN_INPUTS[name]():
@@ -184,6 +220,7 @@ def test_fsst_train_matches_numpy(name):
         assert native_table.symbol_bytes == numpy_table.symbol_bytes
 
 
+@needs_native
 def test_broken_source_names_the_load_failure(tmp_path, monkeypatch):
     """A kernel source that does not compile leaves ``lib`` None and says
     why in ``native.error`` (the gcc stderr tail)."""
@@ -192,3 +229,30 @@ def test_broken_source_names_the_load_failure(tmp_path, monkeypatch):
     monkeypatch.setattr(native, "error", None)
     assert native._build() is None
     assert native.error and "error" in native.error
+
+
+# each native kernel -> the test that pins it to its numpy twin
+_KERNEL_TESTS = {
+    "nem_fsst_encode": test_fsst_encode_matches_numpy,
+    "nem_fsst_repair": test_fsst_train_matches_numpy,
+    "nem_pack_uints": test_pack_unpack_uints_match_numpy,
+    "nem_unpack_uints": test_pack_unpack_uints_match_numpy,
+    "nem_wd_factorize": test_wd_tokenize_matches_numpy,
+    "nem_free": test_wd_tokenize_matches_numpy,
+}
+
+
+def test_every_kernel_is_registered_and_twin_tested():
+    """The kernels defined in _kernels.c, the ones native.py gives
+    argtypes, and the ones this module pins are the same set: a kernel
+    cannot ship untested, and no argtypes entry outlives its kernel
+    (ctypes would fail the whole load on it).  Reads the sources, so it
+    runs without a compiler too."""
+    here = os.path.dirname(native.__file__)
+    with open(os.path.join(here, "_kernels.c")) as fh:
+        c_src = fh.read()
+    with open(native.__file__) as fh:
+        py_src = fh.read()
+    defined = set(re.findall(r"^\w[\w ]*?\b(nem_\w+)\(", c_src, re.M))
+    registered = set(re.findall(r"lib\.(nem_\w+)\.argtypes", py_src))
+    assert defined == registered == set(_KERNEL_TESTS)

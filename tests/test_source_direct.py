@@ -6,6 +6,7 @@ aligned DataFrame path."""
 from __future__ import annotations
 
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -29,6 +30,10 @@ def test_roundtrip_multiset_equal(spark, src, tmp_path):
     out = str(tmp_path / "enc")
     m = encode_parquet(spark, src, out, resume=False)
     assert m["rows"] == N and m["parts"] == 5
+    if shutil.which("gcc"):
+        assert m["native_kernels"] == {
+            "loaded_tasks": 5, "tasks": 5, "error": None,
+        }
     dec = decode_blocks(spark, out)
     s = spark.read.parquet(src)
     key = F.md5(
