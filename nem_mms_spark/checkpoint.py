@@ -8,9 +8,11 @@ its filename-encoded state, /root/reference/src/manage/state.rs:46-102):
   * the encode job starts by reading the done part ids on the driver
     (``committed_parts``; the checkpoint table is one row per partition)
     and skips those parts;
-  * blocks/manifest/checkpoint are written partition-dir-scoped with
-    dynamic partition overwrite, so a re-run of a partition that crashed
-    mid-write replaces its half-written output instead of duplicating it.
+  * each part's blocks and manifest files are published task-side
+    (``jobs/encode._publish``: temp file, then ``os.replace``) at paths
+    fixed by the part id, so a re-run of a partition that crashed
+    mid-write replaces its output instead of duplicating it; no Spark
+    writer is involved.
 """
 
 from __future__ import annotations

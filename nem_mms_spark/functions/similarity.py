@@ -88,10 +88,29 @@ def _fold_pair_dots(ma: np.ndarray, mb: np.ndarray) -> np.ndarray:
     return acc
 
 
-def _vec_matrix(lv, dim: int) -> np.ndarray:
+def _vec_matrix(lv, dim: int | None, col: str) -> np.ndarray:
     """Arrow list<float|double> array -> (n, dim) float64 matrix (the
     float32 -> float64 widening is exact, same as Catalyst's
-    cast(array<double>))."""
+    cast(array<double>)).  ``dim`` None takes the first row's length.
+
+    A null vector, or one that is not ``dim`` long, has no cosine: it
+    raises a ValueError naming ``col`` and the first bad row (its index
+    in ``lv``)."""
+    import pyarrow.compute as pc
+
+    if lv.null_count:
+        row = pc.index(lv.is_null(), True).as_py()
+        raise ValueError(f"vector column {col!r}: row {row} is null")
+    lens = pc.list_value_length(lv)
+    if dim is None:
+        dim = lens[0].as_py() if len(lv) else 0
+    bad = pc.not_equal(lens, dim)
+    if pc.any(bad).as_py():
+        row = pc.index(bad, True).as_py()
+        raise ValueError(
+            f"vector column {col!r}: row {row} has {lens[row].as_py()} "
+            f"values, expected {dim}"
+        )
     vals = np.asarray(lv.flatten().to_numpy(zero_copy_only=False))
     return vals.astype(np.float64, copy=False).reshape(len(lv), dim)
 
@@ -105,9 +124,7 @@ def _gather_vectors(embeddings: DataFrame, id_col: str, vec_col: str):
     §2.3/§8: shuffle keys, move payloads once)."""
     tbl = embeddings.select(id_col, vec_col).toArrow()
     ids = np.asarray(tbl.column(id_col).to_numpy(zero_copy_only=False))
-    lv = tbl.column(vec_col).combine_chunks()
-    dim = len(lv[0]) if len(lv) else 0
-    mat = _vec_matrix(lv, dim)
+    mat = _vec_matrix(tbl.column(vec_col).combine_chunks(), None, vec_col)
     order = np.argsort(ids, kind="stable")
     ids = np.ascontiguousarray(ids[order])
     mat = np.ascontiguousarray(mat[order])
@@ -142,7 +159,7 @@ def brute_force_topk(
             lv = batch.column(vec_col)
             if len(lv) == 0:
                 continue
-            mat = _vec_matrix(lv, dim)
+            mat = _vec_matrix(lv, dim, vec_col)
             dot = _fold_dots(mat, wt)[:, 0]
             den = np.sqrt(_fold_pair_dots(mat, mat)) * qn
             yield pa.RecordBatch.from_arrays(
@@ -257,7 +274,7 @@ def materialize_buckets(
             lv = batch.column(vec_col)
             if len(lv) == 0:
                 continue
-            mat = _vec_matrix(lv, dim)
+            mat = _vec_matrix(lv, dim, vec_col)
             bucket = ((mat @ weights) > 0).astype(np.int64) @ pows
             yield batch.append_column(
                 bucket_col, pa.array(bucket, type=pa.int64())
@@ -315,7 +332,7 @@ def lsh_topk(
             lv = batch.column(vec_col)
             if len(lv) == 0:
                 continue
-            mat = _vec_matrix(lv, dim)
+            mat = _vec_matrix(lv, dim, vec_col)
             bucket = _fold_sigs(mat, planes)
             keep = np.flatnonzero(np.isin(bucket, probe_arr))
             if len(keep) == 0:
@@ -524,7 +541,7 @@ def _band_sigs(
             if n == 0:
                 continue
             ids = batch.column(id_col).to_numpy(zero_copy_only=False)
-            mat = _vec_matrix(lv, dim)
+            mat = _vec_matrix(lv, dim, vec_col)
             bits = _fold_dots(mat, wt) > 0  # n x n_planes
             sig = (
                 bits.reshape(n, n_bands, band_bits).astype(np.int64) @ pows
@@ -578,7 +595,7 @@ def _band_sigs_matmul(
             if n == 0:
                 continue
             ids = batch.column(id_col).to_numpy(zero_copy_only=False)
-            mat = _vec_matrix(lv, dim)
+            mat = _vec_matrix(lv, dim, vec_col)
             bits = (mat @ weights) > 0  # n x n_planes
             sig = (
                 bits.reshape(n, n_bands, band_bits).astype(np.int64) @ pows
@@ -819,8 +836,7 @@ def exact_pairs_topk(
         """list<struct<i,v>> scalar -> (ids, unit-row matrix)."""
         sa = cell.values
         ids = np.asarray(sa.field("i").to_numpy(zero_copy_only=False))
-        lv = sa.field("v")
-        m = _vec_matrix(lv, len(lv[0]) if len(lv) else 0)
+        m = _vec_matrix(sa.field("v"), None, vec_col)
         m /= np.linalg.norm(m, axis=1, keepdims=True)
         return ids, m
 

@@ -26,6 +26,7 @@ from nem_mms_spark import framing
 from nem_mms_spark import manifest as M
 from nem_mms_spark.codecs import decode_block
 from nem_mms_spark.codecs.primitives import binary_views
+from nem_mms_spark.worker import drop_archive_importers
 
 
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -62,8 +63,8 @@ def decode_blocks(
     hand-off pyspark's ``importlib.invalidate_caches()`` re-reads the
     archive of every cached zipimporter, 16 of them in a warmed worker
     (170-400 ms per call on Python 3.11, 4-vCPU box); the kernel drops
-    them on every task (``_tune_worker``), which leaves about 0.1 s per
-    task, as long as a small part's decode.
+    them on every task (``worker.drop_archive_importers``), which leaves
+    about 0.1 s per task, as long as a small part's decode.
 
     ``block_ids``: optional {split key -> set(block_id)} survivor map
     (zone-map skipping; see ``scan_blocks``): only those block groups
@@ -90,7 +91,6 @@ def decode_blocks(
         _bin_file_splits,
         _bin_items,
         _read_split,
-        _tune_worker,
     )
 
     # (split key, encode root, part_id) of every committed partition
@@ -188,7 +188,7 @@ def decode_blocks(
 
     def decode_files(batches):
         pa.set_cpu_count(1)
-        _tune_worker()
+        drop_archive_importers()
         allowed_map = bc_blocks.value if bc_blocks is not None else None
         for key, path in _bin_items(batches, bins):
             allowed = (

@@ -177,9 +177,10 @@ def encode_parquet(
     a warmed worker held 16 of them (``pyspark.zip``, the py4j zip and
     the spark-core jar), measured at 170-400 ms per call on a 4-vCPU
     box.  The kernels drop those importers on every task
-    (``_tune_worker``), which leaves about 0.1 s per task: the gap
-    between consecutive tasks on one worker has median 0.11 s and
-    quartiles 0.09-0.14 s, against 0.35 s with the importers kept.
+    (``worker.drop_archive_importers``), which leaves about 0.1 s per
+    task: the gap between consecutive tasks on one worker has median
+    0.11 s and quartiles 0.09-0.14 s, against 0.35 s with the importers
+    kept.
     Cutting files into more, smaller tasks than slots was measured to
     pay the 0.35 s cost more often than it saved in stragglers; at
     0.1 s that is not re-measured.
@@ -367,7 +368,7 @@ def _hot_plan(
         import pyarrow.parquet as _pq
 
         _pa.set_cpu_count(1)
-        _tune_worker()
+        drop_archive_importers()
         for _pid, path in _bin_items(batches, kbins):
             # NOT fetch-then-parse here: only the key column's chunks
             # are needed, so let the reader seek straight to them
@@ -470,11 +471,10 @@ def _make_file_encoder(
 
     def encode_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         # one arrow thread per task: Spark already runs one task per
-        # core, and pyarrow's default cpu_count-sized pool inside
-        # EVERY concurrent task oversubscribes the box (32 tasks x
-        # 32 reader threads), destroying scaling
+        # core, and pyarrow's default cpu_count-sized pool inside every
+        # concurrent task would run cores x cores threads
         pa.set_cpu_count(1)
-        _tune_worker()
+        drop_archive_importers()
         for pid, path in _bin_items(batches, bins):
             t0 = time.monotonic_ns()
             stage: dict = {}
@@ -560,8 +560,7 @@ def _read_split(
     task's own thread.  Beats both mmap (per-call mapping faults +
     munmap TLB shootdowns that IPI every busy core) and arrow's own
     buffered reads (chunked syscalls + an IO-thread hop per column
-    chunk); with the warm system-pool heap the fetch buffer is recycled
-    across files.  When ``stage`` is given the two walls are recorded
+    chunk).  When ``stage`` is given the two walls are recorded
     as `rfetch`/`rparse`, so scan contention stays attributable at high
     concurrency."""
     import pyarrow.parquet as pq
@@ -622,58 +621,6 @@ def _sort_by_unless_sorted(tbl: pa.Table, sort_cols: list[str]) -> pa.Table:
         elif col.null_count == 0 and len(col) <= 1:
             return tbl
     return tbl.sort_by(keys)
-
-
-def _tune_worker() -> None:
-    """Per-python-worker runtime tuning for encode tasks (idempotent —
-    workers are reused across tasks, so this runs cheaply per task).
-
-    * archive importers: ``drop_archive_importers`` on every task, so
-      the next task's ``importlib.invalidate_caches()`` re-reads no zip
-      directory.
-    * memory pool: every pyarrow allocation goes through glibc malloc
-      with trim and mmap disabled, so freed scan/sort/serialize buffers
-      stay on the worker's warm heap instead of being returned to the OS
-      and re-faulted by the next task (pyarrow's default jemalloc pool
-      re-faulted ~1 M pages per encode pass inside parquet serialization
-      alone).  The worker's RSS therefore stays
-      at its high-watermark (roughly the largest source file fetched +
-      its decoded table + the serialized output buffer, ~3x the biggest
-      file) for the life of the worker: size executor memory for
-      n_cores x that watermark.
-    * worker pinning: one worker per core removes CFS migration and
-      sibling-preemption noise, the local stand-in for the cgroup cpuset
-      a real cluster manager gives each executor.  Each worker CLAIMS a
-      unique core slot via an O_EXCL slot file (pid-modulo pins two busy
-      workers to one core on a pid collision); slots from dead workers
-      are reclaimed by liveness check, and when every slot is taken
-      (more workers than cores) the worker stays unpinned rather than
-      doubling up.
-    """
-    import pyarrow as _pa
-
-    drop_archive_importers()
-    # one IO thread per task to match the one compute thread: the
-    # default 8-thread IO pool per worker process oversubscribes the box
-    # during parquet scans
-    try:
-        _pa.set_io_thread_count(1)
-    except (AttributeError, ValueError):
-        pass
-    if not getattr(_tune_worker, "_pool_set", False):
-        # mallopt via ctypes so it works even when the MALLOC_* env vars
-        # weren't exported to the worker
-        try:
-            import ctypes
-
-            libc = ctypes.CDLL(None, use_errno=True)
-            libc.mallopt(-1, 1 << 30)  # M_TRIM_THRESHOLD: never trim
-            libc.mallopt(-3, 1 << 30)  # M_MMAP_THRESHOLD: never mmap
-        except (OSError, AttributeError):
-            pass
-        _pa.set_memory_pool(_pa.system_memory_pool())
-        _tune_worker._pool_set = True
-    _pin_to_slot()
 
 
 def _atomic_write_ipc(table: pa.Table, dest: str) -> None:
@@ -822,7 +769,6 @@ def _driver_report(summaries, t_entry, t_job, t_collect) -> dict:
                     "start_s": round((r["t_start_ns"] - t_job) / 1e9, 4),
                     "end_s": round((r["t_end_ns"] - t_job) / 1e9, 4),
                     "pid": r["worker_pid"],
-                    "slot": r["cpu_slot"],
                 }
                 for r in summaries
             ),
@@ -864,55 +810,11 @@ def _bin_items(batches: Iterator[pa.RecordBatch], bins: list[list]):
             yield from bins[b]
 
 
-_PIN_SLOT: list[int] | None = None
-
-
-def _pin_to_slot(slot_dir: str = "/dev/shm/nem_mms_pin") -> None:
-    """Claim a unique CPU slot for this (long-lived, reused) worker."""
-    global _PIN_SLOT
-    if _PIN_SLOT is not None:
-        return
-    ncpu = os.cpu_count() or 1
-    pid = os.getpid()
-    try:
-        os.makedirs(slot_dir, exist_ok=True)
-        for slot in range(ncpu):
-            path = os.path.join(slot_dir, str(slot))
-            for _attempt in (0, 1):
-                try:
-                    fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                    os.write(fd, str(pid).encode())
-                    os.close(fd)
-                    os.sched_setaffinity(0, {slot})
-                    _PIN_SLOT = [slot]
-                    return
-                except FileExistsError:
-                    try:
-                        with open(path) as f:
-                            owner = int(f.read().strip() or "0")
-                    except (OSError, ValueError):
-                        owner = 0
-                    if owner == pid:  # re-claimed after a re-exec
-                        os.sched_setaffinity(0, {slot})
-                        _PIN_SLOT = [slot]
-                        return
-                    if owner and os.path.exists(f"/proc/{owner}"):
-                        break  # live owner -> next slot
-                    # stale claim from a dead worker: remove and retry
-                    try:
-                        os.unlink(path)
-                    except OSError:
-                        break
-        _PIN_SLOT = []  # all slots taken: run unpinned, never double up
-    except (OSError, AttributeError):
-        _PIN_SLOT = []
-
-
 SUMMARY_SCHEMA = (
     "part_id int, n_rows long, n_blocks long, n_columns int, "
     "raw_bytes long, encoded_bytes long, fingerprint long, encode_ns long, "
     "stage_ns string, t_start_ns long, t_end_ns long, worker_pid int, "
-    "cpu_slot int, native_error string"
+    "native_error string"
 )
 
 # per-stage in-task timing keys (stage_ns JSON map), in nanoseconds:
@@ -1006,7 +908,7 @@ def _make_encoder(block_rows, block_bytes, key_col, blocks_dir, manifest_dir):
     and encodes them once.  Pure function of partition content."""
 
     def encode_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        _tune_worker()
+        drop_archive_importers()
         buf = [b for b in batches if b.num_rows]
         if not buf:
             return
@@ -1189,7 +1091,6 @@ def _encode_partition_table(
     # evidence of WHERE the 32-way wall goes
     t_end = time.monotonic_ns()
     t_start = t_start_ns if t_start_ns is not None else t0
-    slot = _PIN_SLOT[0] if _PIN_SLOT else -1
     return pa.RecordBatch.from_arrays(
         [
             pa.array([pid], type=pa.int32()),
@@ -1206,7 +1107,6 @@ def _encode_partition_table(
             pa.array([t_start], type=pa.int64()),
             pa.array([t_end], type=pa.int64()),
             pa.array([os.getpid()], type=pa.int32()),
-            pa.array([slot], type=pa.int32()),
             pa.array(
                 [None if native.lib is not None
                  else native.error or "native kernels not loaded"],
@@ -1216,8 +1116,7 @@ def _encode_partition_table(
         names=[
             "part_id", "n_rows", "n_blocks", "n_columns", "raw_bytes",
             "encoded_bytes", "fingerprint", "encode_ns", "stage_ns",
-            "t_start_ns", "t_end_ns", "worker_pid", "cpu_slot",
-            "native_error",
+            "t_start_ns", "t_end_ns", "worker_pid", "native_error",
         ],
     )
 

@@ -1,9 +1,11 @@
-"""SparkSession factory with scale-aware defaults.
+"""SparkSession factory.
 
-Local-mode sandbox stands in for a multi-executor cluster: partitioning,
-AQE and Arrow settings are chosen as they would be on a 1000-executor
-deployment (shuffle partitions ~ cores, AQE coalescing + skew-join on,
-Arrow batches bounded so encode UDF memory stays flat).
+Every ``spark.sql.*`` value set here differs from Spark's default
+(``tests/test_session.py`` checks it): shuffle partitions follow the
+session's core count, timestamps are UTC, and Arrow carries the Python
+boundary.  Scans fan out over the cores on their own: with
+``spark.sql.files.minPartitionNum`` unset, Spark sizes file splits from
+``defaultParallelism``.
 """
 
 from __future__ import annotations
@@ -17,15 +19,8 @@ def get_spark(
     master: str | None = None,
     app_name: str = "nem_mms_spark",
     shuffle_partitions: int | None = None,
-    arrow_batch_rows: int = 16384,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    # glibc malloc tuning inherited by the JVM and every python worker
-    # (must be set before the JVM spawns): keep large numpy temporaries on
-    # the reused heap instead of mmap/munmap churn — fresh-page faults
-    # under virtualization stall erratically and kill kernel scaling
-    os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", str(1 << 31))
-    os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", str(1 << 31))
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     n_threads = _parallelism_of(master, cpus)
@@ -35,26 +30,10 @@ def get_spark(
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.default.parallelism", str(n_threads))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_rows))
-        .config("spark.sql.parquet.compression.codec", "snappy")
-        # scan-parallelism floor (r7, guide §6): the testdata tables are
-        # single parquet files (lineitem sf1.0 = 126 MB), and the 128 MB
-        # maxPartitionBytes default turns every scan+aggregate into ONE
-        # task on a 32-core session.  minPartitionNum is the
-        # SCALE-ADAPTIVE knob: Spark derives the split size from
-        # input_bytes / cores (floored by openCostInBytes, capped by
-        # maxPartitionBytes), so small tables fan out across the session
-        # while terabyte scans keep their 128 MB splits — no constant
-        # tuned to either scale
-        .config("spark.sql.files.minPartitionNum", str(n_threads))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

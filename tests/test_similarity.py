@@ -243,3 +243,23 @@ def test_materialize_buckets_matches_catalyst_fold_column(spark):
         .collect()
     }
     assert mm == fold
+
+
+@pytest.mark.parametrize(
+    "bad, message",
+    [
+        ([5.0] * 5, "vector column 'embedding': row 1 has 5 values, expected 4"),
+        (None, "vector column 'embedding': row 1 is null"),
+    ],
+    ids=["ragged", "null"],
+)
+def test_bad_vector_raises_naming_column_and_row(spark, bad, message):
+    """A vector with no cosine raises a ValueError that names it, never
+    a numpy shape error and never silently re-cut rows."""
+    emb = spark.createDataFrame(
+        [(1, [1.0, 1.0, 1.0, 2.0]), (2, bad), (3, [7.0, 7.0, 7.0, 7.0])],
+        "vec_id long, embedding array<double>",
+    ).coalesce(1)
+    with pytest.raises(Exception, match=message) as err:
+        S.brute_force_topk(emb, [1.0, 0.0, 0.0, 0.0], k=2).collect()
+    assert "ValueError" in str(err.value)
