@@ -26,6 +26,17 @@ multiply+add; a BLAS matmul (pairwise summation, may differ within
 summation-ulp of zero) is deliberately reserved for the separate
 ``matmul`` engine path whose parity the ``banded_matmul_parity`` query
 measures.
+
+ONE SIGN KERNEL.  Every hyperplane sign in the engine is computed by
+`_signs(mat, planes, exact)`: ``exact=True`` runs the `_fold_dots` left
+fold (the oracle-parity bits: ``lsh_topk``'s in-task bucket prune,
+``multiprobe_buckets``' default margins, the ``"fold"`` band
+signatures); ``exact=False`` runs one BLAS ``mat @ planes.T`` (the
+engine path: ``materialize_buckets``, the probe set over a precomputed
+bucket column, the ``"matmul"`` band signatures).  `_pack` turns the
+sign bits into int64 bucket ids.  Query cosines all run through the
+one `_query_cosines` scan and every cosine top-k ends in `_top_k`;
+both banded operators group through `_band_buckets`.
 """
 
 from __future__ import annotations
@@ -132,6 +143,64 @@ def _gather_vectors(embeddings: DataFrame, id_col: str, vec_col: str):
     return ids, mat, norms
 
 
+def _query_cosines(
+    embeddings: DataFrame,
+    query: list[float],
+    id_col: str,
+    vec_col: str,
+    planes: np.ndarray | None = None,
+    probes=(),
+) -> DataFrame:
+    """(id, _cos) fold cosine of every row against ``query`` in one
+    zero-shuffle mapInArrow pass — the only query-cosine scan.  With
+    ``planes``, each batch first keeps only the rows whose fold-order
+    sign bucket is in ``probes`` (``lsh_topk``'s bucket-pruned scan).
+    Dot and norm are the oracle's left folds, so the cosines are its
+    bits; qn, the query norm, is a driver-side np.sum constant."""
+    import pyarrow as pa
+
+    q = np.asarray(query, dtype=np.float64)
+    qn = float(np.sqrt(np.sum(q**2)))
+    wt = np.ascontiguousarray(q[:, None])
+    probe_arr = np.asarray(sorted(probes), dtype=np.int64)
+
+    def scan(batches):
+        drop_archive_importers()
+        for batch in batches:
+            lv = batch.column(vec_col)
+            if len(lv) == 0:
+                continue
+            mat = _vec_matrix(lv, len(q), vec_col)
+            ids = batch.column(id_col)
+            if planes is not None:
+                bucket = _pack(_signs(mat, planes, True))
+                keep = np.flatnonzero(np.isin(bucket, probe_arr))
+                if len(keep) == 0:
+                    continue
+                mat = np.ascontiguousarray(mat[keep])
+                ids = ids.take(pa.array(keep))
+            dot = _fold_dots(mat, wt)[:, 0]
+            den = np.sqrt(_fold_pair_dots(mat, mat)) * qn
+            yield pa.RecordBatch.from_arrays(
+                [ids, pa.array(dot / den, type=pa.float64())],
+                names=[id_col, "_cos"],
+            )
+
+    return embeddings.select(id_col, vec_col).mapInArrow(
+        scan, f"{id_col} long, _cos double"
+    )
+
+
+def _top_k(scored: DataFrame, k: int, keys: list[str]) -> DataFrame:
+    """The k highest ``_cos`` rows (ties broken by ``keys`` ascending),
+    rounded to 4 places as ``cosine``; orderBy+limit is TakeOrdered."""
+    return (
+        scored.orderBy(F.desc("_cos"), *keys)
+        .limit(k)
+        .select(*keys, F.round("_cos", 4).alias("cosine"))
+    )
+
+
 def brute_force_topk(
     embeddings: DataFrame,
     query: list[float],
@@ -139,44 +208,9 @@ def brute_force_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Exact cosine top-k (deterministic ties via id).
-
-    r7: the per-row interpreted Catalyst folds became one mapInArrow
-    pass through the numpy fold kernel — identical bits (dot and norm
-    are the same left folds; qn, the query norm, is the same
-    driver-side np.sum constant as before), identical ordering and
-    rounding, zero shuffle (orderBy+limit is TakeOrdered)."""
-    q = np.ascontiguousarray(np.asarray(query, dtype=np.float64))
-    qn = float(np.sqrt(np.sum(np.asarray(query, dtype=np.float64) ** 2)))
-    dim = len(q)
-
-    import pyarrow as pa
-
-    def score(batches):
-        drop_archive_importers()
-        wt = np.ascontiguousarray(q[:, None])
-        for batch in batches:
-            lv = batch.column(vec_col)
-            if len(lv) == 0:
-                continue
-            mat = _vec_matrix(lv, dim, vec_col)
-            dot = _fold_dots(mat, wt)[:, 0]
-            den = np.sqrt(_fold_pair_dots(mat, mat)) * qn
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column(id_col),
-                    pa.array(dot / den, type=pa.float64()),
-                ],
-                names=[id_col, "_cos"],
-            )
-
-    scored = embeddings.select(id_col, vec_col).mapInArrow(
-        score, f"{id_col} long, _cos double"
-    )
-    return (
-        scored.orderBy(F.desc("_cos"), F.col(id_col))
-        .limit(k)
-        .select(id_col, F.round("_cos", 4).alias("cosine"))
+    """Exact cosine top-k (deterministic ties via id)."""
+    return _top_k(
+        _query_cosines(embeddings, query, id_col, vec_col), k, [id_col]
     )
 
 
@@ -199,46 +233,42 @@ def lsh_bucket_col(vec_col, planes: np.ndarray):
     return bucket
 
 
-def _fold_sigs(mat: np.ndarray, planes: np.ndarray) -> np.ndarray:
-    """Fold-order sign buckets for an (n, dim) matrix: bit i set iff the
-    left-fold dot with plane i is > 0 (bit-exact with lsh_bucket_col)."""
+def _signs(mat: np.ndarray, planes: np.ndarray, exact: bool) -> np.ndarray:
+    """(n, n_planes) bool: bit i is set iff the row's dot with plane i is
+    > 0 — every hyperplane sign in the engine.  ``exact``: the
+    `_fold_dots` left fold, bit-exact with ``lsh_bucket_col`` and the SQL
+    oracle; otherwise one BLAS matmul (pairwise summation: a sign can
+    differ only when a dot lands within summation-ulp of zero)."""
+    return _margins(mat, planes, exact) > 0
+
+
+def _margins(mat: np.ndarray, planes: np.ndarray, exact: bool) -> np.ndarray:
+    """The (n, n_planes) float64 dots behind `_signs`."""
     wt = np.ascontiguousarray(planes.astype(np.float64).T)
-    dots = _fold_dots(mat, wt)
-    pows = 1 << np.arange(planes.shape[0], dtype=np.int64)
-    return (dots > 0).astype(np.int64) @ pows
+    return _fold_dots(mat, wt) if exact else mat @ wt
+
+
+def _pack(bits: np.ndarray) -> np.ndarray:
+    """Sign bits (..., b) -> int64 bucket ids: bit i weighs 2**i."""
+    return bits.astype(np.int64) @ (
+        1 << np.arange(bits.shape[-1], dtype=np.int64)
+    )
 
 
 def multiprobe_buckets(
-    query: list[float], planes: np.ndarray, n_probes: int
+    query: list[float], planes: np.ndarray, n_probes: int, exact: bool = True
 ) -> list[int]:
     """Probe sequence: the query's exact bucket plus single-bit flips of
     the ``n_probes`` planes with the smallest |margin| (the planes the
     query sits closest to — where a true neighbor most likely landed on
-    the other side).  r7: the margins are evaluated with the numpy fold
-    kernel — the same float64 values, bit-for-bit, as the Catalyst fold
-    expressions this used to run as a one-row Spark job (and as the SQL
-    replication's list_dot_product), so the probe set is unchanged while
-    no Spark job runs at all."""
+    the other side; plane index breaks ties).  The margins come from
+    `_signs`' kernel in the same mode as the rows' buckets: ``exact`` for
+    the fold buckets ``lsh_topk`` derives in-task (and the SQL
+    replication's list_dot_product), ``exact=False`` for a
+    ``materialize_buckets`` column.  No Spark job runs."""
     q = np.asarray(query, dtype=np.float64)[None, :]
-    wt = np.ascontiguousarray(planes.astype(np.float64).T)
-    dots = _fold_dots(q, wt)[0]
-    pows = 1 << np.arange(planes.shape[0], dtype=np.int64)
-    sig = int(((dots > 0).astype(np.int64) * pows).sum())
-    order = sorted(range(len(planes)), key=lambda i: (abs(dots[i]), i))
-    return [sig] + [sig ^ (1 << i) for i in order[:n_probes]]
-
-
-def multiprobe_buckets_np(
-    query: list[float], planes: np.ndarray, n_probes: int
-) -> list[int]:
-    """Matmul twin of ``multiprobe_buckets`` for the engine path: BLAS
-    dots (pairwise summation), same probe-selection rule (smallest
-    |margin| planes first, plane index as tiebreak).  Signs match the
-    fold except when a dot product sits within float-summation ulp of
-    zero — measure-zero for real embeddings (parity-tested)."""
-    q = np.asarray(query, dtype=np.float64)
-    dots = planes.astype(np.float64) @ q
-    sig = int(np.sum((dots > 0) * (1 << np.arange(len(planes), dtype=np.int64))))
+    dots = _margins(q, planes, exact)[0]
+    sig = int(_pack(dots > 0))
     order = sorted(range(len(planes)), key=lambda i: (abs(dots[i]), i))
     return [sig] + [sig ^ (1 << i) for i in order[:n_probes]]
 
@@ -268,14 +298,12 @@ def materialize_buckets(
 
     def tag(batches):
         drop_archive_importers()
-        weights = np.ascontiguousarray(planes.astype(np.float64).T)
-        pows = 1 << np.arange(n_planes, dtype=np.int64)
         for batch in batches:
             lv = batch.column(vec_col)
             if len(lv) == 0:
                 continue
             mat = _vec_matrix(lv, dim, vec_col)
-            bucket = ((mat @ weights) > 0).astype(np.int64) @ pows
+            bucket = _pack(_signs(mat, planes, False))
             yield batch.append_column(
                 bucket_col, pa.array(bucket, type=pa.int64())
             )
@@ -314,49 +342,14 @@ def lsh_topk(
     """
     planes = hyperplanes(len(query), n_planes, seed)
     if precomputed is not None:
-        probes = multiprobe_buckets_np(query, planes, n_probes)
+        probes = multiprobe_buckets(query, planes, n_probes, exact=False)
         cand = precomputed.filter(F.col(bucket_col).isin(probes))
         return brute_force_topk(cand, query, k, id_col, vec_col)
     probes = multiprobe_buckets(query, planes, n_probes)
-    probe_arr = np.asarray(sorted(probes), dtype=np.int64)
-    q = np.ascontiguousarray(np.asarray(query, dtype=np.float64))
-    qn = float(np.sqrt(np.sum(np.asarray(query, dtype=np.float64) ** 2)))
-    dim = len(q)
-
-    import pyarrow as pa
-
-    def scan(batches):
-        drop_archive_importers()
-        wt = np.ascontiguousarray(q[:, None])
-        for batch in batches:
-            lv = batch.column(vec_col)
-            if len(lv) == 0:
-                continue
-            mat = _vec_matrix(lv, dim, vec_col)
-            bucket = _fold_sigs(mat, planes)
-            keep = np.flatnonzero(np.isin(bucket, probe_arr))
-            if len(keep) == 0:
-                continue
-            sub = np.ascontiguousarray(mat[keep])
-            dot = _fold_dots(sub, wt)[:, 0]
-            den = np.sqrt(_fold_pair_dots(sub, sub)) * qn
-            ids = batch.column(id_col).to_numpy(zero_copy_only=False)[keep]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ids, type=pa.int64()),
-                    pa.array(dot / den, type=pa.float64()),
-                ],
-                names=[id_col, "_cos"],
-            )
-
-    scored = embeddings.select(id_col, vec_col).mapInArrow(
-        scan, f"{id_col} long, _cos double"
+    scored = _query_cosines(
+        embeddings, query, id_col, vec_col, planes, probes
     )
-    return (
-        scored.orderBy(F.desc("_cos"), F.col(id_col))
-        .limit(k)
-        .select(id_col, F.round("_cos", 4).alias("cosine"))
-    )
+    return _top_k(scored, k, [id_col])
 
 
 def banded_candidate_pairs(
@@ -385,14 +378,12 @@ def banded_candidate_pairs(
     dropped bucket still pair through their other bands.  Buckets of
     size 1 are dropped too (they can produce no pair).
 
-    ``method``: "fold" (default) computes signatures with the numpy fold
-    kernel — bit-exact with the Catalyst fold / DuckDB list_dot_product
-    addition order (r7: this replaced the 64x posexplode + broadcast
-    join + two-shuffle plan with one zero-shuffle mapInArrow pass;
-    identical signs by IEEE-754 determinism); "matmul" is the ENGINE
-    path — one BLAS matmul per batch (pairwise summation, can differ
-    within summation-ulp of zero; parity pinned by the
-    ``banded_matmul_parity`` oracle row).
+    ``method``: "fold" (default) takes the signatures from `_signs`'
+    exact fold — bit-exact with the Catalyst fold / DuckDB
+    list_dot_product addition order; "matmul" is the ENGINE path — one
+    BLAS matmul per batch (pairwise summation, can differ within
+    summation-ulp of zero; parity pinned by the ``banded_matmul_parity``
+    oracle row).  Any other value raises ValueError.
 
     Pair generation (r7): ONE shuffle of (id, band, sig) rows — three
     ints per row, never a vector — into a groupBy that packs each band
@@ -411,46 +402,12 @@ def banded_candidate_pairs(
 
     Returns (vec_a, vec_b) with vec_a < vec_b (distinct iff ``distinct``).
     """
-    planes = hyperplanes(
-        _dim_of(embeddings, vec_col), n_bands * band_bits, seed
-    )
-    sig_fn = _band_sigs_matmul if method == "matmul" else _band_sigs
-    tagged = sig_fn(
-        embeddings, planes, n_bands, band_bits, id_col, vec_col
-    )
-    raw = _bucket_pairs(tagged, id_col, max_bucket)
-    return raw.distinct() if distinct else raw
-
-
-def _bucket_pairs(
-    tagged: DataFrame, id_col: str, max_bucket: int | None
-) -> DataFrame:
-    """(band, sig) buckets -> raw candidate pairs (vec_a < vec_b, one
-    row per colliding band).  One shuffle (the groupBy of 3-int sig
-    rows); the quadratic enumeration runs vectorized in-task over each
-    packed bucket's sorted-id upper triangle.
-
-    The shuffle is an EXPLICIT repartition by the bucket key: the sig
-    rows are byte-tiny (three ints per row), so AQE's size-based
-    coalescing would fuse them into ONE post-shuffle partition — and
-    everything downstream of this exploding operator (pair enumeration,
-    cosines, dedup) would run on a single core (measured 26 s vs ~2 s at
-    sf1.0).  An explicit partition count is exempt from AQE coalescing,
-    and the groupBy reuses the partitioning (no second exchange)."""
     import pyarrow as pa
 
-    par = tagged.sparkSession.sparkContext.defaultParallelism
-    grouped = (
-        tagged.repartition(par, "band", "sig")
-        .groupBy("band", "sig")
-        .agg(F.collect_list(id_col).alias("_ids"))
+    grouped = _band_buckets(
+        embeddings, n_bands, band_bits, seed, max_bucket, id_col, vec_col,
+        method,
     )
-    sz = F.size("_ids")
-    cond = sz >= 2
-    if max_bucket is not None:
-        cond = cond & (sz <= max_bucket)
-    grouped = grouped.filter(cond).select("_ids")
-
     out_schema = pa.schema(
         [pa.field("vec_a", pa.int64()), pa.field("vec_b", pa.int64())]
     )
@@ -472,7 +429,8 @@ def _bucket_pairs(
                         schema=out_schema,
                     )
 
-    return grouped.mapInArrow(enum, "vec_a long, vec_b long")
+    raw = grouped.mapInArrow(enum, "vec_a long, vec_b long")
+    return raw.distinct() if distinct else raw
 
 
 _MAX_CHUNK_PAIRS = 4 << 20
@@ -499,6 +457,53 @@ def _triangle_chunks(b: int, max_pairs: int = _MAX_CHUNK_PAIRS):
         yield ii + s, kk
 
 
+def _band_buckets(
+    embeddings: DataFrame,
+    n_bands: int,
+    band_bits: int,
+    seed: int,
+    max_bucket: int | None,
+    id_col: str,
+    vec_col: str,
+    method: str,
+    dim: int | None = None,
+) -> DataFrame:
+    """The packed (band, sig) buckets both banded operators share: one
+    ``_ids`` list per bucket of 2 <= size <= ``max_bucket`` members.
+    ``dim`` None reads it from one row (`_dim_of`).
+
+    One shuffle (the groupBy of 3-int sig rows), and it is an EXPLICIT
+    repartition by the bucket key: the sig rows are byte-tiny, so AQE's
+    size-based coalescing would fuse them into ONE post-shuffle
+    partition — and everything downstream of this exploding operator
+    (pair enumeration, cosines, dedup) would run on a single core
+    (measured 26 s vs ~2 s at sf1.0).  An explicit partition count is
+    exempt from AQE coalescing, and the groupBy reuses the partitioning
+    (no second exchange)."""
+    if method not in ("fold", "matmul"):
+        raise ValueError(
+            f"method must be 'fold' or 'matmul', got {method!r}"
+        )
+    if dim is None:
+        dim = _dim_of(embeddings, vec_col)
+    planes = hyperplanes(dim, n_bands * band_bits, seed)
+    tagged = _band_sigs(
+        embeddings, planes, n_bands, band_bits, id_col, vec_col,
+        exact=method == "fold",
+    )
+    par = tagged.sparkSession.sparkContext.defaultParallelism
+    grouped = (
+        tagged.repartition(par, "band", "sig")
+        .groupBy("band", "sig")
+        .agg(F.collect_list(id_col).alias("_ids"))
+    )
+    sz = F.size("_ids")
+    cond = sz >= 2
+    if max_bucket is not None:
+        cond = cond & (sz <= max_bucket)
+    return grouped.filter(cond).select("_ids")
+
+
 def _band_sigs(
     embeddings: DataFrame,
     planes: np.ndarray,
@@ -506,21 +511,16 @@ def _band_sigs(
     band_bits: int,
     id_col: str,
     vec_col: str,
+    exact: bool,
 ) -> DataFrame:
-    """(id, band, sig) band signatures, ORACLE-PARITY path: one numpy
-    fold-kernel pass per Arrow batch — zero shuffle, zero explode.
-
-    Bit-exactness contract with the SQL oracle's list_dot_product fold
-    (and with the posexplode + ordered-partial-sum plan this replaced in
-    r7): `_fold_dots` adds one rounded float64 product per dimension in
-    ascending dimension order from 0.0 — the identical IEEE-754
-    operation sequence as the left fold, so every sign bit equals the
-    oracle's bit-for-bit.  The old plan achieved the same sequence by
-    64x-exploding the table through a broadcast join and two shuffles;
-    the sequence, not the plan, is the contract."""
+    """(id, band, sig) band signatures: one `_signs` pass per Arrow
+    batch — zero shuffle, zero explode.  ``exact`` gives the fold-order
+    signs, bit-exact with the SQL oracle's list_dot_product fold;
+    otherwise one BLAS matmul per batch, whose parity the
+    ``banded_matmul_parity`` oracle row pins."""
     import pyarrow as pa
 
-    n_planes, dim = planes.shape
+    dim = planes.shape[1]
     out_schema = pa.schema(
         [
             pa.field(id_col, pa.int64()),
@@ -532,8 +532,6 @@ def _band_sigs(
 
     def sigs(batches):
         drop_archive_importers()
-        wt = np.ascontiguousarray(planes.astype(np.float64).T)
-        pows = 1 << np.arange(band_bits, dtype=np.int64)
         bands = np.arange(n_bands, dtype=np.int32)
         for batch in batches:
             lv = batch.column(vec_col)
@@ -541,65 +539,8 @@ def _band_sigs(
             if n == 0:
                 continue
             ids = batch.column(id_col).to_numpy(zero_copy_only=False)
-            mat = _vec_matrix(lv, dim, vec_col)
-            bits = _fold_dots(mat, wt) > 0  # n x n_planes
-            sig = (
-                bits.reshape(n, n_bands, band_bits).astype(np.int64) @ pows
-            )  # n x n_bands
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.repeat(ids, n_bands), type=pa.int64()),
-                    pa.array(np.tile(bands, n), type=pa.int32()),
-                    pa.array(sig.reshape(-1), type=pa.int64()),
-                ],
-                schema=out_schema,
-            )
-
-    return embeddings.select(id_col, vec_col).mapInArrow(sigs, spark_schema)
-
-
-def _band_sigs_matmul(
-    embeddings: DataFrame,
-    planes: np.ndarray,
-    n_bands: int,
-    band_bits: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """(id, band, sig) band signatures, ENGINE path: one BLAS matmul per
-    Arrow batch against the (dim x n_planes) plane matrix computes every
-    sign in a single zero-shuffle scan.  Signs can differ from the fold
-    path only when a dot product lands within summation-ulp of zero
-    (parity-tested on the fixture and pinned by the
-    ``banded_matmul_parity`` oracle row)."""
-    import pyarrow as pa
-
-    n_planes, dim = planes.shape
-    out_schema = pa.schema(
-        [
-            pa.field(id_col, pa.int64()),
-            pa.field("band", pa.int32()),
-            pa.field("sig", pa.int64()),
-        ]
-    )
-    spark_schema = f"{id_col} long, band int, sig long"
-
-    def sigs(batches):
-        drop_archive_importers()
-        weights = np.ascontiguousarray(planes.astype(np.float64).T)
-        pows = 1 << np.arange(band_bits, dtype=np.int64)
-        bands = np.arange(n_bands, dtype=np.int32)
-        for batch in batches:
-            lv = batch.column(vec_col)
-            n = len(lv)
-            if n == 0:
-                continue
-            ids = batch.column(id_col).to_numpy(zero_copy_only=False)
-            mat = _vec_matrix(lv, dim, vec_col)
-            bits = (mat @ weights) > 0  # n x n_planes
-            sig = (
-                bits.reshape(n, n_bands, band_bits).astype(np.int64) @ pows
-            )  # n x n_bands
+            bits = _signs(_vec_matrix(lv, dim, vec_col), planes, exact)
+            sig = _pack(bits.reshape(n, n_bands, band_bits))  # n x n_bands
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array(np.repeat(ids, n_bands), type=pa.int64()),
@@ -653,26 +594,11 @@ def banded_cosine_topk(
     small GEMM per bucket plus ~k fold cosines per bucket."""
     import pyarrow as pa
 
-    planes = hyperplanes(
-        _dim_of(embeddings, vec_col), n_bands * band_bits, seed
-    )
-    sig_fn = _band_sigs_matmul if method == "matmul" else _band_sigs
-    tagged = sig_fn(
-        embeddings, planes, n_bands, band_bits, id_col, vec_col
-    )
-    par = tagged.sparkSession.sparkContext.defaultParallelism
-    grouped = (
-        tagged.repartition(par, "band", "sig")
-        .groupBy("band", "sig")
-        .agg(F.collect_list(id_col).alias("_ids"))
-    )
-    sz = F.size("_ids")
-    cond = sz >= 2
-    if max_bucket is not None:
-        cond = cond & (sz <= max_bucket)
-    grouped = grouped.filter(cond).select("_ids")
-
     ids_g, mat_g, norms_g = _gather_vectors(embeddings, id_col, vec_col)
+    grouped = _band_buckets(
+        embeddings, n_bands, band_bits, seed, max_bucket, id_col, vec_col,
+        method, dim=mat_g.shape[1],
+    )
     bc = embeddings.sparkSession.sparkContext.broadcast(
         (ids_g, mat_g, norms_g)
     )
@@ -744,12 +670,7 @@ def banded_cosine_topk(
     local = grouped.mapInArrow(
         bucket_topk, "vec_a long, vec_b long, _cos double"
     )
-    return (
-        local.distinct()
-        .orderBy(F.desc("_cos"), "vec_a", "vec_b")
-        .limit(k)
-        .select("vec_a", "vec_b", F.round("_cos", 4).alias("cosine"))
-    )
+    return _top_k(local.distinct(), k, ["vec_a", "vec_b"])
 
 
 def exact_pairs_topk(
@@ -881,11 +802,7 @@ def exact_pairs_topk(
     local = bp.mapInArrow(
         gram_topk, schema="vec_a long, vec_b long, _cos double"
     )
-    return (
-        local.orderBy(F.desc("_cos"), "vec_a", "vec_b")
-        .limit(k)
-        .select("vec_a", "vec_b", F.round("_cos", 4).alias("cosine"))
-    )
+    return _top_k(local, k, ["vec_a", "vec_b"])
 
 
 def avg_norm_by_label(embeddings: DataFrame) -> DataFrame:

@@ -416,10 +416,24 @@ def lang_id_accuracy(spark, sf_dir):
     )
 
 
+def _query_vector(sf_dir: str) -> list[float]:
+    """The ANN queries' query vector: row vec_id == 0's embedding, read
+    on the driver with pyarrow (no Spark job).  ``as_py`` widens float32
+    to Python floats exactly as a collected Row does."""
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(
+        f"{sf_dir}/embeddings.parquet",
+        columns=["embedding"],
+        filters=[("vec_id", "=", 0)],
+    )
+    return t.column("embedding")[0].as_py()
+
+
 def ann_topk_cosine(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") == 0).select("embedding").collect()[0][0]
-    return similarity.brute_force_topk(emb, list(q), k=10).select("vec_id")
+    q = _query_vector(sf_dir)
+    return similarity.brute_force_topk(emb, q, k=10).select("vec_id")
 
 
 def embedding_norms_by_label(spark, sf_dir):
@@ -464,8 +478,8 @@ def simhash_fingerprints(spark, sf_dir):
 
 def ann_lsh_topk(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") == 0).select("embedding").collect()[0][0]
-    return similarity.lsh_topk(emb, list(q), k=10, n_planes=6).select("vec_id")
+    q = _query_vector(sf_dir)
+    return similarity.lsh_topk(emb, q, k=10, n_planes=6).select("vec_id")
 
 
 def ann_lsh_recall(spark, sf_dir):
@@ -482,9 +496,7 @@ def ann_lsh_recall(spark, sf_dir):
     (~2x the random baseline — the signal the contract protects).  On
     clustered real-world embeddings the same probe set recalls far more."""
     emb = _t(spark, sf_dir, "embeddings")
-    q = list(
-        emb.filter(F.col("vec_id") == 0).select("embedding").collect()[0][0]
-    )
+    q = _query_vector(sf_dir)
     floor = 5
     brute = similarity.brute_force_topk(emb, q, k=10).select("vec_id")
     lsh = similarity.lsh_topk(
@@ -571,14 +583,15 @@ def ann_lsh_topk_precomputed(spark, sf_dir):
     """The PRODUCTION ANN path under the hard oracle signal (round-5
     verdict item 4): buckets come from ``materialize_buckets`` (one
     zero-shuffle mapInArrow numpy matmul at ingest), the probe set from
-    the no-Spark numpy twin, and the result must hash-match the same
+    ``multiprobe_buckets(exact=False)`` (the same matmul margins, no
+    Spark job), and the result must hash-match the same
     DuckDB replication as ``ann_lsh_topk`` — proving the persisted-bucket
     engine path returns exactly what the oracle-parity fold path does."""
     emb = _t(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") == 0).select("embedding").collect()[0][0]
+    q = _query_vector(sf_dir)
     pre = similarity.materialize_buckets(emb, n_planes=6)
     return similarity.lsh_topk(
-        emb, list(q), k=10, n_planes=6, precomputed=pre
+        emb, q, k=10, n_planes=6, precomputed=pre
     ).select("vec_id")
 
 

@@ -404,10 +404,16 @@ def test_banded_parity_fallback_on_sig_divergence(
     report the TRUE counts for the perturbed engine path, not zero."""
     from nem_mms_spark import queries as Q
 
-    orig = S._band_sigs_matmul
+    orig = S._band_sigs
 
-    def perturbed(embeddings, planes, n_bands, band_bits, id_col, vec_col):
-        out = orig(embeddings, planes, n_bands, band_bits, id_col, vec_col)
+    def perturbed(
+        embeddings, planes, n_bands, band_bits, id_col, vec_col, exact
+    ):
+        out = orig(
+            embeddings, planes, n_bands, band_bits, id_col, vec_col, exact
+        )
+        if exact:
+            return out
         row00 = (F.col(id_col) == 0) & (F.col("band") == 0)
         if perturbation == "drop":
             return out.filter(~row00)
@@ -415,7 +421,7 @@ def test_banded_parity_fallback_on_sig_divergence(
             "sig", F.when(row00, F.col("sig") + 1).otherwise(F.col("sig"))
         )
 
-    monkeypatch.setattr(S, "_band_sigs_matmul", perturbed)
+    monkeypatch.setattr(S, "_band_sigs", perturbed)
     res = Q.banded_matmul_parity(spark, SF_SMALL).collect()[0]
     fold, mm = _pair_sets(spark)
     assert res.n_pairs == len(fold)

@@ -1,5 +1,6 @@
 """Similarity-family contracts: exact baseline coverage, bucket-size cap,
-matmul/fold signature parity, persisted-bucket API, row-size bounds."""
+matmul/fold signature parity, persisted-bucket API, row-size bounds,
+band-method validation and the embedding queries' Spark job counts."""
 
 from __future__ import annotations
 
@@ -78,16 +79,15 @@ def test_band_sigs_matmul_matches_fold(spark):
     oracle-parity Catalyst-fold signatures row for row."""
     emb = _emb(spark)
     planes = S.hyperplanes(64, 8 * 6, seed=11)
-    fold = {
-        (r["vec_id"], r["band"], r["sig"])
-        for r in S._band_sigs(emb, planes, 8, 6, "vec_id", "embedding").collect()
-    }
-    mm = {
-        (r["vec_id"], r["band"], r["sig"])
-        for r in S._band_sigs_matmul(
-            emb, planes, 8, 6, "vec_id", "embedding"
-        ).collect()
-    }
+    fold, mm = (
+        {
+            (r["vec_id"], r["band"], r["sig"])
+            for r in S._band_sigs(
+                emb, planes, 8, 6, "vec_id", "embedding", exact=exact
+            ).collect()
+        }
+        for exact in (True, False)
+    )
     assert mm == fold
 
 
@@ -263,3 +263,43 @@ def test_bad_vector_raises_naming_column_and_row(spark, bad, message):
     with pytest.raises(Exception, match=message) as err:
         S.brute_force_topk(emb, [1.0, 0.0, 0.0, 0.0], k=2).collect()
     assert "ValueError" in str(err.value)
+
+
+@pytest.mark.parametrize(
+    "operator", [S.banded_candidate_pairs, S.banded_cosine_topk]
+)
+def test_unknown_band_method_raises(spark, operator):
+    """A misspelt ``method`` must not silently run the fold path (which
+    would make ``banded_matmul_parity`` compare fold with fold)."""
+    with pytest.raises(ValueError, match="'Matmul'"):
+        operator(_emb(spark), seed=11, method="Matmul").collect()
+
+
+# Spark jobs each embedding query submits at SF_SMALL, build and collect
+# together: every one is a fixed cost on the query suite, so a change
+# that adds a job must show up here.
+_QUERY_JOBS = {
+    "ann_topk_cosine": 2,
+    "ann_lsh_topk": 2,
+    "ann_lsh_recall": 3,
+    "ann_lsh_topk_precomputed": 3,
+    "embedding_cosine_pairs": 5,
+    "embedding_pairs_recall": 11,
+    "banded_matmul_parity": 8,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_QUERY_JOBS))
+def test_embedding_query_job_count(spark, name):
+    from nem_mms_spark import queries as Q
+
+    sc = spark.sparkContext
+    group = f"jobs-{name}"
+    try:
+        sc.setJobGroup(group, name)
+        Q.QUERIES[name](spark, SF_SMALL).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs == _QUERY_JOBS[name]

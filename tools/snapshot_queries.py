@@ -8,7 +8,9 @@ Collects each query's rows and canonicalizes them losslessly (floats via
 repr -> full precision, bytes hex, rows sorted), so two snapshots are
 equal iff the driver's hash check would also see identical results.
 Run once at a known-good commit and again after an optimization; any
-diff means the rewrite changed what the query computes.
+diff means the rewrite changed what the query computes.  The session is
+the engine's own ``get_spark()`` (``SPARK_MASTER`` / ``SPARK_GRAFT_CPUS``
+size it), so a change to its settings is inside what the snapshot sees.
 """
 
 from __future__ import annotations
@@ -31,17 +33,10 @@ def main() -> None:
     sf_dir, out_path = sys.argv[1], sys.argv[2]
     only = set(sys.argv[3:])
 
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entry
+    from nem_mms_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("snapshot")
-        .config("spark.driver.memory", "48g")
-        .config("spark.sql.shuffle.partitions", "64")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="snapshot")
     spark.sparkContext.setLogLevel("ERROR")
     snap = {}
     for name, fn in entry.queries().items():
