@@ -14,7 +14,8 @@
  *
  * Kernels: nem_fsst_encode (greedy matcher), nem_fsst_repair (trainer
  * merge loop), nem_pack_uints / nem_unpack_uints, nem_wd_factorize
- * (WORD_DICT tokenize + dictionary + counts), nem_free.
+ * (WORD_DICT tokenize + dictionary + counts), nem_wd_split_tiers /
+ * nem_wd_unpack_tiers (WORD_DICT's tiered rank streams), nem_free.
  *
  * Everything is plain C99 on public knowledge (FSST per Boncz/Neumann/
  * Leis VLDB'20; LSB-first bit-packing).  Callers pass output and scratch
@@ -287,9 +288,10 @@ static inline uint64_t wd_hash(const uint8_t *base, const uint8_t *p,
  * data/offsets: n strings, offsets[0] == 0
  * codes:    offsets[n] int64 out (worst case: one byte per token)
  * counts:   n int64 out, tokens per string
- * udata/uoffsets: out, heap buffers the kernel allocates and the caller
- *           releases with nem_free: the distinct tokens concatenated, and
- *           n_uniq + 1 offsets into them
+ * udata/uoffsets/hist: out, heap buffers the kernel allocates and the
+ *           caller releases with nem_free: the distinct tokens
+ *           concatenated, n_uniq + 1 offsets into them, and each token's
+ *           count (WORD_DICT ranks by it)
  * n_uniq:   1 int64 out, number of distinct tokens
  * returns the number of tokens, or -1 when an allocation failed (then
  * nothing is left allocated)
@@ -297,14 +299,15 @@ static inline uint64_t wd_hash(const uint8_t *base, const uint8_t *p,
 int64_t nem_wd_factorize(const uint8_t *data, const int64_t *offsets,
                          int64_t n, int64_t *codes, int64_t *counts,
                          uint8_t **udata_out, int64_t **uoffsets_out,
-                         int64_t *n_uniq)
+                         int64_t **hist_out, int64_t *n_uniq)
 {
     int64_t cap = 1024, nu = 0, t = 0;
     int64_t ucap = 1 << 16, ocap = 1024; /* dictionary bytes, offsets */
     uint64_t *slot = calloc((size_t)cap, sizeof *slot);
     uint8_t *udata = malloc((size_t)ucap);
     int64_t *uoffsets = malloc((size_t)ocap * sizeof *uoffsets);
-    if (!slot || !udata || !uoffsets)
+    int64_t *hist = malloc((size_t)ocap * sizeof *hist);
+    if (!slot || !udata || !uoffsets || !hist)
         goto fail;
     uoffsets[0] = 0;
     for (int64_t i = 0; i < n; i++) {
@@ -359,10 +362,15 @@ int64_t nem_wd_factorize(const uint8_t *data, const int64_t *offsets,
                         if (!g)
                             goto fail;
                         uoffsets = g;
+                        g = realloc(hist, (size_t)ocap * sizeof *g);
+                        if (!g)
+                            goto fail;
+                        hist = g;
                     }
                     memcpy(udata + u0, tok, (size_t)len);
                     uoffsets[nu + 1] = u0 + len;
                     slot[s] = tag | (uint64_t)(nu + 1);
+                    hist[nu] = 1;
                     codes[t++] = nu++;
                     break;
                 }
@@ -371,6 +379,7 @@ int64_t nem_wd_factorize(const uint8_t *data, const int64_t *offsets,
                     int64_t u0 = uoffsets[id];
                     if (uoffsets[id + 1] - u0 == len
                         && memcmp(udata + u0, tok, (size_t)len) == 0) {
+                        hist[id]++;
                         codes[t++] = id;
                         break;
                     }
@@ -403,16 +412,98 @@ int64_t nem_wd_factorize(const uint8_t *data, const int64_t *offsets,
     free(slot);
     *udata_out = udata;
     *uoffsets_out = uoffsets;
+    *hist_out = hist;
     *n_uniq = nu;
     return t;
 fail:
     free(slot);
     free(udata);
     free(uoffsets);
+    free(hist);
     return -1;
 }
 
-/* Releases a buffer a kernel allocated (nem_wd_factorize's dictionary). */
+/* WORD_DICT's rank streams.  There are 1 or 2 tiers.  Tier j stores its
+ * tokens' ranks verbatim at widths[j] bits, in token order; with two
+ * tiers, tier 0 holds the ranks below 2^widths[0], and a selector of one
+ * bit per token (set: tier 1) comes first.  Every stream is LSB-first and
+ * starts on a byte.  Neither kernel branches on a token's tier: a
+ * selector bit is a coin flip on web text (~70/30), and a branch on it
+ * cost 2.5x the flat unpack.
+ *
+ * nem_wd_split_tiers (twin: worddict._split_tiers_numpy) maps each token
+ * to its rank, rank_of[codes[i]], appends it to t0 when below 2^w0 and
+ * to t1 otherwise, and sets selector bit i for a tier-1 token.  Each rank
+ * is stored to both arrays and only one count advances.  sel must be
+ * zeroed and hold (tn + 7) / 8 bytes; t0 and t1 hold tn values each.
+ * nem_pack_uints then packs each tier.  Returns the tier-0 count. */
+int64_t nem_wd_split_tiers(const int64_t *codes, int64_t tn,
+                           const int64_t *rank_of, int32_t w0,
+                           uint8_t *sel, uint64_t *t0, uint64_t *t1)
+{
+    uint64_t lim = 1ULL << w0;
+    int64_t n0 = 0, n1 = 0;
+    for (int64_t i = 0; i < tn; i++) {
+        uint64_t r = (uint64_t)rank_of[codes[i]];
+        int64_t j = r >= lim;
+        t0[n0] = r;
+        t1[n1] = r;
+        n0 += 1 - j;
+        n1 += j;
+        sel[i >> 3] |= (uint8_t)(j << (i & 7));
+    }
+    return n0;
+}
+
+static inline int64_t wd_unpack(const uint8_t *in, int64_t len, int64_t tn,
+                                const int32_t nt, const int32_t *widths,
+                                const int64_t *starts, const int64_t *sizes,
+                                int64_t card, int64_t *out)
+{
+    int64_t cur[2] = {starts[0], starts[nt - 1]}, seen[2] = {0, 0};
+    uint64_t mask[2] = {(1ULL << widths[0]) - 1,
+                        (1ULL << widths[nt - 1]) - 1};
+    for (int64_t i = 0; i < tn; i++) {
+        int64_t j = nt == 2 ? (in[i >> 3] >> (i & 7)) & 1 : 0;
+        int64_t bp = cur[j], o = bp >> 3;
+        uint64_t x = 0;
+        if (o + 8 <= len)
+            memcpy(&x, in + o, 8);
+        else if (o < len)
+            memcpy(&x, in + o, (size_t)(len - o));
+        uint64_t r = (x >> (bp & 7)) & mask[j];
+        if (r >= (uint64_t)card)
+            return -1;
+        out[i] = (int64_t)r;
+        cur[j] = bp + widths[j];
+        seen[j]++;
+    }
+    for (int32_t j = 0; j < nt; j++)
+        if (seen[j] != sizes[j])
+            return -2;
+    return 0;
+}
+
+/* nem_wd_unpack_tiers (twin: worddict._unpack_tiers_numpy) reads the
+ * nt-tier layout from `len` bytes of `in`, which hold all of it, into tn
+ * int64 ranks.  `starts` gives the first bit of each tier's stream and
+ * `sizes` its token count.  Widths are at most 56, so one unaligned
+ * 8-byte load covers any value at any bit offset.  Returns 0, -1 when a
+ * rank is not below card, or -2 when the selector gives a tier other than
+ * its token count (checked at the end; every read is clamped to `len`
+ * bytes on the way). */
+int64_t nem_wd_unpack_tiers(const uint8_t *in, int64_t len, int64_t tn,
+                            int32_t nt, const int32_t *widths,
+                            const int64_t *starts, const int64_t *sizes,
+                            int64_t card, int64_t *out)
+{
+    if (nt == 1)
+        return wd_unpack(in, len, tn, 1, widths, starts, sizes, card, out);
+    return wd_unpack(in, len, tn, 2, widths, starts, sizes, card, out);
+}
+
+/* Releases a buffer a kernel allocated (nem_wd_factorize's dictionary
+ * and counts). */
 void nem_free(void *p)
 {
     free(p);

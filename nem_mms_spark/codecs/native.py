@@ -107,6 +107,15 @@ def _build() -> ctypes.CDLL | None:
             lib.nem_wd_factorize.restype = _i64
             lib.nem_wd_factorize.argtypes = [
                 _p_u8, _p_i64, _i64, _p_i64, _p_i64, _pp_void, _pp_void,
+                _pp_void, _p_i64,
+            ]
+            lib.nem_wd_split_tiers.restype = _i64
+            lib.nem_wd_split_tiers.argtypes = [
+                _p_i64, _i64, _p_i64, _i32, _p_u8, _p_u64, _p_u64,
+            ]
+            lib.nem_wd_unpack_tiers.restype = _i64
+            lib.nem_wd_unpack_tiers.argtypes = [
+                _p_u8, _i64, _i64, _i32, _p_i32, _p_i64, _p_i64, _i64,
                 _p_i64,
             ]
             lib.nem_free.restype = None

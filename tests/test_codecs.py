@@ -210,6 +210,19 @@ def _truncation_values():
 
 
 _TRUNCATION_VALUES = _truncation_values()
+# WORD_DICT with its dictionary FSST-coded by a 4 KB table, as the
+# selector encodes it with a column's probe table
+_WD_FSST_DICT = "WORD_DICT/fsst-dict"
+
+
+def _word_dict_fsst_payload():
+    data, offsets = _TRUNCATION_VALUES["bytes"]
+    table = fsst_mod.train(data, offsets, max_train_bytes=4 << 10)
+    payload, params = registry.encode_block(
+        (data, offsets), "bytes", "WORD_DICT", table=table
+    )
+    assert "df" in params and len(params["tw"]) == 2
+    return payload, params
 # plain FOR bit-packs still zero-pad a short payload (basic._unpack_zero_padded)
 _ZERO_PADDED = ("FOR_BITPACK", "DELTA_FOR_BITPACK")
 
@@ -222,7 +235,7 @@ _ZERO_PADDED = ("FOR_BITPACK", "DELTA_FOR_BITPACK")
         for d in ("<i8", "<f8", "bytes")
         for c in registry.candidate_codecs(d)
         if c not in _ZERO_PADDED
-    ],
+    ] + [("bytes", _WD_FSST_DICT)],
 )
 def test_truncated_payload_raises(dtype, codec, kernels, monkeypatch):
     """Decoders are length-strict: half a payload is a ValueError on both
@@ -231,12 +244,38 @@ def test_truncated_payload_raises(dtype, codec, kernels, monkeypatch):
         monkeypatch.setattr(native, "lib", None)
     values = _TRUNCATION_VALUES[dtype]
     count = len(values[1]) - 1 if dtype == "bytes" else len(values)
-    payload, params = registry.encode_block(values, dtype, codec)
+    if codec == _WD_FSST_DICT:
+        payload, params = _word_dict_fsst_payload()
+        codec = "WORD_DICT"
+    else:
+        payload, params = registry.encode_block(values, dtype, codec)
     assert len(payload) >= 2
     with pytest.raises(ValueError):
         registry.decode_block(
             payload[: len(payload) // 2], params, count, dtype, codec
         )
+
+
+@pytest.mark.parametrize("damage", ["rank_beyond_dict", "tier_count_mismatch"])
+def test_word_dict_corrupt_stream_raises(damage, monkeypatch):
+    """A same-length WORD_DICT payload whose top tier holds a rank past
+    the dictionary, or whose selector moves a token to another tier, is
+    a ValueError on both kernel paths: never an Arrow IndexError, never
+    wrong strings."""
+    payload, params = _word_dict_fsst_payload()
+    count = len(_TRUNCATION_VALUES["bytes"][1]) - 1
+    bad = bytearray(payload)
+    if damage == "rank_beyond_dict":
+        # every top-tier value all ones: 2^cw - 1 >= card
+        assert params["card"] < 1 << params["cw"]
+        top = (params["tc"][-1] * params["cw"] + 7) // 8
+        bad[len(bad) - top :] = b"\xff" * top
+    else:
+        bad[params["slen"] + params["dlen"]] ^= 1  # token 0's tier bit
+    for lib in (native.lib, None):
+        monkeypatch.setattr(native, "lib", lib)
+        with pytest.raises(ValueError, match="WORD_DICT"):
+            registry.decode_block(bytes(bad), params, count, "bytes", "WORD_DICT")
 
 
 @pytest.mark.parametrize("damage", ["escape_at_end", "code_beyond_table"])

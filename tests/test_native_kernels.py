@@ -82,13 +82,16 @@ _WD_EDGE_CASES = {
 
 
 def _wd_factorize_both(data, offs):
-    codes, counts, (udata, uoffs) = worddict.factorize_words(data, offs)
+    codes, counts, (udata, uoffs), hist = worddict.factorize_words(data, offs)
     with _numpy_only():
-        ncodes, ncounts, (nudata, nuoffs) = worddict.factorize_words(data, offs)
+        ncodes, ncounts, (nudata, nuoffs), nhist = worddict.factorize_words(
+            data, offs
+        )
     assert np.array_equal(codes, ncodes)
     assert np.array_equal(counts, ncounts)
     assert bytes(udata) == bytes(nudata)
     assert np.array_equal(uoffs, nuoffs)
+    assert np.array_equal(hist, nhist)
     return codes, counts, (udata, uoffs)
 
 
@@ -115,8 +118,9 @@ def test_pack_unpack_uints_match_numpy(width):
          *_WD_EDGE_CASES],
 )
 def test_wd_tokenize_matches_numpy(strs):
-    """nem_wd_factorize: codes, tokens per string and dictionary equal
-    the numpy twin's, and the tokens spell the strings back."""
+    """nem_wd_factorize: codes, tokens per string, dictionary and token
+    counts equal the numpy twin's, and the tokens spell the strings
+    back."""
     data, offs = _chunk(strs)
     codes, counts, (udata, uoffs) = _wd_factorize_both(data, offs)
     tokens = [bytes(udata[uoffs[c] : uoffs[c + 1]]) for c in codes]
@@ -176,6 +180,72 @@ def test_worddict_encode_matches_numpy(strs):
     d, o = worddict.decode(p_c[0], p_c[1], len(strs))
     assert bytes(d[: o[-1]]) == b"".join(strs)
 
+
+
+def _tier_case(card: int, tn: int, widths: tuple, seed: int, zipf: bool = True):
+    """Codes over ``card`` tokens (Zipf-shaped or uniform), ranked as
+    ``rank_tiers`` ranks them, split at the given tier widths."""
+    rng = np.random.default_rng(seed)
+    if card and zipf:
+        p = 1.0 / np.arange(1, card + 1)
+        codes = rng.choice(card, size=tn, p=p / p.sum())
+    else:
+        codes = rng.integers(0, max(card, 1), size=tn if card else 0)
+    codes = codes.astype(np.int64)
+    order = worddict.rank_tiers(np.bincount(codes, minlength=card)).order
+    rank_of = np.empty(card, dtype=np.int64)
+    rank_of[order] = np.arange(card)
+    upper = int((rank_of[codes] >= (1 << widths[0])).sum()) if len(widths) == 2 else 0
+    sizes = (len(codes) - upper, upper)[: len(widths)]
+    return codes, rank_of, worddict.Tiers(order, widths, sizes)
+
+
+def _fuzz_tier_cases(n: int = 60, seed: int = 3):
+    rng = np.random.default_rng(seed)
+    for i in range(n):
+        card = int(rng.integers(2, 5000))
+        cw = (card - 1).bit_length()
+        lower = (int(rng.integers(1, cw)),) if cw > 1 and i % 3 else ()
+        yield _tier_case(card, int(rng.integers(0, 3000)), (*lower, cw),
+                         seed=i, zipf=bool(i % 2))
+
+
+_TIER_CASES = {
+    "k1": lambda: [_tier_case(1000, 5000, (1, 10), 1)],
+    "k_cw_minus_1": lambda: [_tier_case(1000, 5000, (9, 10), 2)],
+    "flat": lambda: [_tier_case(1024, 5000, (10,), 4, zipf=False)],
+    "card1": lambda: [_tier_case(1, 700, (0,), 5)],
+    "empty": lambda: [_tier_case(0, 0, (0,), 6)],
+    "fuzz": lambda: list(_fuzz_tier_cases()),
+}
+
+
+@needs_native
+@pytest.mark.parametrize("name", list(_TIER_CASES))
+def test_wd_tiers_match_numpy(name):
+    """nem_wd_split_tiers / nem_wd_unpack_tiers: the selector and tier
+    streams equal the numpy twin's bytes, and both unpack them to the
+    ranks."""
+    for codes, rank_of, tiers in _TIER_CASES[name]():
+        card = len(rank_of)
+        packed = worddict.pack_tiers(codes, rank_of, tiers)
+        with _numpy_only():
+            assert worddict.pack_tiers(codes, rank_of, tiers) == packed
+        assert len(packed) == worddict.tiers_size(tiers.widths, tiers.sizes)
+        buf = np.frombuffer(packed, dtype=np.uint8)
+        ranks = worddict.unpack_tiers(buf, tiers.widths, tiers.sizes, card)
+        with _numpy_only():
+            np_ranks = worddict.unpack_tiers(buf, tiers.widths, tiers.sizes, card)
+        assert np.array_equal(ranks, rank_of[codes])
+        assert np.array_equal(np_ranks, ranks)
+
+
+def test_rank_tiers_falls_back_to_flat():
+    """Uniform codes over a power-of-two dictionary: no split pays, so
+    one tier at the full width, the layout before the ranking."""
+    codes = np.random.default_rng(0).integers(0, 1024, 20_000)
+    tiers = worddict.rank_tiers(np.bincount(codes, minlength=1024))
+    assert tiers.widths == (10,) and tiers.sizes == (20_000,)
 
 
 def _pages_chunk(col: str, n_rows: int = 3000):
@@ -239,6 +309,8 @@ _KERNEL_TESTS = {
     "nem_unpack_uints": test_pack_unpack_uints_match_numpy,
     "nem_wd_factorize": test_wd_tokenize_matches_numpy,
     "nem_free": test_wd_tokenize_matches_numpy,
+    "nem_wd_split_tiers": test_wd_tiers_match_numpy,
+    "nem_wd_unpack_tiers": test_wd_tiers_match_numpy,
 }
 
 

@@ -73,3 +73,78 @@ def test_selector_picks_worddict_for_text():
     values, dtype, _v, _nc, _raw = framing.to_kernel(arr)
     codec, payload, params, est = select_and_encode(values, dtype, ColumnContext())
     assert codec == "WORD_DICT"
+
+
+def _dictionary(payload, params):
+    """The payload's dictionary tokens, in code order."""
+    from nem_mms_spark.codecs.primitives import decode_offsets_data
+
+    slen, dlen = params["slen"], params["dlen"]
+    udata, uoffs = decode_offsets_data(
+        payload[slen : slen + dlen], params["dp"], params["card"]
+    )
+    b = udata.tobytes()
+    return [b[uoffs[i] : uoffs[i + 1]] for i in range(params["card"])]
+
+
+@pytest.mark.parametrize("kernels", ["native", "numpy"])
+def test_worddict_ranks_by_count_then_first_occurrence(kernels, monkeypatch):
+    """Codes are ranks by descending token count; tokens with equal
+    counts keep first-occurrence order, on both kernel paths."""
+    from nem_mms_spark.codecs import native
+
+    if kernels == "numpy":
+        monkeypatch.setattr(native, "lib", None)
+    strs = [b"d c b a ", b"a b c d ", b"d e"]
+    p, pr = registry.encode_block(chunk(strs), "bytes", "WORD_DICT")
+    assert _dictionary(p, pr) == [b"d ", b"c ", b"b ", b"a ", b"e"]
+    got, _size = roundtrip(strs)
+    assert got == strs
+
+
+def test_flat_payload_without_tiers_decodes():
+    """A payload in the layout written before the ranking (first-
+    occurrence codes in one stream, no ``tw``/``tc`` params) decodes:
+    older outputs stay readable."""
+    from nem_mms_spark.codecs import worddict
+    from nem_mms_spark.codecs.primitives import (
+        bit_width, encode_offsets_data, pack_uints,
+    )
+
+    strs = [b"the cat the dog ", b"a cat", b"", b"the end"]
+    data, off = chunk(strs)
+    codes, counts, (udata, uoffs), _hist = worddict.factorize_words(data, off)
+    card = len(uoffs) - 1
+    sw, cw = bit_width(int(counts.max())), bit_width(card - 1)
+    counts_p = pack_uints(counts.astype(np.uint64), sw)
+    dict_p, dp = encode_offsets_data(udata, uoffs)
+    payload = counts_p + dict_p + pack_uints(codes.astype(np.uint64), cw)
+    params = {"card": card, "cw": cw, "tn": len(codes), "sw": sw,
+              "slen": len(counts_p), "dlen": len(dict_p), "dp": dp}
+    od, oo = registry.decode_block(payload, params, len(strs), "bytes", "WORD_DICT")
+    b = od.tobytes()
+    assert [b[oo[i] : oo[i + 1]] for i in range(len(strs))] == strs
+
+
+def test_selector_estimate_matches_payload():
+    """The selector's WORD_DICT estimate is exact in its token-count and
+    code terms; only the dictionary is priced by the probe ratio."""
+    from nem_mms_spark import framing, selector
+    from nem_mms_spark.codecs import worddict
+    from nem_mms_spark.datagen.webpages import generate_pages
+    import pyarrow as pa
+
+    pdf = generate_pages(np.arange(6000))
+    tbl = pa.Table.from_pandas(pdf, preserve_index=False)
+    for col in ("html", "text"):
+        values, dtype, *_ = framing.to_kernel(tbl.column(col).combine_chunks())
+        ctx = selector.ColumnContext()
+        codec, payload, params, est = selector.select_and_encode(values, dtype, ctx)
+        assert codec == "WORD_DICT" and len(params["tw"]) == 2
+        assert "df" in params  # the probe table coded the dictionary
+        words = worddict.factorize_words(*values)
+        tiers = worddict.rank_tiers(words.hist)
+        terms = selector._word_dict_terms(words, tiers, ctx)
+        assert sum(terms.values()) == est["WORD_DICT"]
+        assert terms["counts"] == params["slen"]
+        assert terms["codes"] == len(payload) - params["slen"] - params["dlen"]
