@@ -3,7 +3,7 @@
 entry(spark)   — flagship: run the full columnar-encode engine (aligned
                  encode_dataframe: one part per input partition, no
                  shuffle -> per-partition vectorized codec selection ->
-                 encoded blocks + manifest + checkpoint) over the sf0.001
+                 encoded blocks + checkpoint) over the sf0.001
                  documents table and return per-column compression metrics.
 queries()      — operator surface per SURVEY.md §2 + training-data ops.
 oracle_sql()   — DuckDB-equivalent ANSI SQL per query (rows-only ops omit).
@@ -19,7 +19,8 @@ SF0001 = "/root/testdata/sf0.001"
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: encode the documents table, return manifest metrics."""
+    """Flagship: encode the documents table, return per-column totals of
+    its block table (the codec manifest)."""
     from nem_mms_spark.queries import encode_roundtrip_metrics
 
     return encode_roundtrip_metrics(spark, SF0001)

@@ -133,9 +133,7 @@ def run_encode(spark, tmp: str) -> dict:
     )
     dec_wall = round(time.monotonic() - t0, 3)
 
-    enc_bytes = _du(os.path.join(out, "blocks")) + _du(
-        os.path.join(out, "manifest")
-    )
+    enc_bytes = _du(os.path.join(out, "blocks"))
     ref_bytes = _du(ref)
     return {
         "rows": m["rows"],

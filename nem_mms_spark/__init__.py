@@ -7,8 +7,8 @@ flat files into typed Arrow batches and writes parquet — see
   read table (parquet files or DataFrame splits, each encoded in place
   with no shuffle) -> per-partition vectorized encode (dict / RLE / FSST /
   frame-of-reference + bit-pack / delta, auto-selected per column chunk
-  via a sampled cost model) -> encoded-block table + per-partition codec
-  manifest + checkpoint/lineage rows.
+  via a sampled cost model) -> encoded-block table (one file per
+  partition, also its codec manifest) + checkpoint/lineage rows.
 
 Everything data-plane is numpy/pyarrow behind Arrow-vectorized UDFs; all
 orchestration is declarative DataFrame API so Catalyst handles pruning,

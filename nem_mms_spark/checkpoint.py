@@ -8,7 +8,7 @@ its filename-encoded state, /root/reference/src/manage/state.rs:46-102):
   * the encode job starts by reading the done part ids on the driver
     (``committed_parts``; the checkpoint table is one row per partition)
     and skips those parts;
-  * each part's blocks and manifest files are published task-side
+  * each part's blocks file is published task-side
     (``jobs/encode._publish``: temp file, then ``os.replace``) at paths
     fixed by the part id, so a re-run of a partition that crashed
     mid-write replaces its output instead of duplicating it; no Spark
@@ -30,7 +30,7 @@ def committed_parts(out_dir: str) -> list[int] | None:
     """Part ids whose checkpoint row is committed with status='done' —
     the VISIBILITY set, and the done ids a resume skips.  Data files land
     task-side (Iceberg style), so a failed or still-running encode job
-    leaves blocks/manifest dirs on disk with no checkpoint row; readers
+    leaves blocks files on disk with no checkpoint row; readers
     must not see them.  Driver-side pyarrow read of the run files, with
     no Spark job — the checkpoint is one row per partition.  None when no
     run was ever committed."""

@@ -138,21 +138,26 @@ def cmd_info(args) -> int:
         },
     }
     if args.encoded:
-        spark = _spark(args)
-        from nem_mms_spark.jobs.decode import read_manifest
-        from pyspark.sql import functions as F
+        from nem_mms_spark.jobs.decode import block_files, read_block_meta
 
-        man = read_manifest(spark, args.encoded)
-        out["columns"] = [
-            r.asDict()
-            for r in man.groupBy("column", "logical_type")
-            .agg(
-                F.sum("n_values").alias("n_values"),
-                F.sum("raw_bytes").alias("raw_bytes"),
-                F.sum("encoded_bytes").alias("encoded_bytes"),
+        # per-column totals over the committed parts, read on the driver
+        meta = read_block_meta(
+            block_files(args.encoded),
+            ["column", "logical_type", "value_count", "raw_bytes",
+             "encoded_bytes"],
+        )
+        out["columns"] = (
+            meta.group_by(["column", "logical_type"], use_threads=False)
+            .aggregate(
+                [(c, "sum")
+                 for c in ("value_count", "raw_bytes", "encoded_bytes")]
             )
-            .collect()
-        ]
+            .rename_columns(
+                ["column", "logical_type", "n_values", "raw_bytes",
+                 "encoded_bytes"]
+            )
+            .to_pylist()
+        )
     print(json.dumps(out, indent=2))
     return 0
 

@@ -1,14 +1,17 @@
-"""The decode job: encoded blocks + manifest -> reconstructed DataFrame.
+"""The decode job: encoded blocks -> reconstructed DataFrame.
 
 Encode writes each committed partition as one file,
 blocks/part_id=N/data.parquet, with its rows already grouped by block.
-``decode_blocks`` reads those part files back: it learns the output
-schema from the (tiny) manifest on the driver, LPT-packs the part files
-into tasks, and each task reads its files with pyarrow, splits them at
-block boundaries and pivots the per-column payloads back into Arrow
-record batches.  No shuffle, and no encoded byte crosses the JVM.
-Requesting a column subset prunes the decode work; ``scan_blocks`` adds
-zone-map skipping on top.
+That block table is also the codec manifest: its metadata columns name
+the codec, params, counts and zone map of every column chunk.
+``read_block_meta`` is the one reader of those metadata columns: a
+driver-side pyarrow read with column projection, so no payload page is
+read and no Spark job runs.  ``decode_blocks`` takes its output schema
+from it, LPT-packs the part files into tasks, and each task reads its
+files with pyarrow, splits them at block boundaries and pivots the
+per-column payloads back into Arrow record batches.  No shuffle, and no
+encoded byte crosses the JVM.  Requesting a column subset prunes the
+decode work; ``scan_blocks`` adds zone-map skipping on top.
 
 The per-block `value_count` assertion is the reference's EOR row-count
 checksum (``src/flatfile.rs:475-488`` there) applied per block.
@@ -18,6 +21,9 @@ from __future__ import annotations
 
 import json
 import os
+
+import numpy as np
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -29,8 +35,68 @@ from nem_mms_spark.codecs.primitives import binary_views
 from nem_mms_spark.worker import drop_archive_importers
 
 
-def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(out_dir, M.MANIFEST_DIR))
+def block_files(out_dir: str, stream_batches: bool = False) -> list[tuple]:
+    """(split key, part_id, path) of the blocks file of every committed
+    partition of ``out_dir``: the visibility set.  Data files land
+    task-side, so a failed or running encode can leave part files with
+    no checkpoint row, and those are never listed.  A committed part
+    with no file (a salted hot bucket that got no rows) is left out.
+
+    ``stream_batches``: ``out_dir`` holds one ``batch=<epoch>`` encode
+    output per micro-batch; splits are keyed by (epoch, part_id), so
+    same-numbered parts from different epochs never merge, and a batch
+    whose encode never committed is skipped whole.  On a plain root the
+    key is the part_id, and a root with no commit at all raises."""
+    if stream_batches:
+        roots = []
+        for b in sorted(d for d in os.listdir(out_dir) if d.startswith("batch=")):
+            pids = ckpt.committed_parts(os.path.join(out_dir, b))
+            if pids is not None:
+                epoch = int(b.split("=", 1)[1])
+                roots += [((epoch, p), os.path.join(out_dir, b), p) for p in pids]
+        if not roots:
+            raise ValueError(f"no committed batch outputs under {out_dir}")
+    else:
+        pids = ckpt.committed_parts(out_dir)
+        if pids is None:
+            raise ValueError(
+                f"no committed checkpoint under {out_dir}: the encode job "
+                "never committed (data files without a checkpoint row are "
+                "invisible by the visibility contract)"
+            )
+        roots = [(p, out_dir, p) for p in pids]
+    files = [
+        (key, p, os.path.join(root, M.BLOCKS_DIR, f"part_id={p}", "data.parquet"))
+        for key, root, p in roots
+    ]
+    return [f for f in files if os.path.exists(f[2])]
+
+
+def read_block_meta(files: list[tuple], columns: list[str]) -> pa.Table:
+    """The block-table ``columns`` of ``files`` (``block_files`` entries)
+    as one table, with each row's ``part_id`` appended.
+
+    Driver-side pyarrow read with column projection: parquet skips the
+    payload and validity pages, so the read is metadata-sized and runs
+    no Spark job.  The one reader of block metadata: decode's schema
+    pass, ``scan_blocks``' zone-map prune, ``encode_roundtrip_metrics``
+    and ``cli info`` all go through it.  A file that does not parse
+    raises a ValueError naming it."""
+    import pyarrow.parquet as pq
+
+    tables = []
+    for _key, pid, path in files:
+        try:
+            # ParquetFile, not read_table, which builds a dataset per
+            # file: 2.6 against 9.1 ms for the 3 schema columns of 10 files
+            with pq.ParquetFile(path) as f:
+                t = f.read(columns=columns)
+        except (pa.ArrowException, OSError) as e:
+            raise ValueError(f"unreadable block file {path}: {e}") from e
+        tables.append(
+            t.append_column("part_id", pa.array(np.full(len(t), pid, np.int32)))
+        )
+    return pa.concat_tables(tables)
 
 
 def decode_blocks(
@@ -73,81 +139,35 @@ def decode_blocks(
     serialize a multi-MB python closure into every task.
 
     ``stream_batches``: ``out_dir`` is a streaming-encode root holding
-    one ``batch=<epoch>`` encode output per micro-batch.  The split list
-    then holds every committed (epoch, part_id) file, keyed by that
-    pair, so same-numbered parts from different epochs never merge; the
-    plan is the same single Python map whatever the epoch count.  On a
-    plain root the split key is the part_id.
-
-    Visibility: only partitions with a committed checkpoint row are
-    read.  A batch dir whose encode never committed is skipped whole; a
-    plain root with no commit at all raises.  When no block survives
-    the filters the result is a typed empty DataFrame.
+    one ``batch=<epoch>`` encode output per micro-batch; the plan is the
+    same single Python map whatever the epoch count.  Only committed
+    partitions are read (``block_files``).  When no block survives the
+    filters the result is a typed empty DataFrame.
     """
-    import numpy as np
-    import pyarrow as pa
-
     from nem_mms_spark.jobs.encode import (
         _bin_file_splits,
         _bin_items,
         _read_split,
     )
 
-    # (split key, encode root, part_id) of every committed partition
-    if stream_batches:
-        committed_all = []
-        for b in sorted(d for d in os.listdir(out_dir) if d.startswith("batch=")):
-            root = os.path.join(out_dir, b)
-            pids = ckpt.committed_parts(root)
-            if pids is None:
-                continue
-            epoch = int(b.split("=", 1)[1])
-            committed_all += [((epoch, p), root, p) for p in pids]
-        if not committed_all:
-            raise ValueError(f"no committed batch outputs under {out_dir}")
-    else:
-        pids = ckpt.committed_parts(out_dir)
-        if pids is None:
-            raise ValueError(
-                f"no committed checkpoint under {out_dir}: the encode job "
-                "never committed (data files without a checkpoint row are "
-                "invisible by the visibility contract)"
-            )
-        committed_all = [(p, out_dir, p) for p in pids]
+    committed_all = block_files(out_dir, stream_batches)
     committed = committed_all
     if parts is not None:
         keep_parts = set(parts)
-        committed = [c for c in committed if c[2] in keep_parts]
+        committed = [c for c in committed if c[1] in keep_parts]
     if block_ids is not None:
         committed = [c for c in committed if block_ids.get(c[0])]
-    # manifest is metadata-scale: one driver-side pyarrow pass for the
-    # output schema (the same read_manifest information, no Spark job).
-    # Schema derives from ALL committed parts so an empty post-filter
-    # selection still returns a typed empty DataFrame instead of
-    # ds.dataset([]) blowing up with ArrowInvalid (r7 ADVICE fix).
-    import pyarrow.dataset as ds
-
-    man_files = [
-        os.path.join(root, M.MANIFEST_DIR, f"part_id={p}", "data.parquet")
-        for _key, root, p in (committed if committed else committed_all)
-    ]
-    man = ds.dataset(
-        [f for f in man_files if os.path.exists(f)], format="parquet"
-    ).to_table(columns=["col_idx", "column", "logical_type"])
+    # the output schema derives from ALL committed parts when the
+    # filters leave none, so an empty selection still returns a typed
+    # empty DataFrame
+    key_cols = ["col_idx", "column", "logical_type"]
     col_rows = sorted(
-        {
-            (ci, c, lt)
-            for ci, c, lt in zip(
-                man.column("col_idx").to_pylist(),
-                man.column("column").to_pylist(),
-                man.column("logical_type").to_pylist(),
-            )
-        }
+        read_block_meta(committed or committed_all, key_cols)
+        .group_by(key_cols, use_threads=False)
+        .aggregate([])
+        .to_pylist(),
+        key=lambda r: r["col_idx"],
     )
-    col_rows = [
-        {"col_idx": ci, "column": c, "logical_type": lt}
-        for ci, c, lt in col_rows
-    ]
     if columns is not None:
         keep = set(columns)
         col_rows = [r for r in col_rows if r["column"] in keep]
@@ -155,9 +175,7 @@ def decode_blocks(
         if missing:
             raise ValueError(f"columns not in manifest: {sorted(missing)}")
     out_schema = M.decode_schema_of(col_rows)
-    ordered = [
-        r["column"] for r in sorted(col_rows, key=lambda r: r["col_idx"])
-    ]
+    ordered = [r["column"] for r in col_rows]
     types = {r["column"]: r["logical_type"] for r in col_rows}
     kdtypes = {c: _kernel_dtype_of(t) for c, t in types.items()}
     # the recorded logical types ARE the arrow types Spark emitted at
@@ -167,11 +185,7 @@ def decode_blocks(
     )
     want = set(ordered)
 
-    splits = []
-    for key, root, p in committed:
-        path = os.path.join(root, M.BLOCKS_DIR, f"part_id={p}", "data.parquet")
-        if os.path.exists(path):
-            splits.append((key, path))
+    splits = [(key, path) for key, _p, path in committed]
     if not splits:
         return spark.createDataFrame([], schema=out_schema)
     bc_blocks = (
@@ -273,10 +287,12 @@ def scan_blocks(
     [zmin, zmax] overlaps [lo, hi] on `pred_column`, then apply the exact
     row filter.
 
-    Two-pass plan, both scale-safe:
-      1. metadata pass — reads ONLY the zone-map columns of the blocks
-         table (payload pruned away by Catalyst) and keeps overlapping
-         (part_id, block_id) rows;
+    Two passes:
+      1. metadata pass — ``read_block_meta`` reads ONLY the zone-map
+         columns of the committed parts' block files on the driver (no
+         Spark job; payload pages are never read), takes the column's
+         logical type from them, and keeps the overlapping
+         (part_id, block_id) pairs with numpy;
       2. data pass — decode_blocks with the survivor map: only the
          surviving part files are read at all, and inside each task only
          the surviving block groups decode; then the exact predicate on
@@ -285,54 +301,54 @@ def scan_blocks(
     NULL zone maps (bytes columns, NaN blocks) never skip.  Timestamp
     columns use epoch-micros bounds (pass lo/hi as ints or datetimes).
     """
-    man = read_manifest(spark, out_dir)
-    lt_row = man.filter(F.col("column") == pred_column).select(
-        "logical_type"
-    ).first()
-    if lt_row is None:
+    import math
+
+    import pyarrow.compute as pc
+
+    meta = read_block_meta(
+        block_files(out_dir),
+        ["block_id", "column", "logical_type",
+         "zmin_i", "zmax_i", "zmin_d", "zmax_d"],
+    )
+    meta = meta.filter(pc.field("column") == pred_column)
+    if not len(meta):
         raise ValueError(f"column {pred_column!r} not in manifest")
-    logical_type = lt_row["logical_type"]
+    logical_type = meta.column("logical_type")[0].as_py()
     is_ts = logical_type.startswith("timestamp")
     if is_ts:
         lo = _to_epoch_us(lo)
         hi = _to_epoch_us(hi)
 
-    meta = (
-        spark.read.parquet(os.path.join(out_dir, M.BLOCKS_DIR))
-        # visibility: zone maps of uncommitted partitions must not drive
-        # the scan (decode_blocks filters them anyway; this keeps the
-        # metadata pass honest and prunes their dirs)
-        .filter(F.col("part_id").isin(ckpt.committed_parts(out_dir) or []))
-        .filter(F.col("column") == pred_column)
-        .select("part_id", "block_id", "zmin_i", "zmax_i", "zmin_d", "zmax_d")
-    )
     # overlap test in the column's own numeric domain — int bounds compare
     # against the int64 stats EXACTLY (a double cast would round 64-bit
     # ranges and could skip a matching block), float bounds against the
     # double stats
-    import math
-
-    is_float = logical_type in ("float", "double")
-    if is_float:
-        zmin, zmax = F.col("zmin_d"), F.col("zmax_d")
+    if logical_type in ("float", "double"):
+        zmin, zmax = meta.column("zmin_d"), meta.column("zmax_d")
         lo_b = float(lo) if lo is not None else None
         hi_b = float(hi) if hi is not None else None
     else:
-        zmin, zmax = F.col("zmin_i"), F.col("zmax_i")
-        lo_b = int(math.ceil(lo)) if lo is not None else None
-        hi_b = int(math.floor(hi)) if hi is not None else None
-    keep = F.lit(True)
-    if lo_b is not None:
-        keep = keep & (zmax.isNull() | (zmax >= F.lit(lo_b)))
-    if hi_b is not None:
-        keep = keep & (zmin.isNull() | (zmin <= F.lit(hi_b)))
-    survivors = meta.filter(keep).select("part_id", "block_id")
+        zmin, zmax = meta.column("zmin_i"), meta.column("zmax_i")
+        lo_b = math.ceil(lo) if lo is not None else None
+        hi_b = math.floor(hi) if hi is not None else None
+    keep = np.ones(len(meta), dtype=bool)
+    for bound, z, overlaps in (
+        (lo_b, zmax, np.greater_equal), (hi_b, zmin, np.less_equal)
+    ):
+        if bound is not None:
+            z = z.combine_chunks()
+            keep &= z.is_null().to_numpy(zero_copy_only=False) | overlaps(
+                z.fill_null(0).to_numpy(), bound
+            )
     # survivor map: (part_id, block_id) ints only — metadata-scale by
-    # construction (it is the zone-map prune's output); collected once
-    # and broadcast to the decode tasks
+    # construction (it is the zone-map prune's output), broadcast to the
+    # decode tasks
     surv_map: dict[int, set] = {}
-    for r in survivors.collect():
-        surv_map.setdefault(r["part_id"], set()).add(r["block_id"])
+    for pid, bid in zip(
+        meta.column("part_id").to_numpy()[keep].tolist(),
+        meta.column("block_id").to_numpy()[keep].tolist(),
+    ):
+        surv_map.setdefault(pid, set()).add(bid)
     decoded = decode_blocks(
         spark, out_dir, columns=columns, block_ids=surv_map
     )

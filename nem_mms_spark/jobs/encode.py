@@ -1,4 +1,4 @@
-"""The encode job: source -> encoded blocks + manifest + checkpoint.
+"""The encode job: source -> encoded blocks + checkpoint.
 
 Spark-first restatement of the reference's parse pipeline (its
 src/main.rs:92-99 -> src/packages/mod.rs:196-237), which encodes each
@@ -11,10 +11,12 @@ shuffle.  Every entry point keeps that shape:
        (sorting lengthens runs -> RLE/delta win; SIGMOD'20 RLE-permutation)
     -> ONE mapInArrow job: each task encodes its part (zero-copy Arrow
        batches; one FSST/dict table per part-column; row-aligned blocks
-       bound UDF memory) and WRITES its own blocks/part_id=N and
-       manifest/part_id=N parquet (Iceberg style: task-side data files,
-       visibility via the metadata commit); the job's Spark output is one
-       summary row per part, from which the driver commits the checkpoint.
+       bound UDF memory) and WRITES its own blocks/part_id=N parquet, the
+       one file per part (Iceberg style: task-side data files, visibility
+       via the metadata commit); the job's Spark output is one summary row
+       per part, from which the driver commits the checkpoint.  The block
+       table is also the codec manifest: each row names the codec and
+       params of one column chunk.
 
 `encode_dataframe` takes a part to be an input split (spark_partition_id;
 zero exchange).  `encode_parquet` pushes the SCAN into the task too
@@ -90,16 +92,14 @@ def encode_dataframe(
     # ONE JOB (round-4: the old three-pass flow — blocks write, then a
     # blocks re-scan for the manifest aggregation, then the checkpoint —
     # carried a ~3 s fixed tail).  Each task writes its own partition's
-    # blocks AND manifest parquet directly (Iceberg style: data files
+    # blocks parquet directly (Iceberg style: data files
     # land task-side, VISIBILITY is governed by the metadata commit — a
     # partition exists iff its checkpoint row is committed), and the
     # job's Spark output is one tiny summary row per partition from which
     # the driver commits the checkpoint.  The payload bytes never
     # round-trip through the JVM parquet writer at all.
     encode_fn = _make_encoder(
-        block_rows, block_bytes, key_col,
-        os.path.join(out_dir, M.BLOCKS_DIR),
-        os.path.join(out_dir, M.MANIFEST_DIR),
+        block_rows, block_bytes, key_col, os.path.join(out_dir, M.BLOCKS_DIR)
     )
     summaries = work.mapInArrow(encode_fn, SUMMARY_SCHEMA).collect()
     ckpt.commit_checkpoint_rows(_summary_ckpt_rows(summaries), out_dir)
@@ -119,7 +119,7 @@ def _start_run(out_dir: str, meta: dict, resume: bool) -> set[int]:
     driver-side from the checkpoint's run files, with no Spark job."""
     if not resume:
         ckpt.clear_checkpoint(out_dir)
-        for sub in (M.BLOCKS_DIR, M.MANIFEST_DIR):
+        for sub in (M.BLOCKS_DIR, M.OLD_MANIFEST_DIR):
             shutil.rmtree(os.path.join(out_dir, sub), ignore_errors=True)
     ckpt.check_partitioning_meta(out_dir, meta, resume=resume)
     done = ckpt.committed_parts(out_dir) if resume else None
@@ -184,8 +184,8 @@ def encode_parquet(
     Cutting files into more, smaller tasks than slots was measured to
     pay the 0.35 s cost more often than it saved in stragglers; at
     0.1 s that is not re-measured.
-    Output layout and part ids are unchanged (still one blocks/manifest
-    dir per source file).
+    Output layout and part ids are unchanged (still one blocks file per
+    source file).
 
     The generic ``encode_dataframe`` path necessarily feeds the Python
     kernels through Spark's row pipeline (cache/scan -> InternalRow ->
@@ -461,7 +461,6 @@ def _make_file_encoder(
     it sorts by ``sort_cols`` and encodes the rest as the split's part.
     Pure function of split content (and the plan)."""
     blocks_dir = os.path.join(out_dir, M.BLOCKS_DIR)
-    manifest_dir = os.path.join(out_dir, M.MANIFEST_DIR)
     spill_dir = os.path.join(out_dir, "hot_spill")
     # dispersal tables aligned with hot_keys order, so routing a file's
     # hot rows is one index_in plus numpy gathers, with no per-row loop
@@ -491,7 +490,7 @@ def _make_file_encoder(
             stage["rsort"] = t1 - ts
             yield _encode_partition_table(
                 pid, tbl, block_rows, block_bytes, key_col,
-                blocks_dir, manifest_dir, read_stage=stage, t_start_ns=t0,
+                blocks_dir, read_stage=stage, t_start_ns=t0,
             )
 
     return encode_files
@@ -823,7 +822,7 @@ SUMMARY_SCHEMA = (
 # sort), `fprint` =
 # content fingerprint, `kernel` = Arrow->numpy framing, `encode` = codec
 # selection + encode proper, `zstats` = zone-map min/max, `build` =
-# blocks/manifest Arrow table construction, `write` = task-side parquet
+# blocks Arrow table construction, `write` = task-side parquet
 # commits (sub-stages `wser` serialization, `wio` file syscalls).
 # `c_cpu` = CPU-ns of the task's thread over the same span as the part's
 # `encode_ns` (fingerprint, framing, selection, zone stats; `encode_ns`
@@ -834,18 +833,7 @@ STAGE_KEYS = (
     "zstats", "build", "write", "wser", "wio", "c_cpu",
 )
 
-# parquet column statistics are written for metadata columns only: payload
-# min/max would just copy (truncated) codec bytes into the footer
-_BLOCK_STAT_COLS = [
-    "block_id", "col_idx", "column", "logical_type", "codec", "value_count",
-    "null_count", "raw_bytes", "encoded_bytes", "encode_ns", "fingerprint",
-    "zmin_i", "zmax_i", "zmin_d", "zmax_d",
-]
-
-
-def _atomic_write(
-    table: pa.Table, dest: str, stat_cols=None, stage: dict | None = None
-) -> None:
+def _atomic_write(table: pa.Table, dest: str, stage: dict | None = None) -> None:
     """Task-side parquet commit: serialize the WHOLE file into one
     in-memory buffer, then ``_publish`` it — a retried or speculative
     task attempt re-produces identical bytes so last-replace-wins is
@@ -856,14 +844,15 @@ def _atomic_write(
     stage into `wser` (parquet serialization, pure CPU+allocator) vs
     `wio` (file syscalls) so contention at high concurrency is
     attributable.  When ``stage`` is given those two keys are summed
-    into it."""
+    into it.  No parquet column statistics are written: every reader
+    takes the block metadata, zone maps included, as column values, so
+    footer min/max would only copy them (and truncated payload bytes)."""
     import pyarrow.parquet as pq
 
     t0 = time.monotonic_ns()
     sink = pa.BufferOutputStream()
     pq.write_table(
-        table, sink, compression="NONE",
-        write_statistics=stat_cols if stat_cols is not None else True,
+        table, sink, compression="NONE", write_statistics=False,
         # payload blobs are already codec-compressed: parquet's own
         # dictionary pass over them is pure overhead (measured ~28% of
         # partition encode wall), and big pages cut framing cost
@@ -902,7 +891,7 @@ def _publish(buf, dest: str) -> None:
     os.replace(tmp, dest)
 
 
-def _make_encoder(block_rows, block_bytes, key_col, blocks_dir, manifest_dir):
+def _make_encoder(block_rows, block_bytes, key_col, blocks_dir):
     """Build the mapInArrow kernel of ``encode_dataframe``: a task holds
     exactly one part (its input split), so it concatenates its batches
     and encodes them once.  Pure function of partition content."""
@@ -920,7 +909,7 @@ def _make_encoder(block_rows, block_bytes, key_col, blocks_dir, manifest_dir):
             )
         yield _encode_partition_table(
             int(pids[0]), tbl.drop_columns(["part_id"]), block_rows,
-            block_bytes, key_col, blocks_dir, manifest_dir,
+            block_bytes, key_col, blocks_dir,
         )
 
     return encode_partition
@@ -933,13 +922,12 @@ def _encode_partition_table(
     block_bytes: int,
     key_col: str,
     blocks_dir: str,
-    manifest_dir: str,
     read_stage: dict | None = None,
     t_start_ns: int | None = None,
 ) -> pa.RecordBatch:
     """Encode ONE partition's Arrow table: frame into blocks, run codec
-    selection per column chunk, write the partition's blocks + manifest
-    parquet task-side, and return the one-row summary batch.  Shared by
+    selection per column chunk, write the partition's blocks parquet
+    task-side, and return the one-row summary batch.  Shared by
     the DataFrame encode path (JVM feed) and the source-direct parquet
     path (pyarrow scan inside the task), whose ``read_stage`` carries
     the read sub-stage walls."""
@@ -992,7 +980,6 @@ def _encode_partition_table(
     stage["c_cpu"] = time.thread_time_ns() - cpu0
     encode_ns = time.monotonic_ns() - t0
     tb = clk()
-    part_dir = f"part_id={pid}"
     blocks_tbl = pa.table(
         {
             "block_id": pa.array(rows["block_id"], type=pa.int32()),
@@ -1018,68 +1005,7 @@ def _encode_partition_table(
     tw = clk()
     stage["build"] += tw - tb
     _atomic_write(
-        blocks_tbl, os.path.join(blocks_dir, part_dir, "data.parquet"),
-        stat_cols=_BLOCK_STAT_COLS, stage=stage,
-    )
-    tb = clk()
-    stage["write"] += tb - tw
-
-    # per-(partition, column) manifest rows, aggregated in place — the
-    # kernel already holds the whole partition, so no second Spark
-    # job / blocks re-scan is ever needed
-    man = {}
-    for i in range(n):
-        key = rows["col_idx"][i]
-        m = man.setdefault(
-            key,
-            {
-                "col_idx": key,
-                "column": rows["column"][i],
-                "logical_type": rows["logical_type"][i],
-                "n_blocks": 0,
-                "n_values": 0,
-                "null_count": 0,
-                "raw_bytes": 0,
-                "encoded_bytes": 0,
-                "codecs": {},
-            },
-        )
-        m["n_blocks"] += 1
-        m["n_values"] += rows["value_count"][i]
-        m["null_count"] += rows["null_count"][i]
-        m["raw_bytes"] += rows["raw_bytes"][i]
-        m["encoded_bytes"] += rows["encoded_bytes"][i]
-        c = rows["codec"][i]
-        m["codecs"][c] = m["codecs"].get(c, 0) + 1
-    man_rows = [man[k] for k in sorted(man)]
-    man_tbl = pa.table(
-        {
-            "col_idx": pa.array([m["col_idx"] for m in man_rows], type=pa.int32()),
-            "column": pa.array([m["column"] for m in man_rows], type=pa.string()),
-            "logical_type": pa.array([m["logical_type"] for m in man_rows], type=pa.string()),
-            "n_blocks": pa.array([m["n_blocks"] for m in man_rows], type=pa.int64()),
-            "n_values": pa.array([m["n_values"] for m in man_rows], type=pa.int64()),
-            "null_count": pa.array([m["null_count"] for m in man_rows], type=pa.int64()),
-            "raw_bytes": pa.array([m["raw_bytes"] for m in man_rows], type=pa.int64()),
-            "encoded_bytes": pa.array([m["encoded_bytes"] for m in man_rows], type=pa.int64()),
-            "codecs": pa.array(
-                [
-                    json.dumps(
-                        dict(sorted(m["codecs"].items())),
-                        separators=(",", ":"),
-                    )
-                    for m in man_rows
-                ],
-                type=pa.string(),
-            ),
-            "fingerprint": pa.array([fp] * len(man_rows), type=pa.int64()),
-            "encode_ns": pa.array([encode_ns] * len(man_rows), type=pa.int64()),
-        }
-    )
-    tw = clk()
-    stage["build"] += tw - tb
-    _atomic_write(
-        man_tbl, os.path.join(manifest_dir, part_dir, "data.parquet"),
+        blocks_tbl, os.path.join(blocks_dir, f"part_id={pid}", "data.parquet"),
         stage=stage,
     )
     stage["write"] += clk() - tw
@@ -1094,11 +1020,11 @@ def _encode_partition_table(
     return pa.RecordBatch.from_arrays(
         [
             pa.array([pid], type=pa.int32()),
-            pa.array([man_rows[0]["n_values"] if man_rows else 0], type=pa.int64()),
-            pa.array([man_rows[0]["n_blocks"] if man_rows else 0], type=pa.int64()),
-            pa.array([len(man_rows)], type=pa.int32()),
-            pa.array([sum(m["raw_bytes"] for m in man_rows)], type=pa.int64()),
-            pa.array([sum(m["encoded_bytes"] for m in man_rows)], type=pa.int64()),
+            pa.array([tbl.num_rows], type=pa.int64()),
+            pa.array([len(ranges)], type=pa.int64()),
+            pa.array([tbl.num_columns if ranges else 0], type=pa.int32()),
+            pa.array([sum(rows["raw_bytes"])], type=pa.int64()),
+            pa.array([sum(rows["encoded_bytes"])], type=pa.int64()),
             pa.array([fp], type=pa.int64()),
             pa.array([encode_ns], type=pa.int64()),
             pa.array(

@@ -1,28 +1,33 @@
 """Encode output layout (dir names) + logical type mapping.
 
 Layout under an encode output directory (plain parquet standing in for the
-Iceberg tables `encoded_blocks` / `manifest` / `checkpoint` — catalog I/O is
-isolated here so an Iceberg catalog can be swapped in; SURVEY.md §7 design
-stance):
+Iceberg tables `encoded_blocks` / `checkpoint` — catalog I/O is isolated
+here so an Iceberg catalog can be swapped in; SURVEY.md §7 design stance):
 
-  blocks/     one row per (partition, column, block): codec id, payload,
-              validity bitmap, counts, byte sizes  (SURVEY.md §1.4), and
-              the block's zone map: exact int64 bounds for integer-kind
-              columns in zmin_i/zmax_i, exact double bounds for floats in
-              zmin_d/zmax_d, all NULL (cannot skip) when stats don't apply
-  manifest/   one row per (partition, column): codec histogram + params
-              summary — the decode-side registry (reference ancestor:
-              Package::schema() lookup, /root/reference/src/packages/mod.rs:102-112)
+  blocks/     one file per partition, one row per (column, block): codec
+              id + params, payload, validity bitmap, counts, byte sizes
+              (SURVEY.md §1.4), and the block's zone map: exact int64
+              bounds for integer-kind columns in zmin_i/zmax_i, exact
+              double bounds for floats in zmin_d/zmax_d, all NULL (cannot
+              skip) when stats don't apply.  This table IS the codec
+              manifest, the decode-side registry (reference ancestor:
+              the Package::schema() lookup, src/packages/mod.rs:102-112
+              there): its metadata columns hold the codec and params
+              chosen for each column chunk, and the driver reads them
+              with column projection (``jobs.decode.read_block_meta``)
   checkpoint/ one row per partition: status + fingerprint + byte metrics,
               written LAST so its presence marks a durably completed
               partition (reference ancestor: create_new(true) download
-              idempotence, /root/reference/src/packages/fetch.rs:264-282)
+              idempotence, src/packages/fetch.rs:264-282 there)
 """
 
 from __future__ import annotations
 
 BLOCKS_DIR = "blocks"
-MANIFEST_DIR = "manifest"
+# outputs written before the block table became the one file per part
+# also hold a per-part summary table here; nothing reads it, and a fresh
+# (resume=False) encode removes it
+OLD_MANIFEST_DIR = "manifest"
 CHECKPOINT_DIR = "checkpoint"
 
 # arrow logical type string -> Spark DDL type (decode output schema)
@@ -50,14 +55,14 @@ def spark_type_of(logical_type: str) -> str:
     raise ValueError(f"unsupported logical type {logical_type!r}")
 
 
-def decode_schema_of(manifest_rows) -> str:
+def decode_schema_of(col_rows) -> str:
     """Spark DDL for decode output, in original column order.
 
-    manifest_rows: iterable of Rows with col_idx, column, logical_type
-    (one partition's manifest or the distinct column set).
+    col_rows: iterable of mappings with col_idx, column, logical_type
+    (block table rows, or the distinct column set).
     """
     seen = {}
-    for r in manifest_rows:
+    for r in col_rows:
         seen[r["col_idx"]] = (r["column"], r["logical_type"])
     parts = [
         f"`{name}` {spark_type_of(lt)}"

@@ -762,18 +762,25 @@ def zonemap_range_scan(spark, sf_dir):
 
 def encode_roundtrip_metrics(spark, sf_dir):
     """Full engine run on the documents table: encode -> per-column
-    manifest totals.  n_values and raw_bytes are reconstructible in SQL
-    from the source table (raw = data bytes + 8-byte offsets per string
-    value; 8 bytes per int64), so the oracle checks the engine's
-    accounting end to end.  encoded_bytes is covered by bench + the
-    size-vs-parquet gate, not here (no independent SQL derivation)."""
-    from nem_mms_spark.jobs.decode import read_manifest
+    totals of the block table (the codec manifest), read on the driver
+    from the committed parts only, with no Spark job.  n_values and
+    raw_bytes are reconstructible in SQL from the source table (raw =
+    data bytes + 8-byte offsets per string value; 8 bytes per int64),
+    so the oracle checks the engine's accounting end to end.
+    encoded_bytes is covered by bench + the size-vs-parquet gate, not
+    here (no independent SQL derivation)."""
+    from nem_mms_spark.jobs.decode import block_files, read_block_meta
 
     out = _encoded_documents(spark, sf_dir)
-    man = read_manifest(spark, out)
-    return man.groupBy(F.col("column").alias("col_name")).agg(
-        F.sum("n_values").alias("n_values"),
-        F.sum("raw_bytes").alias("raw_bytes"),
+    meta = read_block_meta(
+        block_files(out), ["column", "value_count", "raw_bytes"]
+    )
+    totals = meta.group_by("column", use_threads=False).aggregate(
+        [("value_count", "sum"), ("raw_bytes", "sum")]
+    )
+    # an Arrow table this small becomes a local relation: no Spark job
+    return spark.createDataFrame(
+        totals.rename_columns(["col_name", "n_values", "raw_bytes"])
     )
 
 

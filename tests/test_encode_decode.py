@@ -10,7 +10,11 @@ import pytest
 
 from nem_mms_spark.datagen.webpages import web_pages_df
 from nem_mms_spark.jobs.encode import encode_dataframe, encode_parquet
-from nem_mms_spark.jobs.decode import decode_blocks, read_manifest
+from nem_mms_spark.jobs.decode import (
+    block_files,
+    decode_blocks,
+    read_block_meta,
+)
 from nem_mms_spark.jobs.verify import verify_roundtrip
 
 N_ROWS = 4000
@@ -39,10 +43,10 @@ def test_manifest_selector_outcomes(spark, pages, tmp_path_factory):
     """FIXTURES.md §A expected selector outcomes per column."""
     out = str(tmp_path_factory.mktemp("enc_sel"))
     encode_dataframe(spark, pages, out)
-    man = read_manifest(spark, out).collect()
+    meta = read_block_meta(block_files(out), ["column", "codec"])
     by_col = {}
-    for r in man:
-        by_col.setdefault(r["column"], []).append(r["codecs"])
+    for r in meta.to_pylist():
+        by_col.setdefault(r["column"], []).append(r["codec"])
     assert any("FSST" in c for c in by_col["url"]), by_col["url"]
     assert any(("DICT" in c) or ("RLE" in c) for c in by_col["lang"])
     assert any(
@@ -136,8 +140,8 @@ def test_same_input_resume_is_noop(spark, pages, tmp_path):
 
 def test_fresh_reencode_truncates_stale_partitions(spark, pages, tmp_path_factory):
     """resume=False into an existing out_dir must not leak prior-run
-    partitions: a smaller re-encode fully replaces blocks/manifest/
-    checkpoint (static partition overwrite)."""
+    partitions: a smaller re-encode fully replaces blocks/checkpoint
+    (static partition overwrite)."""
     out = str(tmp_path_factory.mktemp("enc_fresh"))
     encode_dataframe(spark, pages.limit(400), out)
     small = pages.limit(100)
@@ -206,39 +210,98 @@ def test_determinism_across_runs(spark, pages, tmp_path_factory):
     assert _ckpt_parts(spark, out1) == _ckpt_parts(spark, out2)
 
 
-def test_uncommitted_partition_is_invisible(spark, pages, tmp_path_factory):
+def test_uncommitted_partition_is_invisible(
+    spark, pages, tmp_path_factory, monkeypatch, capsys
+):
     """Visibility contract (round-4 ADVICE): data files land task-side,
     so a partition dir written by a failed/still-running encode must not
     be readable until its checkpoint row commits.  Simulate a torn job
     by copying a partition dir under a part_id that has no checkpoint
-    row: decode and zone-map scans must not see its rows."""
+    row: decode, zone-map scans and the per-column totals of
+    ``encode_roundtrip_metrics`` and ``cli info`` must not see its
+    rows."""
+    import json
     import shutil
 
+    from nem_mms_spark import queries as Q
+    from nem_mms_spark.cli import main
     from nem_mms_spark.jobs.decode import scan_blocks
 
     out = str(tmp_path_factory.mktemp("enc_vis"))
     encode_dataframe(spark, pages, out, resume=False)
+    monkeypatch.setattr(Q, "_encoded_documents", lambda *_a, **_k: out)
+
+    def totals():
+        metrics = sorted(
+            tuple(r) for r in Q.encode_roundtrip_metrics(spark, "-").collect()
+        )
+        capsys.readouterr()
+        assert main(["info", "--encoded", out]) == 0
+        info = json.loads(capsys.readouterr().out)["columns"]
+        return metrics, sorted(
+            (c["column"], c["n_values"], c["raw_bytes"], c["encoded_bytes"])
+            for c in info
+        )
+
     n_committed = decode_blocks(spark, out).count()
     n_scan = scan_blocks(
         spark, out, "warc_ts", lo=0, columns=["url", "warc_ts"]
     ).count()
+    metrics, info = totals()
+    assert {m[1] for m in metrics} == {n_committed}
+    assert {i[1] for i in info} == {n_committed}
     # torn write: a partition dir with no checkpoint row
-    for sub in ("blocks", "manifest"):
-        src_dir = next(
-            d
-            for d in os.listdir(os.path.join(out, sub))
-            if d.startswith("part_id=")
-        )
-        shutil.copytree(
-            os.path.join(out, sub, src_dir),
-            os.path.join(out, sub, "part_id=9999"),
-        )
+    blocks = os.path.join(out, "blocks")
+    src_dir = next(d for d in os.listdir(blocks) if d.startswith("part_id="))
+    shutil.copytree(
+        os.path.join(blocks, src_dir), os.path.join(blocks, "part_id=9999")
+    )
     assert decode_blocks(spark, out).count() == n_committed
     assert (
         scan_blocks(spark, out, "warc_ts", lo=0, columns=["url", "warc_ts"])
         .count()
         == n_scan
     )
+    assert totals() == (metrics, info)
+
+
+def test_output_with_old_manifest_dir(spark, pages, tmp_path_factory):
+    """Outputs written before the block table became the one file per
+    part also hold manifest/part_id=N/data.parquet.  Nothing reads it:
+    decode and zone-map scans return the same rows, a resume skips every
+    part, and a fresh re-encode removes the dir."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from nem_mms_spark.jobs.decode import scan_blocks
+
+    out = str(tmp_path_factory.mktemp("enc_old_manifest"))
+    m = encode_dataframe(spark, pages, out, resume=False)
+
+    def scanned():
+        return sorted(
+            tuple(r)
+            for r in scan_blocks(
+                spark, out, "warc_ts", lo=0, columns=["url", "warc_ts"]
+            ).collect()
+        )
+
+    n_scan = scanned()
+    for _key, pid, _path in block_files(out):
+        stale = os.path.join(out, "manifest", f"part_id={pid}")
+        os.makedirs(stale)
+        pq.write_table(
+            pa.table({"col_idx": [0], "column": ["url"], "n_values": [7]}),
+            os.path.join(stale, "data.parquet"),
+        )
+    assert verify_roundtrip(spark, pages, out, key="url")["decoded_rows"] == N_ROWS
+    assert scanned() == n_scan
+    resumed = encode_dataframe(spark, pages, out, resume=True)
+    assert resumed["skipped_parts"] == m["parts"]
+    assert resumed["rows"] == N_ROWS
+    encode_dataframe(spark, pages, out, resume=False)
+    assert not os.path.exists(os.path.join(out, "manifest"))
+    verify_roundtrip(spark, pages, out, key="url")
 
 
 def test_decode_without_any_commit_raises(spark, pages, tmp_path_factory):

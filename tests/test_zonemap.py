@@ -75,11 +75,11 @@ def test_empty_range_returns_empty(spark, enc_dir):
 def test_partition_pruning_reaches_scan(spark, enc_dir, tmp_path):
     """A part filter prunes whole part files: with every other part's
     blocks file overwritten by garbage, decoding parts 0 and 1 still
-    succeeds, because the garbage files are never opened."""
+    succeeds, because the garbage files are never opened.  Decoding
+    every part fails on the driver, naming a garbage file."""
     import shutil
 
     import pyarrow.parquet as pq
-    from pyspark.errors import PythonException
 
     src, _ = enc_dir
     out = str(tmp_path / "enc")
@@ -93,7 +93,10 @@ def test_partition_pruning_reaches_scan(spark, enc_dir, tmp_path):
     ckpt = pq.read_table(os.path.join(out, "checkpoint")).to_pylist()
     want = sum(r["n_rows"] for r in ckpt if r["part_id"] in (0, 1))
     assert decode_blocks(spark, out, parts=[0, 1]).count() == want
-    with pytest.raises(PythonException):
+    with pytest.raises(
+        ValueError,
+        match=r"unreadable block file .*/blocks/part_id=\d+/data\.parquet",
+    ):
         decode_blocks(spark, out).count()
 
 
