@@ -1,8 +1,9 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-entry(spark)   — flagship: run the full columnar-encode engine (aligned
-                 encode_dataframe: one part per input partition, no
-                 shuffle -> per-partition vectorized codec selection ->
+entry(spark)   — flagship: run the full columnar-encode engine
+                 (source-direct encode_parquet: the documents parquet
+                 file is one part, read and encoded in one task, no
+                 shuffle -> per-column vectorized codec selection ->
                  encoded blocks + checkpoint) over the sf0.001
                  documents table and return per-column compression metrics.
 queries()      — operator surface per SURVEY.md §2 + training-data ops.

@@ -88,9 +88,9 @@ def _partitioning_meta_path(out_dir: str) -> str:
 def check_partitioning_meta(out_dir: str, meta: dict, *, resume: bool) -> None:
     """Record the partitioning mode + parameters alongside the checkpoint
     and refuse to resume under different ones.  Stored done ids hold only
-    under the same part-id assignment (input split for 'aligned', file
-    index for 'source_direct', plus the hot-bucket count for
-    'salted_direct') and the same ``key_col`` (it feeds every part's
+    under the same part-id assignment (file index for 'source_direct',
+    plus the hot-bucket count for 'salted_direct') and the same
+    ``key_col`` (it feeds every part's
     fingerprint); resuming under different ones would match fresh part
     ids against stale done ids — silently skipping partitions and
     dropping data."""

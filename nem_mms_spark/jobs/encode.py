@@ -1,31 +1,29 @@
-"""The encode job: source -> encoded blocks + checkpoint.
+"""The encode job: parquet files -> encoded blocks + checkpoint.
 
 Spark-first restatement of the reference's parse pipeline (its
 src/main.rs:92-99 -> src/packages/mod.rs:196-237), which encodes each
-input unit in place and writes one columnar file per unit, with no
-shuffle.  Every entry point keeps that shape:
+input file in place and writes one columnar file per file, with no
+shuffle:
 
-  source (DataFrame splits, or parquet files in LPT bins)
+  source parquet files (part id = index in the sorted file list)
     -> skip parts already committed in the checkpoint (resume)
-    -> sort each part by `sort_cols` in place
-       (sorting lengthens runs -> RLE/delta win; SIGMOD'20 RLE-permutation)
-    -> ONE mapInArrow job: each task encodes its part (zero-copy Arrow
-       batches; one FSST/dict table per part-column; row-aligned blocks
-       bound UDF memory) and WRITES its own blocks/part_id=N parquet, the
-       one file per part (Iceberg style: task-side data files, visibility
-       via the metadata commit); the job's Spark output is one summary row
-       per part, from which the driver commits the checkpoint.  The block
-       table is also the codec manifest: each row names the codec and
-       params of one column chunk.
+    -> LPT-pack the pending files into bins, one Spark task each
+    -> ONE mapInArrow job: each task reads its files with pyarrow (no
+       table byte crosses the JVM), sorts each by `sort_cols` in place
+       (sorting lengthens runs -> RLE/delta win; SIGMOD'20
+       RLE-permutation), encodes it (one FSST/dict table per
+       part-column; row-aligned blocks bound UDF memory) and WRITES its
+       own blocks/part_id=N parquet, the one file per part (Iceberg
+       style: task-side data files, visibility via the metadata commit);
+       the job's Spark output is one summary row per part, from which the
+       driver commits the checkpoint.  The block table is also the codec
+       manifest: each row names the codec and params of one column chunk.
 
-`encode_dataframe` takes a part to be an input split (spark_partition_id;
-zero exchange).  `encode_parquet` pushes the SCAN into the task too
-(pyarrow vectorized reader, no JVM row materialization) with part = source
-file, through one task kernel: read the split, spill the rows of an
-optional hot plan's url hosts task-side into right-sized salt buckets,
-sort, encode.  With a hot plan (``partitioning="salted"``) the same
-kernel, planless, encodes the buckets in a second pass.  Nothing
-re-reads the payload.
+`encode_parquet` is the one entry point, through one task kernel: read
+the split, spill the rows of an optional hot plan's url hosts task-side
+into right-sized salt buckets, sort, encode.  With a hot plan
+(``partitioning="salted"``) the same kernel, planless, encodes the
+buckets in a second pass.  Nothing re-reads the payload.
 """
 
 from __future__ import annotations
@@ -39,7 +37,7 @@ from collections.abc import Iterator
 import numpy as np
 import pyarrow as pa
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import SparkSession, functions as F
 
 from nem_mms_spark import checkpoint as ckpt
 from nem_mms_spark import framing
@@ -50,68 +48,8 @@ from nem_mms_spark.selector import ColumnContext, select_and_encode
 from nem_mms_spark.worker import drop_archive_importers
 
 
-def encode_dataframe(
-    spark: SparkSession,
-    df: DataFrame,
-    out_dir: str,
-    *,
-    key_col: str | None = None,
-    sort_cols: list[str] | None = None,
-    block_rows: int = framing.DEFAULT_BLOCK_ROWS,
-    block_bytes: int = framing.DEFAULT_BLOCK_BYTES,
-    resume: bool = True,
-) -> dict:
-    """Encode each input split of ``df`` in place; returns summary metrics
-    (checkpoint totals, and ``native_kernels``: how many of this call's
-    parts ran on the native codec kernels, and why the others did not).
-
-    Part identity = input split (``spark_partition_id()``): every split is
-    sorted by ``sort_cols`` within itself and encoded by the task that
-    reads it, so the plan holds no exchange.  A caller that wants more or
-    fewer parts repartitions ``df`` first.
-
-    Resume: part ids are input split ids, so resume requires a stable
-    input split list across retries (true for static batches).  The mode
-    and key column are recorded in the checkpoint dir, and resuming under
-    different ones raises (a silent mismatch would skip partitions via
-    stale done-ids and drop data).
-    """
-    if key_col is None:
-        key_col = "url" if "url" in df.columns else df.columns[0]
-    if sort_cols is None:
-        sort_cols = [c for c in ("warc_ts", "ts") if c in df.columns]
-    done_ids = _start_run(
-        out_dir, {"partitioning": "aligned", "key_col": key_col}, resume
-    )
-    work = df.withColumn("part_id", F.spark_partition_id())
-    if done_ids:
-        work = work.filter(~F.col("part_id").isin(sorted(done_ids)))
-    if sort_cols:
-        work = work.sortWithinPartitions(*sort_cols)
-
-    # ONE JOB (round-4: the old three-pass flow — blocks write, then a
-    # blocks re-scan for the manifest aggregation, then the checkpoint —
-    # carried a ~3 s fixed tail).  Each task writes its own partition's
-    # blocks parquet directly (Iceberg style: data files
-    # land task-side, VISIBILITY is governed by the metadata commit — a
-    # partition exists iff its checkpoint row is committed), and the
-    # job's Spark output is one tiny summary row per partition from which
-    # the driver commits the checkpoint.  The payload bytes never
-    # round-trip through the JVM parquet writer at all.
-    encode_fn = _make_encoder(
-        block_rows, block_bytes, key_col, os.path.join(out_dir, M.BLOCKS_DIR)
-    )
-    summaries = work.mapInArrow(encode_fn, SUMMARY_SCHEMA).collect()
-    ckpt.commit_checkpoint_rows(_summary_ckpt_rows(summaries), out_dir)
-    return {
-        **ckpt.checkpoint_totals(out_dir),
-        "skipped_parts": len(done_ids),
-        "native_kernels": _native_report(summaries),
-    }
-
-
 def _start_run(out_dir: str, meta: dict, resume: bool) -> set[int]:
-    """Run preamble of every entry point.  A fresh run (``resume=False``)
+    """Run preamble of ``encode_parquet``.  A fresh run (``resume=False``)
     drops the old checkpoint and data dirs, so stale partition dirs from
     a previous layout cannot leak into decode.  Then the partitioning
     meta is checked against the stored one (resume) and recorded.
@@ -128,7 +66,7 @@ def _start_run(out_dir: str, meta: dict, resume: bool) -> set[int]:
 
 def encode_parquet(
     spark: SparkSession,
-    src_dir: str,
+    source: str | list[str],
     out_dir: str,
     *,
     key_col: str = "url",
@@ -141,8 +79,12 @@ def encode_parquet(
     hot_factor: float = 1.0,
     min_hot_rows: int = 4096,
 ) -> dict:
-    """SOURCE-DIRECT encode of a parquet/Iceberg-style table directory:
-    the scan happens INSIDE the Arrow task.
+    """SOURCE-DIRECT encode of parquet files: the scan happens INSIDE
+    the Arrow task.  ``source`` is a parquet/Iceberg-style table
+    directory (its ``*.parquet`` data files) or a list of parquet file
+    paths.  Either is sorted, and a file's part id is its index in the
+    sorted list: stable for a static input listing, and guarded by the
+    partitioning meta on resume.
 
     One task kernel (``_make_file_encoder``) serves every file job: it
     reads a split, spills the rows of hot keys when given a hot plan,
@@ -187,43 +129,34 @@ def encode_parquet(
     Output layout and part ids are unchanged (still one blocks file per
     source file).
 
-    The generic ``encode_dataframe`` path necessarily feeds the Python
-    kernels through Spark's row pipeline (cache/scan -> InternalRow ->
-    Arrow), and that JVM conversion was measured NOT to scale with cores
-    on this engine's profile (allocation-rate bound: ~same wall at 8 and
-    32 threads for a 7.4 GB feed).  When the source is already a parquet
-    table — the north-star ingest case — none of that is needed: Spark
-    distributes the data FILES (in the bins above), and each task reads
-    its files with pyarrow's vectorized C++ reader straight into the
-    same Arrow-native encode kernel.  No table byte ever crosses the
-    JVM.  Partition identity = file index in the sorted listing (the
-    aligned-mode contract: stable for a static input listing, guarded
-    by the partitioning meta), so resume/idempotence semantics are
-    unchanged.  On a real cluster the listing comes from the table
-    catalog and tasks read from the object store — the same shape as
-    any Iceberg-native scan.
+    Spark distributes the data FILES (in the bins above), and each task
+    reads its files with pyarrow's vectorized C++ reader straight into
+    the Arrow-native encode kernel, so no table byte crosses the JVM.  On
+    a real cluster the listing comes from the table catalog and tasks
+    read from the object store — the same shape as any Iceberg-native
+    scan.
 
     Returns the checkpoint totals plus this call's hot-key figures,
-    ``native_kernels`` (as in ``encode_dataframe``) and the driver
-    report (phase walls, per-task timeline).
-
-    DataFrame (non-file) sources go through ``encode_dataframe``,
-    which encodes each input split in place; key-skew handling exists
-    only here, for file sources (``partitioning="salted"``).
+    ``native_kernels`` (how many of this call's parts ran on the native
+    codec kernels, and why the others did not) and the driver report
+    (phase walls, per-task timeline).
     """
     import pyarrow.parquet as pq
 
     t_entry = time.monotonic_ns()
-    files = sorted(
-        f
-        for f in os.listdir(src_dir)
-        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    paths = sorted(
+        source
+        if isinstance(source, list)
+        else (
+            os.path.join(source, f)
+            for f in os.listdir(source)
+            if f.endswith(".parquet") and not f.startswith(("_", "."))
+        )
     )
-    if not files:
-        raise ValueError(f"no parquet data files under {src_dir}")
+    if not paths:
+        raise ValueError(f"no parquet data files under {source}")
     if partitioning not in ("source_direct", "salted"):
         raise ValueError(f"unknown partitioning mode {partitioning!r}")
-    paths = [os.path.join(src_dir, f) for f in files]
     # the schema from the first file's footer, which the tasks read too:
     # a driver-side metadata read, where Spark's schema inference would
     # run a job
@@ -248,7 +181,7 @@ def encode_parquet(
         out_dir,
         {
             "partitioning": "salted_direct" if salted else "source_direct",
-            "num_parts": len(files),
+            "num_parts": len(paths),
             "key_col": key_col,
             "salt_buckets": hot_parts,
         },
@@ -306,7 +239,7 @@ def encode_parquet(
         )
 
     totals = ckpt.checkpoint_totals(out_dir)
-    if totals["parts"] >= len(files) + hot_parts:
+    if totals["parts"] >= len(paths) + hot_parts:
         # everything committed: the spill has served its purpose
         shutil.rmtree(spill_dir, ignore_errors=True)
     return {
@@ -817,9 +750,8 @@ SUMMARY_SCHEMA = (
 )
 
 # per-stage in-task timing keys (stage_ns JSON map), in nanoseconds:
-# `read` = split read + hot spill + sort (``encode_parquet`` only;
-# sub-stages `rfetch` file read, `rparse` parquet/IPC decode, `rsort`
-# sort), `fprint` =
+# `read` = split read + hot spill + sort (sub-stages `rfetch` file
+# read, `rparse` parquet/IPC decode, `rsort` sort), `fprint` =
 # content fingerprint, `kernel` = Arrow->numpy framing, `encode` = codec
 # selection + encode proper, `zstats` = zone-map min/max, `build` =
 # blocks Arrow table construction, `write` = task-side parquet
@@ -891,30 +823,6 @@ def _publish(buf, dest: str) -> None:
     os.replace(tmp, dest)
 
 
-def _make_encoder(block_rows, block_bytes, key_col, blocks_dir):
-    """Build the mapInArrow kernel of ``encode_dataframe``: a task holds
-    exactly one part (its input split), so it concatenates its batches
-    and encodes them once.  Pure function of partition content."""
-
-    def encode_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        drop_archive_importers()
-        buf = [b for b in batches if b.num_rows]
-        if not buf:
-            return
-        tbl = pa.Table.from_batches(buf)
-        pids = tbl.column("part_id").to_numpy()
-        if pids.min() != pids.max():
-            raise ValueError(
-                f"one encode task got several part ids: {sorted(set(pids))}"
-            )
-        yield _encode_partition_table(
-            int(pids[0]), tbl.drop_columns(["part_id"]), block_rows,
-            block_bytes, key_col, blocks_dir,
-        )
-
-    return encode_partition
-
-
 def _encode_partition_table(
     pid: int,
     tbl: pa.Table,
@@ -927,10 +835,8 @@ def _encode_partition_table(
 ) -> pa.RecordBatch:
     """Encode ONE partition's Arrow table: frame into blocks, run codec
     selection per column chunk, write the partition's blocks parquet
-    task-side, and return the one-row summary batch.  Shared by
-    the DataFrame encode path (JVM feed) and the source-direct parquet
-    path (pyarrow scan inside the task), whose ``read_stage`` carries
-    the read sub-stage walls."""
+    task-side, and return the one-row summary batch.  ``read_stage``
+    carries the split read's sub-stage walls."""
     t0 = time.monotonic_ns()
     stage = dict.fromkeys(STAGE_KEYS, 0)
     stage.update(read_stage or {})
@@ -1084,8 +990,7 @@ def _fingerprint(tbl: pa.Table, key_col: str | None) -> int:
         for k in range(8):
             m = lengths > k
             h[m] ^= data[offsets[:-1][m] + k].astype(np.uint64) << np.uint64(8 * (k % 8))
-            m2 = lengths > k
-            h[m2] ^= data[offsets[1:][m2] - 1 - k].astype(np.uint64) << np.uint64(8 * ((k + 3) % 8) + 7)
+            h[m] ^= data[offsets[1:][m] - 1 - k].astype(np.uint64) << np.uint64(8 * ((k + 3) % 8) + 7)
         h = _mix(h)
     else:
         h = _mix(np.asarray(values).astype(np.uint64, copy=False))

@@ -20,7 +20,8 @@ def verify_roundtrip(
     out_dir: str,
     key: str = "url",
 ) -> dict:
-    """Exact multiset equality between source and decoded rows.
+    """Exact multiset equality between source and decoded rows; any
+    difference raises ``ValueError``.
 
     Both sides are grouped by ALL columns with a count, then full-outer
     null-safe-joined on those columns; any group whose counts differ (or
@@ -55,8 +56,8 @@ def verify_roundtrip(
         "decoded_rows": int(agg["decoded_rows"] or 0),
         "mismatched_groups": int(agg["mismatched_groups"] or 0),
     }
-    assert result["mismatched_groups"] == 0, f"multiset mismatch: {result}"
-    assert result["source_rows"] == result["decoded_rows"], (
-        f"row count mismatch: {result}"
-    )
+    if result["mismatched_groups"]:
+        raise ValueError(f"multiset mismatch: {result}")
+    if result["source_rows"] != result["decoded_rows"]:
+        raise ValueError(f"row count mismatch: {result}")
     return result

@@ -722,19 +722,16 @@ def _encoded_documents(spark, sf_dir: str, sort_cols=None) -> str:
     import shutil
     import tempfile
 
-    from nem_mms_spark.jobs.encode import encode_dataframe
+    from nem_mms_spark.jobs.encode import encode_parquet
 
     key = (sf_dir, tuple(sort_cols or ()))
     out = _ENCODE_CACHE.get(key)
     if out is None or not os.path.isdir(out):
         out = tempfile.mkdtemp(prefix="nem_mms_encq_")
-        # encode_dataframe encodes each input split in place, and the
-        # single-file scan is ONE split (a single-core encode): the
-        # explicit repartition spreads it over 16 parts.  Every query
-        # over the encoded output aggregates the full decoded multiset,
-        # which is invariant to the partition assignment.
-        encode_dataframe(
-            spark, _t(spark, sf_dir, "documents").repartition(16), out,
+        # the documents file encodes in place as one part, read by the
+        # task itself: no row crosses the JVM
+        encode_parquet(
+            spark, [f"{sf_dir}/documents.parquet"], out,
             key_col="doc_id", sort_cols=sort_cols, resume=False,
         )
         _ENCODE_CACHE[key] = out

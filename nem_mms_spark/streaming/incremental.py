@@ -2,12 +2,12 @@
 
 The reference's 'stream' is a directory that grows a new file every five
 minutes (nemweb Current feed — /root/reference/src/packages/fetch.rs:302-305),
-which it polls.  The Spark-native restatement is `readStream` on the landing
-directory + `foreachBatch` into the batch encode job: each micro-batch is
-encoded with `resume=False` semantics against a *batch-scoped* partition
-space, and Spark's own streaming checkpoint provides exactly-once file
-tracking (our per-partition checkpoint table remains the intra-batch
-idempotence layer).
+which it polls.  The Spark-native restatement is `readStream` of the
+landing directory's file PATHS + `foreachBatch` into the batch encode
+job: each micro-batch's new parquet files are encoded source-direct
+against a *batch-scoped* partition space, and Spark's own streaming
+checkpoint provides exactly-once file tracking (our per-partition
+checkpoint table remains the intra-batch idempotence layer).
 """
 
 from __future__ import annotations
@@ -16,37 +16,50 @@ import os
 
 from pyspark.sql import SparkSession
 
-from nem_mms_spark.jobs.encode import encode_dataframe
+from nem_mms_spark.jobs.encode import encode_parquet
+
+
+# the binaryFile source's fixed schema; a stream must be given it
+_BINARY_FILE_SCHEMA = (
+    "path string, modificationTime timestamp, length long, content binary"
+)
 
 
 def incremental_encode(
     spark: SparkSession,
     source_dir: str,
     out_dir: str,
-    schema: str | None = None,
     trigger_once: bool = True,
 ):
     """Start (and with trigger_once=True, drain) a streaming encode.
 
-    Each micro-batch lands under out_dir/batch=<epoch_id> so replays of a
-    failed batch overwrite their own partition dirs (idempotent).
-    Returns the StreamingQuery.
+    The stream carries only the paths of the new ``*.parquet`` files
+    (the ``binaryFile`` source's fixed schema, no table schema to infer);
+    each epoch encodes its files with ``encode_parquet``, whose tasks
+    read them with pyarrow.  Each micro-batch lands under
+    out_dir/batch=<epoch_id> and resumes there, so a replay of a failed
+    batch skips the parts it already committed.  Returns the
+    StreamingQuery.
     """
-    if schema is None:
-        schema = spark.read.parquet(source_dir).schema
-
     stream = (
-        spark.readStream.schema(schema)
+        spark.readStream.format("binaryFile")
+        .schema(_BINARY_FILE_SCHEMA)
+        .option("pathGlobFilter", "*.parquet")
         .option("maxFilesPerTrigger", "64")
-        .parquet(source_dir)
+        .load(source_dir)
+        .select("path")
     )
 
     def handle(batch_df, epoch_id: int):
-        if batch_df.isEmpty():
+        # the source reports Hadoop path strings: "file:" and the local
+        # path as it is, not percent-encoded (a '%' or '#' in a name
+        # stays literal, so URL-decoding would corrupt it)
+        paths = [r["path"].removeprefix("file:") for r in batch_df.collect()]
+        if not paths:
             return
-        encode_dataframe(
+        encode_parquet(
             spark,
-            batch_df,
+            paths,
             os.path.join(out_dir, f"batch={epoch_id}"),
             resume=True,
         )

@@ -63,11 +63,14 @@ def test_global_window_detector_flags_raw_window(spark):
 
 
 def test_incremental_encode_two_batches(spark, tmp_path):
+    """Each call encodes only the files that arrived since the last one;
+    a call with no new file writes no batch.  The landing path holds a
+    space, a '%' escape and a '#', which the stream reports literally."""
     from nem_mms_spark.datagen import web_pages_df
     from nem_mms_spark.jobs.decode import decode_blocks
     from nem_mms_spark.streaming import incremental_encode
 
-    src = str(tmp_path / "landing")
+    src = str(tmp_path / "landing zone%41#1")
     out = str(tmp_path / "enc")
     web_pages_df(spark, 500).write.mode("append").parquet(src)
     incremental_encode(spark, src, out)
@@ -83,6 +86,9 @@ def test_incremental_encode_two_batches(spark, tmp_path):
     assert len(batches) >= 2
     total = sum(decode_blocks(spark, b).count() for b in batches)
     assert total == 800
+    # nothing new arrived: no epoch is encoded
+    incremental_encode(spark, src, out)
+    assert sorted(glob.glob(out + "/batch=*")) == batches
 
     # cross-batch decode: one call reads the whole stream output and is
     # multiset-equal to the union of the inputs
@@ -105,18 +111,17 @@ def test_stream_decode_is_single_scan_over_many_batches(spark, tmp_path):
     import shutil
 
     from nem_mms_spark.datagen import web_pages_df
-    from nem_mms_spark.jobs.encode import encode_dataframe
+    from nem_mms_spark.jobs.encode import encode_parquet
     from nem_mms_spark.streaming import decode_stream_output
 
     out = str(tmp_path / "stream_out")
     n_batches, rows_each = 6, 120
     for epoch in range(n_batches):
-        df = web_pages_df(spark, rows_each * (epoch + 1)).filter(
+        landed = str(tmp_path / f"landed{epoch}")
+        web_pages_df(spark, rows_each * (epoch + 1)).filter(
             F.col("url").isNotNull()
-        ).limit(rows_each)
-        encode_dataframe(
-            spark, df, f"{out}/batch={epoch}", resume=False
-        )
+        ).limit(rows_each).write.parquet(landed)
+        encode_parquet(spark, landed, f"{out}/batch={epoch}", resume=False)
     two = str(tmp_path / "two_batches")
     for epoch in range(2):
         shutil.copytree(f"{out}/batch={epoch}", f"{two}/batch={epoch}")

@@ -89,12 +89,13 @@ def test_scan_blocks_weak_selectivity_broadcast_map(spark, tmp_path):
     variable, and a weakly-selective predicate (most blocks survive)
     still returns exactly the source-table filter result."""
     from nem_mms_spark.jobs.decode import scan_blocks
-    from nem_mms_spark.jobs.encode import encode_dataframe
+    from nem_mms_spark.jobs.encode import encode_parquet
 
-    docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
+    docs_file = f"{SF_SMALL}/documents.parquet"
+    docs = spark.read.parquet(docs_file)
     out = str(tmp_path / "enc")
-    encode_dataframe(
-        spark, docs, out, key_col="doc_id", sort_cols=["n_chars"],
+    encode_parquet(
+        spark, [docs_file], out, key_col="doc_id", sort_cols=["n_chars"],
         resume=False,
     )
     lo, hi = 10, 10_000  # survives nearly every block
@@ -116,13 +117,12 @@ def test_scan_blocks_empty_selection_returns_typed_empty(spark, tmp_path):
     yield an empty typed DataFrame, not an ArrowInvalid from
     ds.dataset([])."""
     from nem_mms_spark.jobs.decode import decode_blocks
-    from nem_mms_spark.jobs.encode import encode_dataframe
+    from nem_mms_spark.jobs.encode import encode_parquet
 
-    docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
+    docs_file = f"{SF_SMALL}/documents.parquet"
+    docs = spark.read.parquet(docs_file)
     out = str(tmp_path / "enc")
-    encode_dataframe(
-        spark, docs, out, key_col="doc_id", resume=False
-    )
+    encode_parquet(spark, [docs_file], out, key_col="doc_id", resume=False)
     empty = decode_blocks(spark, out, parts=[99_999])
     assert empty.count() == 0
     assert set(empty.columns) == set(docs.columns)

@@ -1,5 +1,6 @@
 """Full reference-pipeline composition: MMS flat file -> typed DataFrame
-(parse layer) -> codec engine (encode) -> decode -> bit-identical.
+(parse layer) -> parquet -> codec engine (encode) -> decode ->
+bit-identical.
 
 This is the end-to-end story the reference implements (parse -> parquet,
 /root/reference/src/main.rs:92-99) with our codec layer replacing the
@@ -9,7 +10,7 @@ Float64, Timestamp(s), Boolean, Int16, Int8) passes through the codecs.
 
 from __future__ import annotations
 
-from nem_mms_spark.jobs.encode import encode_dataframe
+from nem_mms_spark.jobs.encode import encode_parquet
 from nem_mms_spark.jobs.verify import verify_roundtrip
 from nem_mms_spark.sources.flatfile import parse_flatfiles
 
@@ -58,9 +59,12 @@ def test_flatfile_through_codec_engine(spark, tmp_path):
             "DI_NOTBINDING_COUNT", "DI_VIOLATED_COUNT",
         ),
     )
+    # the parse layer writes parquet, which the codec engine encodes
+    parsed_dir = str(tmp_path / "parsed")
+    keyed.write.parquet(parsed_dir)
     out = str(tmp_path / "enc")
-    metrics = encode_dataframe(
-        spark, keyed, out, key_col="row_key", resume=False
+    metrics = encode_parquet(
+        spark, parsed_dir, out, key_col="row_key", resume=False
     )
     assert metrics["rows"] == 600
     assert metrics["ratio"] < 0.7

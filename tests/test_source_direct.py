@@ -1,7 +1,7 @@
 """Source-direct parquet encode (`encode_parquet`): the scan happens
 inside the Arrow task (pyarrow reader), Spark distributes file splits.
-Contract: same output layout, same resume/idempotence semantics as the
-aligned DataFrame path."""
+Contract: one blocks file per source file (part id = index in the
+sorted listing), resumable and idempotent."""
 
 from __future__ import annotations
 
@@ -68,13 +68,15 @@ def test_resume_skips_done_and_completes_partial(
     assert parts(out) == full
 
 
-def test_mode_mismatch_with_dataframe_path_raises(spark, src, tmp_path):
-    from nem_mms_spark.jobs.encode import encode_dataframe
-
+def test_mode_mismatch_with_salted_raises(spark, src, tmp_path):
+    """Resuming a source_direct output as salted raises: the stored done
+    ids hold only under the mode that wrote them."""
     out = str(tmp_path / "enc")
     encode_parquet(spark, src, out, resume=False)
-    with pytest.raises(ValueError, match="partitioning parameters changed"):
-        encode_dataframe(spark, spark.read.parquet(src), out, resume=True)
+    with pytest.raises(
+        ValueError, match="partitioning parameters changed.*salted_direct"
+    ):
+        encode_parquet(spark, src, out, resume=True, partitioning="salted")
 
 
 def test_deterministic_blocks_across_runs(spark, src, tmp_path):

@@ -11,15 +11,16 @@ from pyspark.sql import Row, functions as F
 
 from nem_mms_spark.datagen.webpages import web_pages_df
 from nem_mms_spark.jobs.decode import decode_blocks, scan_blocks
-from nem_mms_spark.jobs.encode import encode_dataframe
+from nem_mms_spark.jobs.encode import encode_parquet
 
 
 @pytest.fixture(scope="module")
 def enc_dir(spark, tmp_path_factory):
-    out = str(tmp_path_factory.mktemp("enc_zm"))
-    pages = web_pages_df(spark, 4000)
-    encode_dataframe(spark, pages, out, block_rows=256)
-    return out, pages
+    root = tmp_path_factory.mktemp("enc_zm")
+    src, out = str(root / "src"), str(root / "enc")
+    web_pages_df(spark, 4000, num_partitions=4).write.parquet(src)
+    encode_parquet(spark, src, out, block_rows=256)
+    return out, spark.read.parquet(src)
 
 
 def test_zone_stats_present(spark, enc_dir):
@@ -103,10 +104,11 @@ def test_partition_pruning_reaches_scan(spark, enc_dir, tmp_path):
 def test_scan_int64_full_range_exact(spark, tmp_path_factory):
     """64-bit-range column: the overlap test must stay in int64 (a double
     cast would round and could skip a matching block)."""
-    out = str(tmp_path_factory.mktemp("enc_zm64"))
+    root = tmp_path_factory.mktemp("enc_zm64")
+    src, out = str(root / "src"), str(root / "enc")
     big = 2**62 + 12345
     rows = [Row(k=i, v=(big + i if i >= 900 else -big - i)) for i in range(1000)]
-    df = spark.createDataFrame(rows)
-    encode_dataframe(spark, df, out, key_col="k", block_rows=128)
+    spark.createDataFrame(rows).write.parquet(src)
+    encode_parquet(spark, src, out, key_col="k", block_rows=128)
     got = scan_blocks(spark, out, "v", lo=big)
     assert got.count() == 100

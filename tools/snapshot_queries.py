@@ -16,6 +16,7 @@ size it), so a change to its settings is inside what the snapshot sees.
 from __future__ import annotations
 
 import json
+import os
 import sys
 
 
@@ -33,6 +34,8 @@ def main() -> None:
     sf_dir, out_path = sys.argv[1], sys.argv[2]
     only = set(sys.argv[3:])
 
+    # the checkout root, where __spark_entry__ and nem_mms_spark live
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entry
     from nem_mms_spark.session import get_spark
 
