@@ -85,20 +85,29 @@ def _partitioning_meta_path(out_dir: str) -> str:
     return os.path.join(checkpoint_path(out_dir), "_partitioning.json")
 
 
-def check_partitioning_meta(out_dir: str, meta: dict, *, resume: bool) -> None:
-    """Record the partitioning mode + parameters alongside the checkpoint
-    and refuse to resume under different ones.  Stored done ids hold only
-    under the same part-id assignment (file index for 'source_direct',
-    plus the hot-bucket count for 'salted_direct') and the same
-    ``key_col`` (it feeds every part's
-    fingerprint); resuming under different ones would match fresh part
-    ids against stale done ids — silently skipping partitions and
-    dropping data."""
-    import glob
+def stored_partitioning_meta(out_dir: str) -> dict | None:
+    """The partitioning meta recorded with the checkpoint, None if none."""
     import json
 
     path = _partitioning_meta_path(out_dir)
-    if resume and not os.path.exists(path):
+    if not os.path.exists(path):
+        return None
+    with open(path) as f:
+        return json.load(f)
+
+
+def check_partitioning_meta(out_dir: str, meta: dict) -> None:
+    """Refuse to resume under a partitioning mode or parameters other
+    than the stored ones.  Stored done ids hold only under the same
+    part-id assignment (file index for 'source_direct', plus the
+    hot-bucket count for 'salted_direct') and the same ``key_col`` (it
+    feeds every part's fingerprint); resuming under different ones would
+    match fresh part ids against stale done ids — silently skipping
+    partitions and dropping data."""
+    import glob
+
+    existing = stored_partitioning_meta(out_dir)
+    if existing is None:
         # a checkpoint with committed runs but NO meta file predates the
         # meta guard (or lost it): its done-ids were produced by an
         # unknown part-id assignment, so silently adopting the current
@@ -112,22 +121,27 @@ def check_partitioning_meta(out_dir: str, meta: dict, *, resume: bool) -> None:
                 "to use this run's part-id assignment; re-encode with "
                 "resume=False or restore the original meta file"
             )
-    if resume and os.path.exists(path):
-        with open(path) as f:
-            existing = json.load(f)
-        if existing != meta:
-            diffs = {
-                k: (existing.get(k), meta.get(k))
-                for k in sorted(set(existing) | set(meta))
-                if existing.get(k) != meta.get(k)
-            }
-            raise ValueError(
-                "cannot resume: partitioning parameters changed since the "
-                f"checkpoint was written (stored vs requested: {diffs}); "
-                "re-encode with resume=False or restore the original "
-                "parameters"
-            )
+    elif existing != meta:
+        diffs = {
+            k: (existing.get(k), meta.get(k))
+            for k in sorted(set(existing) | set(meta))
+            if existing.get(k) != meta.get(k)
+        }
+        raise ValueError(
+            "cannot resume: partitioning parameters changed since the "
+            f"checkpoint was written (stored vs requested: {diffs}); "
+            "re-encode with resume=False or restore the original "
+            "parameters"
+        )
+
+
+def record_partitioning_meta(out_dir: str, meta: dict) -> None:
+    """Record the partitioning mode + parameters alongside the
+    checkpoint, for ``check_partitioning_meta`` on the next resume."""
+    import json
+
     os.makedirs(checkpoint_path(out_dir), exist_ok=True)
+    path = _partitioning_meta_path(out_dir)
     tmp = path + ".tmp"
     with open(tmp, "w") as f:
         json.dump(meta, f, sort_keys=True)

@@ -3,7 +3,7 @@
   python -m nem_mms_spark.cli generate --rows N --out DIR
   python -m nem_mms_spark.cli encode   --input PARQUET --out DIR [opts]
   python -m nem_mms_spark.cli decode   --encoded DIR --out PARQUET [--columns a,b]
-  python -m nem_mms_spark.cli verify   --source PARQUET --encoded DIR [--key url]
+  python -m nem_mms_spark.cli verify   --source PARQUET --encoded DIR
   python -m nem_mms_spark.cli info     [--encoded DIR]
 
 Reference ancestor: the clap dispatch in /root/reference/src/main.rs:91-154
@@ -68,7 +68,7 @@ def cmd_verify(args) -> int:
 
     spark = _spark(args)
     source = spark.read.parquet(args.source)
-    result = verify_roundtrip(spark, source, args.encoded, key=args.key)
+    result = verify_roundtrip(spark, source, args.encoded)
     print(json.dumps(result))
     return 0
 
@@ -198,7 +198,6 @@ def main(argv=None) -> int:
     v = sub.add_parser("verify", help="bit-identical round-trip check")
     v.add_argument("--source", required=True)
     v.add_argument("--encoded", required=True)
-    v.add_argument("--key", default="url")
     v.set_defaults(fn=cmd_verify)
 
     pa = sub.add_parser("parse", help="parse MMS flat files to parquet")

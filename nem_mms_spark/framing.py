@@ -12,6 +12,12 @@ Null handling lives here, not in the codecs: the validity bitmap is packed
 separately (little-endian bits) and codecs see only the non-null values —
 mirroring the reference's per-field nullability enforcement
 (/root/reference/src/flatfile.rs:163).
+
+Types: each block row records its column's Arrow type as a string
+(`logical_type`).  `_parse_type` reads it back, `kernel_dtype` maps an
+Arrow type to the codec kernels' dtype and `spark_schema` to the Spark
+type decode emits (pyspark's own Arrow mapping); encode checks its
+source schema with the same two mappings.
 """
 
 from __future__ import annotations
@@ -30,7 +36,6 @@ _PRIMITIVE_TOKENS = {
     "int16": "<i2",
     "int32": "<i4",
     "int64": "<i8",
-    "uint8": "u1",
     "float": "<f4",
     "double": "<f8",
     "date32[day]": "<i4",
@@ -150,33 +155,37 @@ def _scatter_bytes(dense: pa.Array, valid: np.ndarray, count: int) -> pa.Array:
     )
 
 
-_TYPE_PARSERS = {
-    "string": pa.string(),
-    "large_string": pa.large_string(),
-    "binary": pa.binary(),
-    "large_binary": pa.large_binary(),
-    "int8": pa.int8(),
-    "int16": pa.int16(),
-    "int32": pa.int32(),
-    "int64": pa.int64(),
-    "uint8": pa.uint8(),
-    "float": pa.float32(),
-    "double": pa.float64(),
-    "bool": pa.bool_(),
-    "date32[day]": pa.date32(),
-}
-
-
 def _parse_type(s: str) -> pa.DataType:
-    if s in _TYPE_PARSERS:
-        return _TYPE_PARSERS[s]
-    if s.startswith("timestamp["):
-        inner = s[len("timestamp[") : -1]
-        if ", tz=" in inner:
-            unit, tz = inner.split(", tz=")
-            return pa.timestamp(unit, tz=tz)
-        return pa.timestamp(inner)
-    raise ValueError(f"unsupported logical type {s!r}")
+    """The arrow type a block row's ``logical_type`` string (``str`` of
+    the type encode saw) names."""
+    if s.startswith("timestamp[") and ", tz=" in s:
+        # type_for_alias lower-cases the whole string, tz name included
+        unit, tz = s[len("timestamp[") : -1].split(", tz=")
+        return pa.timestamp(unit, tz=tz)
+    try:
+        return pa.type_for_alias(s)
+    except ValueError:
+        raise ValueError(f"unsupported logical type {s!r}") from None
+
+
+def spark_schema(arrow_schema: pa.Schema):
+    """The Spark schema decode emits for ``arrow_schema``: pyspark's own
+    Arrow mapping, timestamps without a zone as ``timestamp_ntz``.
+    Raises a ValueError naming the first column whose type the codec
+    kernels or Spark cannot carry, so encode can refuse a source that
+    decode could never emit before it writes anything."""
+    from pyspark.sql.pandas.types import from_arrow_schema, from_arrow_type
+
+    for f in arrow_schema:
+        try:
+            kernel_dtype(f.type)
+            from_arrow_type(f.type, prefer_timestamp_ntz=True)
+        except (ValueError, TypeError) as e:
+            raise ValueError(
+                f"unsupported logical type {str(f.type)!r} of column "
+                f"{f.name!r}: {e}"
+            ) from None
+    return from_arrow_schema(arrow_schema, prefer_timestamp_ntz=True)
 
 
 def block_ranges(

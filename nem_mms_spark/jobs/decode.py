@@ -6,12 +6,16 @@ That block table is also the codec manifest: its metadata columns name
 the codec, params, counts and zone map of every column chunk.
 ``read_block_meta`` is the one reader of those metadata columns: a
 driver-side pyarrow read with column projection, so no payload page is
-read and no Spark job runs.  ``decode_blocks`` takes its output schema
-from it, LPT-packs the part files into tasks, and each task reads its
-files with pyarrow, splits them at block boundaries and pivots the
-per-column payloads back into Arrow record batches.  No shuffle, and no
-encoded byte crosses the JVM.  Requesting a column subset prunes the
-decode work; ``scan_blocks`` adds zone-map skipping on top.
+read and no Spark job runs.  ``decode_blocks`` and ``scan_blocks`` each
+read it once per call and hand the table to ``_decode``, the one decode
+plan: it takes the output schema from the recorded Arrow types
+(``framing.spark_schema``), LPT-packs the part files into tasks, and
+each task reads its files with pyarrow, splits them at block boundaries
+and pivots the per-column payloads back into Arrow record batches.  No
+shuffle, and no encoded byte crosses the JVM.  Requesting a column
+subset prunes the decode work; ``scan_blocks`` adds zone-map skipping
+on top.  A streaming-encode root decodes through the same plan
+(``block_files``).
 
 The per-block `value_count` assertion is the reference's EOR row-count
 checksum (``src/flatfile.rs:475-488`` there) applied per block.
@@ -35,46 +39,50 @@ from nem_mms_spark.codecs.primitives import binary_views
 from nem_mms_spark.worker import drop_archive_importers
 
 
-def block_files(out_dir: str, stream_batches: bool = False) -> list[tuple]:
-    """(split key, part_id, path) of the blocks file of every committed
-    partition of ``out_dir``: the visibility set.  Data files land
-    task-side, so a failed or running encode can leave part files with
-    no checkpoint row, and those are never listed.  A committed part
-    with no file (a salted hot bucket that got no rows) is left out.
+def block_files(out_dir: str) -> list[tuple]:
+    """(part_id, path) of the blocks file of every committed partition
+    of ``out_dir``: the visibility set.  Data files land task-side, so
+    a failed or running encode can leave part files with no checkpoint
+    row, and those are never listed.  A committed part with no file (a
+    salted hot bucket that got no rows) is left out.
 
-    ``stream_batches``: ``out_dir`` holds one ``batch=<epoch>`` encode
-    output per micro-batch; splits are keyed by (epoch, part_id), so
-    same-numbered parts from different epochs never merge, and a batch
-    whose encode never committed is skipped whole.  On a plain root the
-    key is the part_id, and a root with no commit at all raises."""
-    if stream_batches:
-        roots = []
-        for b in sorted(d for d in os.listdir(out_dir) if d.startswith("batch=")):
-            pids = ckpt.committed_parts(os.path.join(out_dir, b))
-            if pids is not None:
-                epoch = int(b.split("=", 1)[1])
-                roots += [((epoch, p), os.path.join(out_dir, b), p) for p in pids]
-        if not roots:
-            raise ValueError(f"no committed batch outputs under {out_dir}")
-    else:
-        pids = ckpt.committed_parts(out_dir)
-        if pids is None:
-            raise ValueError(
-                f"no committed checkpoint under {out_dir}: the encode job "
-                "never committed (data files without a checkpoint row are "
-                "invisible by the visibility contract)"
+    A root with no ``checkpoint/`` of its own but ``batch=<epoch>`` dirs
+    is a streaming-encode root (``streaming.incremental_encode``): its
+    files are the committed parts of every committed batch, in epoch
+    order; a batch whose encode never committed is skipped whole.  Part
+    ids repeat across batches, paths do not.  A root with no commit at
+    all raises."""
+    roots = [out_dir]
+    if not os.path.isdir(ckpt.checkpoint_path(out_dir)):
+        epochs = sorted(
+            int(d.split("=", 1)[1])
+            for d in os.listdir(out_dir)
+            if d.startswith("batch=")
+        )
+        roots = [os.path.join(out_dir, f"batch={e}") for e in epochs]
+    files, committed = [], False
+    for root in roots:
+        pids = ckpt.committed_parts(root)
+        committed |= pids is not None
+        for p in pids or ():
+            path = os.path.join(
+                root, M.BLOCKS_DIR, f"part_id={p}", "data.parquet"
             )
-        roots = [(p, out_dir, p) for p in pids]
-    files = [
-        (key, p, os.path.join(root, M.BLOCKS_DIR, f"part_id={p}", "data.parquet"))
-        for key, root, p in roots
-    ]
-    return [f for f in files if os.path.exists(f[2])]
+            if os.path.exists(path):
+                files.append((p, path))
+    if not committed:
+        raise ValueError(
+            f"no committed checkpoint under {out_dir}: the encode job "
+            "never committed (data files without a checkpoint row are "
+            "invisible by the visibility contract)"
+        )
+    return files
 
 
 def read_block_meta(files: list[tuple], columns: list[str]) -> pa.Table:
-    """The block-table ``columns`` of ``files`` (``block_files`` entries)
-    as one table, with each row's ``part_id`` appended.
+    """The block-table ``columns`` of ``files`` (``block_files``
+    entries) as one table, with each row's block file appended as a
+    dictionary-coded ``path`` column.
 
     Driver-side pyarrow read with column projection: parquet skips the
     payload and validity pages, so the read is metadata-sized and runs
@@ -85,7 +93,7 @@ def read_block_meta(files: list[tuple], columns: list[str]) -> pa.Table:
     import pyarrow.parquet as pq
 
     tables = []
-    for _key, pid, path in files:
+    for _pid, path in files:
         try:
             # ParquetFile, not read_table, which builds a dataset per
             # file: 2.6 against 9.1 ms for the 3 schema columns of 10 files
@@ -93,9 +101,10 @@ def read_block_meta(files: list[tuple], columns: list[str]) -> pa.Table:
                 t = f.read(columns=columns)
         except (pa.ArrowException, OSError) as e:
             raise ValueError(f"unreadable block file {path}: {e}") from e
-        tables.append(
-            t.append_column("part_id", pa.array(np.full(len(t), pid, np.int32)))
+        rows_path = pa.DictionaryArray.from_arrays(
+            np.zeros(len(t), np.int32), [path]
         )
+        tables.append(t.append_column("path", rows_path))
     return pa.concat_tables(tables)
 
 
@@ -105,8 +114,6 @@ def decode_blocks(
     columns: list[str] | None = None,
     parts: list[int] | None = None,
     parallelism: int | None = None,
-    block_ids: dict | None = None,
-    stream_batches: bool = False,
 ) -> DataFrame:
     """Decode the committed partitions of ``out_dir`` into rows.
 
@@ -117,9 +124,14 @@ def decode_blocks(
     the codec decoders, and emits decoded Arrow batches directly.  No
     encoded byte crosses the JVM; on a real cluster each task GETs its
     partition object from the store — the Iceberg-native read shape.
+    ``out_dir`` may be a streaming-encode root (``block_files``): every
+    committed batch decodes in the same single Python map, whatever the
+    epoch count.
 
     ``columns``: decode only these (pruned before any codec runs);
     an unknown name raises.  ``parts``: decode only these part ids.
+    When no part survives the filters the result is a typed empty
+    DataFrame.
 
     ``parallelism``: the number of tasks (default: the session's
     ``defaultParallelism``); part files are LPT-packed into
@@ -131,39 +143,48 @@ def decode_blocks(
     (170-400 ms per call on Python 3.11, 4-vCPU box); the kernel drops
     them on every task (``worker.drop_archive_importers``), which leaves
     about 0.1 s per task, as long as a small part's decode.
-
-    ``block_ids``: optional {split key -> set(block_id)} survivor map
-    (zone-map skipping; see ``scan_blocks``): only those block groups
-    decode.  The map is shipped as a Spark broadcast variable: a
-    weakly-selective predicate over ~10^6 blocks would otherwise
-    serialize a multi-MB python closure into every task.
-
-    ``stream_batches``: ``out_dir`` is a streaming-encode root holding
-    one ``batch=<epoch>`` encode output per micro-batch; the plan is the
-    same single Python map whatever the epoch count.  Only committed
-    partitions are read (``block_files``).  When no block survives the
-    filters the result is a typed empty DataFrame.
     """
+    files = block_files(out_dir)
+    chosen = files
+    if parts is not None:
+        keep_parts = set(parts)
+        chosen = [f for f in files if f[0] in keep_parts]
+    # the output schema derives from ALL committed parts when the
+    # filter leaves none, so an empty selection is still typed
+    meta = read_block_meta(
+        chosen or files, ["col_idx", "column", "logical_type"]
+    )
+    return _decode(spark, chosen, meta, columns, None, parallelism)
+
+
+def _decode(
+    spark: SparkSession,
+    files: list[tuple[int, str]],
+    meta: pa.Table,
+    columns: list[str] | None,
+    survivors: dict[str, set] | None,
+    parallelism: int | None,
+) -> DataFrame:
+    """The one decode plan: ``files`` (``block_files`` entries) decoded
+    by one ``mapInArrow``.  ``meta``: block rows holding at least
+    ``col_idx``, ``column`` and ``logical_type``, from which the output
+    schema comes.  ``columns``: as in ``decode_blocks``.
+
+    ``survivors``: optional {block-file path -> set(block_id)} map
+    (zone-map skipping; see ``scan_blocks``): only those block groups
+    decode, and a file with none is never read.  The map is shipped as a
+    Spark broadcast variable: a weakly-selective predicate over ~10^6
+    blocks would otherwise serialize a multi-MB python closure into
+    every task."""
     from nem_mms_spark.jobs.encode import (
         _bin_file_splits,
         _bin_items,
         _read_split,
     )
 
-    committed_all = block_files(out_dir, stream_batches)
-    committed = committed_all
-    if parts is not None:
-        keep_parts = set(parts)
-        committed = [c for c in committed if c[1] in keep_parts]
-    if block_ids is not None:
-        committed = [c for c in committed if block_ids.get(c[0])]
-    # the output schema derives from ALL committed parts when the
-    # filters leave none, so an empty selection still returns a typed
-    # empty DataFrame
     key_cols = ["col_idx", "column", "logical_type"]
     col_rows = sorted(
-        read_block_meta(committed or committed_all, key_cols)
-        .group_by(key_cols, use_threads=False)
+        meta.group_by(key_cols, use_threads=False)
         .aggregate([])
         .to_pylist(),
         key=lambda r: r["col_idx"],
@@ -174,26 +195,27 @@ def decode_blocks(
         missing = keep - {r["column"] for r in col_rows}
         if missing:
             raise ValueError(f"columns not in manifest: {sorted(missing)}")
-    out_schema = M.decode_schema_of(col_rows)
     ordered = [r["column"] for r in col_rows]
     types = {r["column"]: r["logical_type"] for r in col_rows}
-    kdtypes = {c: _kernel_dtype_of(t) for c, t in types.items()}
-    # the recorded logical types ARE the arrow types Spark emitted at
-    # encode time, so emitting them back needs no conversion layer
+    # the recorded logical types ARE the arrow types of the source, so
+    # emitting them back needs no conversion layer
     arrow_schema = pa.schema(
         [(c, framing._parse_type(types[c])) for c in ordered]
     )
+    out_schema = framing.spark_schema(arrow_schema)
+    kdtypes = {f.name: framing.kernel_dtype(f.type) for f in arrow_schema}
     want = set(ordered)
 
-    splits = [(key, path) for key, _p, path in committed]
-    if not splits:
+    if survivors is not None:
+        files = [f for f in files if survivors.get(f[1])]
+    if not files:
         return spark.createDataFrame([], schema=out_schema)
     bc_blocks = (
-        spark.sparkContext.broadcast(block_ids)
-        if block_ids is not None
+        spark.sparkContext.broadcast(survivors)
+        if survivors is not None
         else None
     )
-    sdf, bins = _bin_file_splits(spark, splits, parallelism)
+    sdf, bins = _bin_file_splits(spark, files, parallelism)
 
     read_cols = [
         "block_id", "column", "codec", "params", "value_count",
@@ -204,9 +226,9 @@ def decode_blocks(
         pa.set_cpu_count(1)
         drop_archive_importers()
         allowed_map = bc_blocks.value if bc_blocks is not None else None
-        for key, path in _bin_items(batches, bins):
+        for _pid, path in _bin_items(batches, bins):
             allowed = (
-                allowed_map.get(key) if allowed_map is not None else None
+                allowed_map.get(path) if allowed_map is not None else None
             )
             tbl = _read_split(path, read_cols)
             if columns is not None:
@@ -288,15 +310,16 @@ def scan_blocks(
     row filter.
 
     Two passes:
-      1. metadata pass — ``read_block_meta`` reads ONLY the zone-map
-         columns of the committed parts' block files on the driver (no
-         Spark job; payload pages are never read), takes the column's
-         logical type from them, and keeps the overlapping
-         (part_id, block_id) pairs with numpy;
-      2. data pass — decode_blocks with the survivor map: only the
-         surviving part files are read at all, and inside each task only
-         the surviving block groups decode; then the exact predicate on
-         decoded values.  No survivor gives a typed empty DataFrame.
+      1. metadata pass — ``read_block_meta`` reads ONLY the schema and
+         zone-map columns of the committed parts' block files on the
+         driver, each file once (no Spark job; payload pages are never
+         read), takes the column's logical type from them, and keeps
+         the overlapping (block file, block_id) pairs with numpy;
+      2. data pass — the decode plan (``_decode``) over the same table
+         with the survivor map: only the surviving part files are read
+         at all, and inside each task only the surviving block groups
+         decode; then the exact predicate on decoded values.  No
+         survivor gives a typed empty DataFrame.
 
     NULL zone maps (bytes columns, NaN blocks) never skip.  Timestamp
     columns use epoch-micros bounds (pass lo/hi as ints or datetimes).
@@ -305,12 +328,13 @@ def scan_blocks(
 
     import pyarrow.compute as pc
 
-    meta = read_block_meta(
-        block_files(out_dir),
-        ["block_id", "column", "logical_type",
+    files = block_files(out_dir)
+    all_meta = read_block_meta(
+        files,
+        ["block_id", "col_idx", "column", "logical_type",
          "zmin_i", "zmax_i", "zmin_d", "zmax_d"],
     )
-    meta = meta.filter(pc.field("column") == pred_column)
+    meta = all_meta.filter(pc.field("column") == pred_column)
     if not len(meta):
         raise ValueError(f"column {pred_column!r} not in manifest")
     logical_type = meta.column("logical_type")[0].as_py()
@@ -340,18 +364,16 @@ def scan_blocks(
             keep &= z.is_null().to_numpy(zero_copy_only=False) | overlaps(
                 z.fill_null(0).to_numpy(), bound
             )
-    # survivor map: (part_id, block_id) ints only — metadata-scale by
+    # survivor map: block-file path -> block ids, metadata-scale by
     # construction (it is the zone-map prune's output), broadcast to the
     # decode tasks
-    surv_map: dict[int, set] = {}
-    for pid, bid in zip(
-        meta.column("part_id").to_numpy()[keep].tolist(),
-        meta.column("block_id").to_numpy()[keep].tolist(),
+    surv = meta.filter(pa.array(keep))
+    survivors: dict[str, set] = {}
+    for path, bid in zip(
+        surv.column("path").to_pylist(), surv.column("block_id").to_pylist()
     ):
-        surv_map.setdefault(pid, set()).add(bid)
-    decoded = decode_blocks(
-        spark, out_dir, columns=columns, block_ids=surv_map
-    )
+        survivors.setdefault(path, set()).add(bid)
+    decoded = _decode(spark, files, all_meta, columns, survivors, None)
     col = F.col(pred_column)
     if is_ts:
         if "tz=" in logical_type:
@@ -382,10 +404,3 @@ def _to_epoch_us(v):
         return int(v.replace(tzinfo=_dt.timezone.utc).timestamp() * 1_000_000)
     raise ValueError(f"unsupported timestamp bound {v!r}")
 
-
-def _kernel_dtype_of(logical_type: str) -> str:
-    import pyarrow as pa  # local import: executors only need it lazily
-
-    from nem_mms_spark.framing import _parse_type, kernel_dtype
-
-    return kernel_dtype(_parse_type(logical_type))

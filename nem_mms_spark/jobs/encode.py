@@ -49,17 +49,20 @@ from nem_mms_spark.worker import drop_archive_importers
 
 
 def _start_run(out_dir: str, meta: dict, resume: bool) -> set[int]:
-    """Run preamble of ``encode_parquet``.  A fresh run (``resume=False``)
-    drops the old checkpoint and data dirs, so stale partition dirs from
-    a previous layout cannot leak into decode.  Then the partitioning
-    meta is checked against the stored one (resume) and recorded.
+    """Run preamble of ``encode_parquet``.  A resume checks the
+    partitioning meta against the stored one; a fresh run
+    (``resume=False``) drops the old checkpoint and data dirs, so stale
+    partition dirs from a previous layout cannot leak into decode.  Then
+    the meta is recorded.
     Returns the part ids already committed (empty on a fresh run), read
     driver-side from the checkpoint's run files, with no Spark job."""
-    if not resume:
+    if resume:
+        ckpt.check_partitioning_meta(out_dir, meta)
+    else:
         ckpt.clear_checkpoint(out_dir)
         for sub in (M.BLOCKS_DIR, M.OLD_MANIFEST_DIR):
             shutil.rmtree(os.path.join(out_dir, sub), ignore_errors=True)
-    ckpt.check_partitioning_meta(out_dir, meta, resume=resume)
+    ckpt.record_partitioning_meta(out_dir, meta)
     done = ckpt.committed_parts(out_dir) if resume else None
     return set(done or ())
 
@@ -161,10 +164,24 @@ def encode_parquet(
     # a driver-side metadata read, where Spark's schema inference would
     # run a job
     schema = pq.read_schema(paths[0])
+    # refuse a column decode could never emit before anything is written
+    framing.spark_schema(schema)
     src_cols = schema.names
     if sort_cols is None:
         sort_cols = [c for c in ("warc_ts", "ts") if c in src_cols]
     salted = partitioning == "salted"
+    meta = {
+        "partitioning": "salted_direct" if salted else "source_direct",
+        "num_parts": len(paths),
+        "key_col": key_col,
+    }
+    if salted and resume:
+        # the fields the hot plan does not decide are checked before its
+        # key-count job runs; the stored bucket count stands in for the
+        # plan's until ``_start_run`` checks the whole meta
+        ckpt.check_partitioning_meta(
+            out_dir, {**(ckpt.stored_partitioning_meta(out_dir) or {}), **meta}
+        )
     plan = (
         _hot_plan(
             spark, schema, paths, key_col, parallelism, hot_factor,
@@ -177,16 +194,7 @@ def encode_parquet(
     spill_dir = os.path.join(out_dir, "hot_spill")
     if not resume:
         shutil.rmtree(spill_dir, ignore_errors=True)
-    done_ids = _start_run(
-        out_dir,
-        {
-            "partitioning": "salted_direct" if salted else "source_direct",
-            "num_parts": len(paths),
-            "key_col": key_col,
-            "salt_buckets": hot_parts,
-        },
-        resume,
-    )
+    done_ids = _start_run(out_dir, {**meta, "salt_buckets": hot_parts}, resume)
 
     def encode(splits, hot_plan):
         if not splits:

@@ -18,7 +18,6 @@ def verify_roundtrip(
     spark: SparkSession,
     source: DataFrame,
     out_dir: str,
-    key: str = "url",
 ) -> dict:
     """Exact multiset equality between source and decoded rows; any
     difference raises ``ValueError``.

@@ -1,4 +1,4 @@
-"""Encode output layout (dir names) + logical type mapping.
+"""Encode output layout: the names of the dirs under an encode output.
 
 Layout under an encode output directory (plain parquet standing in for the
 Iceberg tables `encoded_blocks` / `checkpoint` — catalog I/O is isolated
@@ -29,43 +29,3 @@ BLOCKS_DIR = "blocks"
 # (resume=False) encode removes it
 OLD_MANIFEST_DIR = "manifest"
 CHECKPOINT_DIR = "checkpoint"
-
-# arrow logical type string -> Spark DDL type (decode output schema)
-_ARROW_TO_SPARK = {
-    "string": "string",
-    "large_string": "string",
-    "binary": "binary",
-    "large_binary": "binary",
-    "int8": "byte",
-    "int16": "short",
-    "int32": "int",
-    "int64": "long",
-    "float": "float",
-    "double": "double",
-    "bool": "boolean",
-    "date32[day]": "date",
-}
-
-
-def spark_type_of(logical_type: str) -> str:
-    if logical_type in _ARROW_TO_SPARK:
-        return _ARROW_TO_SPARK[logical_type]
-    if logical_type.startswith("timestamp["):
-        return "timestamp" if ", tz=" in logical_type else "timestamp_ntz"
-    raise ValueError(f"unsupported logical type {logical_type!r}")
-
-
-def decode_schema_of(col_rows) -> str:
-    """Spark DDL for decode output, in original column order.
-
-    col_rows: iterable of mappings with col_idx, column, logical_type
-    (block table rows, or the distinct column set).
-    """
-    seen = {}
-    for r in col_rows:
-        seen[r["col_idx"]] = (r["column"], r["logical_type"])
-    parts = [
-        f"`{name}` {spark_type_of(lt)}"
-        for _, (name, lt) in sorted(seen.items())
-    ]
-    return ", ".join(parts)

@@ -323,9 +323,7 @@ def _cast_cell(raw, spark_type: str):
     raise ValueError(f"unsupported cast target {spark_type}")
 
 
-def parse_flatfiles(
-    spark: SparkSession, path: str, strict_nulls: bool = True
-) -> dict[str, DataFrame]:
+def parse_flatfiles(spark: SparkSession, path: str) -> dict[str, DataFrame]:
     """Full pipeline: path -> {package_name: typed DataFrame} (the
     reference's `parse` entry point, main.rs:92-99)."""
     lines = read_flatfile_lines(spark, path)
@@ -428,17 +426,18 @@ def parse_flatfiles(
                 _cast_cell(raw, field.dataType.simpleString()).alias(field.name)
             )
         typed = rows.select(*cols)
-        if strict_nulls:
-            req = [f.name for f in schema.fields if not f.nullable]
-            if req:
-                viol = typed.filter(
-                    F.greatest(*[F.col(c).isNull().cast("int") for c in req])
-                    == 1
-                ).count()
-                if viol:
-                    raise ValueError(
-                        f"{pkg}: {viol} rows violate non-null fields {req}"
-                    )
+        # per-field nullability, as the reference enforces it
+        # (flatfile.rs:163)
+        req = [f.name for f in schema.fields if not f.nullable]
+        if req:
+            viol = typed.filter(
+                F.greatest(*[F.col(c).isNull().cast("int") for c in req])
+                == 1
+            ).count()
+            if viol:
+                raise ValueError(
+                    f"{pkg}: {viol} rows violate non-null fields {req}"
+                )
         out[pkg] = typed
     return out
 

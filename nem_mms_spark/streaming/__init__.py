@@ -1,4 +1,3 @@
 from nem_mms_spark.streaming.incremental import (  # noqa: F401
-    decode_stream_output,
     incremental_encode,
 )

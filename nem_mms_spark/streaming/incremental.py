@@ -8,6 +8,11 @@ job: each micro-batch's new parquet files are encoded source-direct
 against a *batch-scoped* partition space, and Spark's own streaming
 checkpoint provides exactly-once file tracking (our per-partition
 checkpoint table remains the intra-batch idempotence layer).
+
+The output root holds one ``batch=<epoch>`` encode output per
+micro-batch and no checkpoint of its own; ``jobs.decode.decode_blocks``
+and ``scan_blocks`` recognise such a root and read every committed
+batch in one plan.
 """
 
 from __future__ import annotations
@@ -75,19 +80,3 @@ def incremental_encode(
         q.awaitTermination()
     return q
 
-
-def decode_stream_output(
-    spark: SparkSession, out_dir: str, columns: list[str] | None = None
-):
-    """Decode the WHOLE streaming output — every batch=<epoch> dir — as
-    one DataFrame.  ``decode_blocks`` builds one split list from every
-    committed (epoch, part_id) file and reads it with a single Python
-    map, so the plan is the same size whatever the epoch count (a
-    per-batch union would re-plan per epoch, driver-bound at thousands
-    of epochs); splits are keyed by (epoch, part_id) so same-numbered
-    partitions from different epochs never merge."""
-    from nem_mms_spark.jobs.decode import decode_blocks
-
-    if not any(d.startswith("batch=") for d in os.listdir(out_dir)):
-        raise ValueError(f"no batch outputs under {out_dir}")
-    return decode_blocks(spark, out_dir, columns=columns, stream_batches=True)

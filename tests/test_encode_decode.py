@@ -49,7 +49,7 @@ def test_encode_decode_bit_identical(spark, src, pages, tmp_path_factory):
         nk = metrics["native_kernels"]
         assert nk["loaded_tasks"] == nk["tasks"] == metrics["parts"], nk
         assert nk["error"] is None
-    result = verify_roundtrip(spark, pages, out, key="url")
+    result = verify_roundtrip(spark, pages, out)
     assert result["mismatched_groups"] == 0
     assert result["decoded_rows"] == N_ROWS
 
@@ -105,7 +105,7 @@ def test_resume_skips_done_and_completes_partial(
     assert m2["skipped_parts"] == m1["parts"] - 2
     assert m2["rows"] == N_ROWS
     assert _ckpt_parts(spark, out) == full
-    verify_roundtrip(spark, pages, out, key="url")
+    verify_roundtrip(spark, pages, out)
 
 
 def test_resume_partitioning_mismatch_raises(spark, src, pages, tmp_path):
@@ -164,7 +164,7 @@ def test_fresh_reencode_truncates_stale_partitions(spark, src, pages, tmp_path_f
     assert m["rows"] == 100 and m["parts"] == 1, m
     decoded = decode_blocks(spark, out)
     assert decoded.count() == 100
-    verify_roundtrip(spark, spark.read.parquet(small), out, key="url")
+    verify_roundtrip(spark, spark.read.parquet(small), out)
 
 
 def test_verify_roundtrip_with_duplicate_keys(spark, pages, tmp_path_factory):
@@ -177,9 +177,7 @@ def test_verify_roundtrip_with_duplicate_keys(spark, pages, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("enc_dup"))
     m = encode_parquet(spark, doubled, out)
     assert m["rows"] == 400
-    result = verify_roundtrip(
-        spark, spark.read.parquet(doubled), out, key="url"
-    )
+    result = verify_roundtrip(spark, spark.read.parquet(doubled), out)
     assert result["source_rows"] == result["decoded_rows"] == 400
 
 
@@ -193,7 +191,7 @@ def test_verify_roundtrip_raises_on_missing_part(
     encode_parquet(spark, src, out, resume=False)
     drop_committed_parts(out, [0])
     with pytest.raises(ValueError, match="multiset mismatch"):
-        verify_roundtrip(spark, pages, out, key="url")
+        verify_roundtrip(spark, pages, out)
 
 
 def test_encode_zero_shuffle_roundtrip(
@@ -229,7 +227,7 @@ def test_encode_zero_shuffle_roundtrip(
     m, stages = stages_per_job("in-place-resume", resume=True)
     assert m["skipped_parts"] == m["parts"] - 1
     assert stages and max(stages) == 1, stages
-    verify_roundtrip(spark, pages, out, key="url")
+    verify_roundtrip(spark, pages, out)
 
 
 def test_determinism_across_runs(spark, src, tmp_path_factory):
@@ -319,21 +317,21 @@ def test_output_with_old_manifest_dir(spark, src, pages, tmp_path_factory):
         )
 
     n_scan = scanned()
-    for _key, pid, _path in block_files(out):
+    for pid, _path in block_files(out):
         stale = os.path.join(out, "manifest", f"part_id={pid}")
         os.makedirs(stale)
         pq.write_table(
             pa.table({"col_idx": [0], "column": ["url"], "n_values": [7]}),
             os.path.join(stale, "data.parquet"),
         )
-    assert verify_roundtrip(spark, pages, out, key="url")["decoded_rows"] == N_ROWS
+    assert verify_roundtrip(spark, pages, out)["decoded_rows"] == N_ROWS
     assert scanned() == n_scan
     resumed = encode_parquet(spark, src, out, resume=True)
     assert resumed["skipped_parts"] == m["parts"]
     assert resumed["rows"] == N_ROWS
     encode_parquet(spark, src, out, resume=False)
     assert not os.path.exists(os.path.join(out, "manifest"))
-    verify_roundtrip(spark, pages, out, key="url")
+    verify_roundtrip(spark, pages, out)
 
 
 def test_decode_without_any_commit_raises(spark, src, tmp_path_factory):

@@ -92,9 +92,7 @@ def test_incremental_encode_two_batches(spark, tmp_path):
 
     # cross-batch decode: one call reads the whole stream output and is
     # multiset-equal to the union of the inputs
-    from nem_mms_spark.streaming import decode_stream_output
-
-    dec = decode_stream_output(spark, out)
+    dec = decode_blocks(spark, out)
     src_df = spark.read.parquet(src)
     a = src_df.groupBy("url").count()
     b = dec.groupBy("url").count()
@@ -111,8 +109,8 @@ def test_stream_decode_is_single_scan_over_many_batches(spark, tmp_path):
     import shutil
 
     from nem_mms_spark.datagen import web_pages_df
+    from nem_mms_spark.jobs.decode import decode_blocks
     from nem_mms_spark.jobs.encode import encode_parquet
-    from nem_mms_spark.streaming import decode_stream_output
 
     out = str(tmp_path / "stream_out")
     n_batches, rows_each = 6, 120
@@ -135,12 +133,12 @@ def test_stream_decode_is_single_scan_over_many_batches(spark, tmp_path):
 
         return list(walk(df._jdf.queryExecution().executedPlan()))
 
-    dec = decode_stream_output(spark, out)
+    dec = decode_blocks(spark, out)
     assert dec.count() == n_batches * rows_each
     nodes = plan_nodes(dec)
     assert sum("MapIn" in n for n in nodes) == 1, nodes
     assert not any("Union" in n for n in nodes), nodes
-    dec_two = decode_stream_output(spark, two)
+    dec_two = decode_blocks(spark, two)
     assert dec_two.count() == 2 * rows_each
     assert len(plan_nodes(dec_two)) == len(nodes)
 

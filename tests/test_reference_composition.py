@@ -68,5 +68,5 @@ def test_flatfile_through_codec_engine(spark, tmp_path):
     )
     assert metrics["rows"] == 600
     assert metrics["ratio"] < 0.7
-    result = verify_roundtrip(spark, keyed, out, key="row_key")
+    result = verify_roundtrip(spark, keyed, out)
     assert result["mismatched_groups"] == 0

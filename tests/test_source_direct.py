@@ -70,13 +70,47 @@ def test_resume_skips_done_and_completes_partial(
 
 def test_mode_mismatch_with_salted_raises(spark, src, tmp_path):
     """Resuming a source_direct output as salted raises: the stored done
-    ids hold only under the mode that wrote them."""
+    ids hold only under the mode that wrote them.  The refusal comes
+    before the hot plan's key-count job, so no Spark job runs."""
+    sc = spark.sparkContext
     out = str(tmp_path / "enc")
     encode_parquet(spark, src, out, resume=False)
+    try:
+        sc.setJobGroup("salted-refused", "refused salted resume")
+        with pytest.raises(
+            ValueError, match="partitioning parameters changed.*salted_direct"
+        ):
+            encode_parquet(spark, src, out, resume=True, partitioning="salted")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+    assert sc.statusTracker().getJobIdsForGroup("salted-refused") == []
+
+
+@pytest.mark.parametrize("typ", ["uint8", "uint16"])
+def test_encode_refuses_type_decode_cannot_emit(spark, tmp_path, typ):
+    """A source column whose type decode could never emit (Spark has no
+    unsigned integers) is refused on the driver, naming the column and
+    the type, before any checkpoint or block file is written."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src_dir = tmp_path / "src"
+    src_dir.mkdir()
+    pq.write_table(
+        pa.table({
+            "url": ["http://a.example/", "http://b.example/"],
+            "x": pa.array([1, 2], type=getattr(pa, typ)()),
+        }),
+        str(src_dir / "part-0.parquet"),
+    )
+    out = tmp_path / "enc"
     with pytest.raises(
-        ValueError, match="partitioning parameters changed.*salted_direct"
+        ValueError, match=f"unsupported logical type '{typ}' of column 'x'"
     ):
-        encode_parquet(spark, src, out, resume=True, partitioning="salted")
+        encode_parquet(spark, str(src_dir), str(out), resume=False)
+    assert not (out / "checkpoint").exists()
+    assert not (out / "blocks").exists()
 
 
 def test_deterministic_blocks_across_runs(spark, src, tmp_path):
