@@ -7,7 +7,7 @@ Each codec is a pair of module-level functions
 
 operating on numpy arrays (ints/floats/bools) or (data: uint8 ndarray,
 offsets: int64 ndarray) pairs for strings/binary — the zero-copy shapes
-pyarrow hands us at the mapInArrow boundary.  No Spark imports here: the
+of the pyarrow arrays the encode and decode tasks hold.  No Spark imports here: the
 kernels are unit-testable standalone (reference analogue: the row->Arrow
 builders in /root/reference/src/flatfile.rs:147-278, which delegate actual
 encoding to parquet defaults — the gap this package fills).

@@ -22,7 +22,8 @@ tiers, against 13.2 flat and an order-0 entropy of 7.9.
 The dictionary is stored raw (packed lengths + bytes), or FSST-coded with
 the caller's table when that is smaller: the selector passes the column's
 4 KB probe table, so the payload does not depend on whether the column
-also trained a full table.
+also trained a full table.  The selector builds the dictionary section
+(``encode_dictionary``) to price it, and hands it to ``encode``.
 
 Layout: [packed tokens-per-string][dictionary][tier selector, two tiers
 only][one packed rank stream per tier].
@@ -264,21 +265,44 @@ def _unpack_tiers_numpy(buf, widths, sizes, card, starts) -> np.ndarray:
     return ranks
 
 
+def encode_dictionary(
+    uniq: tuple[np.ndarray, np.ndarray],
+    order: np.ndarray,
+    table: fsst.FsstTable | None,
+) -> tuple[bytes, dict]:
+    """The dictionary section of a WORD_DICT payload and its params: the
+    distinct tokens ``uniq`` in rank ``order``, stored raw, or coded
+    with ``table`` when that is smaller."""
+    udata, uoffsets = uniq
+    card = len(uoffsets) - 1
+    if card:
+        udata, uoffsets = gather_bytes(udata, uoffsets, order)
+    payload, params = encode_offsets_data(udata, uoffsets)
+    params = {"dp": params}
+    if table is not None and card:
+        fp, fparams = fsst.encode(udata, uoffsets, table=table)
+        if len(fp) < len(payload):
+            payload, params = fp, {"df": fparams}
+    return payload, params
+
+
 def encode(
     data: np.ndarray,
     offsets: np.ndarray,
     words: Words | None = None,
     tiers: Tiers | None = None,
     table: fsst.FsstTable | None = None,
+    dictionary: tuple[bytes, dict] | None = None,
 ) -> tuple[bytes, dict]:
-    """``words`` is ``factorize_words``' result and ``tiers`` is
-    ``rank_tiers``' on its counts, when the caller already has them.
+    """``words`` is ``factorize_words``' result, ``tiers`` is
+    ``rank_tiers``' on its counts and ``dictionary`` is
+    ``encode_dictionary``'s on both, when the caller already has them.
     ``table`` codes the dictionary when that beats storing it raw."""
     n = len(offsets) - 1
     if words is None:
         words = factorize_words(data, offsets)
-    codes, counts, (udata, uoffsets), hist = words
-    card = len(uoffsets) - 1
+    codes, counts, uniq, hist = words
+    card = len(uniq[1]) - 1
     if tiers is None:
         tiers = rank_tiers(hist)
 
@@ -288,14 +312,9 @@ def encode(
 
     rank_of = np.empty(card, dtype=np.int64)
     rank_of[tiers.order] = np.arange(card)
-    if card:
-        udata, uoffsets = gather_bytes(udata, uoffsets, tiers.order)
-    dict_payload, dict_params = encode_offsets_data(udata, uoffsets)
-    dict_params = {"dp": dict_params}
-    if table is not None and card:
-        fp, fparams = fsst.encode(udata, uoffsets, table=table)
-        if len(fp) < len(dict_payload):
-            dict_payload, dict_params = fp, {"df": fparams}
+    if dictionary is None:
+        dictionary = encode_dictionary(uniq, tiers.order, table)
+    dict_payload, dict_params = dictionary
     codes_p = pack_tiers(codes, rank_of, tiers)
     payload = counts_p + dict_payload + codes_p
     return payload, {

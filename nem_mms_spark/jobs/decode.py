@@ -215,7 +215,9 @@ def _decode(
         if survivors is not None
         else None
     )
-    sdf, bins = _bin_file_splits(spark, files, parallelism)
+    bins = _bin_file_splits(
+        files, parallelism or spark.sparkContext.defaultParallelism
+    )
 
     read_cols = [
         "block_id", "column", "codec", "params", "value_count",
@@ -290,7 +292,9 @@ def _decode(
                     [out[c] for c in ordered], schema=arrow_schema
                 )
 
-    return sdf.mapInArrow(decode_files, out_schema)
+    return spark.range(len(bins), numPartitions=len(bins)).mapInArrow(
+        decode_files, out_schema
+    )
 
 
 # the name the benchmark harness imports; decode_blocks is the one reader

@@ -8,14 +8,15 @@ shuffle:
   source parquet files (part id = index in the sorted file list)
     -> skip parts already committed in the checkpoint (resume)
     -> LPT-pack the pending files into bins, one Spark task each
-    -> ONE mapInArrow job: each task reads its files with pyarrow (no
-       table byte crosses the JVM), sorts each by `sort_cols` in place
+    -> ONE RDD job (sc.parallelize over the bin ids, mapPartitions,
+       collect): each task reads its files with pyarrow (no table byte
+       crosses the JVM), sorts each by `sort_cols` in place
        (sorting lengthens runs -> RLE/delta win; SIGMOD'20
        RLE-permutation), encodes it (one FSST/dict table per
        part-column; row-aligned blocks bound UDF memory) and WRITES its
        own blocks/part_id=N parquet, the one file per part (Iceberg
        style: task-side data files, visibility via the metadata commit);
-       the job's Spark output is one summary row per part, from which the
+       the job's output is one summary dict per part, from which the
        driver commits the checkpoint.  The block table is also the codec
        manifest: each row names the codec and params of one column chunk.
 
@@ -115,20 +116,29 @@ def encode_parquet(
     to the least-loaded bin) into ``min(n_files, parallelism)`` bins,
     one task each, so the task count itself caps concurrency.  Bins are
     deliberately coarse: every task pays a fixed start-up cost that does
-    not shrink with its work.  Most of it is Spark's task launch plus the
-    hand-off into the Python worker, where pyspark calls
-    ``importlib.invalidate_caches()``: on Python 3.11 that re-reads the
-    central directory of every archive behind a cached zipimporter, and
-    a warmed worker held 16 of them (``pyspark.zip``, the py4j zip and
-    the spark-core jar), measured at 170-400 ms per call on a 4-vCPU
-    box.  The kernels drop those importers on every task
-    (``worker.drop_archive_importers``), which leaves about 0.1 s per
-    task: the gap between consecutive tasks on one worker has median
-    0.11 s and quartiles 0.09-0.14 s, against 0.35 s with the importers
-    kept.
-    Cutting files into more, smaller tasks than slots was measured to
-    pay the 0.35 s cost more often than it saved in stragglers; at
-    0.1 s that is not re-measured.
+    not shrink with its work.  Part of it is the hand-off into the Python
+    worker, where pyspark calls ``importlib.invalidate_caches()``: on
+    Python 3.11 that re-reads the central directory of every archive
+    behind a cached zipimporter, and a warmed worker held 16 of them
+    (``pyspark.zip``, the py4j zip and the spark-core jar), measured at
+    170-400 ms per call on a 4-vCPU box.  The kernels drop those
+    importers on every task (``worker.drop_archive_importers``), which
+    leaves about 0.1 s per task: the gap between consecutive tasks on
+    one worker has median 0.11 s and quartiles 0.09-0.14 s, against
+    0.35 s with the importers kept.  Cutting files into more, smaller
+    tasks than slots was measured to pay the 0.35 s cost more often than
+    it saved in stragglers.
+    The rest is the job's own launch, which is why the job is a plain RDD
+    job over the bin ids and not a DataFrame plan: its output is a few
+    summary dicts that no Spark operator reads, and a Catalyst plan
+    (``spark.range`` -> ``mapInArrow`` -> ``collect``) costs more to
+    start.  On a 4-vCPU box, with both kinds interleaved in one session
+    (30 pairs, medians), an empty 4-task job took 0.133 s as
+    ``mapPartitions`` against 0.209 s as ``mapInArrow``; the first task
+    of a ten-file web_pages encode started 0.093 s after submit, against
+    0.141 s, and the whole encode job took 0.518 s, against 0.599 s.
+    The session gives RDD and SQL Python tasks one worker env, so this
+    job runs on the same Python workers as decode (``get_spark``).
     Output layout and part ids are unchanged (still one blocks file per
     source file).
 
@@ -196,15 +206,19 @@ def encode_parquet(
         shutil.rmtree(spill_dir, ignore_errors=True)
     done_ids = _start_run(out_dir, {**meta, "salt_buckets": hot_parts}, resume)
 
+    sc = spark.sparkContext
+
     def encode(splits, hot_plan):
         if not splits:
             return []
-        sdf, bins = _bin_file_splits(spark, splits, parallelism)
+        bins = _bin_file_splits(splits, parallelism or sc.defaultParallelism)
         kernel = _make_file_encoder(
             bins, hot_plan, src_cols, sort_cols, key_col, block_rows,
             block_bytes, out_dir,
         )
-        return sdf.mapInArrow(kernel, SUMMARY_SCHEMA).collect()
+        return sc.parallelize(range(len(bins)), len(bins)).mapPartitions(
+            kernel
+        ).collect()
 
     # pass 1: the pending source files (hot rows spill when planned)
     t_job = time.monotonic_ns()
@@ -302,7 +316,9 @@ def _hot_plan(
     key_splits = [
         (i, p) for i, p in enumerate(paths) if i % stride == 0
     ]
-    ksdf, kbins = _bin_file_splits(spark, key_splits, parallelism)
+    kbins = _bin_file_splits(
+        key_splits, parallelism or spark.sparkContext.defaultParallelism
+    )
 
     def count_keys(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow as _pa
@@ -350,7 +366,9 @@ def _hot_plan(
     est_upper = sum(
         pq.ParquetFile(p).metadata.num_rows for _i, p in key_splits
     )
-    kdf = ksdf.mapInArrow(count_keys, f"_k {key_type}, _c long")
+    kdf = spark.range(len(kbins), numPartitions=len(kbins)).mapInArrow(
+        count_keys, f"_k {key_type}, _c long"
+    )
     if est_upper <= collect_cap:
         agg: Counter = Counter()
         total = 0
@@ -394,8 +412,9 @@ def _make_file_encoder(
     bins, plan, src_cols, sort_cols, key_col, block_rows, block_bytes,
     out_dir,
 ):
-    """Build the one mapInArrow kernel of ``encode_parquet``.  Each
-    split of ``bins`` is a source file (part id = file index) or a hot
+    """Build the one task kernel of ``encode_parquet``: it maps the bin
+    ids of its RDD partition to summary dicts, one per part.  Each split
+    of ``bins`` is a source file (part id = file index) or a hot
     bucket's spill dir (negative part id).  The task reads it with
     ``_read_split``; when ``plan`` is non-empty it spills the rows of
     the plan's hot keys (``_spill_hot``) and keeps the cold ones; then
@@ -409,13 +428,13 @@ def _make_file_encoder(
     first = np.asarray([b for b, _n in plan.values()], dtype=np.int64)
     count = np.asarray([n for _b, n in plan.values()], dtype=np.int64)
 
-    def encode_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def encode_files(bin_ids: Iterator[int]) -> Iterator[dict]:
         # one arrow thread per task: Spark already runs one task per
         # core, and pyarrow's default cpu_count-sized pool inside every
         # concurrent task would run cores x cores threads
         pa.set_cpu_count(1)
         drop_archive_importers()
-        for pid, path in _bin_items(batches, bins):
+        for pid, path in (s for b in bin_ids for s in bins[b]):
             t0 = time.monotonic_ns()
             stage: dict = {}
             tbl = _read_split(path, src_cols, stage)
@@ -717,19 +736,16 @@ def _driver_report(summaries, t_entry, t_job, t_collect) -> dict:
     }
 
 
-def _bin_file_splits(spark, splits, parallelism):
+def _bin_file_splits(splits, parallelism: int) -> list[list]:
     """LPT-pack a [(part_id, path)] list into ``min(len(splits),
-    parallelism)`` bins (``parallelism`` None = the session's
-    defaultParallelism): biggest split, by the bytes of its
-    ``_split_files``, to the least-loaded bin.  Returns (DataFrame of
-    bin ids, bins): one Spark task per bin id, so the task count itself
-    caps concurrency.  The
-    ids come from ``spark.range`` — a JVM-only source, so the only
-    Python hand-off per task is the caller's kernel, which maps its id
-    batches back to the bins' splits with ``_bin_items``."""
-    n_bins = min(
-        len(splits), parallelism or spark.sparkContext.defaultParallelism
-    )
+    parallelism)`` bins: biggest split, by the bytes of its
+    ``_split_files``, to the least-loaded bin.  The caller runs one Spark
+    task per bin, so the task count itself caps concurrency.  The encode
+    job hands each task its bin id through ``sc.parallelize``; the jobs
+    that need a DataFrame take the ids from ``spark.range`` (a JVM-only
+    source, so the only Python hand-off per task is the caller's kernel)
+    and map their id batches back to the splits with ``_bin_items``."""
+    n_bins = min(len(splits), parallelism)
     sizes = {
         path: sum(map(os.path.getsize, _split_files(path)))
         for _i, path in splits
@@ -740,7 +756,7 @@ def _bin_file_splits(spark, splits, parallelism):
         j = loads.index(min(loads))
         bins[j].append(s)
         loads[j] += sizes[s[1]]
-    return spark.range(n_bins, numPartitions=n_bins), bins
+    return bins
 
 
 def _bin_items(batches: Iterator[pa.RecordBatch], bins: list[list]):
@@ -749,13 +765,6 @@ def _bin_items(batches: Iterator[pa.RecordBatch], bins: list[list]):
         for b in batch.column(0).to_pylist():
             yield from bins[b]
 
-
-SUMMARY_SCHEMA = (
-    "part_id int, n_rows long, n_blocks long, n_columns int, "
-    "raw_bytes long, encoded_bytes long, fingerprint long, encode_ns long, "
-    "stage_ns string, t_start_ns long, t_end_ns long, worker_pid int, "
-    "native_error string"
-)
 
 # per-stage in-task timing keys (stage_ns JSON map), in nanoseconds:
 # `read` = split read + hot spill + sort (sub-stages `rfetch` file
@@ -840,10 +849,10 @@ def _encode_partition_table(
     blocks_dir: str,
     read_stage: dict | None = None,
     t_start_ns: int | None = None,
-) -> pa.RecordBatch:
+) -> dict:
     """Encode ONE partition's Arrow table: frame into blocks, run codec
     selection per column chunk, write the partition's blocks parquet
-    task-side, and return the one-row summary batch.  ``read_stage``
+    task-side, and return the part's summary dict.  ``read_stage``
     carries the split read's sub-stage walls."""
     t0 = time.monotonic_ns()
     stage = dict.fromkeys(STAGE_KEYS, 0)
@@ -929,36 +938,24 @@ def _encode_partition_table(
     # decompose the job wall into busy time vs schedule tail (wave/
     # straggler structure) — the round-5 verdict's ask for per-task
     # evidence of WHERE the 32-way wall goes
-    t_end = time.monotonic_ns()
-    t_start = t_start_ns if t_start_ns is not None else t0
-    return pa.RecordBatch.from_arrays(
-        [
-            pa.array([pid], type=pa.int32()),
-            pa.array([tbl.num_rows], type=pa.int64()),
-            pa.array([len(ranges)], type=pa.int64()),
-            pa.array([tbl.num_columns if ranges else 0], type=pa.int32()),
-            pa.array([sum(rows["raw_bytes"])], type=pa.int64()),
-            pa.array([sum(rows["encoded_bytes"])], type=pa.int64()),
-            pa.array([fp], type=pa.int64()),
-            pa.array([encode_ns], type=pa.int64()),
-            pa.array(
-                [json.dumps(stage, separators=(",", ":"))], type=pa.string()
-            ),
-            pa.array([t_start], type=pa.int64()),
-            pa.array([t_end], type=pa.int64()),
-            pa.array([os.getpid()], type=pa.int32()),
-            pa.array(
-                [None if native.lib is not None
-                 else native.error or "native kernels not loaded"],
-                type=pa.string(),
-            ),
-        ],
-        names=[
-            "part_id", "n_rows", "n_blocks", "n_columns", "raw_bytes",
-            "encoded_bytes", "fingerprint", "encode_ns", "stage_ns",
-            "t_start_ns", "t_end_ns", "worker_pid", "native_error",
-        ],
-    )
+    return {
+        "part_id": pid,
+        "n_rows": tbl.num_rows,
+        "n_blocks": len(ranges),
+        "n_columns": tbl.num_columns if ranges else 0,
+        "raw_bytes": sum(rows["raw_bytes"]),
+        "encoded_bytes": sum(rows["encoded_bytes"]),
+        "fingerprint": fp,
+        "encode_ns": encode_ns,
+        "stage_ns": json.dumps(stage, separators=(",", ":")),
+        "t_start_ns": t_start_ns if t_start_ns is not None else t0,
+        "t_end_ns": time.monotonic_ns(),
+        "worker_pid": os.getpid(),
+        "native_error": (
+            None if native.lib is not None
+            else native.error or "native kernels not loaded"
+        ),
+    }
 
 
 _INT_KIND_DTYPES = {"i1", "<i2", "<i4", "<i8", "u1"}

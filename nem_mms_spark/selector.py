@@ -1,12 +1,13 @@
 """Sampled cost-model codec auto-selection.
 
 Per column chunk, estimate encoded bits/value for every candidate codec
-(exact closed-form for the integer/dictionary/RLE family, sampled trial
-encode for FSST), pick the argmin, encode with the winner, and fall back to
-PLAIN if the winner's actual payload came out larger (estimates are
-estimates).  FSST is priced in two steps: a probe table trained on 4 KB
-first, and the full 64 KB training only when the probe's estimate comes
-within ``_FSST_PROBE_MARGIN`` of the best estimate already computed, so a
+(exact closed-form for the integer/dictionary/RLE family, exact for
+WORD_DICT, a sampled trial encode for FSST's code stream), pick the
+argmin, encode with the winner, and fall back to PLAIN if the winner's
+actual payload came out larger (estimates are estimates).  FSST is
+priced in two steps: a probe table trained on 4 KB first, and the full
+64 KB training only when the probe's estimate comes within
+``_FSST_PROBE_MARGIN`` of the best estimate already computed, so a
 long-text column that WORD_DICT wins never pays for a table it discards.
 Ties break toward the cheaper-to-decode codec (candidate order in the
 registry).  The choice is a pure function of chunk content — no RNG — so
@@ -41,7 +42,9 @@ _FSST_MIN_BYTES = 32 << 10
 # file of generated web_pages (3 seeds) and on the sf0.1 documents table
 # in 16 parts: the probe estimate was 0.99-1.73x the full table's, on
 # url (FSST wins) 0.35-0.43x the best other estimate, and on html/text
-# (WORD_DICT wins) 1.54-2.92x it.
+# (WORD_DICT wins) 1.54-2.92x it.  (Those figures predate pricing FSST's
+# symbol table once and WORD_DICT exactly; the winners and payloads of
+# those fixtures did not change with it.)
 _FSST_PROBE_BYTES = 4 << 10
 _FSST_PROBE_MARGIN = 1.25
 
@@ -57,9 +60,10 @@ class ColumnContext:
     the first qualifying chunk) does not rule FSST out.  Each sampled
     compression ratio is measured once and reused by later chunks' cost
     models — re-sampling every block would spend more than it saves.
-    The probe table also codes WORD_DICT's dictionaries, and is priced
-    there at ``fsst_probe_ratio``: it exists whether or not the full
-    training runs, so the payload does not depend on that choice.
+    The probe table also codes WORD_DICT's dictionaries (the estimate
+    codes each one once, and the winner's payload reuses it): it exists
+    whether or not the full training runs, so the payload does not
+    depend on that choice.
 
     Round-4 additions (verdict item: DICT/WORD_DICT rebuilt their state
     per 64K-row block even on stable partition columns):
@@ -202,19 +206,31 @@ def _fsst_ratio_sample(
 
 
 def _fsst_ratio(table, data: np.ndarray, offsets: np.ndarray) -> float:
-    """Encoded/raw bytes of ``table`` on the chunk's ratio sample:
+    """Code-stream/raw bytes of ``table`` on the chunk's ratio sample:
     strided rows capped at 256 bytes each.  A plain 64 KB prefix of a
     long-string column is ~30 rows, and the frontier encoder degenerates
     to hundreds of near-scalar steps; capped strided rows give the same
-    byte budget with a wide frontier (and better coverage)."""
+    byte budget with a wide frontier (and better coverage).  The
+    sample's symbol table and length bits are left out: a chunk pays
+    them once (``_fsst_est``), not in proportion to its bytes."""
     sdata, soffs = _fsst_ratio_sample(data, offsets)
-    sp, _ = fsst_mod.encode(sdata, soffs, table=table)
-    return len(sp) / max(int(soffs[-1]), 1)
+    sp, params = fsst_mod.encode(sdata, soffs, table=table)
+    stream = len(sp) - params["hlen"] - params["ln"]
+    return stream / max(int(soffs[-1]), 1)
 
 
-def _sample_distinct(data: np.ndarray, offsets: np.ndarray, sel: np.ndarray) -> int:
-    """Distinct count of the sampled strings via (length, 8 spread probe
-    bytes) hashing — no string materialization."""
+def _fsst_est(table, ratio: float, data_len: int, lens_est: int) -> int:
+    """FSST's payload estimate for a chunk of ``data_len`` bytes: the
+    symbol table once, the packed lengths, and the code stream at the
+    sampled ``ratio``."""
+    return len(table.serialized_symbols()) + lens_est + int(ratio * data_len)
+
+
+def _probe_hashes(data: np.ndarray, offsets: np.ndarray, sel: np.ndarray) -> np.ndarray:
+    """uint64 hash of each sampled string ``sel`` from its length and 8
+    bytes probed at spread positions — no string materialization.  Equal
+    strings hash equal, so rows of distinct hashes are distinct strings;
+    a collision only merges two distinct strings into one hash."""
     starts = offsets[sel]
     lens = (offsets[sel + 1] - starts).astype(np.uint64)
     h = lens * np.uint64(0x9E3779B97F4A7C15)
@@ -225,7 +241,7 @@ def _sample_distinct(data: np.ndarray, offsets: np.ndarray, sel: np.ndarray) -> 
         b[nz] = data[pos[nz]]
         h = (h ^ (b + np.uint64(k + 1))) * np.uint64(0xBF58476D1CE4E5B9)
         h ^= h >> np.uint64(29)
-    return len(np.unique(h))
+    return h
 
 
 # ------------------------------------------------------------------ bytes
@@ -246,25 +262,59 @@ def _select_bytes(values, ctx: ColumnContext):
 
     est = {registry.PLAIN: plain_est}
 
-    # cardinality gate: factorizing the WHOLE chunk to cost DICT/RLE is
+    # the FSST probe table, trained once per column on its first
+    # qualifying chunk: it prices FSST below and codes WORD_DICT's
+    # dictionaries
+    fsst_ok = data_len >= _FSST_MIN_BYTES and not ctx.fsst_failed
+    if fsst_ok and ctx.fsst_table is None and ctx.fsst_probe is None:
+        ctx.fsst_probe = fsst_mod.train(
+            data, offsets, max_train_bytes=_FSST_PROBE_BYTES
+        )
+        ctx.fsst_probe_ratio = _fsst_ratio(ctx.fsst_probe, data, offsets)
+
+    # WORD_DICT: exact size via one tokenize+factorize pass (same cost
+    # class as the DICT estimate) and the dictionary section itself,
+    # which the winning encode reuses; only sensible for longer strings
+    wd_kw = {}
+    if data_len // max(n, 1) >= 16:
+        words = worddict.factorize_words(data, offsets)
+        tiers = worddict.rank_tiers(words.hist)
+        dictionary = worddict.encode_dictionary(
+            words.uniq, tiers.order, ctx.fsst_probe
+        )
+        est[registry.WORD_DICT] = sum(
+            _word_dict_terms(words, tiers, dictionary).values()
+        )
+        wd_kw = {"words": words, "tiers": tiers, "dictionary": dictionary}
+
+    # cardinality gates: factorizing the WHOLE chunk to cost DICT/RLE is
     # the dominant expense on near-unique columns (html/url bodies), where
     # neither codec can win (dict bytes ~ data bytes, runs ~ n).  A
-    # deterministic strided sample decides whether the exact pass pays.
-    codes = uniq = None
+    # deterministic strided sample of about _CARD_SAMPLE rows, hashed
+    # from probe bytes (the gather of 2 KB html rows was itself a
+    # measurable memory cost), decides whether the exact pass pays.
+    sel = np.arange(0, n, max(1, n // _CARD_SAMPLE), dtype=np.int64)
+    hashes = None
+    exact = True
     if n > _CARD_SAMPLE * 4:
-        # distinct-count the sample via a probe-byte hash instead of
-        # materializing + factorizing the sampled strings (the gather was
-        # itself a measurable memory cost on 2 KB html rows): length + 8
-        # bytes probed at spread positions.  Collisions only UNDERestimate
-        # cardinality, which routes to the exact pass — never wrong, just
-        # slower.
-        sel = np.arange(0, n, n // _CARD_SAMPLE, dtype=np.int64)
-        near_unique = _sample_distinct(data, offsets, sel) >= (
-            _SKIP_EXACT_RATIO * len(sel)
-        )
-    else:
-        near_unique = False
-    if not near_unique:
+        # a near-unique sample skips it.  Collisions only UNDERestimate
+        # cardinality, which routes to the exact pass — never wrong,
+        # just slower.
+        hashes = _probe_hashes(data, offsets, sel)
+        exact = len(np.unique(hashes)) < _SKIP_EXACT_RATIO * len(sel)
+    if exact and registry.WORD_DICT in est:
+        # sampled rows of distinct hashes are distinct strings, so their
+        # bytes bound DICT's dictionary and RLE's run values from below.
+        # A bound above both PLAIN and WORD_DICT means neither codec can
+        # be the argmin, nor lower min(est) for the FSST probe rule, so
+        # skipping the exact pass changes no payload.  (Without WORD_DICT
+        # the bound, at most data_len, never beats PLAIN.)
+        if hashes is None:
+            hashes = _probe_hashes(data, offsets, sel)
+        _u, first = np.unique(hashes, return_index=True)
+        exact = int(lengths[sel[first]].sum()) <= min(est.values())
+    codes = uniq = None
+    if exact:
         codes, uniq = factorize_bytes(data, offsets)
         udata, uoffsets = uniq
         card = len(uoffsets) - 1
@@ -286,27 +336,6 @@ def _select_bytes(values, ctx: ColumnContext):
             run_val_len + (runs * (len_bits + run_len_bits) + 7) // 8
         )
 
-    # the FSST probe table, trained once per column on its first
-    # qualifying chunk: it prices FSST below and codes WORD_DICT's
-    # dictionaries
-    fsst_ok = data_len >= _FSST_MIN_BYTES and not ctx.fsst_failed
-    if fsst_ok and ctx.fsst_table is None and ctx.fsst_probe is None:
-        ctx.fsst_probe = fsst_mod.train(
-            data, offsets, max_train_bytes=_FSST_PROBE_BYTES
-        )
-        ctx.fsst_probe_ratio = _fsst_ratio(ctx.fsst_probe, data, offsets)
-
-    # WORD_DICT: exact size via one tokenize+factorize pass (same cost
-    # class as the DICT estimate); only sensible for longer strings
-    wd_kw = {}
-    if data_len // max(n, 1) >= 16:
-        words = worddict.factorize_words(data, offsets)
-        tiers = worddict.rank_tiers(words.hist)
-        est[registry.WORD_DICT] = sum(
-            _word_dict_terms(words, tiers, ctx).values()
-        )
-        wd_kw = {"words": words, "tiers": tiers, "table": ctx.fsst_probe}
-
     fsst_kw = {}
     if fsst_ok:
         lens_est = (n * len_bits + 7) // 8
@@ -314,7 +343,9 @@ def _select_bytes(values, ctx: ColumnContext):
             # the probe prices FSST before the 64 KB training is paid;
             # when even a margin below its estimate loses to a cheaper
             # codec, the block skips training
-            probe_est = int(ctx.fsst_probe_ratio * data_len) + lens_est
+            probe_est = _fsst_est(
+                ctx.fsst_probe, ctx.fsst_probe_ratio, data_len, lens_est
+            )
             if probe_est >= _FSST_PROBE_MARGIN * min(est.values()):
                 est[registry.FSST] = probe_est
             else:
@@ -324,7 +355,9 @@ def _select_bytes(values, ctx: ColumnContext):
         if ctx.fsst_table is not None and not ctx.fsst_failed:
             if ctx.fsst_ratio is None:
                 ctx.fsst_ratio = _fsst_ratio(ctx.fsst_table, data, offsets)
-            est[registry.FSST] = int(ctx.fsst_ratio * data_len) + lens_est
+            est[registry.FSST] = _fsst_est(
+                ctx.fsst_table, ctx.fsst_ratio, data_len, lens_est
+            )
             fsst_kw = {"table": ctx.fsst_table}
 
     winner = _argmin(est, registry.candidate_codecs("bytes"))
@@ -345,28 +378,17 @@ def _select_bytes(values, ctx: ColumnContext):
     return winner, payload, params, est
 
 
-def _word_dict_terms(words, tiers, ctx: ColumnContext) -> dict:
-    """WORD_DICT's payload bytes by part: ``counts`` (tokens per string
-    at their real width) and ``codes`` (tier selector and streams) are
-    exact; ``dictionary`` is the raw size, or the probe table's ratio
-    applied to the token bytes plus its header when that is smaller."""
+def _word_dict_terms(words, tiers, dictionary) -> dict:
+    """WORD_DICT's payload bytes by part, each exact: ``counts`` (tokens
+    per string at their real width), ``dictionary`` (the section
+    ``worddict.encode_dictionary`` built) and ``codes`` (tier selector
+    and streams)."""
     n = len(words.counts)
     sw = bit_width(int(words.counts.max())) if n else 0
-    uoffsets = words.uniq[1]
-    card = len(uoffsets) - 1
-    ulen = int(uoffsets[-1])
-    lens = packed_size(card, bit_width(int(np.diff(uoffsets).max())) if card else 0)
-    dictionary = ulen + lens
-    if ctx.fsst_probe is not None:
-        coded = (
-            int(ctx.fsst_probe_ratio * ulen) + lens
-            + len(ctx.fsst_probe.serialized_symbols())
-        )
-        dictionary = min(dictionary, coded)
     return {
         "counts": packed_size(n, sw),
         "codes": worddict.tiers_size(tiers.widths, tiers.sizes),
-        "dictionary": dictionary,
+        "dictionary": len(dictionary[0]),
     }
 
 

@@ -34,6 +34,12 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
         .config("spark.ui.enabled", "false")
+        # Spark keeps one Python worker daemon per distinct worker env,
+        # and its SQL UDF runners (mapInArrow) add this variable where
+        # RDD runners (the encode job, binaryFiles) do not.  Setting it
+        # for every executor makes the two envs equal, so every Python
+        # task shares one daemon and its forked workers.
+        .config("spark.executorEnv.SPARK_SIMPLIFIED_TRACEBACK", "1")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

@@ -25,7 +25,7 @@ def test_part_cpu_time_within_encode_wall(tmp_path):
     tbl = pa.Table.from_pandas(generate_pages(np.arange(3000)), preserve_index=False)
     row = _encode_partition_table(
         0, tbl, 1024, 16 << 20, "url", str(tmp_path / "blocks"),
-    ).to_pylist()[0]
+    )
     c_cpu = json.loads(row["stage_ns"])["c_cpu"]
     res_ns = time.get_clock_info("thread_time").resolution * 1e9
     assert 0 < c_cpu <= row["encode_ns"] + res_ns

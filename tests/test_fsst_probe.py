@@ -130,3 +130,23 @@ def test_url_still_trains_in_full(monkeypatch):
     assert codec == "FSST"
     assert calls == [selector._FSST_PROBE_BYTES, fsst._MAX_TRAIN_BYTES]
     assert ctx.fsst_table is not None
+
+
+def test_fsst_estimate_counts_its_table_once():
+    """FSST is priced by its code stream at the sampled ratio plus one
+    symbol table, so a url block where WORD_DICT's exact estimate comes
+    close still picks the smaller codec.  This block (perfbench
+    ``encode_pages`` seed 803, file 7) took WORD_DICT at 20,176 bytes
+    against FSST's 16,060 when the sample's own table was scaled into
+    the ratio and FSST was priced 26% high."""
+    tbl = pa.Table.from_pandas(
+        generate_pages(np.arange(803_033_000, 803_034_000)),
+        preserve_index=False,
+    ).sort_by("warc_ts")
+    values, dtype, *_ = framing.to_kernel(tbl.column("url").combine_chunks())
+    codec, payload, _params, est = select_and_encode(
+        values, dtype, ColumnContext()
+    )
+    assert codec == "FSST"
+    assert abs(est["FSST"] - len(payload)) <= 0.05 * len(payload)
+    assert est["WORD_DICT"] > len(payload)

@@ -70,3 +70,47 @@ def test_no_kernel_inherits_an_encode_tasks_worker_state(spark, tmp_path):
         .collect()
     ]
     assert seen == [len(os.sched_getaffinity(0))] * 4
+
+
+def _ppid(pid: int) -> int:
+    with open(f"/proc/{pid}/stat") as fh:
+        return int(fh.read().rsplit(")", 1)[1].split()[1])
+
+
+def test_every_python_task_shares_one_daemon(spark, tmp_path):
+    """Spark keeps one Python worker daemon per distinct worker env, and
+    its SQL runners add an env key that RDD runners do not, so the
+    session sets that key for every executor.  An encode (an RDD job), a
+    ``mapInArrow`` and a ``parallelize().mapPartitions`` then all run on
+    workers forked by one daemon."""
+    src = tmp_path / "src"
+    src.mkdir()
+    for i in range(4):
+        pages = generate_pages(np.arange(i * 200, (i + 1) * 200))
+        pq.write_table(
+            pa.Table.from_pandas(pages, preserve_index=False),
+            str(src / f"part-{i:05d}.parquet"),
+        )
+    m = encode_parquet(
+        spark, str(src), str(tmp_path / "enc"), resume=False, parallelism=4
+    )
+    parents = {"encode": {_ppid(t["pid"]) for t in m["timeline"]}}
+
+    def sql_ppid(batches):
+        for batch in batches:
+            yield pa.RecordBatch.from_pydict(
+                {"ppid": pa.array([os.getppid()] * batch.num_rows, pa.int64())}
+            )
+
+    parents["mapInArrow"] = {
+        r["ppid"]
+        for r in spark.range(4, numPartitions=4)
+        .mapInArrow(sql_ppid, "ppid long")
+        .collect()
+    }
+    parents["mapPartitions"] = set(
+        spark.sparkContext.parallelize(range(4), 4)
+        .mapPartitions(lambda it: [os.getppid() for _ in it])
+        .collect()
+    )
+    assert len(set().union(*parents.values())) == 1, parents

@@ -127,8 +127,9 @@ def test_flat_payload_without_tiers_decodes():
 
 
 def test_selector_estimate_matches_payload():
-    """The selector's WORD_DICT estimate is exact in its token-count and
-    code terms; only the dictionary is priced by the probe ratio."""
+    """The selector's WORD_DICT estimate is exact in every term: token
+    counts, the dictionary section (coded once, by the probe table) and
+    the code streams."""
     from nem_mms_spark import framing, selector
     from nem_mms_spark.codecs import worddict
     from nem_mms_spark.datagen.webpages import generate_pages
@@ -144,7 +145,11 @@ def test_selector_estimate_matches_payload():
         assert "df" in params  # the probe table coded the dictionary
         words = worddict.factorize_words(*values)
         tiers = worddict.rank_tiers(words.hist)
-        terms = selector._word_dict_terms(words, tiers, ctx)
-        assert sum(terms.values()) == est["WORD_DICT"]
+        dictionary = worddict.encode_dictionary(
+            words.uniq, tiers.order, ctx.fsst_probe
+        )
+        terms = selector._word_dict_terms(words, tiers, dictionary)
+        assert sum(terms.values()) == est["WORD_DICT"] == len(payload)
         assert terms["counts"] == params["slen"]
+        assert terms["dictionary"] == params["dlen"]
         assert terms["codes"] == len(payload) - params["slen"] - params["dlen"]
