@@ -149,7 +149,11 @@ def record_partitioning_meta(out_dir: str, meta: dict) -> None:
 
 
 def checkpoint_totals(out_dir: str) -> dict:
-    """Aggregate lineage totals, driver-side (the table is tiny)."""
+    """Aggregate lineage totals, driver-side (the table is tiny).
+    ``encoded_bytes`` sums the codec payloads each part recorded;
+    ``file_bytes`` is the on-disk size of the committed parts' block
+    files (zstd pages, block metadata and footers), read from the file
+    system."""
     import pyarrow.dataset as ds
 
     data = ds.dataset(checkpoint_path(out_dir), format="parquet").to_table()
@@ -182,6 +186,14 @@ def checkpoint_totals(out_dir: str) -> dict:
         "raw_bytes": raw,
         "encoded_bytes": enc,
         "ratio": enc / max(raw, 1),
+        "file_bytes": sum(
+            os.path.getsize(f)
+            for p, st in zip(
+                data.column("part_id").to_pylist(),
+                data.column("status").to_pylist(),
+            )
+            if st == "done" and os.path.exists(f := M.block_file(out_dir, p))
+        ),
         # aggregate in-task kernel seconds (sum / max over partitions):
         # the wave-packing- and noise-window-free view of kernel cost
         "task_encode_s_sum": round(sum(enc_ns) / 1e9, 3),

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 
 
@@ -140,9 +141,12 @@ def cmd_info(args) -> int:
     if args.encoded:
         from nem_mms_spark.jobs.decode import block_files, read_block_meta
 
-        # per-column totals over the committed parts, read on the driver
+        # per-column payload totals over the committed parts, read on
+        # the driver, beside what their block files take on disk
+        files = block_files(args.encoded)
+        out["file_bytes"] = sum(os.path.getsize(p) for _pid, p in files)
         meta = read_block_meta(
-            block_files(args.encoded),
+            files,
             ["column", "logical_type", "value_count", "raw_bytes",
              "encoded_bytes"],
         )

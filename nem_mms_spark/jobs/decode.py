@@ -3,7 +3,13 @@
 Encode writes each committed partition as one file,
 blocks/part_id=N/data.parquet, with its rows already grouped by block.
 That block table is also the codec manifest: its metadata columns name
-the codec, params, counts and zone map of every column chunk.
+the codec, params, counts and zone map of every column chunk.  Its pages
+are zstd-compressed with a CRC32 each (``jobs.encode._atomic_write``);
+every read here verifies the CRCs of the pages it reads, so a damaged
+page raises a ValueError naming its file instead of decoding to other
+bytes.  Files written with plain, unchecksummed pages (every output
+before zstd pages) read unchanged: parquet records the codec per column
+chunk, and a page without a CRC is not checked.
 ``read_block_meta`` is the one reader of those metadata columns: a
 driver-side pyarrow read with column projection, so no payload page is
 read and no Spark job runs.  ``decode_blocks`` and ``scan_blocks`` each
@@ -65,9 +71,7 @@ def block_files(out_dir: str) -> list[tuple]:
         pids = ckpt.committed_parts(root)
         committed |= pids is not None
         for p in pids or ():
-            path = os.path.join(
-                root, M.BLOCKS_DIR, f"part_id={p}", "data.parquet"
-            )
+            path = M.block_file(root, p)
             if os.path.exists(path):
                 files.append((p, path))
     if not committed:
@@ -85,11 +89,13 @@ def read_block_meta(files: list[tuple], columns: list[str]) -> pa.Table:
     dictionary-coded ``path`` column.
 
     Driver-side pyarrow read with column projection: parquet skips the
-    payload and validity pages, so the read is metadata-sized and runs
-    no Spark job.  The one reader of block metadata: decode's schema
-    pass, ``scan_blocks``' zone-map prune, ``encode_roundtrip_metrics``
-    and ``cli info`` all go through it.  A file that does not parse
-    raises a ValueError naming it."""
+    payload and validity pages, so the read is metadata-sized (it
+    decompresses only the metadata columns' zstd pages) and runs no
+    Spark job.  The one reader of block metadata: decode's schema pass,
+    ``scan_blocks``' zone-map prune, ``encode_roundtrip_metrics`` and
+    ``cli info`` all go through it.  The page CRCs of the columns read
+    are verified.  A file that does not parse, or a page whose CRC does
+    not match, raises a ValueError naming the file."""
     import pyarrow.parquet as pq
 
     tables = []
@@ -97,7 +103,9 @@ def read_block_meta(files: list[tuple], columns: list[str]) -> pa.Table:
         try:
             # ParquetFile, not read_table, which builds a dataset per
             # file: 2.6 against 9.1 ms for the 3 schema columns of 10 files
-            with pq.ParquetFile(path) as f:
+            with pq.ParquetFile(
+                path, page_checksum_verification=True
+            ) as f:
                 t = f.read(columns=columns)
         except (pa.ArrowException, OSError) as e:
             raise ValueError(f"unreadable block file {path}: {e}") from e
@@ -232,7 +240,11 @@ def _decode(
             allowed = (
                 allowed_map.get(path) if allowed_map is not None else None
             )
-            tbl = _read_split(path, read_cols)
+            try:
+                tbl = _read_split(path, read_cols)
+            except (pa.ArrowException, OSError) as e:
+                # a failed page CRC is an OSError from the reader
+                raise ValueError(f"unreadable block file {path}: {e}") from e
             if columns is not None:
                 import pyarrow.compute as pc
 

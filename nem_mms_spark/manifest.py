@@ -29,3 +29,10 @@ BLOCKS_DIR = "blocks"
 # (resume=False) encode removes it
 OLD_MANIFEST_DIR = "manifest"
 CHECKPOINT_DIR = "checkpoint"
+
+
+def block_file(root: str, part_id: int) -> str:
+    """The path of part ``part_id``'s block file under output ``root``."""
+    import os
+
+    return os.path.join(root, BLOCKS_DIR, f"part_id={part_id}", "data.parquet")

@@ -526,3 +526,40 @@ def test_sort_by_unless_sorted_exotic_key_types(kind):
         return
     got = _sort_by_unless_sorted(tbl, ["k"])
     assert got.column("row").to_pylist() == want.column("row").to_pylist()
+
+
+def test_sort_probe_failure_of_any_kind_falls_through_to_sort_by():
+    """A sortedness probe that fails with something other than an Arrow
+    type error (here a RuntimeError from the key column's ``to_numpy``)
+    still ends in the real ``sort_by``, never in the caller."""
+    import pyarrow as pa
+
+    from nem_mms_spark.jobs.encode import _sort_by_unless_sorted
+
+    class _FailingProbe:
+        """A table whose key column cannot be read as numpy."""
+
+        def __init__(self, tbl):
+            self.tbl = tbl
+            self.column_names = tbl.column_names
+
+        def column(self, name):
+            col = self.tbl.column(name)
+
+            class _Col:
+                null_count = col.null_count
+
+                def __len__(self):
+                    return len(col)
+
+                def to_numpy(self, zero_copy_only=True):
+                    raise RuntimeError("probe failed")
+
+            return _Col()
+
+        def sort_by(self, keys):
+            return self.tbl.sort_by(keys)
+
+    tbl = pa.table({"k": [3, 1, 2], "v": list("abc")})
+    got = _sort_by_unless_sorted(_FailingProbe(tbl), ["k"])
+    assert got.to_pydict() == {"k": [1, 2, 3], "v": list("bca")}
