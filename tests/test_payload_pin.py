@@ -37,15 +37,20 @@ SF001 = pathlib.Path(__file__).resolve().parents[1] / "perfbench/data/sf0.01"
 
 def _inputs():
     """(part id, table, block_rows, key_col) of each pinned part."""
-    pages = pa.Table.from_pandas(
-        generate_pages(np.arange(4000)), preserve_index=False
-    )
+    def pages(n):
+        return pa.Table.from_pandas(
+            generate_pages(np.arange(n)), preserve_index=False
+        )
+
     lineitem = pq.read_table(SF001 / "lineitem.parquet").slice(0, 6000)
     events = pq.read_table(SF001 / "events.parquet").slice(0, 4000)
+    # part 0's url blocks pick FSST and part 3's (shorter) PLAIN; part
+    # 3's lang has an RLE block
     return [
-        (0, pages, 1000, "url"),
+        (0, pages(4000), 1000, "url"),
         (1, lineitem, 2000, "l_orderkey"),
         (2, events, 1000, "event_id"),
+        (3, pages(1200), 400, "url"),
     ]
 
 
@@ -95,7 +100,7 @@ def test_payloads_match_the_pin(path, tmp_path):
         pid, bid, _col = k.split("/")
         blocks.setdefault(pid, set()).add(bid)
     assert all(len(b) > 1 for b in blocks.values()), blocks
-    assert len({v["codec"] for v in want.values()}) >= 6
+    assert len({v["codec"] for v in want.values()}) >= 8
 
 
 if __name__ == "__main__":
