@@ -7,9 +7,9 @@ the codec, params, counts and zone map of every column chunk.  Its pages
 are zstd-compressed with a CRC32 each (``jobs.encode._atomic_write``);
 every read here verifies the CRCs of the pages it reads, so a damaged
 page raises a ValueError naming its file instead of decoding to other
-bytes.  Files written with plain, unchecksummed pages (every output
-before zstd pages) read unchanged: parquet records the codec per column
-chunk, and a page without a CRC is not checked.
+bytes.  Block files with plain, unchecksummed pages (older outputs)
+still read: parquet records the codec per column chunk, and a page
+without a CRC is not checked.
 ``read_block_meta`` is the one reader of those metadata columns: a
 driver-side pyarrow read with column projection, so no payload page is
 read and no Spark job runs.  ``decode_blocks`` and ``scan_blocks`` each

@@ -539,8 +539,8 @@ def _read_split(
             raws.append(fh.read())
     t1 = time.monotonic_ns()
     parts = [
-        # page CRCs are checked where the writer put them (every block
-        # file since zstd pages); a source file without them reads as before
+        # page CRCs are checked where a file has them (block files do);
+        # pages without one, as in most source files, read unchecked
         pq.read_table(
             pa.BufferReader(raw), columns=cols,
             page_checksum_verification=True,
@@ -803,7 +803,7 @@ single-threaded, medians of 9 runs, 4-vCPU box):
   ============================  ==========  ===============  =======
   page codec                    bytes       write ms (all)   read ms
   ============================  ==========  ===============  =======
-  NONE (before)                 10,198,517  10-12            14.5
+  NONE                          10,198,517  10-12            14.5
   zstd -1                        8,760,797  42               -
   zstd 1                         7,673,177  58               36
   zstd 2                         6,671,173  65-69            35
@@ -836,11 +836,11 @@ def _atomic_write(table: pa.Table, dest: str, stage: dict | None = None) -> None
     CRC32 each, which every reader of a block file verifies
     (``_read_split``, ``jobs.decode.read_block_meta``), so a damaged
     page raises instead of decoding to other bytes.  Parquet records the
-    codec per column chunk, so files written with plain pages before
-    this decode unchanged.  No parquet column statistics are written:
-    every reader takes the block metadata, zone maps included, as column
-    values, so footer min/max would only copy them (and truncated
-    payload bytes)."""
+    codec per column chunk, so block files with plain, unchecksummed
+    pages (older outputs) still decode.  No parquet column statistics
+    are written: every reader takes the block metadata, zone maps
+    included, as column values, so footer min/max would only copy them
+    (and truncated payload bytes)."""
     import pyarrow.parquet as pq
 
     t0 = time.monotonic_ns()
