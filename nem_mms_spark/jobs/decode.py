@@ -165,6 +165,14 @@ def decode_blocks(
     return _decode(spark, chosen, meta, columns, None, parallelism)
 
 
+def _bin_items(batches, bins: list[list]):
+    """The (part_id, path) splits of every bin id in ``batches``, the
+    ``spark.range`` id batches of the decode plan."""
+    for batch in batches:
+        for b in batch.column(0).to_pylist():
+            yield from bins[b]
+
+
 def _decode(
     spark: SparkSession,
     files: list[tuple[int, str]],
@@ -184,11 +192,7 @@ def _decode(
     Spark broadcast variable: a weakly-selective predicate over ~10^6
     blocks would otherwise serialize a multi-MB python closure into
     every task."""
-    from nem_mms_spark.jobs.encode import (
-        _bin_file_splits,
-        _bin_items,
-        _read_split,
-    )
+    from nem_mms_spark.jobs.encode import _bin_file_splits, _read_split
 
     key_cols = ["col_idx", "column", "logical_type"]
     col_rows = sorted(

@@ -41,7 +41,7 @@ from collections.abc import Iterator
 import numpy as np
 import pyarrow as pa
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import SparkSession
 
 from nem_mms_spark import checkpoint as ckpt
 from nem_mms_spark import framing
@@ -201,8 +201,7 @@ def encode_parquet(
         )
     plan = (
         _hot_plan(
-            spark, schema, paths, key_col, parallelism, hot_factor,
-            min_hot_rows,
+            spark, paths, key_col, parallelism, hot_factor, min_hot_rows
         )
         if salted
         else {}
@@ -286,130 +285,97 @@ def encode_parquet(
     }
 
 
+HOT_COLLECT_ROWS = 4_000_000
+"""Row count (summed from the source footers) up to which ``_hot_plan``
+merges the per-file key counts in a driver ``Counter``.  Above it the
+merge is a ``reduceByKey`` that brings back only candidate keys, so the
+driver holds at most ``rows / min_hot_rows`` of them whatever the key
+cardinality."""
+
+
 def _hot_plan(
     spark: SparkSession,
-    schema: pa.Schema,
     paths: list[str],
     key_col: str,
     parallelism: int | None,
     hot_factor: float,
     min_hot_rows: int,
 ) -> dict:
-    """Hot detection for ``partitioning="salted"``: a source-direct scan
-    of ONLY the key column (exact counts; one tiny (key, count)
-    aggregation).  A key is hot when its row count exceeds
-    ``max(min_hot_rows, hot_factor * target)``, target being the mean
-    rows per source file.  Returns ``{key: (first bucket, buckets)}``:
-    hot keys get ``ceil(count / target)`` contiguous salt buckets so no
-    partition is oversized, numbered from 0 in (count desc, key) order."""
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import from_arrow_type
+    """Hot detection for ``partitioning="salted"``: an exact count of the
+    key column (url host for ``url``) of EVERY source file.  A key is hot
+    when its row count exceeds ``max(min_hot_rows, hot_factor * target)``,
+    target being the mean rows per source file.  Returns ``{key: (first
+    bucket, buckets)}``: hot keys get ``ceil(1.02 * count / target)``
+    contiguous salt buckets (2% absorbs rounding) so no partition is
+    oversized, numbered from 0 in (count desc, key) order.
 
-    # FILE-STRIDE sampling: a key at the hot threshold holds >= one
-    # partition's worth of rows, so scanning every stride-th file (at
-    # least 16) still lands thousands of its rows — detection error is
-    # a few percent, absorbed by the bucket-count inflation below.
-    # Deterministic for a static listing (same caveat as cold part ids).
-    # ASSUMPTION (r6 ADVICE): the error bound holds only when each hot
-    # key is spread roughly uniformly across source files — true for
-    # crawl-ordered ingest, NOT for a layout clustered by the key (e.g.
-    # files pre-sorted by host), where a key concentrated in non-sampled
-    # files is missed entirely and stays cold (oversized partition).
-    # For clustered sources set NEM_MMS_HOT_SAMPLE_STRIDE=1 (exact scan
-    # of every file's key column).
-    stride = int(
-        os.environ.get("NEM_MMS_HOT_SAMPLE_STRIDE", "0")
-    ) or max(1, len(paths) // 16)
-    key_splits = [
-        (i, p) for i, p in enumerate(paths) if i % stride == 0
-    ]
+    The counts are exact, so the plan is a pure function of the files'
+    content, however their keys are laid out across files.  Each task
+    reads only the key column chunk of each of its files, and every
+    file is read, so the job's cost grows with the file count.  A
+    sample of every k-th file would read less on inputs of many files,
+    but it misses a hot key whose rows sit in the files it skips (a
+    source clustered by host).
+
+    The job is the encode job's vehicle: one task per
+    ``_bin_file_splits`` bin, through ``sc.parallelize`` and
+    ``mapPartitions``, yielding ``(key, count)`` pairs per file.  The
+    footers' row count ``total`` (which equals the summed counts:
+    ``value_counts`` counts null keys too) picks the merge: up to
+    ``HOT_COLLECT_ROWS`` the pairs are summed in a driver ``Counter``;
+    above it a ``reduceByKey`` keeps only keys counted more than
+    ``min_hot_rows`` times, a superset of the hot keys.  Both merges
+    give the same plan."""
+    import operator
+    from collections import Counter
+
+    import pyarrow.parquet as pq
+
+    sc = spark.sparkContext
     kbins = _bin_file_splits(
-        key_splits, parallelism or spark.sparkContext.defaultParallelism
+        list(enumerate(paths)), parallelism or sc.defaultParallelism
     )
 
-    def count_keys(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pyarrow as _pa
-        import pyarrow.parquet as _pq
-
-        _pa.set_cpu_count(1)
+    def count_keys(bin_ids: Iterator[int]) -> Iterator[tuple]:
+        pa.set_cpu_count(1)
         drop_archive_importers()
-        for _pid, path in _bin_items(batches, kbins):
+        for _pid, path in (s for b in bin_ids for s in kbins[b]):
             # NOT fetch-then-parse here: only the key column's chunks
             # are needed, so let the reader seek straight to them
             # instead of pulling the whole file
-            col = _pq.read_table(
+            col = pq.read_table(
                 path, columns=[key_col], memory_map=True
             ).column(key_col).combine_chunks()
             if key_col == "url":
                 col = _host_of(col)
             vc = col.value_counts()
-            yield _pa.RecordBatch.from_arrays(
-                [vc.field("values"), vc.field("counts").cast("int64")],
-                names=["_k", "_c"],
+            yield from zip(
+                vc.field("values").to_pylist(), vc.field("counts").to_pylist()
             )
 
-    key_type = "string" if key_col == "url" else from_arrow_type(
-        schema.field(key_col).type, prefer_timestamp_ntz=True
-    ).simpleString()
-    # ONE job, ONE action on the default path: per-file (key, count)
-    # rows are tiny when key cardinality is modest, so the final
-    # aggregation runs driver-side — no groupBy shuffle, no cache, no
-    # second action.  CARDINALITY GUARD (r7, verdict item 3): the
-    # Counter collect is O(sum of per-file distinct keys), which the
-    # sampled ROW count upper-bounds; that bound comes from parquet
-    # METADATA alone (no data read).  Above the cap the aggregation
-    # switches to a distributed groupBy that collects only CANDIDATE
-    # keys (count*stride > min_hot_rows — a superset of every possible
-    # hot key, since thresh >= min_hot_rows below), so the collect is
-    # bounded by total_rows/min_hot_rows whatever the key cardinality.
-    # Both branches produce the identical hot plan: same per-key totals,
-    # and `total` in the distributed branch equals sum(_c) exactly
-    # because value_counts emits a row for every input row incl. nulls.
-    from collections import Counter
-
-    collect_cap = int(
-        os.environ.get("NEM_MMS_HOT_COLLECT_CAP", str(4_000_000))
+    pairs = sc.parallelize(range(len(kbins)), len(kbins)).mapPartitions(
+        count_keys
     )
-    est_upper = sum(
-        pq.ParquetFile(p).metadata.num_rows for _i, p in key_splits
-    )
-    kdf = spark.range(len(kbins), numPartitions=len(kbins)).mapInArrow(
-        count_keys, f"_k {key_type}, _c long"
-    )
-    if est_upper <= collect_cap:
+    total = sum(pq.ParquetFile(p).metadata.num_rows for p in paths)
+    if total <= HOT_COLLECT_ROWS:
         agg: Counter = Counter()
-        total = 0
-        for r in kdf.collect():
-            total += r["_c"]
-            if r["_k"] is not None:
-                agg[r["_k"]] += r["_c"]
+        for k, c in pairs.collect():
+            agg[k] += c
         items = list(agg.items())
     else:
-        total = est_upper
-        items = [
-            (r["_k"], r["_c"])
-            for r in kdf.groupBy("_k")
-            .agg(F.sum("_c").alias("_c"))
-            .filter(
-                F.col("_k").isNotNull()
-                & (F.col("_c") * stride > F.lit(int(min_hot_rows)))
-            )
+        items = (
+            pairs.reduceByKey(operator.add)
+            .filter(lambda kc: kc[1] > min_hot_rows)
             .collect()
-        ]
-    total *= stride
-    target = max(1, int(total) // max(len(paths), 1))
+        )
+    target = max(1, total // max(len(paths), 1))
     thresh = max(min_hot_rows, int(hot_factor * target))
-    hot_rows = [
-        (k, c * stride) for k, c in items if c * stride > thresh
-    ]
+    hot_rows = [(k, c) for k, c in items if k is not None and c > thresh]
     hot_rows.sort(key=lambda r: (-r[1], str(r[0])))
     base = 0
     plan: dict = {}
-    # 2% inflation absorbs rounding; +5% more under file sampling for
-    # the count-estimate error
-    infl = 1.02 if stride == 1 else 1.07
     for k, c in hot_rows:
-        buckets = max(-(-int(c * infl) // target), 1)
+        buckets = max(-(-int(c * 1.02) // target), 1)
         plan[k] = (base, buckets)
         base += buckets
     return plan
@@ -752,10 +718,11 @@ def _bin_file_splits(splits, parallelism: int) -> list[list]:
     parallelism)`` bins: biggest split, by the bytes of its
     ``_split_files``, to the least-loaded bin.  The caller runs one Spark
     task per bin, so the task count itself caps concurrency.  The encode
-    job hands each task its bin id through ``sc.parallelize``; the jobs
-    that need a DataFrame take the ids from ``spark.range`` (a JVM-only
-    source, so the only Python hand-off per task is the caller's kernel)
-    and map their id batches back to the splits with ``_bin_items``."""
+    job hands each task its bin id through ``sc.parallelize``; decode,
+    which needs a DataFrame, takes the ids from ``spark.range`` (a
+    JVM-only source, so the only Python hand-off per task is its kernel)
+    and maps each id batch back to the splits with
+    ``jobs.decode._bin_items``."""
     n_bins = min(len(splits), parallelism)
     sizes = {
         path: sum(map(os.path.getsize, _split_files(path)))
@@ -768,13 +735,6 @@ def _bin_file_splits(splits, parallelism: int) -> list[list]:
         bins[j].append(s)
         loads[j] += sizes[s[1]]
     return bins
-
-
-def _bin_items(batches: Iterator[pa.RecordBatch], bins: list[list]):
-    """The (part_id, path) splits of every bin id in ``batches``."""
-    for batch in batches:
-        for b in batch.column(0).to_pylist():
-            yield from bins[b]
 
 
 # per-stage in-task timing keys (stage_ns JSON map), in nanoseconds:
@@ -823,14 +783,18 @@ def _atomic_write(table: pa.Table, dest: str, stage: dict | None = None) -> None
     """Task-side parquet commit: serialize the WHOLE file into one
     in-memory buffer, then ``_publish`` it — a retried or speculative
     task attempt re-produces identical bytes so last-replace-wins is
-    safe.  Determinism holds on every path: no part is fed by a shuffle,
-    so each part's rows arrive in a fixed order (input order, or
-    spill-file name order for salted-direct hot buckets) and the stable
-    sort keeps it.  Buffer-then-single-write is the object-store shape
-    (one PUT) and also decomposes the in-task `write` stage into `wser`
-    (parquet serialization and compression, pure CPU+allocator) vs `wio`
-    (file syscalls) so contention at high concurrency is attributable.
-    When ``stage`` is given those two keys are summed into it.
+    safe.  Three things make the bytes identical on every path.  No
+    part is fed by a shuffle, so each part's rows arrive in a fixed
+    order (input order, or spill-file name order for salted-direct hot
+    buckets) and the stable sort keeps it.  The block table holds only
+    values computed from those rows (``_encode_partition_table``): no
+    clock reading, pid or other per-attempt value.  And the writer's
+    options here are fixed.  Buffer-then-single-write is the
+    object-store shape (one PUT) and also decomposes the in-task `write`
+    stage into `wser` (parquet serialization and compression, pure
+    CPU+allocator) vs `wio` (file syscalls) so contention at high
+    concurrency is attributable.  When ``stage`` is given those two keys
+    are summed into it.
 
     Pages are zstd-compressed at ``BLOCK_FILE_ZSTD_LEVEL`` and carry a
     CRC32 each, which every reader of a block file verifies
@@ -900,7 +864,14 @@ def _encode_partition_table(
     """Encode ONE partition's Arrow table: frame into blocks, run codec
     selection per column chunk, write the partition's blocks parquet
     task-side, and return the part's summary dict.  ``read_stage``
-    carries the split read's sub-stage walls."""
+    carries the split read's sub-stage walls.
+
+    Every block-table value is a function of ``tbl`` and the block
+    sizes alone, so two encodes of the same rows write the same file
+    (``_atomic_write``).  The task's timings (``encode_ns``,
+    ``stage_ns``) and the key-column ``fingerprint`` go only into the
+    summary dict, which the driver commits as the part's checkpoint
+    row."""
     t0 = time.monotonic_ns()
     stage = dict.fromkeys(STAGE_KEYS, 0)
     stage.update(read_stage or {})
@@ -945,7 +916,6 @@ def _encode_partition_table(
             rows["zmax_i"].append(zi_hi)
             rows["zmin_d"].append(zd_lo)
             rows["zmax_d"].append(zd_hi)
-    n = len(rows["block_id"])
     # CPU span nested inside the wall span, so c_cpu <= encode_ns
     stage["c_cpu"] = time.thread_time_ns() - cpu0
     encode_ns = time.monotonic_ns() - t0
@@ -964,8 +934,6 @@ def _encode_partition_table(
             "null_count": pa.array(rows["null_count"], type=pa.int64()),
             "raw_bytes": pa.array(rows["raw_bytes"], type=pa.int64()),
             "encoded_bytes": pa.array(rows["encoded_bytes"], type=pa.int64()),
-            "encode_ns": pa.array([encode_ns] * n, type=pa.int64()),
-            "fingerprint": pa.array([fp] * n, type=pa.int64()),
             "zmin_i": pa.array(rows["zmin_i"], type=pa.int64()),
             "zmax_i": pa.array(rows["zmax_i"], type=pa.int64()),
             "zmin_d": pa.array(rows["zmin_d"], type=pa.float64()),

@@ -34,9 +34,9 @@ def incremental_encode(
     spark: SparkSession,
     source_dir: str,
     out_dir: str,
-    trigger_once: bool = True,
 ):
-    """Start (and with trigger_once=True, drain) a streaming encode.
+    """Run a streaming encode until it has drained every file in
+    ``source_dir`` (an ``availableNow`` trigger).
 
     The stream carries only the paths of the new ``*.parquet`` files
     (the ``binaryFile`` source's fixed schema, no table schema to infer);
@@ -69,14 +69,12 @@ def incremental_encode(
             resume=True,
         )
 
-    writer = (
+    q = (
         stream.writeStream.foreachBatch(handle)
         .option("checkpointLocation", os.path.join(out_dir, "_stream_ckpt"))
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    if trigger_once:
-        q.awaitTermination()
+    q.awaitTermination()
     return q
 

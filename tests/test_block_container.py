@@ -14,6 +14,7 @@ import json
 import os
 import shutil
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
@@ -60,11 +61,23 @@ def _flip_byte_in(path: str, column: str) -> None:
         f.write(bytes([b[0] ^ 0x01]))
 
 
-def _rewrite_plain(path: str) -> None:
+def _rewrite_plain(path: str, timing_cols: bool = False) -> None:
     """Rewrite a block file in the layout of every output before zstd
-    pages: uncompressed pages, no checksums."""
+    pages: uncompressed pages, no checksums.  With ``timing_cols``, every
+    row also carries the part's ``encode_ns`` and ``fingerprint`` after
+    ``encoded_bytes``, as block files did before those two moved to the
+    checkpoint row alone."""
+    tbl = pq.read_table(path)
+    if timing_cols:
+        at = tbl.column_names.index("encoded_bytes") + 1
+        for i, (name, v) in enumerate(
+            [("encode_ns", 987_654_321), ("fingerprint", -4_242_424_242)]
+        ):
+            tbl = tbl.add_column(
+                at + i, name, pa.array([v] * tbl.num_rows, pa.int64())
+            )
     pq.write_table(
-        pq.read_table(path), path, compression="NONE",
+        tbl, path, compression="NONE",
         write_statistics=False, use_dictionary=False,
         data_page_size=4 << 20,
     )
@@ -132,8 +145,10 @@ def test_plain_page_outputs_keep_decoding(
     spark, src, pages, tmp_path, drop_committed_parts
 ):
     """An output whose block files have plain, unchecksummed pages
-    decodes to the source, and so does one where a resume re-encoded
-    some parts with zstd pages beside the old ones."""
+    decodes to the source, with or without the per-row ``encode_ns`` and
+    ``fingerprint`` columns of older block files, and so does one where
+    a resume re-encoded some parts in the current layout beside the old
+    ones."""
     from nem_mms_spark.jobs.decode import scan_blocks
 
     out = str(tmp_path / "enc")
@@ -141,12 +156,17 @@ def test_plain_page_outputs_keep_decoding(
     want = _sorted_rows(decode_blocks(spark, out))
     n_scan = scan_blocks(spark, out, "warc_ts", lo=0).count()
     files = block_files(out)
-    for _pid, path in files:
-        _rewrite_plain(path)
-        assert _codecs(path) == {"UNCOMPRESSED"}
-    assert _sorted_rows(decode_blocks(spark, out)) == want
-    assert scan_blocks(spark, out, "warc_ts", lo=0).count() == n_scan
-    assert verify_roundtrip(spark, pages, out)["decoded_rows"] == N_ROWS
+    assert "encode_ns" not in pq.read_schema(files[0][1]).names
+    for timing_cols in (False, True):
+        for _pid, path in files:
+            _rewrite_plain(path, timing_cols)
+            assert _codecs(path) == {"UNCOMPRESSED"}
+            assert timing_cols == (
+                "encode_ns" in pq.read_schema(path).names
+            )
+        assert _sorted_rows(decode_blocks(spark, out)) == want
+        assert scan_blocks(spark, out, "warc_ts", lo=0).count() == n_scan
+        assert verify_roundtrip(spark, pages, out)["decoded_rows"] == N_ROWS
 
     # mixed: the first part is re-encoded by a resume, the rest stay old
     drop_committed_parts(out, [files[0][0]])

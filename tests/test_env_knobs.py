@@ -8,14 +8,9 @@ import pathlib
 
 PKG = pathlib.Path(__file__).resolve().parents[1] / "nem_mms_spark"
 
-# NO_NATIVE: perfbench's numpy-twin codec layer; HOT_COLLECT_CAP: bounds
-# driver memory (a test forces it); HOT_SAMPLE_STRIDE: the only guard for
-# key-clustered sources
-ALLOWED = {
-    "NEM_MMS_NO_NATIVE",
-    "NEM_MMS_HOT_COLLECT_CAP",
-    "NEM_MMS_HOT_SAMPLE_STRIDE",
-}
+# NO_NATIVE: perfbench's numpy-twin codec layer, the one knob; the hot
+# plan's size gate is a module constant (``jobs.encode.HOT_COLLECT_ROWS``)
+ALLOWED = {"NEM_MMS_NO_NATIVE"}
 
 
 def _env_name(node: ast.AST) -> str | None:

@@ -1,7 +1,8 @@
 """Every codec payload byte is pinned by a committed digest.
 
-Fixed inputs (synthetic web_pages rows over fixed ids, and slices of the
-committed sf0.01 ``lineitem`` and ``events`` tables) are encoded in
+Fixed inputs (synthetic web_pages rows over fixed ids, slices of the
+committed sf0.01 ``lineitem`` and ``events`` tables, and a small integer
+table built from fixed numpy values) are encoded in
 process by ``_encode_partition_table`` and read back from the block file
 it writes.  A sha256 of each (part, block, column) codec payload, params
 and validity bitmap must equal the one in ``payload_pin.json``, on the
@@ -25,7 +26,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from nem_mms_spark.codecs import native
+from nem_mms_spark.codecs import native, registry
 from nem_mms_spark.datagen.webpages import generate_pages
 from nem_mms_spark.jobs.encode import _encode_partition_table
 
@@ -33,6 +34,12 @@ from test_native_kernels import _numpy_only
 
 PIN = pathlib.Path(__file__).with_name("payload_pin.json")
 SF001 = pathlib.Path(__file__).resolve().parents[1] / "perfbench/data/sf0.01"
+CODECS = (
+    registry.PLAIN, registry.DICT, registry.RLE, registry.FOR_BITPACK,
+    registry.DELTA_FOR_BITPACK, registry.PFOR_BITPACK,
+    registry.DELTA_PFOR_BITPACK, registry.FSST, registry.WORD_DICT,
+    registry.ALP,
+)
 
 
 def _inputs():
@@ -51,7 +58,28 @@ def _inputs():
         (1, lineitem, 2000, "l_orderkey"),
         (2, events, 1000, "event_id"),
         (3, pages(1200), 400, "url"),
+        (4, _integers(4000), 1000, "dict_i"),
     ]
+
+
+def _integers(n: int) -> pa.Table:
+    """Integer columns whose blocks pick the codecs no other input does:
+    six scattered 64-bit values in no run order (numeric DICT), small
+    values with rare 2**40 outliers (PFOR_BITPACK), and a sum of small
+    steps with rare 2**30 jumps (DELTA_PFOR_BITPACK)."""
+    i = np.arange(n, dtype=np.int64)
+    six = np.array(
+        [-(3 << 60), -(5 << 44) + 17, 11, (7 << 52) + 3, (1 << 62) - 9,
+         123456789012345],
+        dtype=np.int64,
+    )
+    steps = i * 40503 % 16
+    steps[i % 89 == 0] = 1 << 30
+    return pa.table({
+        "dict_i": six[i * 7919 % 13 % 6],
+        "pfor_i": np.where(i % 97 == 0, 1 << 40, i * 2654435761 % 1021),
+        "dpfor_i": np.cumsum(steps),
+    })
 
 
 def _digests(blocks_dir: pathlib.Path) -> dict[str, dict[str, str]]:
@@ -100,7 +128,9 @@ def test_payloads_match_the_pin(path, tmp_path):
         pid, bid, _col = k.split("/")
         blocks.setdefault(pid, set()).add(bid)
     assert all(len(b) > 1 for b in blocks.values()), blocks
-    assert len({v["codec"] for v in want.values()}) >= 8
+    assert {v["codec"] for v in want.values()} == set(CODECS)
+    # DICT is pinned on a numeric column too, not only on bytes
+    assert want["4/0/dict_i"]["codec"] == registry.DICT
 
 
 if __name__ == "__main__":

@@ -46,17 +46,20 @@ def _ckpt_fingerprints(out: str) -> dict[int, int]:
 def test_hot_detection_distributed_branch_matches_counter(
     spark, src, tmp_path, monkeypatch
 ):
-    """Verdict item 3: above the cardinality cap, hot detection runs as
-    a distributed groupBy whose collect is bounded by
-    rows/min_hot_rows.  The hot plan — and therefore every output
-    partition — must be identical to the driver-Counter branch."""
+    """Verdict item 3: above ``HOT_COLLECT_ROWS``, hot detection merges
+    its key counts with a distributed reduceByKey whose collect is
+    bounded by rows/min_hot_rows.  The hot plan — and therefore every
+    output partition — must be identical to the driver-Counter branch."""
+    from nem_mms_spark.jobs import encode as encode_mod
+
     kw = dict(
         resume=False, parallelism=2, partitioning="salted",
         min_hot_rows=500, hot_factor=0.5,
     )
     out_a = str(tmp_path / "counter")
     m_a = encode_parquet(spark, src, out_a, **kw)
-    monkeypatch.setenv("NEM_MMS_HOT_COLLECT_CAP", "1")  # force distributed
+    assert m_a["hot_keys"] > 0
+    monkeypatch.setattr(encode_mod, "HOT_COLLECT_ROWS", 0)  # distributed
     out_b = str(tmp_path / "grouped")
     m_b = encode_parquet(spark, src, out_b, **kw)
     assert m_b["hot_keys"] == m_a["hot_keys"]
